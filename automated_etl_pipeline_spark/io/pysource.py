@@ -113,7 +113,9 @@ class _StreamReader(SimpleDataSourceStreamReader):
 
     ``read(start)`` returns (rows, nextOffset); an empty batch with an
     unchanged offset signals "no new data", which terminates
-    ``processAllAvailable``/availableNow drains.  ``readBetweenOffsets``
+    ``processAllAvailable`` drains.  (An availableNow trigger fixes its
+    end offset at the first ``read()``, so it drains only one
+    ``batch_size`` slice.)  ``readBetweenOffsets``
     is the REPLAY path: after a failure Spark re-requests a committed
     offset range, and determinism (rows are a pure function of id)
     makes the replay exactly-once."""

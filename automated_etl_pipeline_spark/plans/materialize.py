@@ -30,6 +30,19 @@ map), so frames carrying ``spark_partition_id`` columns stamped
 before materialization stay consistent — the operators/ranks.py
 contract.
 
+It is also the one way a gate detaches a result from data it staged
+(``queries.scratch``, ``streaming.windows.detach_sink_table``): the
+returned frame reads only the checkpointed blocks, so the staging dir
+can be deleted as soon as the call returns.
+
+Block lifetime: the checkpointed blocks live in executor block storage
+until the returned frame (and every frame derived from it) is
+garbage-collected on the Python side and Spark's ContextCleaner then
+releases the RDD.  Nothing frees them earlier; that is why ``bench.py``
+and ``tools/check_correctness.py`` call ``gc.collect()`` between
+queries — without it, blocks from earlier gates pile up and slow later
+ones.
+
 Supported runtime: classic (non-Connect) PySpark 3.4-4.x.  The
 re-root goes through the session's py4j handles (``_jsparkSession`` /
 ``_jdf``), which Spark Connect does not expose and which are private

@@ -24,6 +24,7 @@ tests/test_plans.py (broadcast where expected, filters pushed to scan).
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -47,6 +48,18 @@ def dsum(col: F.Column | str, scale: int = 2, alias: str | None = None) -> F.Col
 def davg(col: F.Column | str, scale: int = 2) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(F.lit(1))
+
+
+def scratch() -> tempfile.TemporaryDirectory:
+    """One temp root for the data a gate stages, always removed when the
+    ``with`` block exits (the reference DAG's ALL_DONE staging
+    cleanup).  Gates needing several dirs use subdirectories of it; a
+    result that must outlive the root is detached inside the block with
+    ``plans.materialize.materialize`` (``streaming.windows.drain_stream``
+    does so for a stream)."""
+    return tempfile.TemporaryDirectory(
+        prefix="spark_graft_scratch_", ignore_cleanup_errors=True
+    )
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}

@@ -12,7 +12,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from automated_etl_pipeline_spark.queries import _t, dsum, probe, query, retired_query
+from automated_etl_pipeline_spark.plans.materialize import materialize
+from automated_etl_pipeline_spark.queries import (
+    _t,
+    dsum,
+    probe,
+    query,
+    retired_query,
+    scratch,
+)
 
 
 @query(
@@ -940,30 +948,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class _stream_parts:
-    """Temporarily size ``spark.sql.shuffle.partitions`` for a
-    streaming drain, restoring the session value afterwards.
-
-    Every stateful streaming operator instantiates one state store per
-    shuffle partition (a stream-stream join: FOUR — left/right ×
-    keyToNumValues/keyWithIndexToValue), and each store pays
-    per-micro-batch maintenance (snapshot, file IO) regardless of how
-    little state it holds.  The gates' stateful volume is small, so 8
-    partitions cuts that fixed cost 4× vs the session's scan-sized 32;
-    a real cluster job sizes this to STATE volume, not scan width —
-    the knob exists precisely because the two differ."""
-
-    def __init__(self, spark: SparkSession, n: int = 8):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
 @query(
     "streaming_tumbling_1h",
     """
@@ -981,46 +965,26 @@ def streaming_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow trigger, and the final (complete-mode) table must
     equal the batch/DuckDB computation exactly — incremental state
     merges included."""
-    import tempfile
-    import uuid
-
     from automated_etl_pipeline_spark.io.sources import load_testdata
     from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
+        drain_stream,
         read_events_stream,
-        run_to_memory_sink,
         windowed_counts,
     )
 
-    import shutil
-
     events = load_testdata(spark, sf_dir, ["events"])["events"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_stream_gate_")
-    name = f"stream_gate_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch() as drop:
         events.write.mode("overwrite").parquet(drop)
-        # n=2: the windowed-agg state is ~720 window rows — sized to
-        # state volume per the _stream_parts contract (each extra
-        # partition costs a state-store instance per micro-batch;
+        # 2 partitions: the windowed-agg state is ~720 window rows —
+        # sized to state volume per the _stream_parts contract (each
+        # extra partition costs a state-store instance per micro-batch;
         # measured addBatch 480 -> 365 ms at sf0.1 going 8 -> 2)
-        with _stream_parts(spark, n=2):
-            q = run_to_memory_sink(
-                windowed_counts(
-                    read_events_stream(spark, drop, max_files_per_trigger=4)
-                ),
-                name,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        # detach the result from the memory sink so the sink table and
-        # the drop dir can be released (the window result is tiny)
-        out = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        out = drain_stream(
+            windowed_counts(
+                read_events_stream(spark, drop, max_files_per_trigger=4)
+            ),
+            shuffle_partitions=2,
+        )
     return out.orderBy("window_start")
 
 
@@ -1182,26 +1146,24 @@ def s1_csv_failfast_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_bad_records=0 of spark-bq-dag.py:126): nation is written to CSV
     then re-read with the explicit schema in FAILFAST mode — a single
     malformed row would abort the scan rather than null-fill."""
-    import tempfile
-
     from automated_etl_pipeline_spark import schemas
     from automated_etl_pipeline_spark.io.sinks import write_csv
     from automated_etl_pipeline_spark.io.sources import read_csv
 
     (nation,) = _t(spark, sf_dir, "nation")
-    path = tempfile.mkdtemp(prefix="s1_csv_gate_")
-    write_csv(nation.select([f.name for f in schemas.NATION.fields]), path,
-              header=True, num_files=1)
-    df = read_csv(spark, path, schemas.NATION, mode="FAILFAST")
-    return (
-        df.groupBy("n_regionkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_nations"),
-            F.min("n_name").alias("first_name"),
-            F.max("n_name").alias("last_name"),
+    with scratch() as path:
+        write_csv(nation.select([f.name for f in schemas.NATION.fields]), path,
+                  header=True, num_files=1)
+        df = read_csv(spark, path, schemas.NATION, mode="FAILFAST")
+        return materialize(
+            df.groupBy("n_regionkey")
+            .agg(
+                F.count(F.lit(1)).alias("n_nations"),
+                F.min("n_name").alias("first_name"),
+                F.max("n_name").alias("last_name"),
+            )
+            .orderBy("n_regionkey")
         )
-        .orderBy("n_regionkey")
-    )
 
 
 @query(
@@ -1220,8 +1182,6 @@ def s5_validated_append_idempotent(spark: SparkSession, sf_dir: str) -> DataFram
     retry scenario), read back, NOT-NULL-validated, and aggregated.  A
     non-idempotent append would double every count/sum and fail the
     value hash; a NULL in a required column raises before any write."""
-    import tempfile
-
     from automated_etl_pipeline_spark.io.sinks import (
         validate_not_null,
         write_parquet_append,
@@ -1229,18 +1189,19 @@ def s5_validated_append_idempotent(spark: SparkSession, sf_dir: str) -> DataFram
 
     (sup,) = _t(spark, sf_dir, "supplier")
     required = ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"]
-    path = tempfile.mkdtemp(prefix="s5_append_gate_") + "/warehouse"
-    write_parquet_append(sup, path, required=required, run_id="gate-run")
-    write_parquet_append(sup, path, required=required, run_id="gate-run")  # retry
-    back = validate_not_null(spark.read.parquet(path).drop("run_id"), required)
-    return (
-        back.groupBy("s_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            dsum("s_acctbal", alias="total_acctbal"),
+    with scratch() as root:
+        path = f"{root}/warehouse"
+        write_parquet_append(sup, path, required=required, run_id="gate-run")
+        write_parquet_append(sup, path, required=required, run_id="gate-run")  # retry
+        back = validate_not_null(spark.read.parquet(path).drop("run_id"), required)
+        return materialize(
+            back.groupBy("s_nationkey")
+            .agg(
+                F.count(F.lit(1)).alias("n_suppliers"),
+                dsum("s_acctbal", alias="total_acctbal"),
+            )
+            .orderBy("s_nationkey")
         )
-        .orderBy("s_nationkey")
-    )
 
 
 @query(
@@ -1266,24 +1227,19 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup state is never evicted (exact global dedup); in production
     the delay bounds state size and guarantees dedup only within the
     lateness window — that trade is the operator's contract."""
-    import shutil
-    import tempfile
-    import uuid
-
     import glob
+    import os
+    import shutil
 
     from automated_etl_pipeline_spark.io.sources import load_testdata
     from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
+        drain_stream,
         read_events_stream,
-        run_to_memory_sink,
         windowed_counts,
     )
 
     events = load_testdata(spark, sf_dir, ["events"])["events"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_dedup_stream_")
-    name = f"dedup_stream_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch() as drop:
         # coalesce(4): 8 staged files -> 2 triggers at 4 files each, so
         # the duplicate copy still lands in a LATER batch than the
         # original (cross-batch dedup is the point) without paying for
@@ -1293,32 +1249,27 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         # passes): an at-least-once transport redelivers the SAME
         # bytes, which a byte-identical file copy models exactly; the
         # old second Spark write job recomputed identical content.
-        # shutil.copy gives the copies a LATER mtime, so the file
-        # source still batches them after the originals.
-        for i, f in enumerate(sorted(glob.glob(f"{drop}/part-*.parquet"))):
-            shutil.copy(f, f"{drop}/redelivered-{i:05d}.parquet")
-        # n=2: state is the event_id dedup set + ~720 window rows —
-        # sized to state volume per the _stream_parts contract
-        with _stream_parts(spark, n=2):
-            stream = (
-                read_events_stream(spark, drop, max_files_per_trigger=4)
-                .withWatermark("ts", "3650 days")
-                .dropDuplicates(["event_id"])
-            )
-            # watermark_delay=None: the stream above already carries its
-            # watermark; Spark disallows redefining it across stateful ops
-            q = run_to_memory_sink(
-                windowed_counts(stream, watermark_delay=None), name
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        out = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        # The file source batches by mtime, so the copies are stamped
+        # 2 s after the newest original instead of trusting the clock
+        # granularity of the copy to put them in a later batch.
+        parts = sorted(glob.glob(f"{drop}/part-*.parquet"))
+        t = max(os.stat(f).st_mtime for f in parts) + 2
+        for i, f in enumerate(parts):
+            copy = f"{drop}/redelivered-{i:05d}.parquet"
+            shutil.copy(f, copy)
+            os.utime(copy, (t, t))
+        stream = (
+            read_events_stream(spark, drop, max_files_per_trigger=4)
+            .withWatermark("ts", "3650 days")
+            .dropDuplicates(["event_id"])
+        )
+        # watermark_delay=None: the stream above already carries its
+        # watermark; Spark disallows redefining it across stateful ops.
+        # 2 partitions: state is the event_id dedup set + ~720 window
+        # rows — sized to state volume per the _stream_parts contract
+        out = drain_stream(
+            windowed_counts(stream, watermark_delay=None), shuffle_partitions=2
+        )
     return out.orderBy("window_start")
 
 
@@ -1338,23 +1289,22 @@ def jsonl_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship as) with an explicit schema on the re-read — no inference
     scan, and any escaping/unicode loss in the round-trip shifts
     total_chars and fails the hash."""
-    import tempfile
-
     from automated_etl_pipeline_spark import schemas
 
     (docs,) = _t(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="jsonl_gate_") + "/docs"
-    docs.write.mode("overwrite").json(path)
-    back = spark.read.schema(schemas.DOCUMENTS).json(path)
-    return (
-        back.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.min("doc_id").alias("first_doc"),
+    with scratch() as root:
+        path = f"{root}/docs"
+        docs.write.mode("overwrite").json(path)
+        back = spark.read.schema(schemas.DOCUMENTS).json(path)
+        return materialize(
+            back.groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").alias("total_chars"),
+                F.min("doc_id").alias("first_doc"),
+            )
+            .orderBy("lang")
         )
-        .orderBy("lang")
-    )
 
 
 @query(
@@ -1646,41 +1596,25 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays in state).  Single availableNow batch — the per-batch sort
     in the handler owns event-time ordering, state-store round-trips
     included."""
-    import shutil
-    import tempfile
-    import uuid
-
     from automated_etl_pipeline_spark.io.sources import load_testdata
     from automated_etl_pipeline_spark.streaming.stateful import sessionize_stateful
     from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
+        drain_stream,
         read_events_stream,
-        run_to_memory_sink,
     )
 
     events = load_testdata(spark, sf_dir, ["events"])["events"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_state_stream_")
-    name = f"state_sessions_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch() as drop:
         events.coalesce(8).write.mode("overwrite").parquet(drop)
-        # n=8 kept: the per-batch pandas handler is the real compute
+        stream = read_events_stream(spark, drop).select("user_id", "ts")
+        # 8 partitions: the per-batch pandas handler is the real compute
         # here (100k rows through applyInPandasWithState) — partitions
         # are sized to that parallelism, not to state volume
-        with _stream_parts(spark):
-            stream = read_events_stream(spark, drop).select("user_id", "ts")
-            sessions = sessionize_stateful(stream, gap_minutes=30)
-            q = run_to_memory_sink(sessions, name, output_mode="append")
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        # 9399 sink rows at sf0.1 — the old collect+createDataFrame
-        # detach paid the Python roundtrip on every downstream pass
-        out = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        out = drain_stream(
+            sessionize_stateful(stream, gap_minutes=30),
+            output_mode="append",
+            shuffle_partitions=8,
+        )
     return out.orderBy("user_id", "session_start_us")
 
 
@@ -1718,40 +1652,23 @@ def streaming_funnel_completions(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase strictly after that, emitted exactly once at completion.
     Single availableNow drain; the handler's per-batch sort owns
     event-time ordering, state-store round-trips included."""
-    import shutil
-    import tempfile
-    import uuid
-
     from automated_etl_pipeline_spark.io.sources import load_testdata
     from automated_etl_pipeline_spark.streaming.stateful import funnel_stateful
     from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
+        drain_stream,
         read_events_stream,
-        run_to_memory_sink,
     )
 
     events = load_testdata(spark, sf_dir, ["events"])["events"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_funnel_stream_")
-    name = f"funnel_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch() as drop:
         events.coalesce(8).write.mode("overwrite").parquet(drop)
-        # n=8 kept: the pandas funnel handler is the real compute
-        with _stream_parts(spark):
-            stream = read_events_stream(spark, drop).select(
-                "user_id", "ts", "event_type", "event_id"
-            )
-            q = run_to_memory_sink(
-                funnel_stateful(stream), name, output_mode="append"
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        out = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        stream = read_events_stream(spark, drop).select(
+            "user_id", "ts", "event_type", "event_id"
+        )
+        # 8 partitions: the pandas funnel handler is the real compute
+        out = drain_stream(
+            funnel_stateful(stream), output_mode="append", shuffle_partitions=8
+        )
     return out.orderBy("user_id")
 
 
@@ -1957,18 +1874,14 @@ def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     through ORC (Spark-native, predicate pushdown + column pruning like
     parquet) with an explicit schema on the re-read; any type or
     encoding loss shifts the aggregate and fails the hash."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark import schemas
 
     (docs,) = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="orc_gate_")
-    try:
-        path = tmp + "/docs"
+    with scratch() as root:
+        path = f"{root}/docs"
         docs.write.mode("overwrite").orc(path)
         back = spark.read.schema(schemas.DOCUMENTS).orc(path)
-        agg = (
+        return materialize(
             back.groupBy("source")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -1977,14 +1890,6 @@ def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("source")
         )
-        # materialize before the ORC files vanish — the returned frame
-        # must not depend on the temp dir.  localCheckpoint (executor-
-        # side blocks) over collect+createDataFrame: the driver round-
-        # trip costs ~1.5s/call at sf0.1 (measured 2.1s vs 0.98s
-        # median); checkpoint keeps the detach JVM-side.
-        return agg.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -2007,29 +1912,31 @@ def pysource_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute — offset bookkeeping, batch slicing, and incremental
     state merges included.  ``sf_dir`` is unused: the source IS the
     data."""
-    import shutil
-    import tempfile
     import uuid
 
     from automated_etl_pipeline_spark.io.pysource import register
-    from automated_etl_pipeline_spark.streaming.windows import detach_sink_table
+    from automated_etl_pipeline_spark.streaming.windows import (
+        _stream_parts,
+        detach_sink_table,
+    )
 
     register(spark)
     name = f"pysrc_gate_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_pysrc_ckpt_")
-    # n=2: state is 8 bucket rows (sized to state volume per the
-    # _stream_parts contract)
-    with _stream_parts(spark, n=2):
-        stream = (
-            spark.readStream.format("synthetic_events")
-            .option("n_rows", 20000)
-            .option("batch_size", 10000)
-            .load()
-        )
-        agg = stream.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            dsum("value", alias="sum_value"),
-        )
+    stream = (
+        spark.readStream.format("synthetic_events")
+        .option("n_rows", 20000)
+        .option("batch_size", 10000)
+        .load()
+    )
+    agg = stream.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        dsum("value", alias="sum_value"),
+    )
+    # not drain_stream: availableNow fixes the end offset at the first
+    # read(), which for this simple reader is one batch_size slice —
+    # only processAllAvailable drains all n_rows.  n=2: state is 8
+    # bucket rows (sized to state volume per the _stream_parts contract)
+    with scratch() as ckpt, _stream_parts(spark, n=2):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -2041,12 +1948,7 @@ def pysource_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    out = detach_sink_table(spark, name)
-    spark.catalog.dropTempView(name) if name in [
-        t.name for t in spark.catalog.listTables()
-    ] else None
-    return out.orderBy("bucket")
+    return detach_sink_table(spark, name).orderBy("bucket")
 
 
 @query(
@@ -2569,54 +2471,35 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     store — then flows into a watermarked hourly window per market
     segment.  The drained complete-mode table must equal the batch/
     DuckDB join+window exactly."""
-    import shutil
-    import tempfile
-    import uuid
-
     from automated_etl_pipeline_spark.io.sources import load_testdata
     from automated_etl_pipeline_spark.streaming.joins import static_enrich
-    from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
-        run_to_memory_sink,
-    )
+    from automated_etl_pipeline_spark.streaming.windows import drain_stream
 
     dfs = load_testdata(spark, sf_dir, ["events", "customer"])
     events, customer = dfs["events"], dfs["customer"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_enrich_stream_")
-    name = f"static_enrich_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch() as drop:
         events.select("ts", "user_id", "value").coalesce(8).write.mode(
             "overwrite"
         ).parquet(drop)
-        # n=2: stateless join + ~3600 window-state rows (sized to
-        # state volume per the _stream_parts contract)
-        with _stream_parts(spark, n=2):
-            stream = spark.readStream.schema(
-                "ts timestamp, user_id long, value double"
-            ).parquet(drop)
-            enriched = static_enrich(
-                stream.withWatermark("ts", "2 hours"),
-                customer.select("c_custkey", "c_mktsegment"),
-                "user_id",
-                "c_custkey",
-            )
-            agg = enriched.groupBy(
-                F.window("ts", "1 hour").getField("start").alias("window_start"),
-                "c_mktsegment",
-            ).agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum("value", scale=6, alias="sum_value"),
-            )
-            q = run_to_memory_sink(agg, name)
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        out = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        stream = spark.readStream.schema(
+            "ts timestamp, user_id long, value double"
+        ).parquet(drop)
+        enriched = static_enrich(
+            stream.withWatermark("ts", "2 hours"),
+            customer.select("c_custkey", "c_mktsegment"),
+            "user_id",
+            "c_custkey",
+        )
+        agg = enriched.groupBy(
+            F.window("ts", "1 hour").getField("start").alias("window_start"),
+            "c_mktsegment",
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value", scale=6, alias="sum_value"),
+        )
+        # 2 partitions: stateless join + ~3600 window-state rows (sized
+        # to state volume per the _stream_parts contract)
+        out = drain_stream(agg, shuffle_partitions=2)
     return out.orderBy("window_start", "c_mktsegment")
 
 
@@ -2643,61 +2526,41 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join exactly.  Single availableNow batch: the initial
     watermark is the epoch during it, so no state is evicted before
     the only micro-batch completes — exactness by construction."""
-    import shutil
-    import tempfile
-    import uuid
-
     from automated_etl_pipeline_spark.io.sources import load_testdata
     from automated_etl_pipeline_spark.streaming.joins import interval_join
-    from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
-        read_events_stream,
-        run_to_memory_sink,
-    )
+    from automated_etl_pipeline_spark.streaming.windows import drain_stream
 
     events = load_testdata(spark, sf_dir, ["events"])["events"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_joinstream_")
-    name = f"interval_join_{uuid.uuid4().hex[:8]}"
     # Stage only the two event types the join consumes — the stream
     # never reads the other 60% of rows (filter-before-stage is the
     # file-stream analog of predicate pushdown).
-    try:
+    with scratch() as drop:
         events.filter(F.col("event_type").isin("purchase", "view")).select(
             "event_id", "ts", "user_id", "event_type"
         ).coalesce(8).write.mode("overwrite").parquet(drop)
-        # n=2: a stream-stream join holds FOUR state stores per
-        # partition — 8 -> 2 cuts 32 store instances to 8 for ~40k
+        stream = spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, event_type string"
+        ).parquet(drop)
+        purchases = stream.filter(F.col("event_type") == "purchase").select(
+            "user_id", "ts", "event_id"
+        )
+        views = stream.filter(F.col("event_type") == "view").select(
+            "user_id", "ts", "event_id"
+        )
+        pairs = interval_join(
+            purchases,
+            views,
+            key="user_id",
+            interval="1 hour",
+            watermark_delay="2 hours",
+            left_prefix="p",
+            right_prefix="v",
+        ).select("user_id", "p_event_id", "v_event_id")
+        # 2 partitions: a stream-stream join holds FOUR state stores
+        # per partition — 8 -> 2 cuts 32 store instances to 8 for ~40k
         # state rows (sized to state volume per the _stream_parts
         # contract)
-        with _stream_parts(spark, n=2):
-            stream = spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string"
-            ).parquet(drop)
-            purchases = stream.filter(F.col("event_type") == "purchase").select(
-                "user_id", "ts", "event_id"
-            )
-            views = stream.filter(F.col("event_type") == "view").select(
-                "user_id", "ts", "event_id"
-            )
-            pairs = interval_join(
-                purchases,
-                views,
-                key="user_id",
-                interval="1 hour",
-                watermark_delay="2 hours",
-                left_prefix="p",
-                right_prefix="v",
-            ).select("user_id", "p_event_id", "v_event_id")
-            q = run_to_memory_sink(pairs, name, output_mode="append")
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        out = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        out = drain_stream(pairs, output_mode="append", shuffle_partitions=2)
     return out.orderBy("p_event_id", "v_event_id")
 
 
@@ -3135,41 +2998,24 @@ def streaming_hll_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch/streaming boundary: a wrong watermark, a dropped trigger, or
     state-merge corruption shifts an estimate or loses a window and
     breaks the hash)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from automated_etl_pipeline_spark.io.sources import load_testdata
     from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
+        drain_stream,
         read_events_stream,
-        run_to_memory_sink,
         windowed_distinct_sketch,
     )
 
     events = load_testdata(spark, sf_dir, ["events"])["events"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_hll_stream_")
-    name = f"hll_stream_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch() as drop:
         events.write.mode("overwrite").parquet(drop)
-        # n=2: state is ~720 per-window sketch rows (sized to state
-        # volume per the _stream_parts contract)
-        with _stream_parts(spark, n=2):
-            q = run_to_memory_sink(
-                windowed_distinct_sketch(
-                    read_events_stream(spark, drop, max_files_per_trigger=4)
-                ),
-                name,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        est = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        # 2 partitions: state is ~720 per-window sketch rows (sized to
+        # state volume per the _stream_parts contract)
+        est = drain_stream(
+            windowed_distinct_sketch(
+                read_events_stream(spark, drop, max_files_per_trigger=4)
+            ),
+            shuffle_partitions=2,
+        )
     exact = events.groupBy(
         F.date_trunc("hour", "ts").alias("window_start")
     ).agg(F.countDistinct("user_id").alias("n_exact"))
@@ -5945,10 +5791,8 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot+batch (operators/merge.py); the epoch commit is
     copy-on-write parquet here, a table-format transaction at
     production scale — partition-pruned rewrites, same merge core."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.streaming.cdc import run_cdc_merge_stream
+    from automated_etl_pipeline_spark.streaming.windows import _stream_parts
 
     (orders,) = _t(spark, sf_dir, "orders")
     orders = orders.filter(F.col("o_orderkey").isNotNull())
@@ -5961,9 +5805,8 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.withColumn("version", F.lit(0).cast("long"))
     schema = base.schema  # orders schema + version, reused by the stream reader
 
-    drop = tempfile.mkdtemp(prefix="spark_graft_cdc_drop_")
-    state = tempfile.mkdtemp(prefix="spark_graft_cdc_state_")
-    try:
+    with scratch() as root:
+        drop, state = f"{root}/drop", f"{root}/state"
         for k in (1, 2, 3):
             batch = (
                 orders.filter(F.col("o_orderkey") % (k + 1) == 0)
@@ -5991,12 +5834,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderstatus")
         )
-        # detach the result from the temp dirs before cleanup (eager
-        # checkpoint: one in-JVM job, no collect/re-ship roundtrip)
-        snap = out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(drop, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("o_orderstatus")
 
 
@@ -6029,6 +5867,7 @@ _U_DENOM = 4503599627370496.0  # 2^52: 13 md5 hex chars -> exact double
 # conv() path over every (row, lane) at sf0.1: 0 mismatches.
 def _hex_thresholds(cdf: list[float]) -> list[str]:
     import math
+
     from fractions import Fraction
 
     return [format(math.ceil(Fraction(t) * (1 << 52)), "013x") for t in cdf]
@@ -6365,9 +6204,6 @@ def manifest_table_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unchanged — the same contract as a table format's log, with the
     exclusive-create commit point standing in for an object store's
     if-none-match put."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         current_version,
@@ -6375,8 +6211,7 @@ def manifest_table_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (sup,) = _t(spark, sf_dir, "supplier")
-    root = tempfile.mkdtemp(prefix="spark_graft_manifest_")
-    try:
+    with scratch() as root:
         commit_append(sup.filter(F.col("s_nationkey") < 13), root, "run-1")
         commit_append(sup.filter(F.col("s_nationkey") >= 13), root, "run-2")
         commit_append(  # Airflow-retry double delivery: must no-op
@@ -6405,9 +6240,7 @@ def manifest_table_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("s_nationkey")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("s_nationkey")
 
 
@@ -6439,9 +6272,6 @@ def csv_permissive_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corrupt column is pruned away on the clean path.  This is the
     badRecordsPath pattern every production CSV ingest runs; FAILFAST
     (S1) remains the contract for schema-critical feeds."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -6464,7 +6294,6 @@ def csv_permissive_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority",
         )
     )
-    path = tempfile.mkdtemp(prefix="csv_quarantine_") + "/orders"
     schema = StructType(
         [
             StructField("o_orderkey", LongType()),
@@ -6473,8 +6302,8 @@ def csv_permissive_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("_corrupt_record", StringType()),
         ]
     )
-    back = None
-    try:
+    with scratch() as root:
+        path = f"{root}/orders"
         staged.write.option("header", True).mode("overwrite").csv(path)
         back = (
             spark.read.schema(schema)
@@ -6498,11 +6327,8 @@ def csv_permissive_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("clean_revenue"),
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        if back is not None:
-            back.unpersist()
-        shutil.rmtree(path.rsplit("/", 1)[0], ignore_errors=True)
+        snap = materialize(out)
+        back.unpersist()
     return snap
 
 
@@ -6536,9 +6362,6 @@ def manifest_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a real table the rewrite is per-partition (only touched
     partitions' files swap) and old files age out via vacuum — the
     manifest semantics here are exactly those, minus retention."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         commit_rewrite,
@@ -6552,8 +6375,7 @@ def manifest_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.3/§6): fragments, the compaction read AND its rewrite carried
     # all 7 supplier columns for identical counts/balance
     sup = sup.select("s_suppkey", "s_acctbal")
-    root = tempfile.mkdtemp(prefix="spark_graft_compact_")
-    try:
+    with scratch() as root:
         for k in range(5):
             commit_append(
                 sup.filter(F.col("s_suppkey") % 5 == k).repartition(3),
@@ -6599,10 +6421,7 @@ def manifest_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "final_version long, n_rows_latest long, "
             "n_rows_pre_compaction long, bal_latest double",
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return snap
+    return out
 
 
 _ZONE_MAP_ORACLE = """
@@ -6653,9 +6472,6 @@ def zone_map_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches a handful of files instead of the table, before any scan
     starts.  Stats ride the manifest (parquet footers in production);
     pruning is driver-side metadata work."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         read_table,
@@ -6671,8 +6487,7 @@ def zone_map_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins = sorted(
         r["bin"] for r in binned.select("bin").distinct().collect()
     )
-    root = tempfile.mkdtemp(prefix="spark_graft_zonemap_")
-    try:
+    with scratch() as root:
         for b in bins:
             commit_append(
                 binned.filter(F.col("bin") == b).drop("bin").coalesce(1),
@@ -6702,10 +6517,7 @@ def zone_map_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "files_total long, files_scanned long, n_rows_pred long, "
             "bal_pred double, n_rows_fullscan long",
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return snap
+    return out
 
 
 _ZONE_MAP_MULTICOL_ORACLE = """
@@ -6761,8 +6573,6 @@ def zone_map_multicol_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the min == max degenerate case, exactly as in Iceberg/Delta."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from automated_etl_pipeline_spark.io.manifest import (
         commit_add_files,
@@ -6781,8 +6591,7 @@ def zone_map_multicol_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("o_band"),
         "o_totalprice",
     )
-    root = tempfile.mkdtemp(prefix="spark_graft_zm_multi_")
-    try:
+    with scratch() as root:
         # ONE partitioned write lays out one file per (ybin, band)
         # cell, then ONE commit registers them all (r15 opt, guide §8:
         # one pass moves the bytes, metadata work is a single grouped
@@ -6845,10 +6654,7 @@ def zone_map_multicol_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             "files_total long, files_scanned long, n_rows_pred long, "
             "bal_pred double, n_rows_fullscan long",
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return snap
+    return out
 
 
 _CHANGE_FEED_ORACLE = """
@@ -6879,9 +6685,6 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (file names); the read scans only the added files.  Rewrites
     in-range raise by design — resume from the post-rewrite snapshot,
     as any table format's change feed requires."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         read_changes,
@@ -6889,8 +6692,7 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (sup,) = _t(spark, sf_dir, "supplier")
-    root = tempfile.mkdtemp(prefix="spark_graft_changefeed_")
-    try:
+    with scratch() as root:
         commit_append(sup.filter(F.col("s_nationkey") < 8), root, "r1")
         commit_append(
             sup.filter(F.col("s_nationkey").between(8, 16)), root, "r2"
@@ -6915,10 +6717,7 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_changed_rows long, n_changed_nations long, "
             "changed_bal double, n_rows_snapshot long",
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return snap
+    return out
 
 
 # Final logical content after the MoR commit sequence below, as one
@@ -6968,9 +6767,6 @@ def manifest_delete_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame
     the delete commit is O(keys), reads add one broadcast-size
     anti-join per delete generation (AQE picks broadcast, no hint),
     and the cost is repaid at the next scheduled compaction."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         commit_delete,
@@ -6987,8 +6783,7 @@ def manifest_delete_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame
     # (comment/clerk dominate) for identical results
     orders = orders.select("o_orderkey", "o_orderpriority", "o_totalprice")
     k = F.col("o_orderkey")
-    root = tempfile.mkdtemp(prefix="spark_graft_mor_")
-    try:
+    with scratch() as root:
         commit_append(orders.filter(k % 4 < 2), root, "a1")
         commit_append(orders.filter(k % 4 == 2), root, "a2")
         pre = read_table(spark, root)  # v2 file list pinned here
@@ -7031,9 +6826,7 @@ def manifest_delete_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .orderBy("o_orderpriority")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("o_orderpriority")
 
 
@@ -7072,9 +6865,6 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard-refresh pattern at 100 TB, where re-aggregating the
     whole table per refresh is the thing this operator exists to
     avoid."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         commit_delete,
@@ -7095,9 +6885,8 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
     )
     ln = F.col("l_linenumber")
-    src = tempfile.mkdtemp(prefix="spark_graft_mv_src_")
-    mv_root = tempfile.mkdtemp(prefix="spark_graft_mv_")
-    try:
+    with scratch() as root:
+        src, mv_root = f"{root}/src", f"{root}/mv"
         view = IncrementalAggView(
             src,
             mv_root,
@@ -7131,10 +6920,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("l_returnflag")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(mv_root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("l_returnflag")
 
 
@@ -7168,9 +6954,6 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: evolution is a metadata-only commit — the schema lives in
     the manifest and old files are never touched; readers reconcile at
     scan time exactly like Delta/Iceberg's add-column."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         read_table,
@@ -7179,8 +6962,7 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cust,) = _t(spark, sf_dir, "customer")
     base = cust.select("c_custkey", "c_mktsegment", "c_acctbal")
     k = F.col("c_custkey")
-    root = tempfile.mkdtemp(prefix="spark_graft_schemaevo_")
-    try:
+    with scratch() as root:
         commit_append(base.filter(k % 2 == 0), root, "a1")
         commit_append(
             base.filter(k % 2 == 1).withColumn(
@@ -7220,9 +7002,7 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("c_mktsegment")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("c_mktsegment")
 
 
@@ -7260,9 +7040,6 @@ def manifest_partial_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: this is the background anti-entropy loop of every
     streaming-ingest table — compact 10 fragments out of 10,000 files
     without touching the rest, while appends keep landing."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         commit_delete,
@@ -7276,8 +7053,7 @@ def manifest_partial_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (orders,) = _t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    root = tempfile.mkdtemp(prefix="spark_graft_pcompact_")
-    try:
+    with scratch() as root:
         commit_append(orders.filter(k % 3 == 0).repartition(3), root, "a1")
         frag = manifest_files(root, 1)
         commit_append(orders.filter(k % 3 == 1).coalesce(1), root, "a2")
@@ -7315,9 +7091,7 @@ def manifest_partial_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderpriority")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("o_orderpriority")
 
 
@@ -7353,9 +7127,6 @@ def mv_cdf_retraction_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     time (amortized into the commit) and the refresh stays O(changes)
     — at 100 TB, the difference between a dashboard refresh reading a
     few delete files and re-aggregating the table."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         commit_delete,
@@ -7370,9 +7141,8 @@ def mv_cdf_retraction_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = li.select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity"
     )
-    src = tempfile.mkdtemp(prefix="spark_graft_mvcdf_src_")
-    mv_root = tempfile.mkdtemp(prefix="spark_graft_mvcdf_")
-    try:
+    with scratch() as root:
+        src, mv_root = f"{root}/src", f"{root}/mv"
         view = IncrementalAggView(
             src, mv_root, ["l_returnflag"], sum_cols={"sum_qty": "l_quantity"}
         )
@@ -7408,10 +7178,7 @@ def mv_cdf_retraction_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("l_returnflag")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(mv_root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("l_returnflag")
 
 
@@ -7452,9 +7219,6 @@ def streaming_manifest_sink_exactly_once(
     incremental MV (io/mv.py) folds them without re-reading the
     table.  The same (appId, batchId) txn recipe Delta's streaming
     sink rides."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         current_version,
         read_table,
@@ -7463,6 +7227,7 @@ def streaming_manifest_sink_exactly_once(
         manifest_batch_committer,
         run_stream_to_manifest,
     )
+    from automated_etl_pipeline_spark.streaming.windows import _stream_parts
 
     (orders,) = _t(spark, sf_dir, "orders")
     orders = orders.filter(F.col("o_orderkey").isNotNull())
@@ -7471,10 +7236,8 @@ def streaming_manifest_sink_exactly_once(
     # files, the stream scan and every manifest append carried all 9
     # orders columns for identical per-status aggregates
     orders = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
-    drop = tempfile.mkdtemp(prefix="spark_graft_msink_drop_")
-    tbl = tempfile.mkdtemp(prefix="spark_graft_msink_tbl_")
-    state = tempfile.mkdtemp(prefix="spark_graft_msink_state_")
-    try:
+    with scratch() as root:
+        drop, tbl, state = f"{root}/drop", f"{root}/tbl", f"{root}/state"
         for i in range(4):
             orders.filter(F.col("o_orderkey") % 4 == i).coalesce(
                 1
@@ -7505,12 +7268,7 @@ def streaming_manifest_sink_exactly_once(
             )
             .orderBy("o_orderstatus")
         )
-        # eager checkpoint: one in-JVM job, no collect/re-ship roundtrip
-        snap = out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(drop, ignore_errors=True)
-        shutil.rmtree(tbl, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("o_orderstatus")
 
 
@@ -7540,55 +7298,52 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The merge hint pins SMJ so the gate exercises the bucketed path
     even at gate scale (AQE would otherwise broadcast the small side
     here — at production scale neither side qualifies)."""
-    import shutil
-    import tempfile
     import uuid
 
     orders, li = _t(spark, sf_dir, "orders", "lineitem")
     tag = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix="spark_graft_buckets_")
     to, tl = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-    try:
-        # bucket only the join key + the aggregated column (r15 opt,
-        # guide §2.3/§6 — the layout shuffle is paid on 2 columns per
-        # side instead of 9/16; join, bucketed-scan plan shape and the
-        # per-priority aggregate are identical)
-        (
-            orders.filter(F.col("o_orderkey").isNotNull())
-            .select("o_orderkey", "o_orderpriority")
-            .write.bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", f"{base}/{to}")
-            .saveAsTable(to)
-        )
-        (
-            li.filter(F.col("l_orderkey").isNotNull())
-            .select("l_orderkey", "l_extendedprice")
-            .write.bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", f"{base}/{tl}")
-            .saveAsTable(tl)
-        )
-        o = spark.table(to).hint("merge")
-        l = spark.table(tl)
-        out = (
-            o.join(l, o["o_orderkey"] == l["l_orderkey"])
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_lines"),
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(18,2)")
-                )
-                .cast("double")
-                .alias("revenue"),
+    with scratch() as base:
+        try:
+            # bucket only the join key + the aggregated column (r15 opt,
+            # guide §2.3/§6 — the layout shuffle is paid on 2 columns per
+            # side instead of 9/16; join, bucketed-scan plan shape and the
+            # per-priority aggregate are identical)
+            (
+                orders.filter(F.col("o_orderkey").isNotNull())
+                .select("o_orderkey", "o_orderpriority")
+                .write.bucketBy(8, "o_orderkey")
+                .sortBy("o_orderkey")
+                .option("path", f"{base}/{to}")
+                .saveAsTable(to)
             )
-            .orderBy("o_orderpriority")
-        )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {to}")
-        spark.sql(f"DROP TABLE IF EXISTS {tl}")
-        shutil.rmtree(base, ignore_errors=True)
+            (
+                li.filter(F.col("l_orderkey").isNotNull())
+                .select("l_orderkey", "l_extendedprice")
+                .write.bucketBy(8, "l_orderkey")
+                .sortBy("l_orderkey")
+                .option("path", f"{base}/{tl}")
+                .saveAsTable(tl)
+            )
+            o = spark.table(to).hint("merge")
+            l = spark.table(tl)
+            out = (
+                o.join(l, o["o_orderkey"] == l["l_orderkey"])
+                .groupBy("o_orderpriority")
+                .agg(
+                    F.count(F.lit(1)).alias("n_lines"),
+                    F.sum(
+                        F.col("l_extendedprice").cast("decimal(18,2)")
+                    )
+                    .cast("double")
+                    .alias("revenue"),
+                )
+                .orderBy("o_orderpriority")
+            )
+            snap = materialize(out)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {to}")
+            spark.sql(f"DROP TABLE IF EXISTS {tl}")
     return snap.orderBy("o_orderpriority")
 
 
@@ -7659,8 +7414,6 @@ def manifest_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table growth while zone-only scanning grows O(files)."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from automated_etl_pipeline_spark.io.manifest import (
         commit_add_files,
@@ -7670,8 +7423,7 @@ def manifest_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (orders,) = _t(spark, sf_dir, "orders")
     sub = orders.select("o_orderkey", "o_totalprice")
-    root = tempfile.mkdtemp(prefix="spark_graft_bloom_")
-    try:
+    with scratch() as root:
         # ONE partitioned write + ONE commit builds the same 18-file
         # layout the original 6 commit_append calls produced (r15 opt,
         # guide §8 / §2.4): bucket = key % 6 (so each file still holds
@@ -7760,10 +7512,7 @@ def manifest_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("absent_scan_le_8"),
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return snap.orderBy("probe")
+    return out.orderBy("probe")
 
 
 _COLUMN_RENAME_ORACLE = """
@@ -7801,9 +7550,6 @@ def manifest_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a rename at 100 TB moves zero data bytes — one manifest
     write; readers group files by physical-name signature (bounded by
     renames spanned, here 2 scans) with pushdown intact per scan."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         commit_rename,
@@ -7813,8 +7559,7 @@ def manifest_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cust,) = _t(spark, sf_dir, "customer")
     base = cust.select("c_custkey", "c_mktsegment", "c_acctbal")
     k = F.col("c_custkey")
-    root = tempfile.mkdtemp(prefix="spark_graft_rename_")
-    try:
+    with scratch() as root:
         commit_append(base.filter(k % 2 == 0), root, "a1")
         commit_rename(root, "r1", {"c_acctbal": "acct_balance"})
         commit_append(
@@ -7868,9 +7613,7 @@ def manifest_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("c_mktsegment")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("c_mktsegment")
 
 
@@ -7912,9 +7655,6 @@ def manifest_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     first scan, bounded by retained versions; a production port keeps
     a version->ts index) — no data is touched until the resolved
     snapshot's file list is handed to the scan."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         read_table,
@@ -7923,8 +7663,7 @@ def manifest_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (orders,) = _t(spark, sf_dir, "orders")
     sub = orders.select("o_orderkey", "o_totalprice", "o_orderpriority")
-    root = tempfile.mkdtemp(prefix="spark_graft_asof_")
-    try:
+    with scratch() as root:
         for i, ts in enumerate([1000.0, 2000.0, 3000.0]):
             commit_append(
                 sub.filter(F.col("o_orderkey") % 3 == i),
@@ -7967,9 +7706,7 @@ def manifest_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderpriority")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("o_orderpriority")
 
 
@@ -8019,9 +7756,6 @@ def manifest_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hudi/Delta/Iceberg MERGE posture; at 100 TB the alternative
     (copy-on-write rewrite of every touched partition) is the thing
     this commit kind exists to avoid."""
-    import shutil
-    import tempfile
-
     from automated_etl_pipeline_spark.io.manifest import (
         commit_append,
         commit_upsert,
@@ -8033,8 +7767,7 @@ def manifest_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = _t(spark, sf_dir, "orders")
     base = orders.select("o_orderkey", "o_orderpriority", "o_totalprice")
     k = F.col("o_orderkey")
-    root = tempfile.mkdtemp(prefix="spark_graft_upsert_")
-    try:
+    with scratch() as root:
         commit_append(base, root, "a0")
         up = base.filter(k % 7 == 0).withColumn(
             "o_totalprice", F.col("o_totalprice") * 2
@@ -8088,7 +7821,5 @@ def manifest_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("o_orderpriority")
         )
-        snap = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        snap = materialize(out)
     return snap.orderBy("o_orderpriority")

@@ -19,7 +19,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from automated_etl_pipeline_spark.io.sources import spread
-from automated_etl_pipeline_spark.queries import _t, probe, query, retired_query
+from automated_etl_pipeline_spark.queries import (
+    _t,
+    probe,
+    query,
+    retired_query,
+    scratch,
+)
 
 # ----------------------------------------------------------------------
 # Deduplication (exact). Scale: one shuffle on the 128-bit content hash;
@@ -3357,25 +3363,15 @@ def streaming_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound must HOLD here); eviction-under-slicing correctness is
     pinned separately against brute force in tests/test_streaming.py
     property tests over planted zipf streams."""
-    import shutil
-    import tempfile
-    import uuid
-
     from automated_etl_pipeline_spark.io.sources import load_testdata
-    from automated_etl_pipeline_spark.queries_ext import _stream_parts
     from automated_etl_pipeline_spark.schemas import DOCUMENTS
     from automated_etl_pipeline_spark.streaming.stateful import (
         heavy_hitters_stateful,
     )
-    from automated_etl_pipeline_spark.streaming.windows import (
-        detach_sink_table,
-        run_to_memory_sink,
-    )
+    from automated_etl_pipeline_spark.streaming.windows import drain_stream
 
     docs = load_testdata(spark, sf_dir, ["documents"])["documents"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_mg_stream_")
-    name = f"mg_stream_{uuid.uuid4().hex[:8]}"
-    try:
+    with scratch() as drop:
         docs.repartition(8).write.mode("overwrite").parquet(drop)
         stream_toks = (
             spark.readStream.schema(DOCUMENTS)
@@ -3384,25 +3380,15 @@ def streaming_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.explode(F.split("text", " ")).alias("item"))
             .withColumn("bucket", F.pmod(F.xxhash64("item"), F.lit(4)))
         )
-        # n=4: state is keyed by the B=4 hash buckets — partitions past
-        # the key count only add empty state-store instances per
-        # trigger (4 triggers here); sized per the _stream_parts
-        # contract
-        with _stream_parts(spark, n=4):
-            q = run_to_memory_sink(
-                heavy_hitters_stateful(stream_toks, k=32),
-                name,
-                output_mode="append",
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("availableNow drain did not finish in 300s")
-        emitted = detach_sink_table(spark, name)
-    finally:
-        spark.catalog.dropTempView(name) if name in [
-            t.name for t in spark.catalog.listTables()
-        ] else None
-        shutil.rmtree(drop, ignore_errors=True)
+        # 4 partitions: state is keyed by the B=4 hash buckets —
+        # partitions past the key count only add empty state-store
+        # instances per trigger (4 triggers here); sized per the
+        # _stream_parts contract
+        emitted = drain_stream(
+            heavy_hitters_stateful(stream_toks, k=32),
+            output_mode="append",
+            shuffle_partitions=4,
+        )
     # final sketch = max-seq emission per bucket (bounded frame:
     # B * k * n_triggers rows total)
     last = emitted.groupBy("bucket").agg(F.max("seq").alias("seq"))
@@ -5186,24 +5172,21 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads footers, not data); the scan itself stays columnar with
     pushdown intact.  The temp batches are removed before returning
     (r11 review: a lazily-scanned temp dir leaks two orders copies per
-    bench leg), so the 1-row aggregate is computed eagerly and
-    returned as a local frame."""
-    import shutil
-    import tempfile
+    bench leg), so the 1-row aggregate is materialized first."""
+    from automated_etl_pipeline_spark.plans.materialize import materialize
 
     (orders,) = _t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="schema_evo_gate_")
-    orders.filter(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    ).write.mode("overwrite").parquet(f"{base}/b=1")
-    orders.filter(F.col("o_orderkey") % 2 == 1).select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    ).write.mode("overwrite").parquet(f"{base}/b=2")
-    try:
+    with scratch() as base:
+        orders.filter(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_custkey", "o_totalprice"
+        ).write.mode("overwrite").parquet(f"{base}/b=1")
+        orders.filter(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
+        ).write.mode("overwrite").parquet(f"{base}/b=2")
         merged = spark.read.option("mergeSchema", "true").parquet(
             f"{base}/b=1", f"{base}/b=2"
         )
-        rows = merged.agg(
+        out = merged.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.when(F.col("o_orderpriority").isNull(), 1).otherwise(0))
             .cast("long")
@@ -5219,14 +5202,8 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_orderpriority")
             .cast("long")
             .alias("n_priorities"),
-        ).collect()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "n_rows long, n_evolved_null long, n_evolved_set long,"
-        " sum_cents long, n_priorities long",
-    )
+        )
+        return materialize(out)
 
 
 _MIXTURE_MATERIALIZE_ORACLE = f"""

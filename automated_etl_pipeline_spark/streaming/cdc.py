@@ -34,6 +34,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from automated_etl_pipeline_spark.operators.merge import merge_upsert
+from automated_etl_pipeline_spark.streaming.windows import await_drain
 
 
 def run_cdc_merge_stream(
@@ -45,7 +46,6 @@ def run_cdc_merge_stream(
     version_col: str,
     state_root: str,
     max_files_per_trigger: int = 1,
-    timeout_s: int = 300,
 ) -> DataFrame:
     """Drain all change files under ``drop_dir`` (schema ``schema``)
     into an epoch-versioned snapshot seeded from ``base``; returns the
@@ -85,7 +85,5 @@ def run_cdc_merge_stream(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"CDC drain did not finish in {timeout_s}s")
+    await_drain(q, "CDC drain")
     return spark.read.parquet(current["path"])

@@ -43,6 +43,7 @@ from automated_etl_pipeline_spark.io.manifest import (
     commit_upsert,
     current_version,
 )
+from automated_etl_pipeline_spark.streaming.windows import await_drain
 
 
 def batch_run_id(query_name: str, batch_id: int) -> str:
@@ -140,7 +141,6 @@ def run_stream_to_manifest(
     state_root: str,
     query_name: str = "ingest",
     max_files_per_trigger: int = 1,
-    timeout_s: int = 300,
 ) -> int:
     """Drain all files under ``drop_dir`` (schema ``schema``) into the
     manifest table at ``table_root`` with exactly-once commits;
@@ -162,7 +162,5 @@ def run_stream_to_manifest(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"manifest drain did not finish in {timeout_s}s")
+    await_drain(q, "manifest drain")
     return current_version(table_root)

@@ -27,10 +27,10 @@ def write_stream_idempotent(
     path: str,
     checkpoint: str,
     query_name: str = "idempotent_sink",
-    available_now: bool = True,
 ):
-    """Start a foreachBatch writer that lands every microbatch in its
-    own batch_id partition (exactly-once under replay)."""
+    """Start an availableNow foreachBatch writer that lands every
+    microbatch in its own batch_id partition (exactly-once under
+    replay)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -41,11 +41,10 @@ def write_stream_idempotent(
             .parquet(path)
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(sink)
         .queryName(query_name)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -16,11 +16,42 @@ Semantics at scale:
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
+from automated_etl_pipeline_spark.plans.materialize import materialize
 from automated_etl_pipeline_spark.schemas import EVENTS
+
+# An availableNow drain still running after this many seconds is
+# stopped and reported as a TimeoutError.
+DRAIN_TIMEOUT_S = 300
+
+
+class _stream_parts:
+    """Temporarily size ``spark.sql.shuffle.partitions`` for a
+    streaming drain, restoring the session value afterwards.
+
+    Every stateful streaming operator instantiates one state store per
+    shuffle partition (a stream-stream join: FOUR — left/right ×
+    keyToNumValues/keyWithIndexToValue), and each store pays
+    per-micro-batch maintenance (snapshot, file IO) regardless of how
+    little state it holds.  The gates' stateful volume is small, so 8
+    partitions cuts that fixed cost 4× vs the session's scan-sized 32;
+    a real cluster job sizes this to STATE volume, not scan width —
+    the knob exists precisely because the two differ."""
+
+    def __init__(self, spark: SparkSession, n: int = 8):
+        self.spark, self.n = spark, n
+
+    def __enter__(self):
+        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+
+    def __exit__(self, *exc):
+        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
 def read_events_stream(
@@ -68,36 +99,46 @@ def windowed_counts(
     )
 
 
-def run_to_memory_sink(
-    agg: DataFrame, query_name: str, output_mode: str = "complete"
-) -> "StreamingQuery":  # noqa: F821
-    """Drain all available input into an in-memory table (tests/dev)."""
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def detach_sink_table(spark: SparkSession, query_name: str) -> DataFrame:
-    """Detach a drained memory-sink table from the session as an
-    executor-materialized frame (eager ``localCheckpoint``), so the
-    caller can drop the temp view and delete the staging dirs while
-    the result stays queryable.
+    """Return a drained memory-sink table as a materialized frame that
+    no longer depends on the sink, and drop the sink's temp view."""
+    out = materialize(spark.table(query_name))
+    spark.catalog.dropTempView(query_name)
+    return out
 
-    Replaces the ``createDataFrame(table.collect(), schema)`` detach
-    (r16 opt, guide §5 — the driver should do almost no data work):
-    that roundtrip shipped every sink row to the Python driver,
-    re-shipped it back as pickled rows, and the parallelized-rows plan
-    re-parsed the pickles on EVERY downstream execution of the
-    returned frame.  The checkpoint keeps the rows in JVM block
-    storage — one job, no serialization boundary.  Measured on
-    streaming_tumbling_1h at sf0.1: detach + one downstream pass
-    1.01 s -> 0.49 s; gates with thousands of sink rows
-    (streaming_stateful_sessions: 9399) save proportionally more."""
-    return spark.table(query_name).localCheckpoint(eager=True)
+
+def await_drain(q: StreamingQuery, what: str) -> None:
+    """Wait for an availableNow query to finish; past
+    ``DRAIN_TIMEOUT_S`` stop it and raise ``TimeoutError``."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"{what} did not finish in {DRAIN_TIMEOUT_S}s")
+
+
+def drain_stream(
+    agg: DataFrame, *, output_mode: str = "complete", shuffle_partitions: int = 8
+) -> DataFrame:
+    """Drain every available input of the streaming frame ``agg`` into
+    a memory sink (availableNow trigger, ``shuffle_partitions`` state
+    partitions per the ``_stream_parts`` contract) and return the sink
+    table detached from the stream.  A drain past ``DRAIN_TIMEOUT_S``
+    is stopped and raises ``TimeoutError``; no sink view outlives the
+    call either way."""
+    spark = agg.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    try:
+        with _stream_parts(spark, shuffle_partitions):
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            await_drain(q, "availableNow drain")
+        return detach_sink_table(spark, name)
+    finally:
+        spark.catalog.dropTempView(name)  # no-op once detached
 
 
 def windowed_distinct_sketch(

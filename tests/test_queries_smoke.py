@@ -4,6 +4,8 @@ schema. Full DuckDB equivalence runs via tools/check_correctness.py
 
 from __future__ import annotations
 
+import tempfile
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -21,10 +23,14 @@ def test_entry_smoke(spark):
 
 
 @pytest.mark.parametrize("name", ALL)
-def test_query_runs(spark, name):
+def test_query_runs(spark, name, tmp_path, monkeypatch):
+    # leak guard: whatever a gate stages in temp dirs is gone once it
+    # returns, and the returned frame must not need any of it
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     df = entry_mod.queries()[name](spark, SF_SMOKE)
     assert df.columns  # schema resolves
     assert df.count() >= 0
+    assert not any(tmp_path.iterdir()), "gate left staged data behind"
 
 
 def test_every_oracle_has_query():

@@ -3,10 +3,13 @@ sink, checked against the identical batch computation."""
 
 from __future__ import annotations
 
+import pytest
+
 from automated_etl_pipeline_spark.io.sources import load_testdata
+from automated_etl_pipeline_spark.streaming import windows
 from automated_etl_pipeline_spark.streaming.windows import (
+    drain_stream,
     read_events_stream,
-    run_to_memory_sink,
     windowed_counts,
 )
 
@@ -23,18 +26,31 @@ def test_stream_matches_batch_window_agg(spark, tmp_path):
 
     stream = read_events_stream(spark, drop, max_files_per_trigger=2)
     assert stream.isStreaming
-    q = run_to_memory_sink(windowed_counts(stream), "win_counts")
-    q.awaitTermination(120)
-
     got = {
         (r.window_start, r.n_events)
-        for r in spark.sql("SELECT * FROM win_counts").collect()
+        for r in drain_stream(windowed_counts(stream)).collect()
     }
     want = {
         (r.window_start, r.n_events)
         for r in windowed_counts(events).collect()  # same code, batch path
     }
     assert got == want and len(got) > 0
+
+
+def test_drain_timeout_stops_query_and_drops_sink(spark, tmp_path, monkeypatch):
+    """A drain still running at DRAIN_TIMEOUT_S raises TimeoutError and
+    leaves neither an active query nor a sink view behind."""
+    events = load_testdata(spark, SF, ["events"])["events"]
+    drop = str(tmp_path / "drops")
+    events.write.parquet(drop)
+    views = {t.name for t in spark.catalog.listTables()}
+    monkeypatch.setattr(windows, "DRAIN_TIMEOUT_S", 0.001)
+
+    stream = read_events_stream(spark, drop, max_files_per_trigger=1)
+    with pytest.raises(TimeoutError):
+        drain_stream(windowed_counts(stream))
+    assert spark.streams.active == []
+    assert {t.name for t in spark.catalog.listTables()} == views
 
 
 def test_stateful_sessionization_matches_batch_closed_sessions(spark, tmp_path):

@@ -1,22 +1,18 @@
 """Streaming-gate overhead breakdown (VERDICT r5 ask #6).
 
-The six streaming gates cost ~21 s of the ~135 s sf0.1 bench. This
-profiler answers "is that data or fixed cost?" two ways:
+The streaming gates are a large share of the sf0.1 bench. This
+profiler answers "is that data or fixed cost?" with a FIXED-vs-SCALING
+split for every streaming gate: wall at sf0.001 (data is ~1 MB —
+effectively pure fixed cost: stream planning, state-store init, sink
+setup) vs wall at sf0.1. The difference is the data-dependent part a
+scale regression would inflate; the sf0.001 number is the constant
+that masks it.
 
-1. PHASE breakdown of one representative gate
-   (``streaming_tumbling_1h``), replicating its body with timers:
-   - stage:   batch-write events to the drop dir (input staging);
-   - stream:  query start + availableNow drain — further split via
-     ``q.recentProgress`` into micro-batch compute (sum of
-     triggerExecution durations) vs startup/scheduling (wall minus
-     that sum);
-   - drain:   memory-sink snapshot collect + detach + cleanup.
-
-2. FIXED-vs-SCALING split for ALL six gates: wall at sf0.001 (data is
-   ~1 MB — effectively pure fixed cost: stream planning, state-store
-   init, sink setup) vs wall at sf0.1. The difference is the
-   data-dependent part a scale regression would inflate; the sf0.001
-   number is the constant that masks it.
+Per-phase numbers for one gate (micro-batch count, trigger time and
+the sink detach of streaming_tumbling_1h) come from the benchmark's
+traced run instead: ``python3 perfbench/run.py --workload table_writes
+--seed 1 --seconds 20 --trace 1`` reports ``streaming.batches``,
+``streaming.trigger_ms`` and ``streaming.detach_s``.
 
 Results are written to BENCH_STREAMING_DETAIL.json (committed once per
 round — bench.py's BENCH_DETAIL.json is overwritten every run, so the
@@ -29,11 +25,8 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
-import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -51,63 +44,6 @@ GATES = [
     "streaming_heavy_tokens",
     "pysource_stream_agg",
 ]
-
-
-def profile_tumbling_phases(spark, sf_dir: str) -> dict:
-    """streaming_tumbling_1h with per-phase timers (mirrors
-    queries_ext.py streaming_tumbling_1h exactly)."""
-    from automated_etl_pipeline_spark.io.sources import load_testdata
-    from automated_etl_pipeline_spark.queries_ext import _stream_parts
-    from automated_etl_pipeline_spark.streaming.windows import (
-        read_events_stream,
-        run_to_memory_sink,
-        windowed_counts,
-    )
-
-    out: dict[str, float] = {}
-    events = load_testdata(spark, sf_dir, ["events"])["events"]
-    drop = tempfile.mkdtemp(prefix="spark_graft_stream_prof_")
-    name = f"stream_prof_{uuid.uuid4().hex[:8]}"
-    # recentProgress retains only the last N updates (default 100); a
-    # drain with more micro-batches would silently undercount compute
-    # and inflate the startup/scheduling share (ADVICE r6).  Raise the
-    # buffer far past any plausible batch count for the profiled run.
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    try:
-        t0 = time.perf_counter()
-        events.write.mode("overwrite").parquet(drop)
-        out["stage_s"] = round(time.perf_counter() - t0, 3)
-
-        t1 = time.perf_counter()
-        with _stream_parts(spark):
-            q = run_to_memory_sink(
-                windowed_counts(
-                    read_events_stream(spark, drop, max_files_per_trigger=4)
-                ),
-                name,
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("drain did not finish")
-            progress = list(q.recentProgress)
-        out["stream_s"] = round(time.perf_counter() - t1, 3)
-        out["n_microbatches"] = len(progress)
-        trig = sum(p["durationMs"].get("triggerExecution", 0) for p in progress)
-        out["microbatch_compute_s"] = round(trig / 1000.0, 3)
-        out["startup_sched_s"] = round(out["stream_s"] - trig / 1000.0, 3)
-
-        t2 = time.perf_counter()
-        snapshot = spark.table(name).orderBy("window_start")
-        spark.createDataFrame(snapshot.collect(), snapshot.schema).count()
-        out["drain_s"] = round(time.perf_counter() - t2, 3)
-    finally:
-        if name in [t.name for t in spark.catalog.listTables()]:
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(drop, ignore_errors=True)
-    out["wall_s"] = round(
-        out["stage_s"] + out["stream_s"] + out["drain_s"], 3
-    )
-    return out
 
 
 def main() -> None:
@@ -140,11 +76,6 @@ def main() -> None:
             f"data-dependent {round(full - fixed, 3)}s",
             flush=True,
         )
-
-    record["tumbling_phase_breakdown_sf01"] = profile_tumbling_phases(
-        spark, "/root/testdata/sf0.1"
-    )
-    print(json.dumps(record["tumbling_phase_breakdown_sf01"], indent=1))
 
     # host-load context alongside the timings, same shape as
     # BENCH_DETAIL.json's conditions block (r14 VERDICT ask #7): a
