@@ -11,9 +11,16 @@ module is that idea at its smallest:
 
 - data files stage under ``data/<commit-uuid>/`` (never visible until
   published);
-- a commit publishes manifest ``_manifest/v{N}.json`` naming every
-  live file (full-snapshot manifests — O(files) per commit; real
-  formats append deltas + checkpoints, same semantics);
+- a commit publishes manifest ``_manifest/v{N}.json`` in one of two
+  shapes.  A CHECKPOINT carries the full table state (live files,
+  schema, per-file ``added_at``, pending deletes, ``{file: {col: [mn,
+  mx]}}`` zone-map stats, the run_id ledger) plus a ``commit`` record
+  of what this version did; v1, every ``CHECKPOINT_EVERY``-th version,
+  every rewrite and every rename publish one.  The versions between
+  publish a DELTA: only this commit's record (``kind``, ``run_id``,
+  added/removed files, delete entries, their stats).  Every manifest
+  carries its commit wall-time ``ts``.  Bloom bitmaps live in per-commit
+  sidecar files next to the data; manifests name them (``bloom_refs``);
 - publishing goes through ``CommitBackend`` (r14): publish-if-absent
   of the complete manifest at the versioned key — EXCLUSIVE (two
   racing writers cannot both win version N; the loser re-reads and
@@ -49,6 +56,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -105,19 +113,19 @@ def _manifest_dir(root: str) -> str:
 # The hash contract is the repo-pinned ``md5_double_hash`` derivation
 # (functions/hashutil.py): h1/h2 from one md5 of the key's STRING
 # form, k probe positions by Kirsch-Mitzenmacher double hashing.
-# Build side computes positions in the JVM (one distinct aggregate
-# over files x positions, bounded by files * cols * m rows); probe
-# side recomputes them in Python on the driver against the manifest's
+# Build side computes positions in the JVM and ORs them into 64-bit
+# words (one aggregate, bounded by files * cols * m/64 rows); probe
+# side recomputes them in Python on the driver against the sidecar
 # hex bitmaps — no Spark job runs for the pruning decision itself.
-# Both sides feed the SAME packing code below, so the only
-# cross-engine surface is the md5-of-string-form contract, which
+# Both sides use the ONE bit order of ``_bloom_pack`` below, so the
+# only cross-engine surface is the md5-of-string-form contract, which
 # ``bloom_cols`` restricts to types whose Spark CAST-to-string equals
 # Python ``str()``: integers, strings, dates.
 #
-# Sizing: ``bloom_bits`` is per FILE per column.  At ~10-15 bits per
-# distinct key in a file the fp rate is ~1% (k=4); the default 8192
-# bits (1 KiB of manifest hex per file/col) covers ~800 keys/file at
-# that rate.  A production port reads these from the parquet footers
+# Sizing: ``bloom_bits`` is per FILE per column, a multiple of 64.  At
+# ~10-15 bits per distinct key in a file the fp rate is ~1% (k=4); the
+# default 8192 bits (1 KiB of sidecar hex per file/col) covers ~800
+# keys/file at that rate.  A production port reads these from the parquet footers
 # the writer already produced instead of re-aggregating at commit.
 # ---------------------------------------------------------------------------
 
@@ -394,8 +402,8 @@ def _merge_schema(cur_json: str | None, new_json: str) -> str:
 
 def _schema_of(m: dict):
     """The manifest's recorded table schema as a StructType, or None
-    for legacy tables (pre-schema-tracking) — readers then fall back
-    to parquet self-description."""
+    for a table published without one (Spark-free ``_publish``
+    callers) — readers then fall back to parquet self-description."""
     sj = m.get("schema")
     if sj is None:
         return None
@@ -448,10 +456,8 @@ def _read_manifest(
 CHECKPOINT_EVERY = 8
 
 
-def _rename_fields_json(schema_json: str | None, renames: dict) -> str | None:
+def _rename_fields_json(schema_json: str, renames: dict) -> str:
     """Apply a name->name rename map to a recorded schema JSON."""
-    if schema_json is None:
-        return None
     from pyspark.sql.types import StructField, StructType
 
     s = StructType.fromJson(json.loads(schema_json))
@@ -464,131 +470,60 @@ def _rename_fields_json(schema_json: str | None, renames: dict) -> str | None:
     return json.dumps(out.jsonValue())
 
 
-def _apply_rename(state_like: dict, renames: dict) -> dict:
-    """The state mutation a RENAME commit makes — metadata only:
-    schema field names, the name->id mapping, stats/bloom keys, and
-    pending delete entries' CURRENT-name aliases move; no data file,
-    added_at, or per-file physical mapping changes.  Shared by the
-    publish path and the delta replay so they cannot drift."""
-    out = dict(state_like)
-    out["schema"] = _rename_fields_json(state_like.get("schema"), renames)
-    out["field_ids"] = {
-        renames.get(n, n): fid
-        for n, fid in state_like.get("field_ids", {}).items()
-    }
-    out["stats"] = {
-        f: (
-            {renames.get(c, c): b for c, b in s.items()}
-            if isinstance(s, dict)
-            else s
-        )
-        for f, s in state_like.get("stats", {}).items()
-    }
-    if state_like.get("blooms"):
-        out["blooms"] = {
-            f: {renames.get(c, c): b for c, b in cols.items()}
-            for f, cols in state_like["blooms"].items()
-        }
-    new_dels = []
-    for e in state_like.get("deletes", []):
-        cur = list(e.get("as", e["cols"]))
-        e2 = dict(e)
-        e2["as"] = [renames.get(c, c) for c in cur]
-        new_dels.append(e2)
-    out["deletes"] = new_dels
-    return out
-
-
 def _apply_delta(state: dict, m: dict) -> dict:
     """Replay one delta manifest on top of a resolved state — the
-    read-side mirror of the `_publish` branches.  Rewrites never
-    appear here (they always publish full checkpoints)."""
+    read-side mirror of the `_publish` branches.  Rewrites and renames
+    never appear here (they always publish full checkpoints)."""
     d = m["delta"]
     kind = d["kind"]
     v = int(m["version"])
+    if kind not in ("append", "replace", "delete", "upsert"):
+        raise ValueError(f"unreplayable delta kind {kind!r} at v{v}")
     files = list(state["files"])
-    added_at = dict(state.get("added_at", {}))
-    deletes = list(state.get("deletes", []))
-    stats = dict(state.get("stats", {}))
-    blooms = dict(state.get("blooms", {}))
-    bloom_refs = dict(state.get("bloom_refs", {}))
-    bloom_meta = d.get("bloom_meta", state.get("bloom_meta"))
-    field_ids = dict(state.get("field_ids", {}))
-    file_fields = dict(state.get("file_fields", {}))
-    schema = d.get("schema", state.get("schema"))
+    added_at = dict(state["added_at"])
+    deletes = list(state["deletes"])
     commit_meta: dict = {"kind": kind, "added": list(d.get("added", []))}
-    if kind == "append":
-        files = files + list(d["added"])
-        for f in d["added"]:
-            added_at[f] = v
-    elif kind == "replace":
+    if kind == "replace":
         removed = set(d["removed"])
-        files = [f for f in files if f not in removed] + list(d["added"])
+        files = [f for f in files if f not in removed]
         added_at = {
             f: a for f, a in added_at.items() if f not in removed
         }
-        for f in d["added"]:
-            added_at[f] = v
         commit_meta["removed"] = list(d["removed"])
-    elif kind == "delete":
-        deletes = deletes + list(d["entries"])
-        commit_meta["recorded"] = bool(d.get("recorded"))
-    elif kind == "upsert":
-        files = files + list(d["added"])
-        for f in d["added"]:
-            added_at[f] = v
-        deletes = deletes + list(d["entries"])
-        commit_meta["recorded"] = bool(d.get("recorded"))
-    else:
-        # rename commits always publish full checkpoints (they mutate
-        # the snapshot-wide metadata a delta cannot carry), so they
-        # never appear here
-        raise ValueError(f"unreplayable delta kind {kind!r} at v{v}")
+    files += commit_meta["added"]
+    for f in commit_meta["added"]:
+        added_at[f] = v
+    if kind in ("delete", "upsert"):
+        deletes += d["entries"]
+        commit_meta["recorded"] = bool(d["recorded"])
     live = set(files)
-    stats = {
-        f: s
-        for f, s in {**stats, **d.get("stats", {})}.items()
-        if f in live
-    }
-    blooms = {
-        f: b
-        for f, b in {**blooms, **d.get("blooms", {})}.items()
-        if f in live
-    }
-    bloom_refs = {
-        f: p
-        for f, p in {**bloom_refs, **d.get("bloom_refs", {})}.items()
-        if f in live
-    }
-    if d.get("file_fields"):
-        file_fields = {**file_fields, **d["file_fields"]}
-    if d.get("field_ids"):
-        field_ids = dict(d["field_ids"])
-    file_fields = {f: ff for f, ff in file_fields.items() if f in live}
+
+    def carried(key: str) -> dict:
+        # per-file metadata: the state's entries plus this commit's,
+        # for live files only
+        merged = {**state.get(key, {}), **d.get(key, {})}
+        return {f: x for f, x in merged.items() if f in live}
+
     out = {
         "version": v,
         "files": files,
         "added_at": added_at,
         "deletes": deletes,
-        "stats": stats,
-        "schema": schema,
-        "run_ids": (state.get("run_ids", []) + [d["run_id"]])[
-            -RUN_ID_RETENTION:
-        ],
+        "stats": carried("stats"),
+        "schema": d["schema"],
+        "run_ids": (state["run_ids"] + [d["run_id"]])[-RUN_ID_RETENTION:],
         "commit": commit_meta,
+        "ts": m["ts"],
     }
-    if blooms or bloom_refs or bloom_meta:
-        if blooms:
-            out["blooms"] = blooms
+    bloom_refs = carried("bloom_refs")
+    bloom_meta = d.get("bloom_meta", state.get("bloom_meta"))
+    if bloom_refs or bloom_meta:
         out["bloom_refs"] = bloom_refs
         out["bloom_meta"] = bloom_meta
+    field_ids = d.get("field_ids", state.get("field_ids"))
     if field_ids:
-        out["field_ids"] = field_ids
-        out["file_fields"] = file_fields
-    if "ts" in m:
-        out["ts"] = m["ts"]
-    elif "ts" in state:
-        out["ts"] = state["ts"]
+        out["field_ids"] = dict(field_ids)
+        out["file_fields"] = carried("file_fields")
     return out
 
 
@@ -597,8 +532,7 @@ def _resolve_state(
 ) -> dict:
     """The FULL table state at ``version``: walk back to the nearest
     checkpoint (a manifest carrying ``files``), then replay the delta
-    chain forward.  Bounded by CHECKPOINT_EVERY reads; legacy tables
-    (all-full manifests) resolve in one."""
+    chain forward.  Bounded by CHECKPOINT_EVERY reads."""
     chain: list[dict] = []
     v = version
     while True:
@@ -638,6 +572,17 @@ def _resolve_state(
     return state
 
 
+def _newest_state(
+    root: str, backend: CommitBackend | None = None
+) -> tuple[int, dict]:
+    """The newest version and its resolved state; before the first
+    commit, version 0 and the empty table."""
+    v = current_version(root, backend)
+    if v == 0:
+        return 0, {"files": [], "run_ids": [], "ts": 0.0}
+    return v, _resolve_state(root, v, backend)
+
+
 def _stage(df: DataFrame, root: str) -> list[str]:
     """Write ``df`` under a fresh ``data/<uuid>/`` stage (invisible
     until a manifest names it) and return the staged parquet paths."""
@@ -653,13 +598,13 @@ def _stage(df: DataFrame, root: str) -> list[str]:
 def _collect_file_metadata(
     spark: SparkSession,
     new_files: list[str],
-    cols: list[str],
+    cols: list[str] | None,
     bloom_cols: list[str] | None,
     bloom_bits: int,
 ) -> tuple[dict, dict[str, str] | None]:
-    """One grouped aggregate over freshly staged files computing BOTH
-    zone-map min/max (``cols``) and bloom position sets
-    (``bloom_cols``); returns (stats, bloom_refs) in manifest format.
+    """Zone-map min/max of ``cols`` (one grouped aggregate) and Bloom
+    bitmaps of ``bloom_cols`` (one packed-word aggregate) for freshly
+    staged files; returns (stats, bloom_refs) in manifest format.
     Bitmaps are written to a per-commit sidecar file in the stage
     directory (see the bloom module notes) and only the path is
     returned.  A real port reads all of this from the parquet footers
@@ -681,7 +626,6 @@ def _collect_file_metadata(
         return orig
 
     new_stats: dict[str, dict] = {}
-    new_blooms: dict[str, dict] = {}
     if not (cols or bloom_cols) or not new_files:
         return new_stats, None
     staged = spark.read.parquet(*new_files)
@@ -704,129 +648,92 @@ def _collect_file_metadata(
                 c: [_json_stat(row[f"mn_{c}"]), _json_stat(row[f"mx_{c}"])]
                 for c in cols
             }
-    if bloom_cols:
-        from functools import reduce
+    if not bloom_cols:
+        return new_stats, None
+    from automated_etl_pipeline_spark.functions.hashutil import (
+        md5_double_hash,
+    )
 
-        from automated_etl_pipeline_spark.functions.hashutil import (
-            md5_double_hash,
+    if bloom_bits % 64:
+        raise ValueError(
+            f"bloom_bits={bloom_bits} is not a multiple of 64: bitmaps "
+            "are built as whole 64-bit words"
         )
-
-        types = {f.name: f.dataType.simpleString() for f in staged.schema}
+    types = {f.name: f.dataType.simpleString() for f in staged.schema}
+    for c in bloom_cols:
+        if types.get(c) not in _BLOOM_TYPES:
+            raise ValueError(
+                f"bloom column {c!r} has type {types.get(c)!r}; "
+                f"bloom sidecars need a CAST-to-string-stable "
+                f"type ({', '.join(_BLOOM_TYPES)}) so the "
+                "driver-side probe hash matches the JVM build hash"
+            )
+    # Bloom positions in a SEPARATE, codegen-friendly pass (r15 opt,
+    # guide §1.2 step 2): explode to (file, col, pos) rows, then OR
+    # each position's bit into a per-(file, col, 64-bit-word) long via
+    # bit_or — a plain HashAggregate that stays in whole-stage codegen
+    # end to end and partial-aggregates map-side, never shipping rows
+    # x k positions.  The driver receives files x cols x (bits/64)
+    # longs.  Bit placement mirrors _bloom_pack exactly: position p
+    # sets bit 63 - (p % 64) of word p // 64, so the word's 016x hex
+    # rendering IS digits 16w..16w+15 of the canonical packing.
+    h1h2 = {c: md5_double_hash(F.col(c)) for c in bloom_cols}
+    parts = [
+        staged.select(
+            F.input_file_name().alias("__f"),
+            F.lit(ci).alias("__c"),
+            F.explode(
+                F.array(
+                    *[
+                        ((h1h2[c][0] + F.lit(i) * h1h2[c][1]) % bloom_bits)
+                        .cast("int")
+                        for i in range(BLOOM_K)
+                    ]
+                )
+            ).alias("p"),
+        )
+        for ci, c in enumerate(bloom_cols)
+    ]
+    allpos = reduce(lambda a, b: a.unionAll(b), parts)
+    # NULL keys yield NULL positions — dropped (they never probe true)
+    allpos = allpos.where(F.col("p").isNotNull())
+    wrows = (
+        allpos.groupBy("__f", "__c", F.shiftright("p", 6).alias("w"))
+        .agg(
+            F.expr(
+                "bit_or(shiftleft(CAST(1 AS BIGINT), 63 - pmod(p, 64)))"
+            ).alias("bits")
+        )
+        .collect()
+    )
+    acc: dict[tuple[str, int], dict[int, int]] = {}
+    for row in wrows:
+        acc.setdefault((row["__f"], row["__c"]), {})[row["w"]] = row["bits"]
+    mask = (1 << 64) - 1
+    new_blooms: dict[str, dict] = {}
+    for (furi, ci), words in acc.items():
+        hexmap = "".join(
+            format(words.get(w, 0) & mask, "016x")
+            for w in range(bloom_bits // 64)
+        )
+        new_blooms.setdefault(_orig_path(furi), {})[bloom_cols[ci]] = hexmap
+    # a staged file with zero rows (or all-NULL keys) gets an all-zero
+    # bitmap — provably contains nothing
+    empty = _bloom_pack([], bloom_bits)
+    for f in new_files:
         for c in bloom_cols:
-            if types.get(c) not in _BLOOM_TYPES:
-                raise ValueError(
-                    f"bloom column {c!r} has type {types.get(c)!r}; "
-                    f"bloom sidecars need a CAST-to-string-stable "
-                    f"type ({', '.join(_BLOOM_TYPES)}) so the "
-                    "driver-side probe hash matches the JVM build hash"
-                )
-        # Bloom positions in a SEPARATE, codegen-friendly pass (r15
-        # opt, guide §1.2 step 2): the old shape folded
-        # array_distinct(flatten(collect_set(pos-array))) into the
-        # min/max aggregate — collect_set over per-row 4-int arrays is
-        # an ObjectHashAggregate holding up to rows-per-file array
-        # objects per group, and its presence pushed the WHOLE
-        # aggregate (min/max included) off whole-stage codegen
-        # (measured: the 6-commit bloom gate ran 2.3x its recorded
-        # anchor).  Exploding to (file, col, pos) rows and
-        # deduplicating in a HashAggregate FIRST bounds the only
-        # object aggregation (collect_set of ints) at bloom_bits
-        # entries per file — the 100-TB shape too: partial aggregation
-        # dedups map-side, never shipping rows x k positions.
-        h1h2 = {c: md5_double_hash(F.col(c)) for c in bloom_cols}
-        parts = [
-            staged.select(
-                F.input_file_name().alias("__f"),
-                F.lit(ci).alias("__c"),
-                F.explode(
-                    F.array(
-                        *[
-                            ((h1h2[c][0] + F.lit(i) * h1h2[c][1]) % bloom_bits)
-                            .cast("int")
-                            for i in range(BLOOM_K)
-                        ]
-                    )
-                ).alias("p"),
-            )
-            for ci, c in enumerate(bloom_cols)
-        ]
-        allpos = reduce(lambda a, b: a.unionAll(b), parts)
-        # NULL keys yield NULL positions — dropped (they never probe
-        # true)
-        allpos = allpos.where(F.col("p").isNotNull())
-        if bloom_bits % 64 == 0:
-            # Packed-word fold (r15 opt, guide §1.2 step 2): OR each
-            # position's bit into a per-(file, col, 64-bit-word) long
-            # via bit_or — a plain HashAggregate that stays in
-            # whole-stage codegen end to end and partial-aggregates
-            # map-side, vs collect_set's ObjectHashAggregate.  The
-            # driver receives files x cols x (bits/64) longs instead
-            # of up-to-bits ints per group (~27x less py4j traffic at
-            # the 65536-bit gate sizing).  Bit placement mirrors
-            # _bloom_pack exactly: position p sets bit 63 - (p % 64)
-            # of word p // 64, so the word's 016x hex rendering IS
-            # digits 16w..16w+15 of the canonical packing.
-            wrows = (
-                allpos.groupBy(
-                    "__f", "__c", F.shiftright("p", 6).alias("w")
-                )
-                .agg(
-                    F.expr(
-                        "bit_or(shiftleft(CAST(1 AS BIGINT),"
-                        " 63 - pmod(p, 64)))"
-                    ).alias("bits")
-                )
-                .collect()
-            )
-            acc: dict[tuple[str, int], dict[int, int]] = {}
-            for row in wrows:
-                acc.setdefault((row["__f"], row["__c"]), {})[row["w"]] = (
-                    row["bits"]
-                )
-            mask = (1 << 64) - 1
-            for (furi, ci), words in acc.items():
-                hexmap = "".join(
-                    format(words.get(w, 0) & mask, "016x")
-                    for w in range(bloom_bits // 64)
-                )
-                new_blooms.setdefault(_orig_path(furi), {})[
-                    bloom_cols[ci]
-                ] = hexmap
-        else:
-            # non-word-aligned sizing: the original bounded
-            # collect_set path (positions per group <= bloom_bits)
-            brows = (
-                allpos.groupBy("__f", "__c")
-                .agg(F.collect_set("p").alias("ps"))
-                .collect()
-            )
-            for row in brows:
-                orig = _orig_path(row["__f"])
-                c = bloom_cols[row["__c"]]
-                new_blooms.setdefault(orig, {})[c] = _bloom_pack(
-                    row["ps"], bloom_bits
-                )
-    new_bloom_refs: dict[str, str] | None = None
-    if bloom_cols:
-        # a staged file with zero rows (or all-NULL keys) gets an
-        # all-zero bitmap — provably contains nothing
-        empty = _bloom_pack([], bloom_bits)
-        for f in new_files:
-            for c in bloom_cols:
-                new_blooms.setdefault(f, {}).setdefault(c, empty)
-        # per-commit SIDECAR file in the stage directory; the manifest
-        # records only its PATH per file (checkpoints stay
-        # O(files x pathlen), never O(files x bitmap)); lifecycle
-        # shared with the data files via vacuum's stage-sweep rule;
-        # keys are PHYSICAL column names, so renames never mutate it
-        sidecar = os.path.join(
-            os.path.dirname(new_files[0]),
-            f"blooms-{uuid.uuid4().hex}.json",
-        )
-        with open(sidecar, "w") as fh:
-            json.dump(new_blooms, fh)
-        new_bloom_refs = {f: sidecar for f in new_blooms}
-    return new_stats, new_bloom_refs
+            new_blooms.setdefault(f, {}).setdefault(c, empty)
+    # per-commit SIDECAR file in the stage directory; the manifest
+    # records only its PATH per file (checkpoints stay O(files x
+    # pathlen), never O(files x bitmap)); lifecycle shared with the
+    # data files via vacuum's stage-sweep rule; keys are PHYSICAL
+    # column names, so renames never mutate it
+    sidecar = os.path.join(
+        os.path.dirname(new_files[0]), f"blooms-{uuid.uuid4().hex}.json"
+    )
+    with open(sidecar, "w") as fh:
+        json.dump(new_blooms, fh)
+    return new_stats, {f: sidecar for f in new_blooms}
 
 
 def _commit(
@@ -834,7 +741,6 @@ def _commit(
     root: str,
     run_id: str,
     files_fn,
-    stats_col: str | None = None,
     expected_base: int | None = None,
     stats_cols: list[str] | None = None,
     delete_cols: list[str] | None = None,
@@ -852,20 +758,16 @@ def _commit(
 
     Zone-map stats: ``stats_cols`` records per-file [min, max] of
     SEVERAL columns in ONE aggregate pass per file (manifest format
-    ``{file: {col: [mn, mx]}}``); ``stats_col`` is the legacy
-    single-column spelling, stored in the same multi-column format
-    since r14 (readers accept both shapes).
+    ``{file: {col: [mn, mx]}}``).
 
     ``bloom_cols`` (r15): additionally record a per-file Bloom bitmap
     (``bloom_bits`` bits, hex-packed) for each named column — the
     point-lookup file-skipping sidecar ``read_table_pruned(eq=...)``
-    consults.  One distinct-aggregate pass over the staged files
-    computes every file's set positions (bounded by files x cols x m
-    rows); a production port reads the bitmaps from parquet footers."""
-    cols = list(stats_cols or ([] if stats_col is None else [stats_col]))
+    consults.  One packed-word aggregate over the staged files builds
+    every file's bitmap (bounded by files x cols x m/64 rows); a
+    production port reads the bitmaps from parquet footers."""
     os.makedirs(_manifest_dir(root), exist_ok=True)
-    v = current_version(root)
-    prev = _resolve_state(root, v) if v else {"files": [], "run_ids": []}
+    v, prev = _newest_state(root)
     if run_id in prev["run_ids"]:
         return v  # retry of a committed run: nothing to do
     schema_json = df.schema.json()
@@ -876,7 +778,7 @@ def _commit(
         _merge_schema(prev["schema"], schema_json)
     new_files = _stage(df, root)
     new_stats, new_bloom_refs = _collect_file_metadata(
-        df.sparkSession, new_files, cols, bloom_cols, bloom_bits
+        df.sparkSession, new_files, stats_cols, bloom_cols, bloom_bits
     )
     return _publish(
         root, run_id, new_files, new_stats, files_fn,
@@ -917,12 +819,7 @@ def _publish(
     the lost publish actually landed — never a double commit."""
     b = backend or _LOCAL_BACKEND
     while True:
-        v = current_version(root, backend=b)
-        cur = (
-            _resolve_state(root, v, backend=b)
-            if v
-            else {"files": [], "run_ids": []}
-        )
+        v, cur = _newest_state(root, b)
         if run_id in cur["run_ids"]:
             return v  # a racing retry of the same run won
         if (
@@ -941,6 +838,7 @@ def _publish(
             )
         cur_added = cur.get("added_at", {})
         cur_dels = cur.get("deletes", [])
+        cur_stats = cur.get("stats", {})
         schema = cur.get("schema")
         field_ids = dict(cur.get("field_ids", {}))
         file_fields = dict(cur.get("file_fields", {}))
@@ -955,7 +853,7 @@ def _publish(
             # move (Iceberg's name-mapping rename).
             if schema is None:
                 raise SchemaEvolutionError(
-                    "cannot rename columns of a legacy table without a "
+                    "cannot rename columns of a table without a "
                     "recorded schema"
                 )
             from pyspark.sql.types import StructType
@@ -986,29 +884,30 @@ def _publish(
                 file_fields = {
                     f: dict(field_ids) for f in cur["files"]
                 }
-            renamed = _apply_rename(
-                {
-                    "schema": schema,
-                    "field_ids": field_ids,
-                    "stats": cur.get("stats", {}),
-                    "blooms": cur.get("blooms", {}),
-                    "deletes": cur_dels,
-                },
-                rename_map,
-            )
-            # bloom_refs are rename-invariant: sidecar files key their
-            # bitmaps by PHYSICAL column names and probes translate
-            # through the column-id mapping (legacy inline "blooms"
-            # still rename their keys above)
+            # metadata only: schema field names, the name->id
+            # mapping, stats keys and pending delete entries'
+            # CURRENT-name aliases ("as") move; no data file, added_at
+            # or per-file physical mapping changes.  bloom_refs are
+            # rename-invariant: sidecar files key their bitmaps by
+            # PHYSICAL column names and probes translate through the
+            # column-id mapping
+            def moved(c: str) -> str:
+                return rename_map.get(c, c)
+
             commit_meta["kind"] = "rename"
             commit_meta["renames"] = dict(rename_map)
             files = list(cur["files"])
             added_at = dict(cur_added)
-            deletes = renamed["deletes"]
-            schema = renamed["schema"]
-            field_ids = renamed["field_ids"]
-            rename_stats = renamed["stats"]
-            rename_blooms = renamed.get("blooms", {})
+            deletes = [
+                {**e, "as": [moved(c) for c in e.get("as", e["cols"])]}
+                for e in cur_dels
+            ]
+            schema = _rename_fields_json(schema, rename_map)
+            field_ids = {moved(n): fid for n, fid in field_ids.items()}
+            cur_stats = {
+                f: {moved(c): b for c, b in st.items()}
+                for f, st in cur_stats.items()
+            }
         elif delete_cols is not None:
             # merge-on-read DELETE commit: the data-file list is
             # untouched; the staged files are DELETE-KEY files that
@@ -1183,53 +1082,36 @@ def _publish(
             ts = _t.time()
         else:
             ts = float(commit_ts)
-        ts = max(ts, float(cur.get("ts", 0.0)))
+        ts = max(ts, float(cur["ts"]))
         live = set(files)
-        if rename_map is not None:
-            stats_out = rename_stats
-            blooms_out = rename_blooms  # legacy inline only
-            bloom_refs_out = {
-                f: p
-                for f, p in cur.get("bloom_refs", {}).items()
-                if f in live
-            }
-        else:
-            stats_out = {
-                f: s
-                for f, s in {**cur.get("stats", {}), **new_stats}.items()
-                if f in live
-            }
-            blooms_out = {
-                f: bl
-                for f, bl in cur.get("blooms", {}).items()
-                if f in live
-            }  # legacy inline carried through, never grown
-            bloom_refs_out = {
-                f: p
-                for f, p in {
-                    **cur.get("bloom_refs", {}),
-                    **(new_bloom_refs or {}),
-                }.items()
-                if f in live
-            }
+        stats_out = {
+            f: st
+            for f, st in {**cur_stats, **new_stats}.items()
+            if f in live
+        }
+        bloom_refs_out = {
+            f: p
+            for f, p in {
+                **cur.get("bloom_refs", {}),
+                **(new_bloom_refs or {}),
+            }.items()
+            if f in live
+        }
         manifest = {
             "version": v + 1,
             "files": files,
             # the evolved table schema (r14): explicit-schema reads
             # reconcile old files against it — additive columns come
-            # back NULL where a file predates them.  Absent on legacy
-            # manifests and carried unchanged through delete commits.
+            # back NULL where a file predates them.  None when the
+            # publisher recorded no schema; carried unchanged through
+            # delete commits.
             "schema": schema,
-            # per-commit record (r14): what THIS commit did — lets the
-            # change feed walk the log instead of set-diffing endpoint
-            # snapshots, so content-preserving replace commits are
-            # skipped rather than poisoning the range.
+            # per-commit record (r14): what THIS commit did — the
+            # change feed walks these, so content-preserving replace
+            # commits are skipped rather than poisoning the range.
             "commit": commit_meta,
             # per-file commit version — the "sequence number" the
-            # delete-visibility rule compares against.  Legacy
-            # manifests lack it; readers default missing entries to 0
-            # (every delete applies — conservative, and exact for
-            # pre-delete-feature tables, which have no deletes).
+            # delete-visibility rule compares against
             "added_at": added_at,
             "deletes": deletes,
             # bounded idempotence ledger: keep only the newest
@@ -1248,9 +1130,7 @@ def _publish(
             # resolves against
             "ts": ts,
         }
-        if blooms_out or bloom_refs_out or bloom_meta:
-            if blooms_out:
-                manifest["blooms"] = blooms_out  # legacy inline
+        if bloom_refs_out or bloom_meta:
             manifest["bloom_refs"] = bloom_refs_out
             manifest["bloom_meta"] = bloom_meta
         if field_ids:
@@ -1319,7 +1199,6 @@ def commit_append(
     df: DataFrame,
     root: str,
     run_id: str,
-    stats_col: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
@@ -1329,10 +1208,10 @@ def commit_append(
     including it; returns the committed version.  Re-committing an
     already-committed ``run_id`` is a no-op (idempotent retry).
 
-    With ``stats_col`` (one column) or ``stats_cols`` (several — r14,
-    VERDICT r13 ask #8) set, the commit records each new file's
-    [min, max] per column in the manifest — the zone map that lets
-    ``read_table_pruned`` skip whole files on range predicates.  A
+    With ``stats_cols`` set (r14, VERDICT r13 ask #8), the commit
+    records each new file's [min, max] per column in the manifest —
+    the zone map that lets ``read_table_pruned`` skip whole files on
+    range predicates.  A
     PARTITION column is the degenerate case: per-file min == max, so
     partition-value pruning and sort-column pruning are one mechanism
     (exactly how Iceberg/Delta file stats subsume hive-style partition
@@ -1351,7 +1230,6 @@ def commit_append(
         root,
         run_id,
         lambda cur, new: cur + new,
-        stats_col=stats_col,
         stats_cols=stats_cols,
         bloom_cols=bloom_cols,
         bloom_bits=bloom_bits,
@@ -1364,7 +1242,6 @@ def commit_add_files(
     files: list[str],
     root: str,
     run_id: str,
-    stats_col: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
@@ -1381,19 +1258,17 @@ def commit_add_files(
     — O(1) driver-side jobs per ingest instead of O(files).  Stats /
     bloom sidecars are computed exactly as ``commit_append`` does;
     same idempotence and optimistic-versioning rules."""
-    cols = list(stats_cols or ([] if stats_col is None else [stats_col]))
     os.makedirs(_manifest_dir(root), exist_ok=True)
     files = sorted(files)
     # schema from the footers (driver-side read; no job runs)
     schema_json = spark.read.parquet(*files).schema.json()
-    v = current_version(root)
-    prev = _resolve_state(root, v) if v else {"files": [], "run_ids": []}
+    v, prev = _newest_state(root)
     if run_id in prev["run_ids"]:
         return v
     if prev.get("schema"):
         _merge_schema(prev["schema"], schema_json)
     new_stats, new_bloom_refs = _collect_file_metadata(
-        spark, files, cols, bloom_cols, bloom_bits
+        spark, files, stats_cols, bloom_cols, bloom_bits
     )
     return _publish(
         root, run_id, files, new_stats, lambda cur, new: cur + new,
@@ -1584,8 +1459,7 @@ def commit_upsert(
         # fail BEFORE staging on any non-key type conflict too (the
         # merge re-runs authoritatively inside the publish loop)
         _merge_schema(ts.json(), df.schema.json())
-    v0 = current_version(root)
-    prev = _resolve_state(root, v0) if v0 else {"files": [], "run_ids": []}
+    v0, prev = _newest_state(root)
     if run_id in prev["run_ids"]:
         return v0  # retry of a committed run: nothing staged twice
     keys = df.select(*key_cols).distinct()
@@ -1603,7 +1477,7 @@ def commit_upsert(
     data_files = _stage(df, root)
     key_files = _stage(keys, root)
     new_stats, new_bloom_refs = _collect_file_metadata(
-        spark, data_files, list(stats_cols or []), bloom_cols, bloom_bits
+        spark, data_files, stats_cols, bloom_cols, bloom_bits
     )
     return _publish(
         root,
@@ -1628,7 +1502,6 @@ def commit_replace_files(
     run_id: str,
     replaced: list[str],
     expected_base: int,
-    stats_col: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
@@ -1652,7 +1525,6 @@ def commit_replace_files(
         root,
         run_id,
         lambda cur, new: cur,  # unused: replace_subset branch builds files
-        stats_col=stats_col,
         stats_cols=stats_cols,
         bloom_cols=bloom_cols,
         bloom_bits=bloom_bits,
@@ -1713,11 +1585,7 @@ def resolve_as_of(
     - ``ValueError`` if ``as_of_ts`` predates the oldest RETAINED
       commit — either the table didn't exist yet, or vacuum expired
       the manifests that would have answered (an expired as-of must
-      raise, never silently read newer — the retention contract).
-    - Manifests that predate timestamp recording (legacy) count as
-      ts=0.0: any non-negative as-of resolves to them rather than
-      erroring, matching the additive-evolution stance everywhere
-      else in this module."""
+      raise, never silently read newer — the retention contract)."""
     b = backend or _LOCAL_BACKEND
     newest = b.latest_version(root)
     if newest == 0:
@@ -1732,7 +1600,7 @@ def resolve_as_of(
                 f"(manifest v{v} vacuumed): the snapshot that would "
                 "answer it no longer exists"
             ) from None
-        if float(m.get("ts", 0.0)) <= as_of_ts:
+        if float(m["ts"]) <= as_of_ts:
             return v
         v -= 1
     raise ValueError(
@@ -1759,7 +1627,7 @@ def read_table_subset(
     missing = set(files) - set(m["files"])
     if missing:
         raise ValueError(f"{len(missing)} file(s) not live at v{v}")
-    if not m.get("deletes"):
+    if not m["deletes"]:
         return _read_files(spark, m, files)
     return _apply_deletes(spark, m, list(files))
 
@@ -1813,7 +1681,7 @@ def compact_small_files(
 
 def table_schema(root: str, version: int | None = None):
     """The snapshot's recorded (evolved) table schema as a StructType,
-    or None for legacy tables that predate schema tracking."""
+    or None for a table published without one."""
     v = current_version(root) if version is None else version
     if v == 0:
         return None
@@ -1835,13 +1703,13 @@ def manifest_delete_files(root: str, version: int | None = None) -> list[dict]:
     v = current_version(root) if version is None else version
     if v == 0:
         return []
-    return list(_resolve_state(root, v).get("deletes", []))
+    return list(_resolve_state(root, v)["deletes"])
 
 
 def _read_files(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
     """Read data files under the manifest's recorded schema (files
-    predating an added column return NULL for it); legacy manifests
-    fall back to parquet self-description.
+    predating an added column return NULL for it); a table published
+    without a schema falls back to parquet self-description.
 
     Column-ID resolution (r15): on a table with ``field_ids``, each
     file's physical column names resolve to the CURRENT names through
@@ -1859,8 +1727,6 @@ def _read_files(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
     if s is None or not field_ids:
         reader = spark.read.schema(s) if s is not None else spark.read
         return reader.parquet(*files)
-    from functools import reduce
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField, StructType
 
@@ -1923,8 +1789,6 @@ def _apply_deletes(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
     delete avoided a rewrite), so AQE turns these into broadcast
     anti-joins without a forced hint."""
     from collections import defaultdict
-    from functools import reduce
-
     from pyspark.sql import functions as F
 
     s = _schema_of(m)
@@ -1936,10 +1800,9 @@ def _apply_deletes(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
             "table columns collide with the delete-protocol markers "
             "__added_at/__del_at"
         )
-    added = m.get("added_at", {})
     by_v: dict[int, list[str]] = defaultdict(list)
     for f in files:
-        by_v[int(added.get(f, 0))].append(f)
+        by_v[int(m["added_at"][f])].append(f)
     parts = [
         _read_files(spark, m, fs).withColumn(
             "__added_at", F.lit(v).cast("long")
@@ -1948,7 +1811,7 @@ def _apply_deletes(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
     ]
     data = reduce(DataFrame.unionByName, parts)
     by_cols: dict[tuple, list[dict]] = defaultdict(list)
-    for d in m.get("deletes", []):
+    for d in m["deletes"]:
         # "as" (r15): the CURRENT names of the key columns after any
         # renames — the delete file's physical columns keep the names
         # current when it was committed ("cols"), and the anti-join
@@ -1981,15 +1844,14 @@ def read_table(
     spark: SparkSession,
     root: str,
     version: int | None = None,
-    apply_deletes: bool = True,
     as_of_ts: float | None = None,
 ) -> DataFrame:
     """Snapshot read: exactly the files the (pinned or newest)
     manifest names — orphans and in-flight stages are invisible.
     Pending merge-on-read delete files (``commit_delete``) are
-    applied as anti-joins unless ``apply_deletes=False`` (audits);
-    snapshots without deletes take the plain multi-file scan path
-    unchanged.
+    applied as anti-joins; snapshots without deletes take the plain
+    multi-file scan path unchanged.  An audit of the raw committed
+    rows reads ``spark.read.parquet(*manifest_files(root))``.
 
     ``as_of_ts`` (r15): timestamp time travel — read the newest
     version committed at or before the given wall-time
@@ -2009,7 +1871,7 @@ def read_table(
         raise FileNotFoundError(
             f"snapshot v{v} of {root} names no data files"
         )
-    if not (apply_deletes and m.get("deletes")):
+    if not m["deletes"]:
         return _read_files(spark, m, files)
     return _apply_deletes(spark, m, files)
 
@@ -2017,20 +1879,17 @@ def read_table(
 def read_table_pruned(
     spark: SparkSession,
     root: str,
-    col: str | None = None,
-    lo=None,
-    hi=None,
-    version: int | None = None,
+    *,
     predicates: dict[str, tuple] | None = None,
     eq: dict[str, object] | None = None,
+    version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Zone-map file skipping: read only the files whose recorded
     [min, max] intersects the given range on EVERY predicate column
     (files lacking stats for a column are conservatively read for that
     column).  ``predicates`` is ``{col: (lo, hi)}`` — several columns
     AND together (r14: a partition-value column plus sort columns is
-    the 100-TB layout this models); the positional ``col/lo/hi`` form
-    is the single-column spelling.  Returns (frame, files_total,
+    the 100-TB layout this models).  Returns (frame, files_total,
     files_scanned).  The row-level predicate must still be applied by
     the caller — the zone map prunes FILES, it does not filter rows
     (exactly parquet row-group skipping one level up).
@@ -2052,9 +1911,7 @@ def read_table_pruned(
     file scan and are removed by the caller's row filter; false
     negatives are impossible, so the pruned read is exact."""
     if predicates is None and eq is None:
-        if col is None:
-            raise ValueError("pass col/lo/hi, predicates, or eq")
-        predicates = {col: (lo, hi)}
+        raise ValueError("pass predicates, eq, or both")
     predicates = dict(predicates or {})
     eq_vals: dict[str, list] = {}
     for c, vs in (eq or {}).items():
@@ -2071,21 +1928,7 @@ def read_table_pruned(
     if v == 0:
         raise FileNotFoundError(f"no committed version under {root}")
     m = _resolve_state(root, v)
-    stats = m.get("stats", {})
-
-    def col_bounds(f: str, c: str):
-        """[mn, mx] for column ``c`` of file ``f``; None = no info.
-        Accepts both the r14 ``{col: [mn, mx]}`` format and the legacy
-        single-column ``[mn, mx]`` list (which carried no column name
-        — it applies to whatever single column the table recorded)."""
-        s = stats.get(f)
-        if s is None:
-            return None
-        if isinstance(s, dict):
-            return s.get(c)
-        return s  # legacy single-column list
-
-    blooms = m.get("blooms", {})  # legacy inline format
+    stats = m["stats"]
     bloom_refs = m.get("bloom_refs", {})
     bloom_m = int((m.get("bloom_meta") or {}).get("m", 0) or 0)
     field_ids = m.get("field_ids", {})
@@ -2099,9 +1942,6 @@ def read_table_pruned(
         column-id mapping, so renames never touch sidecars.  Sidecars
         load lazily, one parse per distinct sidecar per call (bounded
         by commits with bloom_cols, not files)."""
-        inline = blooms.get(f, {}).get(c)
-        if inline is not None:
-            return inline
         path = bloom_refs.get(f)
         if path is None:
             return None
@@ -2123,7 +1963,7 @@ def read_table_pruned(
 
     def intersects(f: str) -> bool:
         for c, (c_lo, c_hi) in predicates.items():
-            b = col_bounds(f, c)
+            b = stats.get(f, {}).get(c)
             if b is None:
                 continue  # no zone info for this column: can't skip on it
             mn, mx = b
@@ -2152,7 +1992,7 @@ def read_table_pruned(
         # empty selection: preserve schema via a zero-row read of one file
         empty = _read_files(spark, m, [m["files"][0]]).limit(0)
         return empty, len(m["files"]), 0
-    if m.get("deletes"):
+    if m["deletes"]:
         # zone maps prune FILES; pending equality deletes remove ROWS
         # — applying the anti-join to the pruned subset is exact
         # (pruning never changes which rows a delete matches).
@@ -2162,16 +2002,15 @@ def read_table_pruned(
 
 def _walk_commits(
     root: str, from_version: int, to_version: int
-) -> list[dict] | None:
+) -> list[dict]:
     """The per-commit records for versions (from, to] — what each
-    commit DID, read from the ``commit`` field manifests have carried
-    since r14.  Returns None if any manifest in the range predates the
-    field (legacy tables: callers fall back to endpoint set-diff);
-    raises if one has been vacuumed away (the range is unrecoverable —
-    resume from a snapshot).  Like ``vacuum``, this walks the local
-    manifest store directly (LocalFSBackend-only — see vacuum's
-    backend-scope note); change feeds over a non-local backend go
-    through ``_resolve_state(..., backend=...)`` snapshots."""
+    commit DID, read from each manifest's ``commit`` (checkpoint) or
+    ``delta`` record.  Raises if one has been vacuumed away (the range
+    is unrecoverable — resume from a snapshot).  Like ``vacuum``, this
+    walks the local manifest store directly (LocalFSBackend-only — see
+    vacuum's backend-scope note); change feeds over a non-local
+    backend go through ``_resolve_state(..., backend=...)``
+    snapshots."""
     out: list[dict] = []
     for v in range(from_version + 1, to_version + 1):
         try:
@@ -2186,18 +2025,59 @@ def _walk_commits(
             rec = {
                 "kind": d["kind"],
                 "added": list(d.get("added", [])),
-                "at": v,
                 "deletes": list(d.get("entries", [])),
             }
             if "recorded" in d:
                 rec["recorded"] = d["recorded"]
-            out.append(rec)
-            continue
-        c = m.get("commit")
-        if c is None:
-            return None
-        out.append({**c, "at": v, "deletes": m.get("deletes", [])})
+        else:
+            rec = {**m["commit"], "deletes": m["deletes"]}
+        out.append({**rec, "at": v})
     return out
+
+
+def _changed_files(
+    root: str, from_version: int, to_version: int, retractions: bool
+) -> tuple[list[str], list[str]]:
+    """The one walk both change feeds share: the (inserted, deleted)
+    row files of versions (from, to].  Append commits contribute
+    their files; content-preserving replace commits (partial
+    compaction) and metadata-only renames contribute nothing — files
+    added in the range are read through the TO-version state, whose
+    column-id resolution surfaces them under the final names.  With
+    ``retractions``, delete and upsert commits contribute their added
+    files and their recorded victim rows, and raise if they did not
+    record them.  Anything else (a rewrite; any retraction when
+    ``retractions`` is off) is not representable and raises: resume
+    from the post-commit snapshot, as Delta's change feed requires."""
+    added: list[str] = []
+    removed: list[str] = []
+    for c in _walk_commits(root, from_version, to_version):
+        kind = c["kind"]
+        if kind == "append":
+            added += c["added"]
+        elif kind in ("replace", "rename"):
+            continue  # layout / metadata change, zero row delta
+        elif retractions and kind in ("delete", "upsert"):
+            if not c["recorded"]:
+                raise ValueError(
+                    f"{kind} commit at v{c['at']} did not record "
+                    "its changes; re-commit with record_changes=True "
+                    "or resume from a snapshot"
+                )
+            added += c["added"]
+            removed += [
+                p
+                for d in c["deletes"]
+                if int(d["at"]) == c["at"]
+                for p in d.get("removed", [])
+            ]
+        else:
+            what = "changes" if retractions else "an append delta"
+            raise ValueError(
+                f"{kind} commit at v{c['at']}: not representable "
+                f"as {what}; resume from a snapshot"
+            )
+    return sorted(added), sorted(removed)
 
 
 def _zero_rows(spark: SparkSession, root: str, to_version: int) -> DataFrame:
@@ -2210,69 +2090,18 @@ def _zero_rows(spark: SparkSession, root: str, to_version: int) -> DataFrame:
 def read_changes(
     spark: SparkSession, root: str, from_version: int, to_version: int
 ) -> DataFrame:
-    """Change feed: the rows ADDED between two committed versions.
-    This is what lets a downstream consumer (the streaming CDC merge,
-    an incremental aggregate) tail the table by version number instead
-    of re-reading snapshots.  The range is resolved by WALKING the
-    per-commit log: append commits contribute their files,
-    content-preserving replace commits (partial compaction) are
-    skipped — they change layout, not rows — and a rewrite or delete
-    raises, because the delta is not representable as additions;
-    resume from the post-commit snapshot, as Delta's change feed
-    requires (deletes that recorded their victims are servable through
-    ``read_changes_cdf`` instead).  Legacy manifests without commit
-    records fall back to endpoint set-difference with the same
-    refusal rules."""
-    walked = _walk_commits(root, from_version, to_version)
-    if walked is None:  # legacy table: endpoint set-diff
-        mf = (
-            _resolve_state(root, from_version)
-            if from_version
-            else {"files": []}
-        )
-        mt = _resolve_state(root, to_version)
-        old, new = set(mf["files"]), set(mt["files"])
-        if old - new:
-            raise ValueError(
-                f"non-append commit between v{from_version} and "
-                f"v{to_version}: files removed; resume from a snapshot"
-            )
-        if {d["path"] for d in mf.get("deletes", [])} != {
-            d["path"] for d in mt.get("deletes", [])
-        }:
-            raise ValueError(
-                f"delete commit between v{from_version} and "
-                f"v{to_version}: retractions are not an append delta; "
-                "resume from a snapshot"
-            )
-        added = sorted(new - old)
-        if not added:
-            return spark.read.parquet(*sorted(new)).limit(0)
-        return spark.read.parquet(*added)
-    added = []
-    for c in walked:
-        if c["kind"] == "append":
-            added += c["added"]
-        elif c["kind"] == "replace":
-            continue  # partial compaction: layout change, zero row delta
-        elif c["kind"] == "rename":
-            # metadata-only: zero row delta; files added in the range
-            # are read below through the TO-version state, whose
-            # column-id resolution surfaces them under the final names
-            continue
-        else:
-            # delete / upsert / rewrite: retractions are involved —
-            # not representable as pure appends (upserts with recorded
-            # victims are servable through read_changes_cdf)
-            raise ValueError(
-                f"{c['kind']} commit at v{c['at']}: not representable "
-                "as an append delta; resume from a snapshot"
-            )
+    """Change feed: the rows ADDED between two committed versions —
+    the insert half of ``read_changes_cdf``.  This is what lets a
+    downstream consumer (the streaming CDC merge, an incremental
+    aggregate) tail the table by version number instead of
+    re-reading snapshots.  A range holding a rewrite or a retraction
+    (delete, upsert) raises, because its delta is not representable
+    as additions (recorded retractions are servable through
+    ``read_changes_cdf`` instead)."""
+    added, _ = _changed_files(root, from_version, to_version, False)
     if not added:
         return _zero_rows(spark, root, to_version)
-    return _read_files(
-        spark, _resolve_state(root, to_version), sorted(added)
-    )
+    return _read_files(spark, _resolve_state(root, to_version), added)
 
 
 def read_changes_cdf(
@@ -2292,69 +2121,25 @@ def read_changes_cdf(
     range contribute nothing, as they should."""
     from pyspark.sql import functions as F
 
-    walked = _walk_commits(root, from_version, to_version)
-    if walked is None:
-        raise ValueError(
-            "table predates per-commit records: CDF needs the commit "
-            "log; resume from a snapshot"
-        )
-    added: list[str] = []
-    removed: list[str] = []
-    for c in walked:
-        if c["kind"] == "append":
-            added += c["added"]
-        elif c["kind"] in ("replace", "rename"):
-            continue  # layout / metadata change, zero row delta
-        elif c["kind"] in ("delete", "upsert"):
-            if not c.get("recorded"):
-                raise ValueError(
-                    f"{c['kind']} commit at v{c['at']} did not record "
-                    "its changes; re-commit with record_changes=True "
-                    "or resume from a snapshot"
-                )
-            added += c.get("added", [])
-            removed += [
-                p
-                for d in c["deletes"]
-                if int(d["at"]) == c["at"]
-                for p in d.get("removed", [])
-            ]
-        else:
-            raise ValueError(
-                f"{c['kind']} commit at v{c['at']}: not representable "
-                "as changes; resume from a snapshot"
-            )
-    added, removed = sorted(added), sorted(removed)
+    added, removed = _changed_files(root, from_version, to_version, True)
     if not added and not removed:
         return _zero_rows(spark, root, to_version).withColumn(
             "_change_type", F.lit("insert")
         )
     mt = _resolve_state(root, to_version)
-    parts = []
-    if added:
-        parts.append(
-            _read_files(spark, mt, added).withColumn(
-                "_change_type", F.lit("insert")
-            )
-        )
-    if removed:
-        parts.append(
-            _read_files(spark, mt, removed).withColumn(
-                "_change_type", F.lit("delete")
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    parts = [
+        _read_files(spark, mt, fs).withColumn("_change_type", F.lit(tag))
+        for fs, tag in ((added, "insert"), (removed, "delete"))
+        if fs
+    ]
+    return reduce(DataFrame.unionByName, parts)
 
 
 def table_history(root: str, limit: int | None = None) -> list[dict]:
     """The commit log, newest first (Delta's DESCRIBE HISTORY shape):
     one dict per retained version with ``version``, ``ts`` (commit
-    wall-time; None on pre-r15 manifests), ``kind`` (append / rewrite
-    / delete / replace / rename; None on pre-commit-record
-    checkpoints), ``n_added`` staged files, ``run_id``, and
+    wall-time), ``kind`` (append / rewrite / delete / upsert / replace
+    / rename), ``n_added`` staged files, ``run_id``, and
     ``checkpoint`` (whether the manifest is a full snapshot).
     Checkpoint rows also carry ``n_live_files``.  Stops at the vacuum
     horizon.  Driver-side metadata only — no Spark job; ``limit``
@@ -2371,21 +2156,20 @@ def table_history(root: str, limit: int | None = None) -> list[dict]:
             d = m["delta"]
             rec = {
                 "version": v,
-                "ts": m.get("ts"),
+                "ts": m["ts"],
                 "kind": d["kind"],
                 "n_added": len(d.get("added", [])),
-                "run_id": d.get("run_id"),
+                "run_id": d["run_id"],
                 "checkpoint": False,
             }
         else:
-            c = m.get("commit") or {}
-            ledger = m.get("run_ids") or []
+            c = m["commit"]
             rec = {
                 "version": v,
-                "ts": m.get("ts"),
-                "kind": c.get("kind"),
-                "n_added": len(c.get("added", [])),
-                "run_id": ledger[-1] if ledger else None,
+                "ts": m["ts"],
+                "kind": c["kind"],
+                "n_added": len(c["added"]),
+                "run_id": m["run_ids"][-1],
                 "checkpoint": True,
                 "n_live_files": len(m["files"]),
             }
@@ -2491,7 +2275,7 @@ def vacuum(
                 refs.update(e.get("removed", []))
             return refs
         refs = set(m["files"])
-        for d in m.get("deletes", []):
+        for d in m["deletes"]:
             refs.add(d["path"])
             refs.update(d.get("removed", []))
         return refs
@@ -2506,7 +2290,7 @@ def vacuum(
         m = _read_manifest(root, v)
         state = m if "files" in m else _apply_delta(state, m)
         live.update(state["files"])
-        for d in state.get("deletes", []):
+        for d in state["deletes"]:
             live.add(d["path"])
             live.update(d.get("removed", []))
     ever_referenced: set[str] = set()

@@ -6,8 +6,8 @@ DECIMAL sums) of a manifest-committed source table, stored as its own
 manifest table of ADDITIVE PARTIALS.  A refresh:
 
 1. reads only the rows appended since the last refreshed source
-   version (``read_changes`` — driver-side file set difference, scans
-   just the new files);
+   version (``read_changes`` — a driver-side walk of the source's
+   per-commit records, scans just the new files);
 2. folds them into the stored partials with one groupBy over
    ``old_mv UNION delta_partials`` — the MV is small (one row per
    group), so this is a cheap aggregate regardless of source size;
@@ -197,13 +197,12 @@ class IncrementalAggView:
             partial = self._partials(delta)
             mode = "incremental"
         except (ValueError, FileNotFoundError):
-            # ValueError: non-append commits in the range.
-            # FileNotFoundError: a legacy (pre-commit-record) table
-            # whose from_version manifest was vacuumed — the set-diff
-            # fallback inside read_changes resolves the FROM endpoint
-            # directly and surfaces the miss as FileNotFoundError,
-            # which must trigger the same full-recompute ladder as a
-            # ValueError (r14 ADVICE: it used to escape refresh()).
+            # ValueError: non-append commits in the range, or a range
+            # manifest vacuumed away ("expired").  FileNotFoundError:
+            # the TO snapshot cannot be read (a delta chain whose
+            # checkpoint was vacuumed, or no data files).  Both take
+            # the same ladder down to a full recompute (r14 ADVICE: a
+            # miss used to escape refresh()).
             try:
                 # the range has deletes but they recorded their victim
                 # rows (commit_delete(record_changes=True)): fold the

@@ -6493,10 +6493,10 @@ def zone_map_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 binned.filter(F.col("bin") == b).drop("bin").coalesce(1),
                 root,
                 f"bin-{b}",
-                stats_col="s_acctbal",
+                stats_cols=["s_acctbal"],
             )
         pruned, n_total, n_scanned = read_table_pruned(
-            spark, root, "s_acctbal", 7000.0, 9000.0
+            spark, root, predicates={"s_acctbal": (7000.0, 9000.0)}
         )
         pred = F.col("s_acctbal").between(7000.0, 9000.0)
         agg = pruned.filter(pred).agg(
@@ -6681,8 +6681,8 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     version instead of re-reading snapshots.  The full snapshot count
     is emitted alongside as the completeness cross-check.
 
-    Scale: change resolution is driver-side manifest set-difference
-    (file names); the read scans only the added files.  Rewrites
+    Scale: change resolution is a driver-side walk of the per-commit
+    manifest records (file names); the read scans only the added files.  Rewrites
     in-range raise by design — resume from the post-rewrite snapshot,
     as any table format's change feed requires."""
     from automated_etl_pipeline_spark.io.manifest import (

@@ -377,15 +377,14 @@ def main() -> None:
     # queries is the host; a query far above the run's own median is
     # the code (or a skew/regression worth adjudicating).  Additions
     # only: the "queries" map and the compact line are unchanged.
-    try:
-        _anchors_for_ratios = newest_anchors(
-            Path(
-                os.environ.get(
-                    "SPARK_GRAFT_BENCH_ANCHORS",
-                    Path(__file__).resolve().parent / "BASELINE_BENCH.json",
-                )
-            )
+    anchors_path = Path(
+        os.environ.get(
+            "SPARK_GRAFT_BENCH_ANCHORS",
+            Path(__file__).resolve().parent / "BASELINE_BENCH.json",
         )
+    )
+    try:
+        _anchors_for_ratios = newest_anchors(anchors_path)
         ratios = {
             q: round(t / _anchors_for_ratios[q], 3)
             for q, t in timings.items()
@@ -397,8 +396,8 @@ def main() -> None:
                 statistics.median(ratios.values()), 3
             )
             out["conditions"]["anchor_ratio_n"] = len(ratios)
-    except Exception:  # noqa: BLE001 — ratios are advisory, never fatal
-        pass
+    except Exception as e:  # noqa: BLE001 — ratios are advisory, never fatal
+        out["conditions"]["anchor_ratio_error"] = repr(e)
 
     # Self-adjudication (VERDICT r6 ask #2, widened r12 per VERDICT r11
     # ask #6): any query whose in-sweep wall reads ≥1.9× its newest
@@ -415,12 +414,6 @@ def main() -> None:
     # adjudication contexts are built in an idle JVM — the same
     # fresh-session protocol rounds 4-7 used manually.
     if os.environ.get("SPARK_GRAFT_BENCH_NO_ADJ", "") in ("", "0") and sf >= 0.1:
-        anchors_path = Path(
-            os.environ.get(
-                "SPARK_GRAFT_BENCH_ANCHORS",
-                Path(__file__).resolve().parent / "BASELINE_BENCH.json",
-            )
-        )
         anchors = newest_anchors(anchors_path)
         # Dual-ratio reporting for self-anchored gates (VERDICT r13 ask
         # #2): every gate whose newest anchor comes from a targeted

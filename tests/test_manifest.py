@@ -64,13 +64,12 @@ def test_version_race_retries_not_overwrites(spark, root):
     the competitor's manifest intact."""
     commit_append(_df(spark, 0, 5), root, "r1")
     # competitor publishes v2 out from under us
-    competitor = {
-        "version": 2,
-        "files": json.load(
-            open(os.path.join(root, "_manifest", "v0000000001.json"))
-        )["files"],
-        "run_ids": ["r1", "competitor"],
-    }
+    with open(os.path.join(root, "_manifest", "v0000000001.json")) as f:
+        competitor = {
+            **json.load(f),
+            "version": 2,
+            "run_ids": ["r1", "competitor"],
+        }
     with open(os.path.join(root, "_manifest", "v0000000002.json"), "x") as f:
         json.dump(competitor, f)
     v = commit_append(_df(spark, 5, 9), root, "r2")
@@ -120,17 +119,23 @@ def test_zone_map_prunes_and_is_conservative(spark, root):
     # three files with disjoint ranges, stats recorded
     for lo, hi, rid in [(0, 10, "a"), (100, 110, "b"), (200, 210, "c")]:
         commit_append(
-            _df(spark, lo, hi).coalesce(1), root, rid, stats_col="k"
+            _df(spark, lo, hi).coalesce(1), root, rid, stats_cols=["k"]
         )
-    df, total, scanned = read_table_pruned(spark, root, "k", 100, 105)
+    df, total, scanned = read_table_pruned(
+        spark, root, predicates={"k": (100, 105)}
+    )
     assert (total, scanned) == (3, 1)
     assert df.count() == 10  # whole middle file; caller applies row filter
     # statless commit must be scanned conservatively
     commit_append(_df(spark, 500, 505).coalesce(1), root, "nostats")
-    df2, total2, scanned2 = read_table_pruned(spark, root, "k", 100, 105)
+    df2, total2, scanned2 = read_table_pruned(
+        spark, root, predicates={"k": (100, 105)}
+    )
     assert (total2, scanned2) == (4, 2)
     # empty selection keeps the schema
-    df3, _, scanned3 = read_table_pruned(spark, root, "k", -50, -10)
+    df3, _, scanned3 = read_table_pruned(
+        spark, root, predicates={"k": (-50, -10)}
+    )
     assert scanned3 == 1  # only the statless file survives pruning
     assert df3.columns == ["k"]
 
@@ -218,8 +223,8 @@ def test_rewrite_trims_stale_stats_and_manifest_stays_bounded(spark, root):
         commit_rewrite,
     )
 
-    commit_append(_df(spark, 0, 10), root, "r1", stats_col="k")
-    commit_append(_df(spark, 10, 20), root, "r2", stats_col="k")
+    commit_append(_df(spark, 0, 10), root, "r1", stats_cols=["k"])
+    commit_append(_df(spark, 10, 20), root, "r2", stats_cols=["k"])
     v = commit_rewrite(_df(spark, 0, 20).coalesce(1), root, "compact-1")
     m = _resolve_state(root, v)
     # every stats key references a live file; the superseded files'
@@ -391,42 +396,11 @@ def test_multicol_stats_prune_conjunctively(spark, root):
     )
     assert (total2, scanned2) == (4, 2)
 
-    # single-column positional spelling still works
-    _, total3, scanned3 = read_table_pruned(spark, root, "v", 12, 13)
-    assert (total3, scanned3) == (4, 2)
-
-
-def test_legacy_single_column_stats_list_still_prunes(spark, root):
-    """Manifests written before r14 store stats as a bare [mn, mx]
-    list (no column name); the reader applies them to whatever column
-    the caller asks about — the documented legacy assumption."""
-    import json as _json
-
-    from automated_etl_pipeline_spark.io.manifest import (
-        _manifest_dir,
-        read_table_pruned,
+    # a single-column predicate is the one-entry case
+    _, total3, scanned3 = read_table_pruned(
+        spark, root, predicates={"v": (12, 13)}
     )
-
-    from automated_etl_pipeline_spark.io.manifest import _resolve_state
-
-    commit_append(_df(spark, 0, 10).coalesce(1), root, "a", stats_col="k")
-    commit_append(_df(spark, 10, 20).coalesce(1), root, "b", stats_col="k")
-    # forge the newest manifest into the PRE-r14 shape: a full
-    # snapshot (pre-delta tables had no delta manifests) whose stats
-    # are bare [mn, mx] lists without column names
-    st = _resolve_state(root, 2)
-    legacy = {
-        "version": 2,
-        "files": st["files"],
-        "run_ids": st["run_ids"],
-        "stats": {f: s["k"] for f, s in st["stats"].items()},
-    }
-    path = os.path.join(_manifest_dir(root), "v0000000002.json")
-    os.unlink(path)
-    with open(path, "w") as f:
-        _json.dump(legacy, f)
-    _, total, scanned = read_table_pruned(spark, root, "k", 3, 4)
-    assert (total, scanned) == (2, 1)
+    assert (total3, scanned3) == (4, 2)
 
 
 # ---- merge-on-read equality deletes (r14) --------------------------------
@@ -467,13 +441,17 @@ def test_later_append_survives_earlier_delete(spark, root):
 
 
 def test_time_travel_before_delete_sees_all_rows(spark, root):
-    from automated_etl_pipeline_spark.io.manifest import commit_delete
+    from automated_etl_pipeline_spark.io.manifest import (
+        commit_delete,
+        manifest_files,
+    )
 
     commit_append(_df(spark, 0, 5), root, "a1")
     commit_delete(_keys(spark, 0, 1), root, "d1", ["k"])
     assert read_table(spark, root, version=1).count() == 5
     assert read_table(spark, root).count() == 3
-    assert read_table(spark, root, apply_deletes=False).count() == 5
+    # the raw committed rows, deletes not applied (an audit read)
+    assert spark.read.parquet(*manifest_files(root)).count() == 5
 
 
 def test_rewrite_materializes_and_clears_deletes(spark, root):
@@ -569,10 +547,12 @@ def test_pruned_read_applies_pending_deletes(spark, root):
         read_table_pruned,
     )
 
-    commit_append(_df(spark, 0, 100), root, "a1", stats_col="k")
-    commit_append(_df(spark, 100, 200), root, "a2", stats_col="k")
+    commit_append(_df(spark, 0, 100), root, "a1", stats_cols=["k"])
+    commit_append(_df(spark, 100, 200), root, "a2", stats_cols=["k"])
     commit_delete(_keys(spark, 150, 199, 10), root, "d1", ["k"])
-    df, total, scanned = read_table_pruned(spark, root, "k", 100, 250)
+    df, total, scanned = read_table_pruned(
+        spark, root, predicates={"k": (100, 250)}
+    )
     assert scanned < total
     got = sorted(r["k"] for r in df.filter(F.col("k") >= 100).collect())
     assert len(got) == 98 and 150 not in got and 199 not in got
@@ -968,11 +948,15 @@ def test_stats_commit_works_under_uri_hostile_root(spark):
 
     root = tempfile.mkdtemp(prefix="manifest test with space ")
     try:
-        commit_append(_df(spark, 0, 10).coalesce(1), root, "a1", stats_col="k")
         commit_append(
-            _df(spark, 100, 110).coalesce(1), root, "a2", stats_col="k"
+            _df(spark, 0, 10).coalesce(1), root, "a1", stats_cols=["k"]
         )
-        df, total, scanned = read_table_pruned(spark, root, "k", 0, 50)
+        commit_append(
+            _df(spark, 100, 110).coalesce(1), root, "a2", stats_cols=["k"]
+        )
+        df, total, scanned = read_table_pruned(
+            spark, root, predicates={"k": (0, 50)}
+        )
         assert (total, scanned) == (2, 1)
         assert df.count() == 10
     finally:
@@ -1059,28 +1043,6 @@ def test_resolution_equals_per_version_reads_across_commit_kinds(
         assert read_table(spark, root, version=v).count() == n, v
 
 
-def test_delta_chain_onto_legacy_full_manifest(spark, root):
-    """A pre-r14 table (hand-written full manifest, no commit record)
-    keeps working as the checkpoint base of new delta commits."""
-    import json as _json
-
-    from automated_etl_pipeline_spark.io.manifest import _manifest_dir
-
-    stage = os.path.join(root, "data", "legacy")
-    _df(spark, 0, 7).coalesce(1).write.parquet(stage)
-    files = [
-        os.path.join(stage, f)
-        for f in sorted(os.listdir(stage))
-        if f.endswith(".parquet")
-    ]
-    os.makedirs(_manifest_dir(root), exist_ok=True)
-    with open(os.path.join(_manifest_dir(root), "v0000000001.json"), "x") as f:
-        _json.dump({"version": 1, "files": files, "run_ids": ["legacy"]}, f)
-    commit_append(_df(spark, 7, 10), root, "a2")  # v2: a delta on top
-    assert read_table(spark, root).count() == 10
-    assert read_table(spark, root, version=1).count() == 7
-
-
 def test_vacuum_never_strands_a_surviving_manifest(spark, root):
     """Review r14 late wave: versions between the checkpoint anchor
     and the retention floor keep their manifests — so their FILES must
@@ -1153,3 +1115,93 @@ def test_resolve_state_absorbs_backend_visibility_lag(spark, root):
     never = LaggyReads(inner, lag_version=1, misses=10**9)
     with pytest.raises(FileNotFoundError, match="delta chain"):
         _resolve_state(root, 2, backend=never)
+
+
+def test_writer_format_pin(spark, root):
+    """The one on-disk manifest format, pinned key by key.  Checkpoints
+    (v1, every CHECKPOINT_EVERY-th version, renames, rewrites) carry
+    the full state plus a ``commit`` record; the versions between carry
+    one ``delta`` record.  Every manifest carries ``ts``; zone-map
+    stats are ``{col: [mn, mx]}`` dicts; Bloom bitmaps live in sidecar
+    files named by ``bloom_refs``, never inline."""
+    from automated_etl_pipeline_spark.io.manifest import (
+        _manifest_dir,
+        commit_delete,
+        commit_rename,
+        commit_replace_files,
+        commit_rewrite,
+        manifest_files,
+        read_table_subset,
+    )
+
+    def kv(lo, hi, v="v"):
+        return (
+            spark.range(lo, hi)
+            .select(F.col("id").alias("k"), (F.col("id") * 10).alias(v))
+            .repartition(2)
+        )
+
+    commit_append(  # v1 checkpoint
+        kv(0, 20), root, "a1", stats_cols=["k"], bloom_cols=["k"],
+        bloom_bits=2048,
+    )
+    commit_delete(  # v2 delta
+        spark.createDataFrame([(3,)], "k long"), root, "d1", ["k"],
+        record_changes=True,
+    )
+    frag = manifest_files(root, 2)
+    commit_replace_files(  # v3 delta
+        read_table_subset(spark, root, frag).coalesce(1), root, "c1", frag,
+        expected_base=2, stats_cols=["k"],
+    )
+    commit_rename(root, "r1", {"v": "value"})  # v4 checkpoint
+    commit_append(  # v5 delta
+        kv(20, 30, "value"), root, "a2", stats_cols=["k"], bloom_cols=["k"],
+        bloom_bits=2048,
+    )
+    commit_rewrite(  # v6 checkpoint
+        read_table(spark, root), root, "rw", expected_base=5
+    )
+
+    state = {
+        "version", "files", "schema", "commit", "added_at", "deletes",
+        "run_ids", "stats", "ts", "bloom_refs", "bloom_meta",
+    }
+    ids = {"field_ids", "file_fields"}
+    expected = {
+        1: ("append", state, {"added", "kind"}),
+        2: ("delete", None,
+            {"kind", "run_id", "schema", "entries", "recorded"}),
+        3: ("replace", None,
+            {"kind", "run_id", "schema", "added", "stats", "removed"}),
+        4: ("rename", state | ids, {"added", "kind", "renames"}),
+        5: ("append", None,
+            {"kind", "run_id", "schema", "added", "stats", "bloom_refs",
+             "bloom_meta", "field_ids", "file_fields"}),
+        6: ("rewrite", state | ids, {"added", "kind"}),
+    }
+    entry_keys = {2: {"path", "cols", "at", "removed"},
+                  4: {"path", "cols", "at", "removed", "as"}}
+    for v, (kind, top, rec) in expected.items():
+        path = os.path.join(_manifest_dir(root), f"v{v:010d}.json")
+        with open(path) as f:
+            m = json.load(f)
+        assert isinstance(m["ts"], float), v
+        if top is None:
+            assert set(m) == {"version", "delta", "ts"}, v
+            body = m["delta"]
+            assert set(body) == rec and body["kind"] == kind, v
+            entries = body.get("entries", [])
+        else:
+            assert set(m) == top, v
+            body = m
+            assert set(m["commit"]) == rec and m["commit"]["kind"] == kind, v
+            entries = m["deletes"]
+        assert "blooms" not in body, v
+        for e in entries:
+            assert set(e) == entry_keys[v], v
+        for s in body.get("stats", {}).values():
+            assert isinstance(s, dict) and set(s) == {"k"}, v
+            assert all(isinstance(b, list) and len(b) == 2 for b in s.values())
+    with open(os.path.join(_manifest_dir(root), f"v{6:010d}.json")) as f:
+        assert json.load(f)["deletes"] == []  # the rewrite materialized them

@@ -98,8 +98,7 @@ class TestBloomPacking:
     def test_packed_word_fold_matches_python_packer(self, spark, root):
         """r15 opt: the codegen bit_or packed-word build must produce
         the BYTE-IDENTICAL hexmap the Python packer yields over the
-        same keys (word-aligned bits), and the non-aligned fallback
-        path must stay live and agree with it semantically."""
+        same keys; a size that is not whole 64-bit words is refused."""
         import glob
         import json
         import os
@@ -123,14 +122,8 @@ class TestBloomPacking:
             {p for v in vals for p in _bloom_py_positions(v, 256)}, 256
         )
         assert built == expect
-        # non-aligned (bits % 64 != 0): collect_set fallback, same
-        # semantics under the probe
-        _, refs2 = _collect_file_metadata(spark, files, [], ["k"], 240)
-        built2 = json.load(open(refs2[files[0]]))[files[0]]["k"]
-        expect2 = _bloom_pack(
-            {p for v in vals for p in _bloom_py_positions(v, 240)}, 240
-        )
-        assert built2 == expect2
+        with pytest.raises(ValueError, match="multiple of 64"):
+            _collect_file_metadata(spark, files, [], ["k"], 240)
 
     def test_point_lookup_prunes_and_is_exact(self, spark, root):
         for i in range(4):
