@@ -3,10 +3,10 @@
 Spark evaluates a SLIDING window frame (``rangeBetween(-w, 0)``) by
 re-aggregating the full frame for every row — there is no retraction
 support — so a trailing-24h sum over a key with n events and ~f events
-per frame costs O(n*f) inside ONE task.  Measured: the planted 2%-hot
-key in tools/scale_smoke_windows.py (640k events, f~21k) takes ~529 s
-at 32 M rows, while every other shape finishes in seconds — the
-classic hot-entity poison pill for per-row trailing statistics.
+per frame costs O(n*f) inside ONE task.  Measured (SCALE_SMOKE_r09.md):
+the planted 2%-hot key (640k events, f~21k) takes ~529 s at 32 M rows,
+while every other shape finishes in seconds — the classic hot-entity
+poison pill for per-row trailing statistics.
 
 The fix is the event/expiry RETRACTION union, which Spark executes
 incrementally:

@@ -184,18 +184,3 @@ def _exact_zvalue(
         out_col, interleave2(ranks[0], ranks[1], bits)
     ).drop("__b0", "__b1", "__b0_off", "__b1_off", "__zr0", "__zr1")
 
-
-def zorder_repartition(
-    df: DataFrame,
-    cols: Sequence[str],
-    tiebreak: str,
-    n_files: int,
-    bits: int = DEFAULT_BITS,
-) -> DataFrame:
-    """Layout pass before a write: range-partition + sort by z-value so
-    every output file covers a compact rectangle of the (a, b) space —
-    min/max pruning then works for either column's predicates.  Uses
-    the scale-safe cutpoint path: the only shuffle is the final
-    range-partition by zvalue, which is what the write needs anyway."""
-    z = with_zvalue(df, cols, tiebreak, bits)
-    return z.repartitionByRange(n_files, "zvalue").sortWithinPartitions("zvalue")

@@ -20,24 +20,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def pushed_filters(plan: str) -> str:
-    """The PushedFilters fragments of every scan node in the plan."""
-    return "\n".join(l for l in plan.splitlines() if "PushedFilters" in l)
-
-
-def read_schemas(plan: str) -> str:
-    """The ReadSchema fragments — what each scan actually reads; a
-    2-column projection reading 16 columns is a pruning failure."""
-    return "\n".join(l for l in plan.splitlines() if "ReadSchema" in l)
-
-
-def count_node(plan: str, node: str) -> int:
-    """Occurrences of a physical operator (e.g. 'BroadcastHashJoin',
-    'SortMergeJoin', 'Exchange hashpartitioning', 'HashAggregate',
-    'TakeOrderedAndProject', 'BatchEvalPython')."""
-    return plan.count(node)
-
-
 def uses_python_udf(plan: str) -> bool:
     """True if any row-at-a-time Python evaluation appears — the slow
     path that must never show up in JVM-expressible operators."""

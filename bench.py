@@ -92,6 +92,11 @@ def newest_anchors(path: Path) -> dict[str, float]:
 # ≥1.9× adjudication (VERDICT r13 ask #2).
 SELF_ANCHOR_MAX_ENTRIES = 30
 
+# Untimed full-scale executions at the head of each chunk (see
+# run_queries) and the wall budget of the >=1.9x self-adjudication.
+CHUNK_BURN_IN = 3
+ADJ_BUDGET_S = 600.0
+
 
 def anchors_with_provenance(path: Path) -> dict[str, dict]:
     """Per-query newest anchor WITH provenance: value, source layer,
@@ -315,13 +320,12 @@ def main() -> None:
     # detail file, no compact summary — the parent owns those.
     if len(sys.argv) >= 3 and sys.argv[1] == "--chunk":
         want = sys.argv[2].split(",")
-        burn_in = int(os.environ.get("SPARK_GRAFT_BENCH_BURNIN", "3"))
         timings, errors = run_queries(
             {n: qs[n] for n in want if n in qs},
             sf_dir,
             WARM_DIR,
             COLD,
-            burn_in=burn_in,
+            burn_in=CHUNK_BURN_IN,
         )
         print(json.dumps({"timings": timings, "errors": errors}))
         return
@@ -409,11 +413,11 @@ def main() -> None:
     # budget, the rest explicitly marked skipped — never silently
     # dropped (r11's percentile_price sat at exactly 2.00× and fell
     # outside the old top-8 slice, leaving a hole in the record).
-    # SPARK_GRAFT_BENCH_NO_ADJ=1 disables (harness tests, quick loops).
+    # Runs below sf0.1 (harness tests, quick loops) skip it.
     # In chunked mode this parent process has never run a query, so the
     # adjudication contexts are built in an idle JVM — the same
     # fresh-session protocol rounds 4-7 used manually.
-    if os.environ.get("SPARK_GRAFT_BENCH_NO_ADJ", "") in ("", "0") and sf >= 0.1:
+    if sf >= 0.1:
         anchors = newest_anchors(anchors_path)
         # Dual-ratio reporting for self-anchored gates (VERDICT r13 ask
         # #2): every gate whose newest anchor comes from a targeted
@@ -454,11 +458,8 @@ def main() -> None:
             # once HALF the budget is spent the remaining flags drop to
             # 1 rep (a single fresh-session reading still separates
             # ambient from code); only past the FULL budget is a flag
-            # marked skipped — which at the 600 s default should never
+            # marked skipped — which at ADJ_BUDGET_S = 600 should never
             # happen (a 3-rep adjudication costs ~15-20 s).
-            ADJ_BUDGET_S = float(
-                os.environ.get("SPARK_GRAFT_BENCH_ADJ_BUDGET", "600")
-            )
             t_adj = time.perf_counter()
             adj: dict[str, dict] = {}
             for ratio, q in flagged:

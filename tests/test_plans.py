@@ -531,7 +531,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
     lever on selective fact⋈dim joins at 100 TB.  The application-side
     size threshold defaults to 10 GB (sized for real clusters), so the
     probe scales it to the fixture — same code path, smaller trigger
-    (the skew-smoke rationale, tools/scale_smoke_skew.py)."""
+    (the skew-smoke rationale, SCALE_SMOKE_r06.md)."""
     from pyspark.sql import functions as F
 
     confs = {

@@ -1,14 +1,16 @@
-"""Unit tests for the self-check gate's value normalization
-(tools/check_correctness.py) — the NaN / negative-zero symmetry fixes
-from round 2's ADVICE.md.
-
-No SparkSession needed: normalize() is pure.
+"""Tests for tools/: the self-check gate's value normalization
+(tools/check_correctness.py; the NaN / negative-zero symmetry fixes
+from round 2's ADVICE.md, no SparkSession needed), the executed-plan
+metrics walk (tools/metrics_report.py), and the commands the docs name.
 """
 
 from __future__ import annotations
 
 import math
+import re
+from pathlib import Path
 
+from tests.conftest import SF_SMOKE
 from tools.check_correctness import normalize
 
 
@@ -63,27 +65,30 @@ def test_lrv_rotation_orders_stale_first(tmp_path, monkeypatch):
     assert "q_hash_mismatch" not in last  # stays in the fresh group
 
 
-def test_scale_smoke_suffix_salt_is_bijective_on_irregular_whitespace(
-    spark, tmp_path
-):
-    """r10 ADVICE (conclusion right, example wrong): salting by
-    regexp-replacing every single space turned 'a  b' into
-    'a_r0 _r0 b_r0' — an extra salt-only token '_r0' per consecutive
-    space, so the rename was not bijective and the salted-replica
-    invariant could falsely VIOLATION on whitespace-irregular corpora.
-    The transform-over-filtered-split salt must map the same base
-    token to the same salted token and add none."""
-    from tools.scale_smoke_suffix import corpus
+def test_metrics_report_walks_aqe_stages_and_reuse(spark):
+    """tools/metrics_report.py descends through the AQE wrappers into
+    the query stages, marks a reused exchange instead of counting it
+    twice, and reads the shuffle metrics of the stages it reaches.
+    q15_top_supplier's plan reuses its revenue exchange."""
+    import __spark_entry__ as e
+    from tools.metrics_report import report, summarize
 
-    base = str(tmp_path / "base")
-    spark.createDataFrame(
-        [(0, "a  b"), (1, " a b ")], "doc_id long, text string"
-    ).write.parquet(f"{base}/documents.parquet")
-    out = {
-        (r["doc_id"]): r["text"]
-        for r in corpus(spark, base, replicas=2, salted=True).collect()
-    }
-    # replica r: doc ids shifted by r * (max_id + 1) = r * 2
-    assert out[0 + 2] == "a_r1 b_r1"
-    assert out[1 + 2] == "a_r1 b_r1"
-    assert out[0] == "a_r0 b_r0"
+    tree = report(e.queries()["q15_top_supplier"](spark, SF_SMOKE))
+    names = [name for _, name, _ in tree]
+    assert "AdaptiveSparkPlan" in names
+    assert any(n.startswith("ShuffleQueryStage") for n in names)
+    assert any(n.endswith("[reused: counted above]") for n in names)
+    assert summarize(tree)["shuffle_bytes_written"] > 0
+
+
+def test_documented_commands_name_existing_files():
+    """Every `python <path>.py` command in README.md and the verify
+    skill names a file that exists, so retiring a script without its
+    doc line fails here."""
+    root = Path(__file__).resolve().parent.parent
+    cmd = re.compile(r"\bpython3? +([\w./-]+\.py)\b")
+    docs = [root / "README.md", root / ".claude/skills/verify/SKILL.md"]
+    paths = {m for doc in docs for m in cmd.findall(doc.read_text())}
+    assert paths  # the pattern still matches the docs' command lines
+    missing = sorted(p for p in paths if not (root / p).is_file())
+    assert not missing, missing

@@ -36,20 +36,11 @@ def _children(node):
     name = node.nodeName()
     # AQE wrappers hide their real subtree behind accessors
     if "QueryStage" in name:
-        try:
-            out.append(node.plan())
-        except Exception:
-            pass
+        out.append(node.plan())
     if name == "AdaptiveSparkPlan":
-        try:
-            out.append(node.executedPlan())
-        except Exception:
-            pass
+        out.append(node.executedPlan())
     if name == "ReusedExchange":
-        try:
-            out.append(node.child())
-        except Exception:
-            pass
+        out.append(node.child())
     return out
 
 
@@ -65,23 +56,16 @@ def walk_metrics(node, depth=0, out=None, seen=None):
     metrics."""
     out = out if out is not None else []
     seen = seen if seen is not None else set()
-    try:
-        nid = node.id()
-    except Exception:
-        nid = None
-    if nid is not None:
-        if nid in seen:
-            out.append((depth, node.nodeName() + " [reused: counted above]", {}))
-            return out
-        seen.add(nid)
+    nid = node.id()
+    if nid in seen:
+        out.append((depth, node.nodeName() + " [reused: counted above]", {}))
+        return out
+    seen.add(nid)
     vals = {}
     it = node.metrics().iterator()
     while it.hasNext():
         kv = it.next()
-        try:
-            vals[kv._1()] = kv._2().value()
-        except Exception:
-            pass
+        vals[kv._1()] = kv._2().value()
     out.append((depth, node.nodeName(), vals))
     for c in _children(node):
         walk_metrics(c, depth + 1, out, seen)
