@@ -114,14 +114,11 @@ def connected_components(
 def dedup_keep_set(
     vertices: DataFrame,
     edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """One survivor per component (the min id): the correct global
     keep-set for cascade deletion."""
-    comp = connected_components(vertices, edges, id_col, src_col, dst_col)
-    return comp.filter(F.col(id_col) == F.col("component")).select(id_col)
+    comp = connected_components(vertices, edges)
+    return comp.filter(F.col("id") == F.col("component")).select("id")
 
 
 def _large_star(e: DataFrame) -> DataFrame:

@@ -38,55 +38,52 @@ from automated_etl_pipeline_spark.dedup.ngram_jaccard import shingle_hash60
 
 def containment_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
     """(doc_sub, doc_super, containment) for ALL directed pairs with
     round(|sub∩super| / |sub|, 6) >= threshold; both directions
     appear for mutual near-copies."""
     # Cheap token-count pre-filter instead of filter(size(s) > 0)
-    # above the projection — identical kept set (s empty iff < n
+    # above the projection — identical kept set (s empty iff < 3
     # tokens), and it stops predicate pushdown from inlining the
     # md5+transform shingle pipeline into the filter (it ran twice
     # per row; see ngram_jaccard.jaccard_pairs, r15 opt).
     sh = (
-        docs.filter(F.size(F.split(F.col(text_col), " ")) >= n)
+        docs.filter(F.size(F.split(F.col("text"), " ")) >= 3)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.array_distinct(
-                F.transform(token_ngrams(F.col(text_col), n), shingle_hash60)
+                F.transform(token_ngrams(F.col("text"), 3), shingle_hash60)
             ).alias("s"),
         )
         .withColumn("sz", F.size("s"))
         .localCheckpoint()
     )
-    inv = sh.select(id_col, "sz", F.explode("s").alias("g"))
+    inv = sh.select("doc_id", "sz", F.explode("s").alias("g"))
     dft = inv.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     ranked = inv.join(dft, "g").withColumn(
         "rn",
         F.row_number().over(
-            Window.partitionBy(id_col).orderBy("df", "g")
+            Window.partitionBy("doc_id").orderBy("df", "g")
         ),
     )
     # FP-safe ceil, as in jaccard_pairs
     prefix = ranked.filter(
         F.col("rn")
         <= F.col("sz") - F.ceil(threshold * F.col("sz") - 1e-9) + 1
-    ).select(F.col(id_col).alias("sub"), F.col("g"))
+    ).select(F.col("doc_id").alias("sub"), F.col("g"))
     cand = (
         prefix.join(
-            inv.select(F.col(id_col).alias("sup"), "g"), "g"
+            inv.select(F.col("doc_id").alias("sup"), "g"), "g"
         )
         .filter(F.col("sub") != F.col("sup"))
         .select("sub", "sup")
         .distinct()
     )
     sa = sh.select(
-        F.col(id_col).alias("sub"), F.col("s").alias("s_sub"), F.col("sz")
+        F.col("doc_id").alias("sub"), F.col("s").alias("s_sub"), F.col("sz")
     )
-    sb = sh.select(F.col(id_col).alias("sup"), F.col("s").alias("s_sup"))
+    sb = sh.select(F.col("doc_id").alias("sup"), F.col("s").alias("s_sup"))
     # Admission on the UNROUNDED ratio, as the integer inequality
     # |sub∩super| >= ceil(t*|sub| - eps) — the exact bound the prefix
     # filter is complete for.  Admitting on the ROUNDED value (the old

@@ -46,8 +46,6 @@ IDX_SPAN = 1_000_000
 def doc_lines(
     docs: DataFrame,
     width: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, idx, line, line_hash): non-overlapping ``width``-token
     chunks per document, md5-hashed (md5 is the cross-engine hash
@@ -55,8 +53,8 @@ def doc_lines(
     chunk is kept.  Documents longer than width * IDX_SPAN tokens are
     rejected loudly (composite-key bound, module comment)."""
     toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("t"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("t"),
     )
     lines = toks.select(
         "doc_id",
@@ -102,8 +100,6 @@ def keep_first_lines(lines: DataFrame) -> DataFrame:
 def rebuild_documents(
     docs: DataFrame,
     width: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_lines, n_kept, rebuilt): every input document with
     its surviving lines re-joined in position order.  Documents whose
@@ -114,7 +110,7 @@ def rebuild_documents(
     and the per-doc totals consume it, and without the barrier Spark
     re-runs the corpus-wide tokenize/explode/hash scan for each
     (r11 review)."""
-    lines = materialize(doc_lines(docs, width, id_col, text_col))
+    lines = materialize(doc_lines(docs, width))
     kept = keep_first_lines(lines)
     rebuilt = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_kept"),

@@ -22,7 +22,7 @@ Scale analysis (100 TB corpus):
 - The only shuffles are (a) groupBy(band_idx, band_hash) whose input is
   docs × B rows of ~50 bytes, (b) the pair self-join on doc ids.
 - Bucket skew (a boilerplate shingle-set shared by millions of docs)
-  is the classic hazard: ``max_bucket`` caps pair blowup per bucket and
+  is the classic hazard: a fixed 1000-id cap bounds pair blowup per bucket and
   AQE skew-join handles the joins.
 
 With P=12 permutations in B=4 bands × r=3 rows, the S-curve threshold
@@ -146,50 +146,42 @@ def lsh_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
     )
 
 
-def shingle_table(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = DEFAULT_SHINGLE_K,
-) -> DataFrame:
-    """(id, shingles) localCheckpoint-ed: the LSH banding and the two
+def shingle_table(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles) localCheckpoint-ed: the LSH banding and the two
     verification joins all consume it, and each would otherwise
     re-execute the tokenize+shingle pass (persist(MEMORY_AND_DISK) at
     cluster scale)."""
     return (
-        docs.filter(F.size(F.split(text_col, " ")) >= shingle_k)
-        .select(F.col(id_col), shingle_set(text_col, shingle_k).alias("shingles"))
+        docs.filter(F.size(F.split("text", " ")) >= DEFAULT_SHINGLE_K)
+        .select(F.col("doc_id"), shingle_set("text").alias("shingles"))
         .localCheckpoint()
     )
 
 
 def candidate_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_perm: int = DEFAULT_NUM_PERM,
     bands: int = DEFAULT_BANDS,
-    shingle_k: int = DEFAULT_SHINGLE_K,
-    max_bucket: int = 1000,
     _sh: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct LSH candidate pairs (id_a < id_b).
 
-    ``max_bucket`` drops degenerate buckets (near-identical boilerplate
-    shared by huge doc sets) whose pair count would be quadratic; such
-    docs are better handled by exact dedup upstream.
+    Buckets of more than 1000 ids are dropped: such degenerate buckets
+    (near-identical boilerplate shared by huge doc sets) have a
+    quadratic pair count, and those docs are better handled by exact
+    dedup upstream.
     """
     rows_per_band = num_perm // bands
-    sh = _sh if _sh is not None else shingle_table(docs, id_col, text_col, shingle_k)
-    hv = sh.select(id_col, shingle_hashes(F.col("shingles")).alias("hv"))
-    sig = hv.select(id_col, signature_from_hashes(F.col("hv"), num_perm).alias("sig"))
+    sh = _sh if _sh is not None else shingle_table(docs)
+    hv = sh.select("doc_id", shingle_hashes(F.col("shingles")).alias("hv"))
+    sig = hv.select("doc_id", signature_from_hashes(F.col("hv"), num_perm).alias("sig"))
     banded = sig.select(
-        id_col, F.explode(lsh_bands(F.col("sig"), bands, rows_per_band)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_hash")
+        "doc_id", F.explode(lsh_bands(F.col("sig"), bands, rows_per_band)).alias("band")
+    ).select("doc_id", "band.band_idx", "band.band_hash")
     buckets = (
         banded.groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+        .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= 1000))
     )
     # pairs within each bucket via nested HOFs (no UDF):
     pairs = F.flatten(
@@ -210,21 +202,14 @@ def candidate_pairs(
 
 def near_duplicate_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.8,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = DEFAULT_SHINGLE_K,
 ) -> DataFrame:
     """Verified near-dup pairs: LSH candidates with exact shingle-set
     Jaccard ≥ threshold → (doc_a, doc_b, jaccard)."""
-    sh = shingle_table(docs, id_col, text_col, shingle_k)
-    cands = candidate_pairs(
-        docs, id_col, text_col, num_perm, bands, shingle_k, _sh=sh
-    )
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    sh = shingle_table(docs)
+    cands = candidate_pairs(docs, _sh=sh)
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
         F.array_union("sh_a", "sh_b")
     )
@@ -242,15 +227,13 @@ def near_duplicate_pairs(
 
 def deduplicate(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.8,
 ) -> DataFrame:
     """Drop the higher-id member of every near-dup pair (greedy keep-min;
     one-hop, not transitive closure — iterate for full clustering)."""
-    pairs = near_duplicate_pairs(docs, id_col, text_col, threshold)
-    losers = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return docs.join(losers, id_col, "left_anti")
+    pairs = near_duplicate_pairs(docs, threshold)
+    losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -258,20 +241,14 @@ def deduplicate(
 # ---------------------------------------------------------------------------
 
 
-def pairs_cte_sql(
-    threshold: float = 0.8,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    source: str = "documents",
-) -> str:
-    """CTE chain (no leading WITH) ending in ``mh_pairs`` — spliceable
-    into larger oracle queries (e.g. the dedup cascade)."""
-    _check_num_perm(num_perm)
-    rows_per_band = num_perm // bands
+def pairs_cte_sql(source: str = "documents") -> str:
+    """CTE chain (no leading WITH) ending in ``mh_pairs`` (Jaccard >= 0.8)
+    — spliceable into larger oracle queries (e.g. the dedup cascade)."""
+    rows_per_band = DEFAULT_NUM_PERM // DEFAULT_BANDS
     mins = ", ".join(
         f"list_min(list_transform(h, v -> "
         f"({PERM_A[p]} * (v % {MOD}) + {PERM_B[p]}) % {MOD}))"
-        for p in range(num_perm)
+        for p in range(DEFAULT_NUM_PERM)
     )
     return f"""tok AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM {source}
@@ -290,7 +267,7 @@ def pairs_cte_sql(
     ), bands AS (
       SELECT doc_id, b.b AS band_idx,
              md5(array_to_string(sg[b.b*{rows_per_band} + 1 : b.b*{rows_per_band} + {rows_per_band}], '|')) AS band_hash
-      FROM sig CROSS JOIN (SELECT UNNEST(range(0, {bands})) AS b) b
+      FROM sig CROSS JOIN (SELECT UNNEST(range(0, {DEFAULT_BANDS})) AS b) b
     ), cand AS (
       SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
       FROM bands x JOIN bands y
@@ -303,22 +280,19 @@ def pairs_cte_sql(
       FROM cand JOIN sh a ON cand.doc_a = a.doc_id
                 JOIN sh b ON cand.doc_b = b.doc_id
       WHERE len(list_filter(a.s, v -> list_contains(b.s, v)))::DOUBLE
-            / len(list_distinct(a.s || b.s)) >= {threshold}
+            / len(list_distinct(a.s || b.s)) >= 0.8
     )"""
 
 
-def build_oracle_sql(
-    threshold: float = 0.8,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-) -> str:
-    """Oracle for near_duplicate_pairs over the ``documents`` view.
+def build_oracle_sql() -> str:
+    """Oracle for near_duplicate_pairs(threshold=0.8) over the
+    ``documents`` view.
 
-    Note: ``max_bucket`` capping is not replicated — equivalence holds
+    Note: the 1000-id bucket cap is not replicated — equivalence holds
     whenever no bucket exceeds the cap (true at oracle scale).
     """
     return (
         "WITH "
-        + pairs_cte_sql(threshold, num_perm, bands)
+        + pairs_cte_sql()
         + "\n    SELECT doc_a, doc_b, jaccard FROM mh_pairs ORDER BY doc_a, doc_b"
     )

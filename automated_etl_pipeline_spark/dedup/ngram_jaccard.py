@@ -66,8 +66,6 @@ def shingle_hash60(s: Column) -> Column:
 
 def jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.6,
     max_df_frac: float | None = None,
@@ -102,18 +100,18 @@ def jaccard_pairs(
     # md5+transform pipeline ran TWICE per row (plan showed md5 x2;
     # the oracle already phrases the filter this cheap way).
     sh = (
-        docs.filter(F.size(F.split(F.col(text_col), " ")) >= n)
+        docs.filter(F.size(F.split(F.col("text"), " ")) >= n)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.array_distinct(
-                F.transform(token_ngrams(F.col(text_col), n), shingle_hash60)
+                F.transform(token_ngrams(F.col("text"), n), shingle_hash60)
             ).alias("s"),
         )
         .withColumn("sz", F.size("s"))
         .localCheckpoint()
     )
 
-    inv = sh.select(id_col, "sz", F.explode("s").alias("g"))
+    inv = sh.select("doc_id", "sz", F.explode("s").alias("g"))
     dft = inv.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     if max_df_frac is not None:
         # opt-in stop-shingle cap: hot shingles leave the index AND the
@@ -146,7 +144,7 @@ def jaccard_pairs(
 
     # canonical order: ascending df, ties by shingle value — identical
     # in the DuckDB oracle, so prefixes never drift between engines
-    w_rank = Window.partitionBy(id_col).orderBy(F.asc("df"), F.asc("g"))
+    w_rank = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("g"))
     ranked = inv.join(dft, "g").withColumn("rn", F.row_number().over(w_rank))
     if max_df_frac is None and stop_hot_share is None:
         # uncapped: the kept set IS the full set, so |kept| == sz and
@@ -154,7 +152,7 @@ def jaccard_pairs(
         ranked = ranked.withColumn("ksz", F.col("sz"))
     else:
         ranked = ranked.withColumn(
-            "ksz", F.count(F.lit(1)).over(Window.partitionBy(id_col))
+            "ksz", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
         )
     # PPJoin prefix length p = |S| - ceil(t*|S|) + 1 over the (kept)
     # set.  The 1e-9 nudge keeps binary64 rounding from pushing
@@ -168,7 +166,7 @@ def jaccard_pairs(
     pref = ranked.filter(
         F.col("rn")
         <= F.col("ksz") - F.ceil(threshold * F.col("ksz") - 1e-9) + 1
-    ).select(id_col, "g", "sz", "rn")
+    ).select("doc_id", "g", "sz", "rn")
 
     # overlap requirement: J >= t  <=>  |A∩B| >= t/(1+t) * (|A|+|B|)
     min_overlap = (threshold / (1.0 + threshold)) * (
@@ -188,7 +186,7 @@ def jaccard_pairs(
         a.join(
             b,
             (F.col("a.g") == F.col("b.g"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
             # length filter: J >= t forces min >= t*max — prune before
             # the pair-dedup shuffle.  Same 1e-9 safety nudge as the
             # prefix-length ceil: if t*max rounds a hair ABOVE the
@@ -203,7 +201,7 @@ def jaccard_pairs(
             & (pos_bound >= min_overlap),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
     )
@@ -213,8 +211,8 @@ def jaccard_pairs(
     union = F.size(F.col("sa.s")) + F.size(F.col("sb.s")) - inter
     jac = F.round(inter.cast("double") / union, 6)
     return (
-        cand.join(sa, F.col("doc_a") == F.col(f"sa.{id_col}"))
-        .join(sb, F.col("doc_b") == F.col(f"sb.{id_col}"))
+        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )

@@ -58,17 +58,15 @@ def _bit_counters(arr: str) -> Column:
     )
 
 
-def simhash_bits(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_bits(docs: DataFrame) -> DataFrame:
     """(id, bs) — the 64 fingerprint bits as an array<int> of 0/1."""
-    toks = F.array_distinct(F.split(F.col(text_col), " "))
+    toks = F.array_distinct(F.split(F.col("text"), " "))
     hashed = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(toks, lambda t: F.substring(F.md5(t), 1, 16)).alias("hm"),
     )
     parsed = hashed.select(
-        id_col,
+        "doc_id",
         F.transform(
             "hm", lambda m: F.conv(F.substring(m, 1, 8), 16, 10).cast("long")
         ).alias("h1"),
@@ -78,7 +76,7 @@ def simhash_bits(
         F.size("hm").alias("n"),
     )
     counted = parsed.select(
-        id_col,
+        "doc_id",
         "n",
         _bit_counters("h1").alias("k1"),
         _bit_counters("h2").alias("k2"),
@@ -87,7 +85,7 @@ def simhash_bits(
         F.when(2 * F.col(h)[f"c{j}"] > F.col("n"), F.lit(1)).otherwise(F.lit(0))
     )
     return counted.select(
-        id_col,
+        "doc_id",
         F.array(
             *[bit("k1", j) for j in range(32)],
             *[bit("k2", j) for j in range(32)],
@@ -101,19 +99,15 @@ def _half(lo: int) -> Column:
     )
 
 
-def simhash_fp(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_fp(docs: DataFrame) -> DataFrame:
     """(id, fp_hi, fp_lo) — the fingerprint as two 32-bit ints (the
     pair pipeline's representation: no string work)."""
-    return simhash_bits(docs, id_col, text_col).select(
-        id_col, _half(1).alias("fp_hi"), _half(33).alias("fp_lo")
+    return simhash_bits(docs).select(
+        "doc_id", _half(1).alias("fp_hi"), _half(33).alias("fp_lo")
     )
 
 
-def simhash_columns(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_columns(docs: DataFrame) -> DataFrame:
     """(id, simhash hex, fp_hi, fp_lo) — the 64-bit fingerprint as a
     16-hex-char string plus its two 32-bit integer halves."""
     nibble = lambda nb: F.substring(  # noqa: E731
@@ -127,25 +121,21 @@ def simhash_columns(
         ),
         1,
     )
-    return simhash_bits(docs, id_col, text_col).select(
-        id_col,
+    return simhash_bits(docs).select(
+        "doc_id",
         F.concat(*[nibble(nb) for nb in range(16)]).alias("simhash"),
         _half(1).alias("fp_hi"),
         _half(33).alias("fp_lo"),
     )
 
 
-def with_simhash(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def with_simhash(docs: DataFrame) -> DataFrame:
     """(id, simhash) — distinct whitespace tokens, 64-bit hex code."""
-    return simhash_columns(docs, id_col, text_col).select(id_col, "simhash")
+    return simhash_columns(docs).select("doc_id", "simhash")
 
 
 def simhash_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) with hamming(simhash) <= max_hamming,
@@ -162,9 +152,9 @@ def simhash_pairs(
     cluster scale use persist(MEMORY_AND_DISK) on the equivalent
     intermediate."""
     reps = (
-        simhash_fp(docs, id_col, text_col)
+        simhash_fp(docs)
         .groupBy("fp_hi", "fp_lo")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
         .localCheckpoint()
     )
     quarter = lambda c, hi: (  # noqa: E731
@@ -173,7 +163,7 @@ def simhash_pairs(
         else F.col(c).bitwiseAND(F.lit(0xFFFF))
     )
     banded = reps.select(
-        id_col,
+        "doc_id",
         "fp_hi",
         "fp_lo",
         F.explode(
@@ -184,18 +174,18 @@ def simhash_pairs(
                 F.struct(F.lit(3).alias("q"), quarter("fp_lo", False).alias("qk")),
             )
         ).alias("band"),
-    ).select(id_col, "fp_hi", "fp_lo", "band.q", "band.qk")
+    ).select("doc_id", "fp_hi", "fp_lo", "band.q", "band.qk")
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.q") == F.col("b.q"))
             & (F.col("a.qk") == F.col("b.qk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
             F.col("a.fp_hi").alias("ha"),
             F.col("a.fp_lo").alias("la"),
             F.col("b.fp_hi").alias("hb"),
@@ -252,8 +242,9 @@ def fingerprint_oracle_sql() -> str:
     return _ORACLE_FP_CTE + "SELECT doc_id, simhash FROM sh ORDER BY doc_id"
 
 
-def pairs_oracle_sql(max_hamming: int = 3) -> str:
-    """Oracle for simhash_pairs over the ``documents`` view."""
+def pairs_oracle_sql() -> str:
+    """Oracle for simhash_pairs(max_hamming=3) over the ``documents``
+    view."""
     return (
         _ORACLE_FP_CTE
         + f"""
@@ -276,7 +267,7 @@ def pairs_oracle_sql(max_hamming: int = 3) -> str:
     SELECT doc_a, doc_b,
            CAST(bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) AS INT) AS hamming
     FROM cand
-    WHERE bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) <= {max_hamming}
+    WHERE bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) <= 3
     ORDER BY doc_a, doc_b
     """
     )

@@ -33,21 +33,20 @@ from pyspark.sql import functions as F
 from automated_etl_pipeline_spark.dedup.ngram_jaccard import shingle_hash60
 
 
-def tokenized(docs: DataFrame, w: int, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def tokenized(docs: DataFrame, w: int) -> DataFrame:
     """(id, t: array<string>) for docs long enough to hold one window."""
     return (
-        docs.select(id_col, F.split(text_col, " ").alias("t"))
+        docs.select("doc_id", F.split("text", " ").alias("t"))
         .filter(F.size("t") >= w)
     )
 
 
-def windows(toks: DataFrame, w: int, id_col: str = "doc_id") -> DataFrame:
+def windows(toks: DataFrame, w: int) -> DataFrame:
     """(id, pos, h): 60-bit hash of each w-token sliding window,
     pos 1-based."""
     return (
         toks.select(
-            id_col,
+            "doc_id",
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(1), F.size("t") - w + 1),
@@ -57,43 +56,42 @@ def windows(toks: DataFrame, w: int, id_col: str = "doc_id") -> DataFrame:
                 )
             ).alias("p0", "h"),
         )
-        .select(id_col, (F.col("p0") + 1).alias("pos"), "h")
+        .select("doc_id", (F.col("p0") + 1).alias("pos"), "h")
     )
 
 
-def span_report(docs: DataFrame, w: int, id_col: str = "doc_id") -> DataFrame:
+def span_report(docs: DataFrame, w: int) -> DataFrame:
     """(doc_id, n_windows, n_dup_windows, dup_frac) for docs with at
     least one cross-doc duplicated window, ordered by doc_id."""
-    toks = tokenized(docs, w, id_col)
-    win = windows(toks, w, id_col)
+    toks = tokenized(docs, w)
+    win = windows(toks, w)
     dup = (
         win.groupBy("h")
-        .agg(F.countDistinct(id_col).alias("nd"))
+        .agg(F.countDistinct("doc_id").alias("nd"))
         .filter(F.col("nd") >= 2)
         .select("h")
     )
-    per_doc = win.join(dup, "h").groupBy(id_col).agg(
+    per_doc = win.join(dup, "h").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_dup_windows")
     )
     n_windows = (F.size("t") - w + 1).cast("long")
     return (
-        per_doc.join(toks, id_col)
+        per_doc.join(toks, "doc_id")
         .select(
-            id_col,
+            "doc_id",
             n_windows.alias("n_windows"),
             "n_dup_windows",
             F.round(
                 F.col("n_dup_windows").cast("double") / n_windows, 6
             ).alias("dup_frac"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
 def removal_token_counts(
     docs: DataFrame,
     w: int,
-    id_col: str = "doc_id",
     toks: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, n_spans, tokens_removed): per-doc keep-first-owner span
@@ -104,24 +102,24 @@ def removal_token_counts(
     same frame for its n_tokens join) pass ``toks`` so the split-heavy
     tokenize stays a single shared subtree instead of two independent
     ones Catalyst won't dedupe (ADVICE r7)."""
-    toks = tokenized(docs, w, id_col) if toks is None else toks
-    win = windows(toks, w, id_col)
+    toks = tokenized(docs, w) if toks is None else toks
+    win = windows(toks, w)
     owner = (
         win.groupBy("h")
         .agg(
-            F.min(id_col).alias("owner_doc"),
-            F.countDistinct(id_col).alias("nd"),
+            F.min("doc_id").alias("owner_doc"),
+            F.countDistinct("doc_id").alias("nd"),
         )
         .filter(F.col("nd") >= 2)
         .select("h", "owner_doc")
     )
     removable = (
         win.join(owner, "h")
-        .filter(F.col(id_col) > F.col("owner_doc"))
-        .select(id_col, "pos")
+        .filter(F.col("doc_id") > F.col("owner_doc"))
+        .select("doc_id", "pos")
         .distinct()
     )
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
     flagged = removable.withColumn(
         "new_island",
         F.when(
@@ -136,33 +134,33 @@ def removal_token_counts(
             w_doc.rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
-    spans = islands.groupBy(id_col, "island").agg(
+    spans = islands.groupBy("doc_id", "island").agg(
         F.min("pos").alias("s"),
         (F.max("pos") + w - 1).alias("e"),
     )
     span_len = F.col("e") - F.col("s") + 1
-    return spans.groupBy(id_col).agg(
+    return spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum(span_len).alias("tokens_removed"),
     )
 
 
-def removal_spans(docs: DataFrame, w: int, id_col: str = "doc_id") -> DataFrame:
+def removal_spans(docs: DataFrame, w: int) -> DataFrame:
     """(doc_id, n_spans, tokens_removed, n_tokens, tokens_kept):
     keep-first-owner merged removal spans per doc, ordered by doc_id."""
-    toks = tokenized(docs, w, id_col)
+    toks = tokenized(docs, w)
     return (
-        removal_token_counts(docs, w, id_col, toks=toks)
+        removal_token_counts(docs, w, toks=toks)
         .join(
-            toks.select(id_col, F.size("t").cast("long").alias("n_tokens")),
-            id_col,
+            toks.select("doc_id", F.size("t").cast("long").alias("n_tokens")),
+            "doc_id",
         )
         .select(
-            id_col,
+            "doc_id",
             "n_spans",
             "tokens_removed",
             "n_tokens",
             (F.col("n_tokens") - F.col("tokens_removed")).alias("tokens_kept"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )

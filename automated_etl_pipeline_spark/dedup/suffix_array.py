@@ -148,12 +148,10 @@ def _block_offsets(lens: DataFrame) -> DataFrame:
     )
 
 
-def corpus_positions(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def corpus_positions(docs: DataFrame) -> DataFrame:
     """(gid, doc_id, pos, is_sent, key): one row per real token plus
     one sentinel row per document (pos == len(tokens)), gids
-    contiguous per doc block in ``id_col`` order.  ``key`` is the
+    contiguous per doc block in ``doc_id`` order.  ``key`` is the
     LEVEL-log2(_W0) comparison key, built map-side from the doc's own
     token array: a struct of the next ``_W0`` token slots (``''`` for
     slots at/past the doc's sentinel) plus a ``term`` long — the doc's
@@ -179,11 +177,11 @@ def corpus_positions(
 
     Empty/whitespace-only docs contribute just their sentinel."""
     toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         # NULL text behaves as an empty doc (size(NULL) would poison
         # the offset arithmetic with -1/NULL otherwise)
         F.filter(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " "), lambda t: t != ""
+            F.split(F.coalesce(F.col("text"), F.lit("")), " "), lambda t: t != ""
         ).alias("t"),
     )
     lens = toks.select("doc_id", (F.size("t") + F.lit(1)).alias("block_len"))
@@ -219,7 +217,7 @@ def corpus_positions(
 
 
 def suffix_ranks(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    docs: DataFrame,
 ) -> tuple[DataFrame, list[tuple[int, DataFrame]], DataFrame]:
     """Run prefix doubling to completion.
 
@@ -232,7 +230,7 @@ def suffix_ranks(
     for the descent's final content comparison (the k = 1..4 rank
     levels the ``_W0`` start skips are exactly token-content equality,
     so one array comparison replaces them)."""
-    pos = materialize(corpus_positions(docs, id_col, text_col))
+    pos = materialize(corpus_positions(docs))
     n = pos.count()
     low = pos.select(
         "gid",
@@ -431,15 +429,13 @@ def neighbor_lcps(
     return pairs.select("i", "j", F.col("h").alias("lcp"))
 
 
-def match_lengths(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def match_lengths(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, match_len): for every real token position, the
     length in tokens of the longest substring starting there that
     occurs at any OTHER position in the corpus (same doc included,
     Lee et al. semantics).  0 = the suffix starting here shares no
     first token with any other suffix."""
-    final, levels, low = suffix_ranks(docs, id_col, text_col)
+    final, levels, low = suffix_ranks(docs)
     if not levels:
         return final.select("doc_id", "pos", F.lit(0).cast("long").alias("match_len")).limit(0)
     lcps = neighbor_lcps(final, levels, low)
@@ -463,8 +459,6 @@ def match_lengths(
 def duplicated_spans(
     docs: DataFrame,
     min_len: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, span_start, span_end, span_len): maximal per-document
     spans covered by duplicated substrings of >= ``min_len`` tokens.
@@ -472,7 +466,7 @@ def duplicated_spans(
     [p, p+match_len-1]; overlapping/adjacent covers merge via
     gaps-and-islands with a running max end (per-doc window, doc-length
     bounded — spans.py's contract)."""
-    ml = match_lengths(docs, id_col, text_col).filter(
+    ml = match_lengths(docs).filter(
         F.col("match_len") >= F.lit(min_len)
     )
     w = (
@@ -513,9 +507,7 @@ def duplicated_spans(
     )
 
 
-def longest_repeat(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def longest_repeat(docs: DataFrame) -> DataFrame:
     """One row, ALWAYS: the longest substring occurring >= 2 times in
     the corpus — (length, doc_id, pos, other_doc_id, other_pos,
     phrase).  Ties broken by (doc_id, pos) of the i side for
@@ -532,7 +524,7 @@ def longest_repeat(
     fallback = spark.createDataFrame(
         [(0, None, None, None, None, None)], schema
     )
-    final, levels, low = suffix_ranks(docs, id_col, text_col)
+    final, levels, low = suffix_ranks(docs)
     if not levels:
         return fallback
     lcps = neighbor_lcps(final, levels, low)
@@ -549,11 +541,11 @@ def longest_repeat(
         .limit(1)
     )
     toks = docs.select(
-        F.col(id_col).cast("long").alias("di"),
+        F.col("doc_id").cast("long").alias("di"),
         # NULL text is an empty doc, the corpus_positions contract —
         # split(NULL) would NULL-poison the phrase slice (r10 ADVICE)
         F.filter(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
+            F.split(F.coalesce(F.col("text"), F.lit("")), " "),
             lambda t: t != "",
         ).alias("__t"),
     )
@@ -585,8 +577,6 @@ def longest_repeat(
 def remove_duplicate_spans(
     docs: DataFrame,
     min_len: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     spans: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, n_tokens, n_removed, text_clean): apply Lee et al.'s
@@ -603,14 +593,14 @@ def remove_duplicate_spans(
     consumes the spans — the suffix-array pipeline is the dominant
     cost and must not run twice."""
     if spans is None:
-        spans = duplicated_spans(docs, min_len, id_col, text_col)
+        spans = duplicated_spans(docs, min_len)
     spans_arr = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
     toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.filter(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
+            F.split(F.coalesce(F.col("text"), F.lit("")), " "),
             lambda t: t != "",
         ).alias("__t"),
     )

@@ -82,8 +82,6 @@ def winnow_fingerprint_set(
 
 def fingerprint_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = DEFAULT_K,
     w: int = DEFAULT_W,
     min_shared: int = 2,
@@ -101,18 +99,18 @@ def fingerprint_pairs(
     ngram_jaccard's opt-in cap.  (A None cap used to flow into the
     filter as ``df <= n_docs * NULL`` — three-valued logic silently
     emptied the whole index; regression-pinned now.)"""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     fp = (
-        docs.select(F.col(id_col), toks.alias("t"))
+        docs.select(F.col("doc_id"), toks.alias("t"))
         .filter(F.size("t") >= k + w - 1)
         # two projections: "h" is an attribute (referenced twice below —
         # size + slice — so CollapseProject keeps it), and each gram is
         # hashed exactly once instead of once per window
-        .select(id_col, gram_hash_array(F.col("t"), k).alias("h"))
-        .select(id_col, window_minima_set(F.col("h"), w).alias("fp"))
+        .select("doc_id", gram_hash_array(F.col("t"), k).alias("h"))
+        .select("doc_id", window_minima_set(F.col("h"), w).alias("fp"))
         .localCheckpoint()  # consumed by df-agg AND both join sides
     )
-    inv = fp.select(id_col, F.explode("fp").alias("f"))
+    inv = fp.select("doc_id", F.explode("fp").alias("f"))
     if max_df_frac is not None:
         n_docs = fp.agg(F.count(F.lit(1)).alias("n_docs"))
         keep = (
@@ -128,10 +126,10 @@ def fingerprint_pairs(
         a.join(
             b,
             (F.col("a.f") == F.col("b.f"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)

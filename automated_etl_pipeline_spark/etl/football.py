@@ -35,9 +35,6 @@ from automated_etl_pipeline_spark.operators.star import (
 class FootballEtlConfig:
     input_path: str
     tournament_filter: str | None = "FIFA World Cup"
-    date_formats: tuple[str, ...] = cleaning.DEFAULT_DATE_FORMATS
-    numeric_fill: int = -1
-    boolean_fill: bool = False
 
 
 def clean_results(spark: SparkSession, cfg: FootballEtlConfig) -> DataFrame:
@@ -57,9 +54,9 @@ def clean_results(spark: SparkSession, cfg: FootballEtlConfig) -> DataFrame:
     df = cleaning.fill_nulls(  # F3 (intent)
         df,
         {
-            "home_score": cfg.numeric_fill,
-            "away_score": cfg.numeric_fill,
-            "neutral": cfg.boolean_fill,
+            "home_score": -1,
+            "away_score": -1,
+            "neutral": False,
         },
     )
     df = df.na.fill(
@@ -68,7 +65,7 @@ def clean_results(spark: SparkSession, cfg: FootballEtlConfig) -> DataFrame:
     df = cleaning.normalize_case(
         df, ["home_team", "away_team", "city", "country"]
     )  # F4 (intent; tournament kept verbatim — it is a filter/grouping key)
-    df = df.withColumn("date", cleaning.multi_format_date("date", cfg.date_formats))  # F1
+    df = df.withColumn("date", cleaning.multi_format_date("date"))  # F1
     return df
 
 

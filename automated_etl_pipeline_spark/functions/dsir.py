@@ -38,14 +38,12 @@ def hashed_ngram_counts(
     docs: DataFrame,
     n: int = 2,
     buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, bucket, cnt): occurrence counts of hashed word
     n-grams per document.  bucket = pmod(xxhash64(ngram), buckets).
     Docs shorter than n tokens contribute no rows."""
     toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " "), lambda t: t != ""
+        F.split(F.coalesce(F.col("text"), F.lit("")), " "), lambda t: t != ""
     )
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
@@ -53,7 +51,7 @@ def hashed_ngram_counts(
     )
     return (
         docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
+            F.col("doc_id").cast("long").alias("doc_id"),
             F.explode(
                 F.when(F.size(toks) >= n, grams).otherwise(
                     F.array().cast("array<string>")
@@ -72,8 +70,6 @@ def bucket_log_probs(
     docs: DataFrame,
     n: int = 2,
     buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(bucket, logp): add-one-smoothed log probability of every
     bucket 0..B-1 under the corpus's hashed-n-gram unigram model —
@@ -81,7 +77,7 @@ def bucket_log_probs(
     safe to broadcast."""
     spark = docs.sparkSession
     counts = (
-        hashed_ngram_counts(docs, n, buckets, id_col, text_col)
+        hashed_ngram_counts(docs, n, buckets)
         .groupBy("bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -106,21 +102,19 @@ def importance_weights(
     target: DataFrame,
     n: int = 2,
     buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_ngrams, weight): per raw document, the DSIR
     log-importance weight sum_b cnt_b * (log p_target(b) -
     log p_raw(b)).  Positive = looks more like the target domain than
     the pool.  Docs with no n-grams score 0 with n_ngrams 0."""
-    tgt = bucket_log_probs(target, n, buckets, id_col, text_col).select(
+    tgt = bucket_log_probs(target, n, buckets).select(
         "bucket", F.col("logp").alias("__lt")
     )
-    rawp = bucket_log_probs(raw, n, buckets, id_col, text_col).select(
+    rawp = bucket_log_probs(raw, n, buckets).select(
         "bucket", F.col("logp").alias("__lr")
     )
     per_doc = (
-        hashed_ngram_counts(raw, n, buckets, id_col, text_col)
+        hashed_ngram_counts(raw, n, buckets)
         .join(F.broadcast(tgt), "bucket")
         .join(F.broadcast(rawp), "bucket")
         .groupBy("doc_id")
@@ -129,7 +123,7 @@ def importance_weights(
             F.sum(F.col("cnt") * (F.col("__lt") - F.col("__lr"))).alias("weight"),
         )
     )
-    ids = raw.select(F.col(id_col).cast("long").alias("doc_id"))
+    ids = raw.select(F.col("doc_id").cast("long").alias("doc_id"))
     return ids.join(per_doc, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("n_ngrams"), F.lit(0)).alias("n_ngrams"),
@@ -144,8 +138,6 @@ def dsir_select(
     seed: int = 0,
     n: int = 2,
     buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     weights: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, weight, score): the k raw documents drawn without
@@ -159,7 +151,7 @@ def dsir_select(
     w = (
         weights
         if weights is not None
-        else importance_weights(raw, target, n, buckets, id_col, text_col)
+        else importance_weights(raw, target, n, buckets)
     )
     # u strictly inside (0,1): (h + 0.5) / 2^32 with h the first 8
     # md5 hex digits — keeps both ln() calls finite

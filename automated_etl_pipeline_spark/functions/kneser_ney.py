@@ -54,14 +54,12 @@ from automated_etl_pipeline_spark.operators.ranks import global_ranks
 DISCOUNT = 0.75
 
 
-def _doc_bigrams(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def _doc_bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, l, r, cnt): per-document bigram type counts over the
     whitespace tokenization (empty tokens dropped, NULL text = empty
     doc).  Docs with < 2 tokens contribute no rows."""
     toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " "), lambda t: t != ""
+        F.split(F.coalesce(F.col("text"), F.lit("")), " "), lambda t: t != ""
     )
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -70,7 +68,7 @@ def _doc_bigrams(
     )
     return (
         docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
+            F.col("doc_id").cast("long").alias("doc_id"),
             F.explode(
                 F.when(F.size(toks) >= 2, pairs).otherwise(
                     F.array().cast("array<struct<l:string,r:string>>")
@@ -85,8 +83,6 @@ def _doc_bigrams(
 def kn_doc_scores(
     raw: DataFrame,
     target: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_bigrams, nll_e4): per raw document, the bigram count
     (with multiplicity) and the total interpolated-KN negative
@@ -96,7 +92,7 @@ def kn_doc_scores(
 
     Docs with no bigrams get (0, NULL) — no meaningful score, the
     ccnet_partition 'empty' contract."""
-    tgt = _doc_bigrams(target, id_col, text_col)
+    tgt = _doc_bigrams(target)
     bg = tgt.groupBy("l", "r").agg(F.sum("cnt").cast("long").alias("c_lr"))
     left = bg.groupBy("l").agg(
         F.sum("c_lr").cast("long").alias("c_l"),
@@ -108,7 +104,7 @@ def kn_doc_scores(
         F.countDistinct("r").cast("long").alias("__V"),
     )
     doc = (
-        _doc_bigrams(raw, id_col, text_col)
+        _doc_bigrams(raw)
         .join(bg, ["l", "r"], "left")
         .join(left, "l", "left")
         .join(cont, "r", "left")
@@ -145,7 +141,7 @@ def kn_doc_scores(
         F.sum("cnt").cast("long").alias("n_bigrams"),
         (-F.sum("__lp_e4")).cast("long").alias("nll_e4"),
     )
-    ids = raw.select(F.col(id_col).cast("long").alias("doc_id"))
+    ids = raw.select(F.col("doc_id").cast("long").alias("doc_id"))
     return ids.join(per_doc, "doc_id", "left").select(
         "doc_id",
         F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
@@ -153,17 +149,10 @@ def kn_doc_scores(
     )
 
 
-def kn_partition(
-    raw: DataFrame,
-    target: DataFrame,
-    head_frac: float = 0.25,
-    middle_frac: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def kn_partition(raw: DataFrame, target: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, nll_e4, part): CCNet head/middle/tail split
     of the raw pool by KN-bigram perplexity — head is the
-    ceil(N*head_frac) documents with the lowest average NLL (most
+    ceil(N*0.25) documents with the lowest average NLL (most
     target-like), ties broken on doc_id; 'empty' for docs with no
     bigrams.  The ranking key avg = nll_e4 / n_bigrams is a division
     of two exact integers — the same IEEE double on any engine.
@@ -172,15 +161,15 @@ def kn_partition(
     fractions keep ceil(N*frac) IEEE-exact), so on the same pool
     predicate the part SIZES match ccnet_partition_sizes row for
     row — the cross-gate check pinned in tests/test_perplexity.py."""
-    scores = kn_doc_scores(raw, target, id_col, text_col).localCheckpoint(
+    scores = kn_doc_scores(raw, target).localCheckpoint(
         eager=True
     )
     scored = scores.filter(F.col("nll_e4").isNotNull()).withColumn(
         "__avg", F.col("nll_e4") / F.col("n_bigrams")
     )
     ranked, total = global_ranks(scored, ["__avg", "doc_id"])
-    cut_head = math.ceil(total * head_frac)
-    cut_mid = math.ceil(total * (head_frac + middle_frac))
+    cut_head = math.ceil(total * 0.25)
+    cut_mid = math.ceil(total * 0.75)
     parted = ranked.select(
         "doc_id",
         "n_bigrams",

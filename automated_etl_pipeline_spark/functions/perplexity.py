@@ -51,17 +51,15 @@ def doc_cross_entropy(
     target: DataFrame,
     n: int = 2,
     buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_ngrams, h): per raw document, the exact
     cross-entropy in nats per n-gram under the target corpus's
     hashed-n-gram LM: h = -sum_b cnt_b * log p_target(b) / sum_b
     cnt_b.  exp(h) is the document's perplexity.  Docs with no
     n-grams get h NULL with n_ngrams 0 (no meaningful score)."""
-    lm = bucket_log_probs(target, n, buckets, id_col, text_col)
+    lm = bucket_log_probs(target, n, buckets)
     per_doc = (
-        hashed_ngram_counts(raw, n, buckets, id_col, text_col)
+        hashed_ngram_counts(raw, n, buckets)
         .join(F.broadcast(lm), "bucket")
         .groupBy("doc_id")
         .agg(
@@ -69,7 +67,7 @@ def doc_cross_entropy(
             (-F.sum(F.col("cnt") * F.col("logp")) / F.sum("cnt")).alias("h"),
         )
     )
-    ids = raw.select(F.col(id_col).cast("long").alias("doc_id"))
+    ids = raw.select(F.col("doc_id").cast("long").alias("doc_id"))
     return ids.join(per_doc, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("n_ngrams"), F.lit(0)).alias("n_ngrams"),
@@ -84,8 +82,6 @@ def ccnet_partition(
     middle_frac: float = 1.0 / 3.0,
     n: int = 2,
     buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_ngrams, h, part): CCNet head/middle/tail split of
     the raw pool by target-LM cross-entropy.  ``part`` is 'head' for
@@ -98,9 +94,9 @@ def ccnet_partition(
     The scores frame (3 narrow columns per document) is materialized
     once — both the ranked and empty branches reuse it, so the
     LM-scoring pipeline runs a single pass over the pool."""
-    scores = doc_cross_entropy(
-        raw, target, n, buckets, id_col, text_col
-    ).localCheckpoint(eager=True)
+    scores = doc_cross_entropy(raw, target, n, buckets).localCheckpoint(
+        eager=True
+    )
     scored = scores.filter(F.col("h").isNotNull())
     ranked, total = global_ranks(scored, ["h", "doc_id"])
     cut_head = math.ceil(total * head_frac)

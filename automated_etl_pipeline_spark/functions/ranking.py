@@ -35,11 +35,9 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
     k: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, score) — top-k documents by BM25 for the given terms."""
-    toks = docs.select(F.col(id_col), F.split(text_col, " ").alias("t"))
+    toks = docs.select(F.col("doc_id"), F.split("text", " ").alias("t"))
     stats = F.broadcast(
         toks.agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -51,9 +49,9 @@ def bm25_topk(
     # per-document lengths table back would mean broadcasting (or
     # shuffling) one row per corpus document for nothing
     posting = (
-        toks.select(id_col, F.size("t").alias("dl"), F.explode("t").alias("term"))
+        toks.select("doc_id", F.size("t").alias("dl"), F.explode("t").alias("term"))
         .filter(F.array_contains(terms, F.col("term")))
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
     )
     df_t = F.broadcast(
@@ -66,15 +64,15 @@ def bm25_topk(
     denom = F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl"))
     contrib = idf * F.col("tf") * (K1 + 1) / denom
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(F.round(F.sum(contrib), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
 
 
-def duckdb_oracle_sql(query_terms: list[str], k: int = 20) -> str:
-    """Same scoring in DuckDB SQL over the ``documents`` view."""
+def duckdb_oracle_sql(query_terms: list[str]) -> str:
+    """Same scoring in DuckDB SQL over the ``documents`` view, top 20."""
     terms = ", ".join("'" + t.replace("'", "''") + "'" for t in query_terms)
     return f"""
     WITH toks AS (
@@ -102,5 +100,5 @@ def duckdb_oracle_sql(query_terms: list[str], k: int = 20) -> str:
     JOIN lens l USING (doc_id)
     CROSS JOIN stats s
     GROUP BY p.doc_id
-    ORDER BY score DESC, p.doc_id LIMIT {k}
+    ORDER BY score DESC, p.doc_id LIMIT 20
     """

@@ -71,13 +71,11 @@ def match_count(text: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(pattern), F.lit(0)))
 
 
-def total_match_count(
-    text: Column, patterns: dict[str, str] | None = None
-) -> Column:
-    """Total match count across all patterns (sum of per-pattern
+def total_match_count(text: Column) -> Column:
+    """Total match count across all ``PII_PATTERNS`` (sum of per-pattern
     counts; overlapping patterns double-count by design — this is a
     scrub-volume metric, not a span count)."""
-    cols = [match_count(text, p) for p in (patterns or PII_PATTERNS).values()]
+    cols = [match_count(text, p) for p in PII_PATTERNS.values()]
     out = cols[0]
     for c in cols[1:]:
         out = out + c

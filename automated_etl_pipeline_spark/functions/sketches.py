@@ -42,39 +42,33 @@ def hll_build(
     df: DataFrame,
     group_cols: Sequence[str],
     value_col: str,
-    lg_k: int = 12,
-    sketch_col: str = "hll_sketch",
 ) -> DataFrame:
-    """Per-group HLL sketch of ``value_col`` — the persistable partial.
+    """Per-group HLL sketch (lg_k = 12) of ``value_col`` — the
+    persistable partial.
 
-    At scale this is the map-side/daily pre-aggregation: one ~2^lg_k-
-    byte binary per group, stored alongside the rollup keys."""
+    At scale this is the map-side/daily pre-aggregation: one ~2^12-byte
+    binary per group, stored alongside the rollup keys."""
     return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias(sketch_col)
+        F.hll_sketch_agg(value_col, F.lit(12)).alias("hll_sketch")
     )
 
 
-def hll_merge(
-    partials: DataFrame,
-    group_cols: Sequence[str],
-    sketch_col: str = "hll_sketch",
-) -> DataFrame:
+def hll_merge(partials: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     """Merge partial sketches to a coarser grouping (drop some keys):
     register-wise max — associative, commutative, lossless for union."""
     return partials.groupBy(*group_cols).agg(
-        F.hll_union_agg(sketch_col).alias(sketch_col)
+        F.hll_union_agg("hll_sketch").alias("hll_sketch")
     )
 
 
 def hll_estimate(
     sketches: DataFrame,
-    sketch_col: str = "hll_sketch",
     out_col: str = "approx_distinct",
 ) -> DataFrame:
-    """Distinct-count estimate from a sketch column."""
+    """Distinct-count estimate from the ``hll_sketch`` column."""
     return sketches.withColumn(
-        out_col, F.hll_sketch_estimate(F.col(sketch_col))
-    ).drop(sketch_col)
+        out_col, F.hll_sketch_estimate(F.col("hll_sketch"))
+    ).drop("hll_sketch")
 
 
 def approx_distinct_rollup(
@@ -82,11 +76,10 @@ def approx_distinct_rollup(
     fine_cols: Sequence[str],
     coarse_cols: Sequence[str],
     value_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Build fine-grained sketches, merge them up to ``coarse_cols``,
     estimate — the end-to-end two-level rollup (e.g. fine = [priority,
     month], coarse = [priority]): the raw table is scanned ONCE at the
     fine grain; every coarser answer comes from sketch merges."""
-    parts = hll_build(df, fine_cols, value_col, lg_k)
+    parts = hll_build(df, fine_cols, value_col)
     return hll_estimate(hll_merge(parts, coarse_cols))

@@ -83,14 +83,12 @@ def predicted_lang(text_col: str | Column) -> Column:
     return _argmax_case(lang_scores(text_col))
 
 
-def with_predicted_lang(
-    df, text_col: str = "text", out_col: str = "predicted_lang"
-):
-    """Adds ``out_col`` via staged projections: trigrams and per-lang
+def with_predicted_lang(df):
+    """Adds ``predicted_lang`` via staged projections: trigrams and per-lang
     scores are materialized once each (multi-referenced non-cheap
     aliases are not collapsed, so nothing is recomputed per branch of
     the argmax CASE)."""
-    grams = df.withColumn("__grams", char_trigrams(F.col(text_col)))
+    grams = df.withColumn("__grams", char_trigrams(F.col("text")))
     score_col = {
         lang: (
             F.size(F.filter(F.col("__grams"), lambda g: g.isin(*prof)))
@@ -103,16 +101,17 @@ def with_predicted_lang(
         "*", *[c.alias(f"__s_{lang}") for lang, c in score_col.items()]
     )
     case = _argmax_case({lang: F.col(f"__s_{lang}") for lang in LANG_PROFILES})
-    return scored.withColumn(out_col, case).drop(
+    return scored.withColumn("predicted_lang", case).drop(
         "__grams", *[f"__s_{lang}" for lang in LANG_PROFILES]
     )
 
 
-def duckdb_predicted_lang_sql(text_expr: str = "text") -> str:
-    """DuckDB expression computing the identical prediction."""
+def duckdb_predicted_lang_sql() -> str:
+    """DuckDB expression computing the identical prediction from the
+    ``text`` column."""
     grams = (
-        f"list_transform(range(1, greatest(len(lower({text_expr})) - 2, 0) + 1), "
-        f"i -> substr(lower({text_expr}), i, 3))"
+        "list_transform(range(1, greatest(len(lower(text)) - 2, 0) + 1), "
+        "i -> substr(lower(text), i, 3))"
     )
     score = {
         lang: (

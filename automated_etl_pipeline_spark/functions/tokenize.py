@@ -76,12 +76,12 @@ EOW = "\ue000"
 MAX_TRAIN_WORDS = 2_000_000
 
 
-def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, freq) over whitespace-split ``text_col`` — the single
+def word_freq(docs: DataFrame) -> DataFrame:
+    """(word, freq) over whitespace-split ``text`` — the single
     corpus-scale pass of BPE training (module docstring).  Empty
     strings from repeated spaces are dropped."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -208,12 +208,10 @@ def make_encode_udf(merges: list[tuple[str, str]]):
 def tokenize_documents(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "tokens",
 ) -> DataFrame:
-    """Append ``out_col: array<string>`` of BPE tokens (stateless
+    """Append ``tokens: array<string>`` of BPE tokens (stateless
     Arrow-batched map — pipelines with the scan, no shuffle)."""
-    return docs.withColumn(out_col, make_encode_udf(merges)(F.col(text_col)))
+    return docs.withColumn("tokens", make_encode_udf(merges)(F.col("text")))
 
 
 def detokenize_expr(tokens_col: str) -> F.Column:
@@ -231,7 +229,6 @@ def detokenize_expr(tokens_col: str) -> F.Column:
 def fidelity_report(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
 ) -> DataFrame:
     """One row: n_docs (non-null texts), n_null_docs, n_roundtrip_ok
     (docs whose decode(encode(x)) equals whitespace-normalized x),
@@ -244,23 +241,23 @@ def fidelity_report(
     was actually corrupted (r10 review).  This is the shape an r11
     oracle gate would hash."""
     n_null = F.sum(
-        F.when(F.col(text_col).isNull(), 1).otherwise(0)
+        F.when(F.col("text").isNull(), 1).otherwise(0)
     ).alias("n_null_docs")
     norm = F.array_join(
-        F.filter(F.split(F.col(text_col), " "), lambda w: w != ""), " "
+        F.filter(F.split(F.col("text"), " "), lambda w: w != ""), " "
     )
-    t = tokenize_documents(docs, merges, text_col).select(
-        F.col(text_col),
+    t = tokenize_documents(docs, merges).select(
+        F.col("text"),
         norm.alias("norm"),
         detokenize_expr("tokens").alias("back"),
         F.size("tokens").alias("n_tok"),
         F.size(
-            F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+            F.filter(F.split(F.col("text"), " "), lambda w: w != "")
         ).alias("n_words"),
     )
     return t.agg(
         F.sum(
-            F.when(F.col(text_col).isNotNull(), 1).otherwise(0)
+            F.when(F.col("text").isNotNull(), 1).otherwise(0)
         ).alias("n_docs"),
         n_null,
         F.sum(

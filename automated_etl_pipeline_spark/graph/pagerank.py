@@ -35,34 +35,28 @@ from pyspark.sql import functions as F
 from automated_etl_pipeline_spark.plans.materialize import materialize
 
 CHECKPOINT_EVERY = 2
+DAMPING = 0.85
 
 
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     iters: int = 5,
-    damping: float = 0.85,
 ) -> DataFrame:
     """Rank every node after ``iters`` power-iteration rounds.
 
-    ``edges`` are interpreted as DIRECTED src->dst (symmetrize before
-    calling for an undirected similarity graph). Nodes with no
-    out-edges leak their mass (no dangling redistribution); nodes with
-    no in-edges settle at (1-d)/N. Returns (id_col, pagerank double).
+    ``nodes`` carry ``doc_id``; ``edges`` (src, dst) are interpreted as
+    DIRECTED src->dst (symmetrize before calling for an undirected
+    similarity graph). Nodes with no out-edges leak their mass (no
+    dangling redistribution); nodes with no in-edges settle at
+    (1-d)/N with d = DAMPING. Returns (doc_id, pagerank double).
     """
     n = nodes.count()
     if n == 0:
-        return nodes.select(
-            F.col(id_col), F.lit(0.0).alias("pagerank")
-        )
-    base = float(1.0 - damping) / n
+        return nodes.select("doc_id", F.lit(0.0).alias("pagerank"))
+    base = float(1.0 - DAMPING) / n
 
-    e0 = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
+    e0 = edges.select("src", "dst").localCheckpoint()
     deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # deg rides the edge list (r15 opt, guide §2.2 — hoist the
     # loop-invariant): the old loop re-joined deg to the edges EVERY
@@ -72,7 +66,7 @@ def pagerank(
     e = e0.join(deg, "src").localCheckpoint()
 
     ranks = nodes.select(
-        F.col(id_col).alias("node"), F.lit(1.0 / n).alias("pr")
+        F.col("doc_id").alias("node"), F.lit(1.0 / n).alias("pr")
     )
     for t in range(iters):
         contribs = (
@@ -87,13 +81,13 @@ def pagerank(
             .agg(F.sum("c").alias("m"))
         )
         ranks = (
-            nodes.select(F.col(id_col).alias("node"))
+            nodes.select(F.col("doc_id").alias("node"))
             .join(contribs, F.col("node") == F.col("dst"), "left")
             .select(
                 "node",
                 (
                     F.lit(base)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * F.coalesce(
                         F.col("m").cast("double"), F.lit(0.0)
                     )
@@ -107,4 +101,4 @@ def pagerank(
             # the bottleneck at high iteration counts
             # (plans/materialize.py; measured on the suffix array)
             ranks = materialize(ranks)
-    return ranks.select(F.col("node").alias(id_col), F.col("pr").alias("pagerank"))
+    return ranks.select(F.col("node").alias("doc_id"), F.col("pr").alias("pagerank"))

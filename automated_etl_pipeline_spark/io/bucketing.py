@@ -2,18 +2,15 @@
 
 Bucketing pre-shuffles a table ONCE at write time: rows are hash-
 partitioned into a fixed number of buckets by the join/aggregation
-key (and optionally sorted within buckets). Every later join or
-aggregation on that key then reads co-located data — the plan has no
-Exchange on the bucketed side(s), which at 100 TB converts the
-dominant repeated cost (shuffling the fact table per query) into a
-one-time write cost.
+key. Every later join or aggregation on that key then reads
+co-located data — the plan has no Exchange on the bucketed side(s),
+which at 100 TB converts the dominant repeated cost (shuffling the
+fact table per query) into a one-time write cost.
 
 Rules that make it work (asserted in tests/test_bucketing.py):
 - both sides bucketed by the join key with the SAME bucket count
   (or a multiple, with spark.sql.bucketing.coalesceBucketsInJoin);
-- bucket count sized so one bucket ≈ one healthy task (128-256 MB);
-- sortBy(join key) additionally removes the SortMergeJoin's sort when
-  each bucket is a single file (write with one task per bucket).
+- bucket count sized so one bucket ≈ one healthy task (128-256 MB).
 """
 
 from __future__ import annotations
@@ -28,16 +25,12 @@ def write_bucketed(
     table: str,
     bucket_cols: Sequence[str],
     n_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    format: str = "parquet",
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) table in
-    the session warehouse."""
-    writer = df.write.format(format).mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
+    """Persist ``df`` as a bucketed parquet table in the session
+    warehouse, replacing any table of that name."""
+    df.write.format("parquet").mode("overwrite").bucketBy(
+        n_buckets, *bucket_cols
+    ).saveAsTable(table)
 
 
 def read_table(spark: SparkSession, table: str) -> DataFrame:

@@ -1245,7 +1245,6 @@ def commit_add_files(
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
-    commit_ts: float | None = None,
 ) -> int:
     """Append PRE-STAGED parquet files (already written under
     ``root/data/<uuid>/...`` — invisible until a manifest names them,
@@ -1274,7 +1273,6 @@ def commit_add_files(
         root, run_id, files, new_stats, lambda cur, new: cur + new,
         schema_json=schema_json, new_bloom_refs=new_bloom_refs,
         bloom_bits=(bloom_bits if bloom_cols else None),
-        commit_ts=commit_ts,
     )
 
 
@@ -1405,11 +1403,8 @@ def commit_upsert(
     run_id: str,
     key_cols: list[str],
     record_changes: bool = False,
-    expected_base: int | None = None,
-    stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
-    commit_ts: float | None = None,
 ) -> int:
     """MERGE as ONE atomic commit (r15): ``df`` becomes the new state
     of its keys — rows with matching ``key_cols`` are replaced, new
@@ -1431,10 +1426,10 @@ def commit_upsert(
     victim rows so ``read_changes_cdf`` can serve the commit as
     delete+insert rows and the incremental MV (io/mv.py) folds the
     upsert instead of recomputing; conflict-checked against the
-    snapshot the victims were computed from.  ``stats_cols`` /
-    ``bloom_cols`` apply to the staged DATA files, so an upsert-fed
-    table keeps its zone maps and point-lookup sidecars.  Same run_id
-    idempotence and optimistic versioning as every commit kind.
+    snapshot the victims were computed from.  ``bloom_cols`` applies
+    to the staged DATA files, so an upsert-fed table keeps its
+    point-lookup sidecars.  Same run_id idempotence and optimistic
+    versioning as every commit kind.
 
     Contract notes: ``df`` should hold ONE row per key unless
     duplicate rows are intended (every df row is inserted; only
@@ -1464,11 +1459,11 @@ def commit_upsert(
         return v0  # retry of a committed run: nothing staged twice
     keys = df.select(*key_cols).distinct()
     removed_files: list[str] | None = None
+    expected_base = None
     if record_changes:
-        if expected_base is None:
-            expected_base = v0
-        if expected_base and manifest_files(root, expected_base):
-            victims = read_table(spark, root, version=expected_base).join(
+        expected_base = v0
+        if v0 and manifest_files(root, v0):
+            victims = read_table(spark, root, version=v0).join(
                 keys, list(key_cols), "left_semi"
             )
             removed_files = _stage(victims, root)
@@ -1477,7 +1472,7 @@ def commit_upsert(
     data_files = _stage(df, root)
     key_files = _stage(keys, root)
     new_stats, new_bloom_refs = _collect_file_metadata(
-        spark, data_files, stats_cols, bloom_cols, bloom_bits
+        spark, data_files, None, bloom_cols, bloom_bits
     )
     return _publish(
         root,
@@ -1491,7 +1486,6 @@ def commit_upsert(
         schema_json=df.schema.json(),
         new_bloom_refs=new_bloom_refs,
         bloom_bits=(bloom_bits if bloom_cols else None),
-        commit_ts=commit_ts,
         upsert_data_files=data_files,
     )
 
@@ -1505,7 +1499,6 @@ def commit_replace_files(
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
-    commit_ts: float | None = None,
 ) -> int:
     """Swap a SUBSET of live data files for ``df``'s staged files in
     one atomic commit — the ``rewrite_data_files`` primitive behind
@@ -1530,7 +1523,6 @@ def commit_replace_files(
         bloom_bits=bloom_bits,
         expected_base=expected_base,
         replace_subset=list(replaced),
-        commit_ts=commit_ts,
     )
 
 
@@ -1538,8 +1530,6 @@ def commit_rename(
     root: str,
     run_id: str,
     renames: dict[str, str],
-    commit_ts: float | None = None,
-    backend: CommitBackend | None = None,
 ) -> int:
     """Rename columns in a METADATA-ONLY commit (r15, VERDICT r14 ask
     #5): no data file is touched.  Stable column IDs make this
@@ -1567,15 +1557,11 @@ def commit_rename(
         [],
         {},
         lambda cur, new: cur,
-        backend=backend,
         rename_map=dict(renames),
-        commit_ts=commit_ts,
     )
 
 
-def resolve_as_of(
-    root: str, as_of_ts: float, backend: CommitBackend | None = None
-) -> int:
+def resolve_as_of(root: str, as_of_ts: float) -> int:
     """The newest committed version whose commit wall-time is <=
     ``as_of_ts`` (r15, VERDICT r14 ask #6) — Delta/Iceberg's
     TIMESTAMP AS OF resolution.  Scans manifests newest-first (a
@@ -1586,14 +1572,13 @@ def resolve_as_of(
       commit — either the table didn't exist yet, or vacuum expired
       the manifests that would have answered (an expired as-of must
       raise, never silently read newer — the retention contract)."""
-    b = backend or _LOCAL_BACKEND
-    newest = b.latest_version(root)
+    newest = current_version(root)
     if newest == 0:
         raise FileNotFoundError(f"no committed version under {root}")
     v = newest
     while v >= 1:
         try:
-            m = _read_manifest(root, v, backend=b)
+            m = _read_manifest(root, v)
         except FileNotFoundError:
             raise ValueError(
                 f"as_of_ts={as_of_ts} falls below the retention window "
@@ -1638,7 +1623,6 @@ def compact_small_files(
     run_id: str,
     max_bytes: int,
     target_files: int = 1,
-    stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = BLOOM_BITS_DEFAULT,
 ) -> tuple[int, int]:
@@ -1648,11 +1632,10 @@ def compact_small_files(
     commit.  Returns (version, n_compacted); (current, 0) when fewer
     than two qualify.  At 100 TB this runs as a scheduled background
     job per partition — the anti-entropy loop every streaming-ingest
-    table needs, here in one call.  Pass the table's ``stats_cols`` /
-    ``bloom_cols`` so the compacted files keep their zone maps and
-    point-lookup sidecars — compaction that silently drops pruning
-    metadata would make every later point lookup scan the merged
-    file."""
+    table needs, here in one call.  Pass the table's ``bloom_cols`` so
+    the compacted files keep their point-lookup sidecars — compaction
+    that silently drops pruning metadata would make every later point
+    lookup scan the merged file."""
     base = current_version(root)
     if base == 0:
         return 0, 0
@@ -1672,17 +1655,16 @@ def compact_small_files(
         run_id,
         small,
         expected_base=base,
-        stats_cols=stats_cols,
         bloom_cols=bloom_cols,
         bloom_bits=bloom_bits,
     )
     return v, len(small)
 
 
-def table_schema(root: str, version: int | None = None):
-    """The snapshot's recorded (evolved) table schema as a StructType,
-    or None for a table published without one."""
-    v = current_version(root) if version is None else version
+def table_schema(root: str):
+    """The current snapshot's recorded (evolved) table schema as a
+    StructType, or None for a table published without one."""
+    v = current_version(root)
     if v == 0:
         return None
     return _schema_of(_resolve_state(root, v))
@@ -1697,10 +1679,10 @@ def manifest_files(root: str, version: int | None = None) -> list[str]:
     return list(_resolve_state(root, v)["files"])
 
 
-def manifest_delete_files(root: str, version: int | None = None) -> list[dict]:
-    """The live delete-key entries of a snapshot (``{path, cols,
-    at}`` dicts) — empty once a rewrite has materialized them."""
-    v = current_version(root) if version is None else version
+def manifest_delete_files(root: str) -> list[dict]:
+    """The live delete-key entries of the current snapshot (``{path,
+    cols, at}`` dicts) — empty once a rewrite has materialized them."""
+    v = current_version(root)
     if v == 0:
         return []
     return list(_resolve_state(root, v)["deletes"])
@@ -1882,7 +1864,6 @@ def read_table_pruned(
     *,
     predicates: dict[str, tuple] | None = None,
     eq: dict[str, object] | None = None,
-    version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Zone-map file skipping: read only the files whose recorded
     [min, max] intersects the given range on EVERY predicate column
@@ -1924,7 +1905,7 @@ def read_table_pruned(
             # intersect [min(vals), max(vals)] — exact for a single
             # value, conservative for an IN-list
             predicates.setdefault(c, (min(vals), max(vals)))
-    v = current_version(root) if version is None else version
+    v = current_version(root)
     if v == 0:
         raise FileNotFoundError(f"no committed version under {root}")
     m = _resolve_state(root, v)

@@ -166,14 +166,15 @@ class IncrementalAggView:
 
     # ---- refresh --------------------------------------------------------
 
-    def refresh(self, spark: SparkSession, max_retries: int = 3) -> dict:
+    def refresh(self, spark: SparkSession) -> dict:
         """Bring the MV up to the source's current version.  Returns
         ``{"mode": "noop"|"incremental"|"full", "from": ..., "to":
         ..., "mv_version": ...}``.  A concurrent refresher winning the
         MV commit race surfaces as ``CommitConflictError``; the loop
-        re-reads the new watermark and retries (the winner may already
-        have covered our range, turning this attempt into a noop)."""
-        for _ in range(max_retries):
+        re-reads the new watermark and retries, three times before a last
+        unguarded attempt (the winner may already have covered our
+        range, turning this attempt into a noop)."""
+        for _ in range(3):
             try:
                 return self._refresh_once(spark)
             except CommitConflictError:

@@ -46,15 +46,13 @@ def validate_not_null(df: DataFrame, columns: Sequence[str] | None = None) -> Da
 def write_csv(
     df: DataFrame,
     path: str,
-    header: bool = True,
     num_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """S4 — CSV sink. ``num_files=1`` reproduces the reference's
-    single-file output (spark_etl_job.py:88-94); default leaves
-    partitioning to AQE coalescing."""
+    """S4 — CSV sink with a header row. ``num_files=1`` reproduces the
+    reference's single-file output (spark_etl_job.py:88-94); default
+    leaves partitioning to AQE coalescing."""
     out = df.coalesce(num_files) if num_files else df
-    out.write.mode(mode).option("header", header).csv(path)
+    out.write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_parquet_append(
@@ -62,7 +60,6 @@ def write_parquet_append(
     path: str,
     required: Sequence[str] | None = None,
     run_id: str | None = None,
-    partition_by: Sequence[str] | None = None,
 ) -> None:
     """S5 — validated append load.
 
@@ -73,16 +70,13 @@ def write_parquet_append(
     """
     if required:
         validate_not_null(df, required)
-    writer = df.write
     if run_id is not None:
         df = df.withColumn("run_id", F.lit(run_id))
         writer = (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*(["run_id", *list(partition_by or [])]))
+            .partitionBy("run_id")
         )
     else:
         writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

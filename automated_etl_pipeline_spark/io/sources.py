@@ -27,8 +27,6 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    header: bool = True,
-    date_format: str | None = None,
     mode: str = "FAILFAST",
     **options: str,
 ) -> DataFrame:
@@ -39,9 +37,7 @@ def read_csv(
     reference's lenient Spark-side read (it deferred strictness to the
     BigQuery load).
     """
-    reader = spark.read.schema(schema).option("header", header).option("mode", mode)
-    if date_format:
-        reader = reader.option("dateFormat", date_format)
+    reader = spark.read.schema(schema).option("header", True).option("mode", mode)
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.csv(path)
@@ -76,7 +72,7 @@ def ntz_epoch_us_sql(col: str) -> str:
     )
 
 
-def _normalize_nanos(df: DataFrame, ts_cols: Sequence[str] = ("ts",)) -> DataFrame:
+def _normalize_nanos(df: DataFrame) -> DataFrame:
     """Normalize every physical timestamp encoding the testdata has
     shipped to ONE canonical Spark ``TIMESTAMP`` type, so no consumer
     (queries, streaming, tests) ever branches on the scan type.
@@ -112,15 +108,13 @@ def _normalize_nanos(df: DataFrame, ts_cols: Sequence[str] = ("ts",)) -> DataFra
     """
     from pyspark.sql import types as T
 
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    for c in ts_cols:
-        dt = fields.get(c)
-        if isinstance(dt, T.LongType):
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-        elif isinstance(dt, T.TimestampNTZType):
-            df = df.withColumn(
-                c, F.expr(f"timestamp_micros({ntz_epoch_us_sql(c)})")
-            )
+    dt = {f.name: f.dataType for f in df.schema.fields}.get("ts")
+    if isinstance(dt, T.LongType):
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if isinstance(dt, T.TimestampNTZType):
+        return df.withColumn(
+            "ts", F.expr(f"timestamp_micros({ntz_epoch_us_sql('ts')})")
+        )
     return df
 
 

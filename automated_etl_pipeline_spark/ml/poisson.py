@@ -71,11 +71,10 @@ def fit_poisson_rates(
     categorical_cols: list[str],
     label_col: str,
     weight_col: str | None = None,
-    reg_param: float = 1e-8,
 ) -> PoissonRates:
     """Fit E[label | categoricals] with a log-link Poisson GLM.
 
-    ``reg_param`` defaults to a 1e-8 ridge floor: the one-hot design
+    ``regParam`` is a 1e-8 ridge floor: the one-hot design
     over (team, opponent) is saturated (columns sum to the intercept),
     so at 0.0 the normal-equations Cholesky factorization hits a
     singular covariance matrix and IRLS falls back to Quasi-Newton with
@@ -98,7 +97,7 @@ def fit_poisson_rates(
         link="log",
         labelCol=label_col,
         featuresCol="features",
-        regParam=reg_param,
+        regParam=1e-8,
     )
     if weight_col:
         glr = glr.setWeightCol(weight_col)
@@ -107,9 +106,7 @@ def fit_poisson_rates(
     return PoissonRates(model=model, label_col=label_col)
 
 
-def team_strength_training_frame(
-    matches: DataFrame, anchor_year: int = 2019
-) -> DataFrame:
+def team_strength_training_frame(matches: DataFrame) -> DataFrame:
     """The reference's model-data construction (ml_project.py:191-205):
     weight from tournament name + recency, then the home/away unpivot
     into (team, opponent, goals, weight) rows.
@@ -122,7 +119,7 @@ def team_strength_training_frame(
     w = F.when(
         F.col("tournament").contains("Cup") | F.col("tournament").contains("Euro"), 1
     ).otherwise(100)
-    age = F.greatest(F.lit(1), F.lit(anchor_year) - F.year(F.col("date")))
+    age = F.greatest(F.lit(1), F.lit(2019) - F.year(F.col("date")))
     recency = F.lit(1.0) / (age.cast("double") * w.cast("double"))
     base = matches.withColumn("weight", recency)
     home = base.select(

@@ -64,8 +64,6 @@ PINNED_TAU_LOGIT_E6 = -200671
 
 def raw_text_counts(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(doc_id, n_tok, n_chars, n_distinct, *extra_cols): the INTEGER
@@ -85,12 +83,12 @@ def raw_text_counts(
     to inline, so the two-stage shape runs the split once — half the
     per-row string work on the 100 TB scoring path."""
     toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " "), lambda t: t != ""
+        F.split(F.coalesce(F.col("text"), F.lit("")), " "), lambda t: t != ""
     )
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         toks.alias("__toks"),
-        F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("long").alias(
+        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("long").alias(
             "n_chars"
         ),
         *[F.col(c) for c in extra_cols],
@@ -103,9 +101,7 @@ def raw_text_counts(
     )
 
 
-def pinned_logit_columns(
-    coef_e6: dict[str, int] | None = None, tau_logit_e6: int | None = None
-) -> tuple[F.Column, F.Column]:
+def pinned_logit_columns() -> tuple[F.Column, F.Column]:
     """(z_scaled, keep) over a raw_text_counts frame, EXACT in int64.
 
     The logit decision z >= logit(tau) is multiplied through by
@@ -120,10 +116,9 @@ def pinned_logit_columns(
     two bounded longs and small literals — int64-exact for docs up to
     ~10^6 tokens/chars, engine-independent (the r9 integer-space
     rule)."""
-    c = coef_e6 or PINNED_COEF_E6
-    tau = PINNED_TAU_LOGIT_E6 if tau_logit_e6 is None else tau_logit_e6
+    c = PINNED_COEF_E6
     z = (
-        F.lit(c["intercept"] - tau) * F.col("n_tok")
+        F.lit(c["intercept"] - PINNED_TAU_LOGIT_E6) * F.col("n_tok")
         + F.lit(c["n_tokens"]) * F.col("n_tok") * F.col("n_tok")
         + F.lit(c["n_chars"]) * F.col("n_chars") * F.col("n_tok")
         + F.lit(c["distinct_ratio"]) * F.col("n_distinct")
@@ -133,19 +128,17 @@ def pinned_logit_columns(
     return z, keep
 
 
-def text_feature_frame(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def text_feature_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_chars, distinct_ratio, avg_word_len):
     quality features as pure column algebra over one scan.  NULL text
     behaves as empty (zero counts, ratios 0)."""
     toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " "), lambda t: t != ""
+        F.split(F.coalesce(F.col("text"), F.lit("")), " "), lambda t: t != ""
     )
     n_tok = F.size(toks)
-    n_chars = F.length(F.coalesce(F.col(text_col), F.lit("")))
+    n_chars = F.length(F.coalesce(F.col("text"), F.lit("")))
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         n_tok.cast("double").alias("n_tokens"),
         n_chars.cast("double").alias("n_chars"),
         F.when(
@@ -163,10 +156,11 @@ def text_feature_frame(
 class QualityModel:
     model: PipelineModel
 
-    def score(self, features: DataFrame, out_col: str = "p_quality") -> DataFrame:
-        """Append the model's quality probability to a feature frame."""
+    def score(self, features: DataFrame) -> DataFrame:
+        """Append the model's quality probability ``p_quality`` to a
+        feature frame."""
         return self.model.transform(features).withColumnRenamed(
-            "prediction", out_col
+            "prediction", "p_quality"
         )
 
 
@@ -174,7 +168,6 @@ def fit_quality_classifier(
     train: DataFrame,
     label_col: str,
     feature_cols: list[str] | None = None,
-    reg_param: float = 1e-6,
 ) -> QualityModel:
     """Fit P(label | features) with a logit-link binomial GLM
     (distributed IRLS; ridge floor per ml/poisson.py's conditioning
@@ -187,7 +180,7 @@ def fit_quality_classifier(
             link="logit",
             labelCol=label_col,
             featuresCol="features",
-            regParam=reg_param,
+            regParam=1e-6,
         ),
     ]
     return QualityModel(model=MlPipeline(stages=stages).fit(train))

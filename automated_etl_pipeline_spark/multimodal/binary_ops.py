@@ -247,10 +247,10 @@ class arrow_batch_size:
             self.spark.conf.set(_ARROW_BATCH_CONF, self.prev)
 
 
-def attach_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def attach_metadata(df: DataFrame) -> DataFrame:
     """Derive/refresh the typed metadata columns from the payload —
     pure JVM expressions (length, crc), no Python."""
-    return df.withColumn("n_bytes", F.length(F.col(payload_col)).cast("long"))
+    return df.withColumn("n_bytes", F.length(F.col("payload")).cast("long"))
 
 
 def extract_image_features(
@@ -425,13 +425,12 @@ def resize_images(
     width: int,
     height: int,
     deterministic_fake: bool = False,
-    batch_size: int = 16,
 ) -> DataFrame:
     """Image resize — binary in, binary out (the map shape every
     payload-rewriting op shares: decode → transform → re-encode)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _rechunk(batches, batch_size):
+        for pdf in _rechunk(batches, 16):
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

@@ -42,7 +42,7 @@ def multi_format_date(
     return F.coalesce(*[F.try_to_date(c, f) for f in formats])
 
 
-def nan_to_null(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
+def nan_to_null(df: DataFrame) -> DataFrame:
     """F2 — NaN → NULL for floating columns (spark_etl_job.py:52-55).
 
     Single ``select`` (one Project node) instead of the reference's
@@ -54,10 +54,9 @@ def nan_to_null(df: DataFrame, columns: Sequence[str] | None = None) -> DataFram
         for f in df.schema.fields
         if isinstance(f.dataType, (T.DoubleType, T.FloatType))
     }
-    targets = set(columns) if columns is not None else numeric
     exprs = [
         F.when(F.isnan(c), None).otherwise(F.col(c)).alias(c)
-        if c in targets and c in numeric
+        if c in numeric
         else F.col(c)
         for c in df.columns
     ]

@@ -43,14 +43,13 @@ def bucketed_prefix_sum(
     tiebreak_col: str,
     x_col: str,
     bucket_us: int,
-    out_col: str = "prefix",
 ) -> DataFrame:
-    """Append ``out_col``: the running sum of ``x_col`` within
+    """Append ``prefix``: the running sum of ``x_col`` within
     ``key_col`` under the total order (``order_us_col``,
     ``tiebreak_col``) — ROWS UNBOUNDED PRECEDING semantics — computed
     in two phases so no task ever holds more than one ``bucket_us``
     slice of one key's series."""
-    reserved = {"__b", "__ob", "__ok", "__off", "__bt", out_col}
+    reserved = {"__b", "__ob", "__ok", "__off", "__bt", "prefix"}
     clash = reserved & set(df.columns)
     if clash:
         raise ValueError(
@@ -86,6 +85,6 @@ def bucketed_prefix_sum(
             rows[key_col].eqNullSafe(F.col("__ok"))
             & F.col("__b").eqNullSafe(F.col("__ob")),
         )
-        .withColumn(out_col, F.col("__off") + F.sum(x_col).over(w_in))
+        .withColumn("prefix", F.col("__off") + F.sum(x_col).over(w_in))
         .drop("__b", "__ob", "__ok", "__off")
     )

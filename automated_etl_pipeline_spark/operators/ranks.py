@@ -106,15 +106,10 @@ def linspace_cuts(
     return out if many else out[targets[0]]
 
 
-def quantile_cuts(
-    df: DataFrame,
-    col: str,
-    n_buckets: int,
-    relative_error: float = 0.001,
-) -> list[float]:
+def quantile_cuts(df: DataFrame, col: str, n_buckets: int) -> list[float]:
     """Skew-aware cutpoints for ``order_bucket``: sampled quantiles of
     the column (Greenwald-Khanna sketch via ``approxQuantile`` — one
-    pass, driver state bounded by 1/relative_error, never a collect of
+    pass, driver state bounded by 1/0.001 relative error, never a collect of
     data rows).  Under a Zipf-distributed key, linspace cuts collapse
     nearly all rows into the 1-2 buckets covering the head — a
     single-task window wearing a partitionBy disguise (r13 VERDICT ask
@@ -131,7 +126,7 @@ def quantile_cuts(
     qs = (
         df.select(F.col(col).cast("double").alias("__q"))
         .na.drop()
-        .stat.approxQuantile("__q", probs, relative_error)
+        .stat.approxQuantile("__q", probs, 0.001)
     )
     out: list[float] = []
     for q in qs:

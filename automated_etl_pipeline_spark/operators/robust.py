@@ -208,27 +208,21 @@ def mad_filter(
     value_col: str,
     group_cols: list[str],
     z_cut: float = 3.0,
-    approx: bool = False,
 ) -> DataFrame:
     """Drop rows whose robust z exceeds ``z_cut`` within their group.
 
-    Same plan as :func:`robust_group_stats` minus the final aggregate:
-    the thresholds (one row per group) broadcast back onto the fact
+    Same plan as the exact path of :func:`robust_group_stats` minus the
+    final aggregate: the thresholds (one row per group) broadcast back onto the fact
     table and the filter is a codegen'd expression — the fact table is
     scanned, never shuffled on the group key.
     """
     x = F.col(value_col).cast("double")
-    pctl = (
-        (lambda c: F.approx_percentile(c, F.lit(0.5), F.lit(10000)))
-        if approx
-        else (lambda c: F.percentile(c, F.lit(0.5)))
-    )
-    med = df.groupBy(*group_cols).agg(pctl(x).alias("__med"))
+    med = df.groupBy(*group_cols).agg(F.percentile(x, F.lit(0.5)).alias("__med"))
     with_med = df.join(F.broadcast(med), group_cols)
     mad = (
         with_med.withColumn("__adev", F.abs(x - F.col("__med")))
         .groupBy(*group_cols)
-        .agg(pctl(F.col("__adev")).alias("__mad"))
+        .agg(F.percentile(F.col("__adev"), F.lit(0.5)).alias("__mad"))
     )
     # x.isNull() keeps NULL-valued rows uniformly: without it a NULL
     # comparison is false in where(), so NULL rows would be dropped in

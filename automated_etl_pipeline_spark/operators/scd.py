@@ -39,7 +39,6 @@ def scd2_history(
     attr_cols: Sequence[str],
     ts_col: str,
     tiebreak: str,
-    version_col: str = "version",
 ) -> DataFrame:
     """Collapse a change stream into SCD-2 rows.
 
@@ -76,7 +75,7 @@ def scd2_history(
     return agg.select(
         *key_cols,
         *attr_cols,
-        F.col("__run").alias(version_col),
+        F.col("__run").alias("version"),
         "valid_from",
         F.lead("valid_from").over(w2).alias("valid_to"),
         "n_updates",
@@ -94,7 +93,6 @@ def scd2_history_chunked(
     attr_cols: Sequence[str],
     ts_col: str,
     tiebreak: str,
-    version_col: str = "version",
     num_chunks: int | None = None,
 ) -> DataFrame:
     """``scd2_history`` for PATHOLOGICAL keys — identical output, but no
@@ -241,7 +239,7 @@ def scd2_history_chunked(
     return agg.select(
         *key_cols,
         *attr_cols,
-        F.col("__grun").alias(version_col),
+        F.col("__grun").alias("version"),
         "valid_from",
         F.lead("valid_from").over(w2).alias("valid_to"),
         "n_updates",

@@ -26,20 +26,16 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: str,
-    how: str = "inner",
     salt: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
-    """Join ``big`` (skewed on ``on``) with ``small``, spreading every
-    key over ``salt`` shuffle partitions. Result equals
-    ``big.join(small, on, how)`` for inner/left joins."""
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError("salted_join supports inner/left joins")
-    b = big.withColumn("__salt", (F.rand(seed) * salt).cast("int"))
+    """Inner-join ``big`` (skewed on ``on``) with ``small``, spreading
+    every key over ``salt`` shuffle partitions. Result equals
+    ``big.join(small, on, "inner")``."""
+    b = big.withColumn("__salt", (F.rand(42) * salt).cast("int"))
     s = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
-    return b.join(s, [on, "__salt"], how).drop("__salt")
+    return b.join(s, [on, "__salt"], "inner").drop("__salt")
 
 
 def hot_keys(df: DataFrame, on: str, min_count: int) -> DataFrame:
@@ -59,7 +55,6 @@ def salted_join_hybrid(
     on: str,
     salt: int = 8,
     hot_min_count: int = 1_000_000,
-    seed: int = 42,
 ) -> DataFrame:
     """Hybrid skew join: salt only the hot keys, join the long tail
     normally, union the results. The hot-key set is broadcast to split
@@ -69,5 +64,5 @@ def salted_join_hybrid(
     big_cold = big.join(hot, on, "left_anti")
     small_hot = small.join(hot, on, "left_semi")
     cold = big_cold.join(small, on, "inner")
-    hot_joined = salted_join(big_hot, small_hot, on, "inner", salt, seed)
+    hot_joined = salted_join(big_hot, small_hot, on, salt)
     return cold.unionByName(hot_joined)

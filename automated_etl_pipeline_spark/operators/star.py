@@ -23,7 +23,7 @@ fact costs N broadcast-hash-join map-side passes, no fact shuffle.
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,7 +36,6 @@ class DimSpec:
     name: str
     natural_cols: Sequence[str]
     key_col: str
-    extra_cols: Sequence[str] = field(default_factory=tuple)
 
 
 def build_dim(df: DataFrame, spec: DimSpec, key_mode: str = "dense") -> DataFrame:
@@ -134,13 +133,11 @@ def build_star(
 
 
 def join_star(
-    fact: DataFrame,
-    dims: Mapping[str, tuple[DataFrame, str]],
-    how: str = "inner",
+    fact: DataFrame, dims: Mapping[str, tuple[DataFrame, str]]
 ) -> DataFrame:
     """J1/J2 — make the star queryable: fact ⋈ each (dim, key) with the
     dim broadcast (README.md:10 'The schema for the output is Star')."""
     df = fact
     for _, (dim, key) in dims.items():
-        df = df.join(F.broadcast(dim), on=key, how=how)
+        df = df.join(F.broadcast(dim), on=key)
     return df

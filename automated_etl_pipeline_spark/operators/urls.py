@@ -15,7 +15,7 @@ boundary anywhere (plan-asserted in tests/test_urls.py):
 - Host extraction is ``parse_url(url, 'HOST')`` (Spark's built-in,
   codegen'd).
 - Public-suffix matching is an EQUI join, not a LIKE scan: each host
-  emits its last 1..max_labels label-suffixes as candidates (a
+  emits its last 1..4 label-suffixes as candidates (a
   bounded <= 4x explode), candidates hash-join the broadcast suffix
   table, and the longest hit wins via max_by.  The real public-suffix
   list is ~10k rules — a per-row scan of it (the naive
@@ -38,11 +38,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def extract_host(df: DataFrame, url_col: str = "url", out_col: str = "host") -> DataFrame:
+def extract_host(df: DataFrame) -> DataFrame:
     """Lower-cased hostname via the built-in ``parse_url(url, 'HOST')``
     (invalid URLs yield NULL, matching java.net.URI semantics)."""
     return df.withColumn(
-        out_col, F.lower(F.parse_url(F.col(url_col), F.lit("HOST")))
+        "host", F.lower(F.parse_url(F.col("url"), F.lit("HOST")))
     )
 
 
@@ -50,11 +50,8 @@ def registrable_domain(
     df: DataFrame,
     suffixes: DataFrame,
     id_col: str,
-    host_col: str = "host",
-    out_col: str = "domain",
-    max_labels: int = 4,
 ) -> DataFrame:
-    """Append ``out_col``: the registrable domain of ``host_col`` under
+    """Append ``domain``: the registrable domain of ``host`` under
     the public-suffix table ``suffixes`` (single column ``suffix``,
     lower-case, no leading dot).
 
@@ -65,21 +62,21 @@ def registrable_domain(
     unknown TLD — the caller decides whether to keep such rows) or IS
     a bare public suffix (nothing registrable).
 
-    max_labels bounds the candidate explode; the PSL's longest rules
+    The candidate explode stops at 4 labels: the PSL's longest rules
     are 4 labels, so 4 loses nothing.  ``suffixes`` must be loss-
     lessly broadcastable (the full PSL is ~10k rows — trivially so).
     """
-    labels = F.split(F.col(host_col), r"\.")
+    labels = F.split(F.col("host"), r"\.")
     n = F.size(labels)
     cands = F.transform(
-        F.sequence(F.lit(1), F.least(F.lit(max_labels), n)),
+        F.sequence(F.lit(1), F.least(F.lit(4), n)),
         lambda m: F.concat_ws(".", F.slice(labels, n - m + 1, m)),
     )
     # NULL hosts (unparseable URLs) would make sequence() step backward
     # (size = -1); they can't match anyway, so keep them out of the
     # candidate explode entirely
-    ex = df.filter(F.col(host_col).isNotNull()).select(
-        id_col, host_col, F.explode(cands).alias("__cand")
+    ex = df.filter(F.col("host").isNotNull()).select(
+        id_col, "host", F.explode(cands).alias("__cand")
     )
     m = F.size(F.split(F.col("suffix"), r"\."))
     best = (
@@ -87,36 +84,31 @@ def registrable_domain(
         .groupBy(id_col)
         .agg(F.max_by("suffix", m).alias("__sfx"))
     )
-    n2 = F.size(F.split(F.col(host_col), r"\."))
+    n2 = F.size(F.split(F.col("host"), r"\."))
     m2 = F.size(F.split(F.col("__sfx"), r"\."))
     dom = F.when(
         F.col("__sfx").isNotNull() & (n2 > m2),
         F.concat_ws(
             ".",
-            F.slice(F.split(F.col(host_col), r"\."), n2 - m2, m2 + 1),
+            F.slice(F.split(F.col("host"), r"\."), n2 - m2, m2 + 1),
         ),
     )
     return (
         df.join(best, id_col, "left")
-        .withColumn(out_col, dom)
+        .withColumn("domain", dom)
         .drop("__sfx")
     )
 
 
-def domain_cap(
-    df: DataFrame,
-    cap: int,
-    domain_col: str = "domain",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def domain_cap(df: DataFrame, cap: int) -> DataFrame:
     """Keep at most ``cap`` docs per domain, deterministically (md5 of
     the id orders survivors — re-runs and late shards agree, no RNG).
     Rank-then-filter → Spark's WindowGroupLimit rewrite: each map task
     keeps its local top-``cap`` per domain BEFORE the shuffle, so a
     billion-doc crawl domain moves cap x partitions rows, not a
     billion, through the exchange."""
-    w = Window.partitionBy(domain_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), id_col
+    w = Window.partitionBy("domain").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -125,31 +117,19 @@ def domain_cap(
     )
 
 
-def domain_quality_prior(
-    df: DataFrame,
-    domain_col: str = "domain",
-    quality_col: str = "quality",
-    prior_col: str = "domain_prior",
-) -> DataFrame:
+def domain_quality_prior(df: DataFrame) -> DataFrame:
     """(domain, domain_prior): micro-averaged quality per domain — the
     ratio of DECIMAL sums, exact and order-independent (the oracle-
     determinism recipe from queries.py), never an AVG over doubles."""
-    return df.groupBy(domain_col).agg(
+    return df.groupBy("domain").agg(
         (
-            F.sum(F.col(quality_col).cast("decimal(18,6)")).cast("double")
+            F.sum(F.col("quality").cast("decimal(18,6)")).cast("double")
             / F.count(F.lit(1))
-        ).alias(prior_col)
+        ).alias("domain_prior")
     )
 
 
-def apply_domain_prior(
-    df: DataFrame,
-    priors: DataFrame,
-    domain_col: str = "domain",
-    quality_col: str = "quality",
-    prior_col: str = "domain_prior",
-    out_col: str = "prior_weighted_quality",
-) -> DataFrame:
+def apply_domain_prior(df: DataFrame, priors: DataFrame) -> DataFrame:
     """Join the domain prior back (broadcast — domains are the reduced
     grain) and blend: doc quality x its domain's prior.  Docs with no
     domain (unknown TLD) keep their raw quality (prior defaults 1).
@@ -159,13 +139,13 @@ def apply_domain_prior(
     landing on a decimal half-boundary (observed: 0.0770355) rounds
     differently in Spark (HALF_UP over the binary double, which sits a
     hair BELOW the boundary) and DuckDB."""
-    blended: Column = F.col(quality_col) * F.coalesce(
-        F.col(prior_col), F.lit(1.0)
+    blended: Column = F.col("quality") * F.coalesce(
+        F.col("domain_prior"), F.lit(1.0)
     )
     return (
-        df.join(F.broadcast(priors), domain_col, "left")
-        .withColumn(out_col, blended)
-        .drop(prior_col)
+        df.join(F.broadcast(priors), "domain", "left")
+        .withColumn("prior_weighted_quality", blended)
+        .drop("domain_prior")
     )
 
 
@@ -174,11 +154,9 @@ def apply_domain_prior(
 TRACKING_PARAM_RE = r"^(utm_[^=]*|gclid|fbclid|msclkid|mc_cid|mc_eid|ref)="
 
 
-def canonicalize_url(
-    df: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
-) -> DataFrame:
-    """Append ``out_col``: the crawl-identity canonical form of
-    ``url_col``.  Two URLs that fetch the same page must canonicalize
+def canonicalize_url(df: DataFrame) -> DataFrame:
+    """Append ``canonical_url``: the crawl-identity canonical form of
+    ``url``.  Two URLs that fetch the same page must canonicalize
     equal; this is the key the web-dedup stage groups on (a crawler
     that skips it re-crawls and re-trains on every utm_source variant
     of every page).
@@ -195,7 +173,7 @@ def canonicalize_url(
     NULL-host rows (unparseable URLs) canonicalize to NULL: they have
     no fetch identity and the dedup stage must not collapse them.
     """
-    url = F.col(url_col)
+    url = F.col("url")
     scheme = F.lower(F.try_parse_url(url, F.lit("PROTOCOL")))
     # strip userinfo (user:pass@) from the authority BEFORE the port
     # strip, matching parse_url HOST semantics — credentials are not
@@ -236,15 +214,10 @@ def canonicalize_url(
             ),
         ),
     )
-    return df.withColumn(out_col, canon)
+    return df.withColumn("canonical_url", canon)
 
 
-def canonical_url_dedup(
-    df: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    quality_col: str = "quality",
-) -> DataFrame:
+def canonical_url_dedup(df: DataFrame) -> DataFrame:
     """Keep the best-quality row per canonical URL (ties broken by
     lowest id — deterministic across re-runs and shard orders).
     Rank-then-filter over the canonical key → Spark's WindowGroupLimit
@@ -252,9 +225,9 @@ def canonical_url_dedup(
     a million tracking-param variants ships partitions x 1 rows, not a
     million, through the exchange.  NULL canonical keys (unparseable
     URLs) are all kept — they carry no fetch identity."""
-    with_canon = canonicalize_url(df, url_col)
+    with_canon = canonicalize_url(df)
     w = Window.partitionBy("canonical_url").orderBy(
-        F.desc(quality_col), F.col(id_col)
+        F.desc("quality"), F.col("doc_id")
     )
     ranked = with_canon.withColumn("__rk", F.row_number().over(w))
     return ranked.filter(

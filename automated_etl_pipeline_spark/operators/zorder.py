@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 DEFAULT_BITS = 8
 # approxQuantile relative error: at 1e-3 the cutpoint rank is within
 # 0.1% of exact — far finer than the 1/256 bucket width it feeds.
-DEFAULT_EPS = 1e-3
+APPROX_EPS = 1e-3
 
 
 def interleave2(a: Column, b: Column, bits: int = DEFAULT_BITS) -> Column:
@@ -71,15 +71,13 @@ def _bucket_tree(col: Column, cuts: Sequence[float], lo: int, hi: int) -> Column
     )
 
 
-def quantile_bucket(
-    df: DataFrame, col: str, bits: int = DEFAULT_BITS, eps: float = DEFAULT_EPS
-) -> Column:
+def quantile_bucket(df: DataFrame, col: str, bits: int = DEFAULT_BITS) -> Column:
     """Scale-safe quantile bucketing: 2^bits-1 approxQuantile cutpoints
     (driver-size, effectively broadcast as literals) + per-row binary
     search.  NULLs land in bucket 0."""
     n = 1 << bits
     probs = [i / n for i in range(1, n)]
-    cuts = df.stat.approxQuantile(col, probs, eps)
+    cuts = df.stat.approxQuantile(col, probs, APPROX_EPS)
     c = F.col(col)
     return F.when(c.isNull(), F.lit(0)).otherwise(
         _bucket_tree(c, cuts, 0, n - 1).cast("long")
@@ -91,9 +89,7 @@ def with_zvalue(
     cols: Sequence[str],
     tiebreak: str,
     bits: int = DEFAULT_BITS,
-    out_col: str = "zvalue",
     exact: bool = False,
-    eps: float = DEFAULT_EPS,
 ) -> DataFrame:
     """Adds the z-value of two columns' 2^bits quantile-bucket ranks.
 
@@ -113,9 +109,9 @@ def with_zvalue(
         raise ValueError(f"bits must be in [1, 31] (got {bits})")
     n = 1 << bits
     if exact:
-        return _exact_zvalue(df, cols, tiebreak, bits, out_col)
-    ranks = [quantile_bucket(df, c, bits, eps) for c in cols]
-    return df.withColumn(out_col, interleave2(ranks[0], ranks[1], bits))
+        return _exact_zvalue(df, cols, tiebreak, bits)
+    ranks = [quantile_bucket(df, c, bits) for c in cols]
+    return df.withColumn("zvalue", interleave2(ranks[0], ranks[1], bits))
 
 
 def _exact_zvalue(
@@ -123,7 +119,6 @@ def _exact_zvalue(
     cols: Sequence[str],
     tiebreak: str,
     bits: int,
-    out_col: str,
 ) -> DataFrame:
     """Exact balanced z-buckets, fused two-phase form (r13): BOTH
     columns' exact global ranks from ONE base scan — shared
@@ -181,6 +176,6 @@ def _exact_zvalue(
         F.expr(f"__zr{i} * {n} div {total}").cast("long") for i in range(2)
     ]
     return ranked.withColumn(
-        out_col, interleave2(ranks[0], ranks[1], bits)
+        "zvalue", interleave2(ranks[0], ranks[1], bits)
     ).drop("__b0", "__b1", "__b0_off", "__b1_off", "__zr0", "__zr1")
 

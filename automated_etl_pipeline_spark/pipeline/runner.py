@@ -8,7 +8,9 @@ TriggerRule.ALL_DONE at :246). In a Spark-native engine the session is
 both compute and warehouse, so the equivalent is an in-process stage
 graph with:
 
-- O1: ordered stages with per-stage retry (count + delay);
+- O1: ordered stages with per-stage retry count (a failed stage is
+  retried at once: the reference's 5-minute delay waits out a remote
+  cluster, which an in-process stage does not have);
 - O3: stages as callables receiving (spark, context-dict);
 - O4: fan-out groups — independent stages run concurrently on one
   SparkSession via the JVM scheduler (Spark jobs from multiple
@@ -28,13 +30,15 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+# Threads per fan-out group: the reference's 4 parallel BigQuery loads.
+MAX_PARALLEL = 4
+
 
 @dataclass
 class Stage:
     name: str
     fn: Callable[[SparkSession, dict], object]
     retries: int = 1  # spark-bq-dag.py:32 ('retries': 1)
-    retry_delay_sec: float = 0.0  # reference uses 5 min; configurable
     always_run: bool = False  # TriggerRule.ALL_DONE semantics
 
 
@@ -54,7 +58,6 @@ class Pipeline:
     of Stages (fan-out group, run concurrently)."""
 
     stages: Sequence[Stage | Sequence[Stage]]
-    max_parallel: int = 4
     run_id: str | None = None
     results: list[StageResult] = field(default_factory=list)
 
@@ -67,15 +70,12 @@ class Pipeline:
                 return StageResult(st.name, True, attempt, time.time() - t0, None, value)
             except Exception as e:  # noqa: BLE001
                 last_err = f"{type(e).__name__}: {e}"
-                if attempt <= st.retries and st.retry_delay_sec:
-                    time.sleep(st.retry_delay_sec)
         return StageResult(st.name, False, st.retries + 1, time.time() - t0, last_err)
 
-    def run(self, spark: SparkSession, context: dict | None = None) -> list[StageResult]:
+    def run(self, spark: SparkSession) -> list[StageResult]:
         """Execute; raises RuntimeError at the end if any non-always_run
         stage failed, after always_run stages have executed (ALL_DONE)."""
-        ctx = dict(context or {})
-        ctx.setdefault("run_id", self.run_id or uuid.uuid4().hex[:12])
+        ctx = {"run_id": self.run_id or uuid.uuid4().hex[:12]}
         self.results = []
         failed = False
         for item in self.stages:
@@ -92,7 +92,7 @@ class Pipeline:
             if len(group) == 1:
                 res = [self._run_stage(spark, ctx, group[0])]
             else:
-                with ThreadPoolExecutor(max_workers=self.max_parallel) as pool:
+                with ThreadPoolExecutor(max_workers=MAX_PARALLEL) as pool:
                     res = list(
                         pool.map(lambda s: self._run_stage(spark, ctx, s), group)
                     )

@@ -45,28 +45,13 @@ ones.
 
 Supported runtime: classic (non-Connect) PySpark 3.4-4.x.  The
 re-root goes through the session's py4j handles (``_jsparkSession`` /
-``_jdf``), which Spark Connect does not expose and which are private
-API in any build — so the function probes for them once and FALLS
-BACK to the bare eager ``localCheckpoint`` when absent (r11 ADVICE).
-Under the fallback, iterative loops stay CORRECT (checkpointing alone
-preserves semantics) but re-inherit the originStats growth this
-module exists to cut; the one-time warning names the symptom so a
-Connect migration surfaces it instead of silently re-slowing loops.
+``_jdf``), which Spark Connect does not expose; ``session.get_spark``
+builds only classic ``local[...]`` sessions.
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
-
-_WARNED = False
-
-
-def _jvm_reroot_available(df: DataFrame) -> bool:
-    # Spark Connect frames have no _jdf/_jsparkSession py4j handles;
-    # probe attributes only — never trigger a JVM call here.
-    return hasattr(df, "_jdf") and hasattr(df.sparkSession, "_jsparkSession")
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -74,21 +59,7 @@ def materialize(df: DataFrame) -> DataFrame:
     ``LogicalRDD`` with no inherited statistics (module docstring).
     Use instead of bare ``localCheckpoint(eager=True)`` inside any
     LOOP whose rounds build on the previous round's frame."""
-    global _WARNED
     cp = df.localCheckpoint(eager=True)
-    if not _jvm_reroot_available(cp):
-        if not _WARNED:
-            _WARNED = True
-            warnings.warn(
-                "materialize(): JVM re-root unavailable (Spark Connect or "
-                "incompatible build) — falling back to bare localCheckpoint. "
-                "Iterative loops stay correct but Catalyst sizeInBytes stats "
-                "survive checkpoints and grow per self-join round; expect "
-                "planning-time growth in long loops.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return cp
     sess = cp.sparkSession
     new_jdf = sess._jsparkSession.createDataFrame(cp._jdf.rdd(), cp._jdf.schema())
     return DataFrame(new_jdf, sess)

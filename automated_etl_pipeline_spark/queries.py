@@ -45,9 +45,9 @@ def dsum(col: F.Column | str, scale: int = 2, alias: str | None = None) -> F.Col
     return out.alias(alias) if alias else out
 
 
-def davg(col: F.Column | str, scale: int = 2) -> F.Column:
+def davg(col: F.Column | str) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(F.lit(1))
+    return F.sum(c.cast("decimal(18,2)")).cast("double") / F.count(F.lit(1))
 
 
 def scratch() -> tempfile.TemporaryDirectory:

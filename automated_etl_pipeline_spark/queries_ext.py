@@ -1153,7 +1153,7 @@ def s1_csv_failfast_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation,) = _t(spark, sf_dir, "nation")
     with scratch() as path:
         write_csv(nation.select([f.name for f in schemas.NATION.fields]), path,
-                  header=True, num_files=1)
+                  num_files=1)
         df = read_csv(spark, path, schemas.NATION, mode="FAILFAST")
         return materialize(
             df.groupBy("n_regionkey")
@@ -2550,7 +2550,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = interval_join(
             purchases,
             views,
-            key="user_id",
             interval="1 hour",
             watermark_delay="2 hours",
             left_prefix="p",

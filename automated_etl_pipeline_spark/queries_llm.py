@@ -409,7 +409,7 @@ def emb_label_centroid_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 from automated_etl_pipeline_spark.dedup import minhash as _mh  # noqa: E402
 
 
-@query("dedup_minhash_lsh", _mh.build_oracle_sql(threshold=0.8))
+@query("dedup_minhash_lsh", _mh.build_oracle_sql())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(P=12) + LSH(4 bands × 3 rows) candidates, verified by
     exact shingle-set Jaccard ≥ 0.8 (see dedup/minhash.py for the scale
@@ -436,7 +436,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @retired_query(
     "dedup_simhash_pairs",
-    _sh.pairs_oracle_sql(max_hamming=3),
+    _sh.pairs_oracle_sql(),
     subsumed_by="dedup_simhash",
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,7 +458,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 from automated_etl_pipeline_spark.similarity import kmeans as _km  # noqa: E402
 
 
-@query("kmeans_cluster_stats", _km.duckdb_oracle_sql(k=8, iters=3))
+@query("kmeans_cluster_stats", _km.duckdb_oracle_sql())
 def kmeans_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration Lloyd's k-means over the embeddings table
     (similarity/kmeans.py for the determinism + scale analysis): the
@@ -473,7 +473,7 @@ def kmeans_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @retired_query(  # r14, registry 200 -> 180
     "kmeans_balanced_sample",
-    _km.duckdb_balanced_sample_sql(k=8, iters=3, cap=10),
+    _km.duckdb_balanced_sample_sql(),
     subsumed_by="kmeans_cluster_stats + quota_stratified_sample",
 )
 def kmeans_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -485,7 +485,7 @@ def kmeans_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a billion vectors the sample exchange carries cap × partitions
     rows per cluster, never a cluster's full membership."""
     (emb,) = _t(spark, sf_dir, "embeddings")
-    return _km.kmeans_balanced_sample(emb, k=8, iters=3, cap=10)
+    return _km.kmeans_balanced_sample(emb)
 
 
 # ----------------------------------------------------------------------
@@ -591,7 +591,7 @@ from automated_etl_pipeline_spark.similarity import ivf as _ivf  # noqa: E402
 from automated_etl_pipeline_spark.similarity import semdedup as _sd  # noqa: E402
 
 
-@query("semdedup_cluster_prune", _sd.build_oracle_sql(threshold=0.42))
+@query("semdedup_cluster_prune", _sd.build_oracle_sql())
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) per-cluster accounting: k-means the
     embeddings (the deterministic fixed-iteration Lloyd's of
@@ -605,7 +605,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sd.semdedup_report(spread(emb), threshold=0.42)
 
 
-@query("ann_ivf_topk", _ivf.build_oracle_sql(query_vec_id=0, k=20, nprobe=3))
+@query("ann_ivf_topk", _ivf.build_oracle_sql(query_vec_id=0))
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: probe the 3 nearest label-cells, exact rerank
     top-20 (recall vs ann_cosine_topk measured in tests)."""
@@ -623,7 +623,7 @@ from automated_etl_pipeline_spark.functions import text as _txt  # noqa: E402
 @query(
     "lang_id_confusion",
     f"""
-    SELECT lang, {_txt.duckdb_predicted_lang_sql("text")} AS predicted_lang,
+    SELECT lang, {_txt.duckdb_predicted_lang_sql()} AS predicted_lang,
            COUNT(*) AS n_docs
     FROM documents GROUP BY lang, predicted_lang
     ORDER BY lang, predicted_lang
@@ -723,7 +723,7 @@ def _cascade_oracle() -> str:
       ) GROUP BY fp
     ), d2 AS (
       SELECT d.doc_id, d.text FROM d1 d JOIN fp_reps USING (doc_id)
-    ), {pairs_cte_sql(threshold=0.8, source="d2")},
+    ), {pairs_cte_sql(source="d2")},
     losers AS (SELECT DISTINCT doc_b AS doc_id FROM mh_pairs)
     SELECT 'a_raw' AS stage, (SELECT COUNT(*) FROM documents) AS n_docs
     UNION ALL SELECT 'b_exact', (SELECT COUNT(*) FROM d1)
@@ -943,7 +943,7 @@ def _clusters_oracle() -> str:
     from automated_etl_pipeline_spark.dedup.minhash import pairs_cte_sql
 
     return f"""
-    WITH RECURSIVE {pairs_cte_sql(threshold=0.8)},
+    WITH RECURSIVE {pairs_cte_sql()},
     sym AS (
       SELECT doc_a AS a, doc_b AS b FROM mh_pairs
       UNION
@@ -982,7 +982,7 @@ def _keep_best_oracle() -> str:
     from automated_etl_pipeline_spark.dedup.minhash import pairs_cte_sql
 
     return f"""
-    WITH RECURSIVE {pairs_cte_sql(threshold=0.8)},
+    WITH RECURSIVE {pairs_cte_sql()},
     sym AS (
       SELECT doc_a AS a, doc_b AS b FROM mh_pairs
       UNION
@@ -1071,7 +1071,7 @@ _BM25_TERMS = ["spark", "query", "join"]
 from automated_etl_pipeline_spark.functions import ranking as _rk  # noqa: E402
 
 
-@query("bm25_topk", _rk.duckdb_oracle_sql(_BM25_TERMS, k=20))
+@query("bm25_topk", _rk.duckdb_oracle_sql(_BM25_TERMS))
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents by BM25 for a fixed probe query — the
     filter-postings-first dataflow of functions/ranking.py."""
@@ -1551,7 +1551,7 @@ def _dedup_apply_oracle() -> str:
     from automated_etl_pipeline_spark.dedup.minhash import pairs_cte_sql
 
     return f"""
-    WITH RECURSIVE {pairs_cte_sql(threshold=0.8)},
+    WITH RECURSIVE {pairs_cte_sql()},
     sym AS (
       SELECT doc_a AS a, doc_b AS b FROM mh_pairs
       UNION
@@ -2442,9 +2442,7 @@ def fingerprint_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("a.f") == F.col("b.f"))
         & (F.col("a.doc_id") != F.col("b.doc_id")),
     ).select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    ranks = pagerank(
-        docs.select("doc_id"), edges, id_col="doc_id", iters=5, damping=0.85
-    )
+    ranks = pagerank(docs.select("doc_id"), edges, iters=5)
     return ranks.select(
         "doc_id", F.round("pagerank", 9).alias("pagerank")
     ).orderBy("doc_id")
@@ -2673,7 +2671,7 @@ def _curation_oracle() -> str:
       QUALIFY row_number() OVER (
         PARTITION BY md5(array_to_string(string_split(text, ' ')[1:8], ' '))
         ORDER BY doc_id) = 1
-    ), {pairs_cte_sql(threshold=0.8, source="d2")},
+    ), {pairs_cte_sql(source="d2")},
     losers AS (SELECT DISTINCT doc_b AS doc_id FROM mh_pairs),
     d3 AS (
       SELECT * FROM d2 WHERE doc_id NOT IN (SELECT doc_id FROM losers)
@@ -5827,7 +5825,7 @@ def containment_superset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KAPPA_ORACLE = f"""
 WITH pred AS (
-  SELECT lang, {_txt.duckdb_predicted_lang_sql("text")} AS p FROM documents
+  SELECT lang, {_txt.duckdb_predicted_lang_sql()} AS p FROM documents
 ), conf AS (
   SELECT lang, p, CAST(COUNT(*) AS BIGINT) AS n FROM pred GROUP BY 1, 2
 ), rt AS (

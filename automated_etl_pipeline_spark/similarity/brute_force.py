@@ -41,15 +41,12 @@ def topk_cosine(
     emb: DataFrame,
     query_vec: Sequence[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    extra_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Exact top-k by cosine to ``query_vec`` (ties broken on id)."""
     q = lit_vector(query_vec)
-    sim = F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim")
+    sim = F.round(cosine(F.col("embedding"), q), 6).alias("cosine_sim")
     return (
-        emb.select(id_col, *extra_cols, sim)
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
+        emb.select("vec_id", sim)
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(k)
     )

@@ -104,8 +104,6 @@ def sign_code_vectorized():
 def cosine_sim_join(
     emb: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_a, vec_b, cosine_sim) for banded-LSH candidate pairs with
     exact cosine >= threshold (rounded to 6 dp).
@@ -115,10 +113,12 @@ def cosine_sim_join(
     the coded table at cluster scale — it is the reusable index).
     Coding uses the Arrow-vectorized matmul path (see
     sign_code_vectorized for the parity argument)."""
-    coded = emb.select(id_col, sign_code_vectorized()(F.col(vec_col)).alias("code"))
+    coded = emb.select(
+        "vec_id", sign_code_vectorized()(F.col("embedding")).alias("code")
+    )
     bands = (
         coded.select(
-            id_col,
+            "vec_id",
             F.explode(
                 F.transform(
                     F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
@@ -132,7 +132,7 @@ def cosine_sim_join(
                 )
             ).alias("band"),
         )
-        .select(id_col, "band.band_idx", "band.band_key")
+        .select("vec_id", "band.band_idx", "band.band_key")
         .localCheckpoint()
     )
 
@@ -153,25 +153,25 @@ def cosine_sim_join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("vec_a"), F.col(f"b.{id_col}").alias("vec_b"))
+        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
 
     # norms once per vector, not once per pair: a vector in k candidate
     # pairs would otherwise fold its own square-sum k times
     normed = emb.select(
-        F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("nrm")
+        F.col("vec_id"), F.col("embedding"), l2_norm(F.col("embedding")).alias("nrm")
     ).localCheckpoint()
     ea = normed.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("emb_a"),
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("emb_a"),
         F.col("nrm").alias("nrm_a"),
     )
     eb = normed.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("emb_b"),
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
     sim = F.round(

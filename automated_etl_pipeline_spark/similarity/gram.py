@@ -31,12 +31,10 @@ from pyspark.sql import functions as F
 from automated_etl_pipeline_spark.similarity.quantize import with_int8
 
 
-def gram_upper_triangle(
-    emb: DataFrame, vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
+def gram_upper_triangle(emb: DataFrame, dim: int = 64) -> DataFrame:
     """(i, j, gram) for 0 <= i <= j < dim: exact BIGINT sums of
     q_i * q_j over all vectors' int8 codes."""
-    q = with_int8(emb, vec_col=vec_col).select(F.col("q_codes").alias("c"))
+    q = with_int8(emb).select(F.col("q_codes").alias("c"))
     cells = q.select(
         F.explode(
             F.flatten(

@@ -34,16 +34,14 @@ from automated_etl_pipeline_spark.similarity.brute_force import cosine
 DIM = 64
 
 
-def cell_centroids(
-    emb: DataFrame, cell_col: str = "label", vec_col: str = "embedding"
-) -> DataFrame:
-    """(cell, centroid array<double>) — per-cell mean vector."""
+def cell_centroids(emb: DataFrame) -> DataFrame:
+    """(label, centroid array<double>) — per-cell mean embedding."""
     per_pos = (
-        emb.select(cell_col, F.posexplode(F.col(vec_col).cast("array<double>")))
-        .groupBy(cell_col, "pos")
+        emb.select("label", F.posexplode(F.col("embedding").cast("array<double>")))
+        .groupBy("label", "pos")
         .agg((F.sum("col") / F.count(F.lit(1))).alias("m"))
     )
-    return per_pos.groupBy(cell_col).agg(
+    return per_pos.groupBy("label").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
         ).alias("centroid")
@@ -55,40 +53,38 @@ def ivf_topk(
     query_vec_id: int,
     k: int = 20,
     nprobe: int = 3,
-    id_col: str = "vec_id",
-    cell_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by cosine to the ``query_vec_id`` vector,
     scanning only the ``nprobe`` cells whose centroids are nearest."""
     q = F.broadcast(
-        emb.filter(F.col(id_col) == query_vec_id).select(
-            F.col(vec_col).cast("array<double>").alias("q_emb")
+        emb.filter(F.col("vec_id") == query_vec_id).select(
+            F.col("embedding").cast("array<double>").alias("q_emb")
         )
     )
     probed = F.broadcast(
-        cell_centroids(emb, cell_col, vec_col)
+        cell_centroids(emb)
         .crossJoin(q)
         .select(
-            cell_col,
+            "label",
             F.round(cosine(F.col("centroid"), F.col("q_emb")), 6).alias("cell_sim"),
         )
-        .orderBy(F.desc("cell_sim"), F.asc(cell_col))
+        .orderBy(F.desc("cell_sim"), F.asc("label"))
         .limit(nprobe)
-        .select(cell_col)
+        .select("label")
     )
-    sim = F.round(cosine(F.col(vec_col), F.col("q_emb")), 6)
+    sim = F.round(cosine(F.col("embedding"), F.col("q_emb")), 6)
     return (
-        emb.join(probed, cell_col, "left_semi")
+        emb.join(probed, "label", "left_semi")
         .crossJoin(q)
-        .select(id_col, cell_col, sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
+        .select("vec_id", "label", sim.alias("cosine_sim"))
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def build_oracle_sql(query_vec_id: int, k: int = 20, nprobe: int = 3) -> str:
-    """DuckDB SQL for the same probe-then-rerank search."""
+def build_oracle_sql(query_vec_id: int) -> str:
+    """DuckDB SQL for the same probe-then-rerank search with k = 20 and
+    nprobe = 3."""
     dot = (
         "list_sum(list_transform(range(1, {n} + 1), i -> "
         "CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
@@ -113,11 +109,11 @@ def build_oracle_sql(query_vec_id: int, k: int = 20, nprobe: int = 3) -> str:
                AS cell_sim
       FROM cent CROSS JOIN q GROUP BY label
     ), probed AS (
-      SELECT label FROM cell_score ORDER BY cell_sim DESC, label LIMIT {nprobe}
+      SELECT label FROM cell_score ORDER BY cell_sim DESC, label LIMIT 3
     )
     SELECT e.vec_id, e.label, {cos_eq.format(a="e.embedding", b="q.q_emb")} AS cosine_sim
     FROM embeddings e
     JOIN probed USING (label)
     CROSS JOIN q
-    ORDER BY cosine_sim DESC, e.vec_id LIMIT {k}
+    ORDER BY cosine_sim DESC, e.vec_id LIMIT 20
     """

@@ -12,7 +12,7 @@ like graph/pagerank.py's fixed-iteration design): convergence checks
 would add a driver round-trip per iteration for no testable benefit.
 
 Determinism (what makes this oracle-checkable cross-engine):
-- inputs are quantized ONCE to integers (round(x * scale)): centroid
+- inputs are quantized ONCE to integers (round(x * SCALE)): centroid
   updates then sum exact BIGINTs — Spark's parallel partial aggregation
   and DuckDB's sequential sum agree bit-for-bit — and the mean is a
   single double division;
@@ -36,20 +36,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Fixed-point scale and vector width the gates and their DuckDB oracles
+# share: both engines must round to the same integer codes.  The oracles
+# run Lloyd's with ORACLE_K clusters for ORACLE_ITERS passes, the k and
+# iters the gates pass to the Spark side.
+SCALE = 1000
+DIM = 64
+ORACLE_K = 8
+ORACLE_ITERS = 3
 
-def quantize_vectors(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
-    """(id, q: array<bigint>) — fixed-point inputs; the exactness of
+
+def quantize_vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, q: array<bigint>) — fixed-point inputs; the exactness of
     everything downstream rests on this single rounding."""
     return emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * scale).cast("long"),
+            F.col("embedding"),
+            lambda x: F.round(x.cast("double") * SCALE).cast("long"),
         ).alias("q"),
     )
 
@@ -64,7 +68,7 @@ def _sq_dist(q: Column, c: Column) -> Column:
     )
 
 
-def _assign(pts: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
+def _assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the k-row centroid table,
     compute k distances per vector, keep the argmin (ties -> lowest
     cluster id).
@@ -102,15 +106,15 @@ def _assign(pts: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
     best = (
         pts.crossJoin(F.broadcast(cent))
         .withColumn("d2", _sq_dist(F.col("q"), F.col("c")))
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.min(F.struct(F.col("d2"), F.col("cluster"))).alias("__best"))
         .select(
-            id_col,
+            "vec_id",
             F.col("__best.cluster").alias("cluster"),
             F.col("__best.d2").alias("d2"),
         )
     )
-    return best.join(pts, id_col).select(id_col, "q", "cluster", "d2")
+    return best.join(pts, "vec_id").select("vec_id", "q", "cluster", "d2")
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -133,43 +137,41 @@ def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
     keep_q: bool = False,
 ) -> DataFrame:
-    """(id, cluster, d2) under the centroids after ``iters`` Lloyd
+    """(vec_id, cluster, d2) under the centroids after ``iters`` Lloyd
     passes (assignment i uses centroids from update i-1; the returned
     assignment is pass ``iters``, i.e. centroids updated iters-1
     times).  ``keep_q=True`` additionally returns the quantized ``q``
     column — consumers that need the vectors (semdedup's pair stage)
     then skip a re-quantize + id join."""
-    pts = quantize_vectors(emb, id_col, vec_col, scale)
+    pts = quantize_vectors(emb)
     # init: the k lowest-id vectors, cluster ids 0..k-1 in id order
     # (the window runs over k rows — driver-scale, not a global sort)
-    w0 = Window.orderBy(id_col)
+    w0 = Window.orderBy("vec_id")
     cent = (
-        pts.orderBy(id_col)
+        pts.orderBy("vec_id")
         .limit(k)
         .select(
             (F.row_number().over(w0) - 1).cast("int").alias("cluster"),
             F.transform("q", lambda x: x.cast("double")).alias("c"),
         )
     )
-    assigned = _assign(pts, cent, id_col)
+    assigned = _assign(pts, cent)
     for _ in range(iters - 1):
         cent = _update(assigned)
-        assigned = _assign(pts, cent, id_col)
-    cols = [id_col, F.col("cluster").cast("int").alias("cluster"), "d2"]
+        assigned = _assign(pts, cent)
+    cols = ["vec_id", F.col("cluster").cast("int").alias("cluster"), "d2"]
     if keep_q:
         cols.insert(1, F.col("q"))
     return assigned.select(*cols)
 
 
-def _oracle_ctes(k: int, iters: int, dim: int, scale: int) -> str:
-    """The shared CTE chain (pts → cent0 → d1/a1 → … → a{iters}) every
-    k-means oracle builds on — generated from the same hyperparameters
-    as the Spark plan so the two engines cannot drift structurally.
+def _oracle_ctes() -> str:
+    """The shared CTE chain (pts → cent0 → d1/a1 → … → a{ORACLE_ITERS})
+    every k-means oracle builds on — generated from the same
+    hyperparameters as the Spark plan so the two engines cannot drift
+    structurally.
     list_sum folds the same components the Spark F.aggregate folds;
     SUM over BIGINT is exact in both."""
     sq = (
@@ -179,19 +181,19 @@ def _oracle_ctes(k: int, iters: int, dim: int, scale: int) -> str:
         f"""WITH pts AS (
   SELECT vec_id,
          list_transform(embedding,
-           x -> CAST(round(CAST(x AS DOUBLE) * {scale}) AS BIGINT)) AS q
+           x -> CAST(round(CAST(x AS DOUBLE) * {SCALE}) AS BIGINT)) AS q
   FROM embeddings
 ), cent0 AS (
   SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster,
          list_transform(q, x -> CAST(x AS DOUBLE)) AS c
-  FROM (SELECT vec_id, q FROM pts ORDER BY vec_id LIMIT {k})
+  FROM (SELECT vec_id, q FROM pts ORDER BY vec_id LIMIT {ORACLE_K})
 )"""
     ]
-    for it in range(1, iters + 1):
+    for it in range(1, ORACLE_ITERS + 1):
         parts.append(
             f""", d{it} AS (
   SELECT p.vec_id, p.q, c.cluster,
-         list_sum(list_transform(range(1, {dim + 1}), i -> {sq})) AS d2
+         list_sum(list_transform(range(1, {DIM + 1}), i -> {sq})) AS d2
   FROM pts p CROSS JOIN cent{it - 1} c
 ), a{it} AS (
   SELECT vec_id, q, cluster, d2 FROM (
@@ -200,12 +202,12 @@ def _oracle_ctes(k: int, iters: int, dim: int, scale: int) -> str:
   ) WHERE rn = 1
 )"""
         )
-        if it < iters:
+        if it < ORACLE_ITERS:
             parts.append(
                 f""", m{it} AS (
   SELECT cluster, i.range AS pos,
          CAST(SUM(q[i.range]) AS DOUBLE) / COUNT(*) AS m
-  FROM a{it} CROSS JOIN range(1, {dim + 1}) i
+  FROM a{it} CROSS JOIN range(1, {DIM + 1}) i
   GROUP BY cluster, pos
 ), cent{it} AS (
   SELECT cluster, list(m ORDER BY pos) AS c FROM m{it} GROUP BY cluster
@@ -214,43 +216,36 @@ def _oracle_ctes(k: int, iters: int, dim: int, scale: int) -> str:
     return "".join(parts)
 
 
-def duckdb_oracle_sql(
-    k: int = 8, iters: int = 3, dim: int = 64, scale: int = 1000
-) -> str:
-    """DuckDB mirror of ``kmeans_cluster_stats``."""
+def duckdb_oracle_sql() -> str:
+    """DuckDB mirror of ``kmeans_cluster_stats(k=ORACLE_K,
+    iters=ORACLE_ITERS)``."""
     return (
-        _oracle_ctes(k, iters, dim, scale)
+        _oracle_ctes()
         + f"""
 SELECT cluster, COUNT(*) AS n_vecs,
-       CAST(SUM(CAST(sqrt(d2) / {scale} AS DECIMAL(18,6))) AS DOUBLE)
+       CAST(SUM(CAST(sqrt(d2) / {SCALE} AS DECIMAL(18,6))) AS DOUBLE)
          / COUNT(*) AS avg_dist
-FROM a{iters} GROUP BY cluster ORDER BY cluster"""
+FROM a{ORACLE_ITERS} GROUP BY cluster ORDER BY cluster"""
     )
 
 
-def duckdb_balanced_sample_sql(
-    k: int = 8,
-    iters: int = 3,
-    dim: int = 64,
-    scale: int = 1000,
-    cap: int = 10,
-) -> str:
+def duckdb_balanced_sample_sql() -> str:
     """DuckDB mirror of ``kmeans_balanced_sample`` — same CTE chain,
-    then the per-cluster deterministic-hash top-``cap``.  The sample
+    then the per-cluster deterministic-hash top-10.  The sample
     order key is ``md5(CAST(id AS VARCHAR))``: both engines produce the
     identical lowercase hex string, so the 'random' pick is
     bit-reproducible cross-engine (and across reruns — a curation
     sample you can re-derive is auditable)."""
     return (
-        _oracle_ctes(k, iters, dim, scale)
+        _oracle_ctes()
         + f"""
 SELECT cluster, vec_id, CAST(rn AS BIGINT) AS samp_rank FROM (
   SELECT cluster, vec_id,
          row_number() OVER (
            PARTITION BY cluster
            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-  FROM a{iters})
-WHERE rn <= {cap} ORDER BY cluster, samp_rank"""
+  FROM a{ORACLE_ITERS})
+WHERE rn <= 10 ORDER BY cluster, samp_rank"""
     )
 
 
@@ -258,16 +253,13 @@ def kmeans_cluster_stats(
     emb: DataFrame,
     k: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """Per-cluster size + mean member distance (the curation report:
     which topics dominate, which are thin).  Distances go through a
     DECIMAL(18,6) cast before summing so the mean is exact-arithmetic
     cross-engine (the repo-wide double-sum discipline)."""
-    assigned = kmeans_assign(emb, k, iters, id_col, vec_col, scale)
-    dist = (F.sqrt(F.col("d2")) / scale).cast("decimal(18,6)")
+    assigned = kmeans_assign(emb, k, iters)
+    dist = (F.sqrt(F.col("d2")) / SCALE).cast("decimal(18,6)")
     return (
         assigned.groupBy("cluster")
         .agg(
@@ -278,36 +270,29 @@ def kmeans_cluster_stats(
     )
 
 
-def kmeans_balanced_sample(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    cap: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
+def kmeans_balanced_sample(emb: DataFrame) -> DataFrame:
     """Cluster-balanced corpus sample — the module's stated purpose,
-    as a consumer of the clusters: up to ``cap`` members per cluster,
-    picked by a DETERMINISTIC pseudo-random order (md5 of the id —
-    identical hex in DuckDB, so the sample is cross-engine
-    reproducible and re-derivable for audits; a seeded rand() would be
-    engine-specific).  A dominant topic contributes ``cap`` rows, a
+    as a consumer of the clusters (ORACLE_K clusters after
+    ORACLE_ITERS passes): up to 10 members per cluster, picked by a
+    DETERMINISTIC pseudo-random order (md5 of the id — identical hex
+    in DuckDB, so the sample is cross-engine reproducible and
+    re-derivable for audits; a seeded rand() would be
+    engine-specific).  A dominant topic contributes 10 rows, a
     thin one contributes what it has — the standard counter to
     majority-topic capture in training-data curation.
 
     Scale: the rank filter hits Spark's WindowGroupLimit rewrite
     (plan-asserted in tests/test_plans.py) — each map task pre-trims
-    to ``cap`` rows per cluster before the shuffle, so the exchange
-    carries at most cap × #partitions rows per cluster, not the
+    to 10 rows per cluster before the shuffle, so the exchange
+    carries at most 10 × #partitions rows per cluster, not the
     cluster's full membership."""
-    assigned = kmeans_assign(emb, k, iters, id_col, vec_col, scale)
+    assigned = kmeans_assign(emb, ORACLE_K, ORACLE_ITERS)
     w = Window.partitionBy("cluster").orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col)
+        F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
     )
     return (
         assigned.withColumn("samp_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("samp_rank") <= cap)
-        .select("cluster", id_col, "samp_rank")
+        .filter(F.col("samp_rank") <= 10)
+        .select("cluster", "vec_id", "samp_rank")
         .orderBy("cluster", "samp_rank")
     )

@@ -50,10 +50,8 @@ def lsh_code(vec_col: Column, planes: np.ndarray) -> Column:
     return F.array(*bits)
 
 
-def with_lsh_code(
-    emb: DataFrame, planes: np.ndarray, vec_col: str = "embedding"
-) -> DataFrame:
-    return emb.withColumn("lsh_code", lsh_code(F.col(vec_col), planes))
+def with_lsh_code(emb: DataFrame, planes: np.ndarray) -> DataFrame:
+    return emb.withColumn("lsh_code", lsh_code(F.col("embedding"), planes))
 
 
 def hamming(a: Column, b: Column) -> Column:
@@ -70,21 +68,21 @@ def topk_cosine_lsh(
     planes: np.ndarray,
     k: int = 10,
     probe_hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: prune to codes within ``probe_hamming`` of the
     query code, then exact cosine re-rank of the survivors."""
     coded = (
-        emb if "lsh_code" in emb.columns else with_lsh_code(emb, planes, vec_col)
+        emb if "lsh_code" in emb.columns else with_lsh_code(emb, planes)
     )
     qv = np.asarray(query_vec, dtype=float)
     q_code = [int(b) for b in (planes @ qv >= 0)]
     q_code_col = F.array(*[F.lit(b) for b in q_code])
     cands = coded.filter(hamming(F.col("lsh_code"), q_code_col) <= probe_hamming)
-    sim = F.round(cosine(F.col(vec_col), lit_vector(query_vec)), 6).alias("cosine_sim")
+    sim = F.round(cosine(F.col("embedding"), lit_vector(query_vec)), 6).alias(
+        "cosine_sim"
+    )
     return (
-        cands.select(id_col, sim)
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
+        cands.select("vec_id", sim)
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
         .limit(k)
     )

@@ -66,11 +66,9 @@ def dequant_max_err(vec: Column, scale: Column) -> Column:
     return F.array_max(err)
 
 
-def with_int8(
-    df: DataFrame, vec_col: str = "embedding", prefix: str = "q"
-) -> DataFrame:
-    """Attach ``{prefix}_scale`` (double), ``{prefix}_codes``
-    (array<long> in [-127,127]) and ``{prefix}_max_err`` (double) to
+def with_int8(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """Attach ``q_scale`` (double), ``q_codes``
+    (array<long> in [-127,127]) and ``q_max_err`` (double) to
     ``df``. Two projections so the max-abs scan runs once per vector.
     """
     amax = abs_max(F.col(vec_col)).alias("_amax")
@@ -78,10 +76,10 @@ def with_int8(
     scale = F.when(F.col("_amax") == 0.0, F.lit(0.0)).otherwise(
         F.lit(float(INT8_MAX)) / F.col("_amax")
     )
-    step2 = step1.select("*", scale.alias(f"{prefix}_scale")).drop("_amax")
-    sc = F.col(f"{prefix}_scale")
+    step2 = step1.select("*", scale.alias("q_scale")).drop("_amax")
+    sc = F.col("q_scale")
     return step2.select(
         "*",
-        quantize_expr(F.col(vec_col), sc).alias(f"{prefix}_codes"),
-        dequant_max_err(F.col(vec_col), sc).alias(f"{prefix}_max_err"),
+        quantize_expr(F.col(vec_col), sc).alias("q_codes"),
+        dequant_max_err(F.col(vec_col), sc).alias("q_max_err"),
     )

@@ -47,14 +47,11 @@ def sign_matrix(in_dim: int, out_dim: int, seed: int = 7) -> list[list[float]]:
     ]
 
 
-def project(
-    vec: Column, matrix: list[list[float]], normalize: bool = True
-) -> Column:
+def project(vec: Column, matrix: list[list[float]]) -> Column:
     """array<double> of len(matrix): signed sums of ``vec`` against each
-    matrix row, optionally scaled by 1/sqrt(out_dim) (the JL isometry
-    constant).  Fixed left-to-right summation order — see module doc."""
-    out_dim = len(matrix)
-    scale = (1.0 / out_dim) ** 0.5 if normalize else 1.0
+    matrix row, scaled by 1/sqrt(out_dim) (the JL isometry constant).
+    Fixed left-to-right summation order — see module doc."""
+    scale = (1.0 / len(matrix)) ** 0.5
     return F.array(
         *[
             (
@@ -78,15 +75,13 @@ def project_embeddings(
     emb: DataFrame,
     out_dim: int = 16,
     seed: int = 7,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
 ) -> DataFrame:
     """Append the projected vector column; in_dim read from the first
     row is avoided — caller passes a frame whose vectors share a known
     width (the testdata embeddings are fixed 64-wide; schemas.py)."""
     in_dim = 64
     return emb.withColumn(
-        out_col, project(F.col(vec_col), sign_matrix(in_dim, out_dim, seed))
+        "proj", project(F.col("embedding"), sign_matrix(in_dim, out_dim, seed))
     )
 
 

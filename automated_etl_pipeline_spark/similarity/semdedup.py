@@ -7,7 +7,7 @@ each cluster compute pairwise cosine and greedily drop one member of
 every pair above epsilon.  Clustering is what makes web-scale feasible:
 candidate pairs are O(Σ cᵢ²) instead of O(n²), and k is the lever —
 k ≈ n / target_cluster_size bounds every cluster's pair count.  A
-``max_cluster`` cap (the LSH ``max_bucket`` analogue) skips degenerate
+``max_cluster`` cap (the analogue of the LSH bucket cap) skips degenerate
 clusters outright: a cluster that big means k is mis-sized, and its
 members are better handled by exact/near dedup upstream.
 
@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from automated_etl_pipeline_spark.similarity.kmeans import (
+    DIM,
+    ORACLE_ITERS,
     _oracle_ctes,
     kmeans_assign,
 )
@@ -102,20 +104,17 @@ def semdedup_report(
     iters: int = 3,
     threshold: float = 0.42,
     max_cluster: int = 10_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """Per-cluster SemDeDup accounting: (cluster, n_vecs, n_dup_pairs,
     n_pruned, n_kept) with keep-min-id pruning at cosine ≥ threshold."""
     # keep_q: the assignment already carries the quantized vectors, so
     # the pair stage needs no re-quantize + id join (r15 opt — the old
     # shape re-derived ``pts`` and joined it back on vec_id)
-    assigned = kmeans_assign(emb, k, iters, id_col, vec_col, scale, keep_q=True)
+    assigned = kmeans_assign(emb, k, iters, keep_q=True)
     av = (
         assigned
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             "cluster",
             "q",
             F.aggregate(
@@ -129,7 +128,7 @@ def semdedup_report(
     csize = av.groupBy("cluster").agg(F.count(F.lit(1)).alias("csz"))
     small = csize.filter(F.col("csz") <= max_cluster).select("cluster")
     dup = (
-        av.select("cluster", F.col(id_col).alias("vec_id"), "q")
+        av.select("cluster", "vec_id", "q")
         .join(F.broadcast(small), "cluster", "left_semi")
         .groupBy("cluster")
         .applyInPandas(
@@ -138,7 +137,7 @@ def semdedup_report(
     )
     dupc = dup.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_dup_pairs"))
     pruned = (
-        dup.select("cluster", F.col("id_b").alias(id_col))
+        dup.select("cluster", F.col("id_b").alias("vec_id"))
         .distinct()
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_pruned"))
@@ -157,33 +156,27 @@ def semdedup_report(
     )
 
 
-def build_oracle_sql(
-    k: int = 8,
-    iters: int = 3,
-    threshold: float = 0.42,
-    max_cluster: int = 10_000,
-    dim: int = 64,
-    scale: int = 1000,
-) -> str:
-    """DuckDB mirror over the shared k-means CTE chain."""
+def build_oracle_sql() -> str:
+    """DuckDB mirror of ``semdedup_report(threshold=0.42)`` over the
+    shared k-means CTE chain."""
     return (
-        _oracle_ctes(k, iters, dim, scale)
+        _oracle_ctes()
         + f""", av AS (
   SELECT vec_id, cluster, q,
          list_sum(list_transform(q, x -> x * x)) AS n2
-  FROM a{iters}
+  FROM a{ORACLE_ITERS}
 ), csize AS (
   SELECT cluster, COUNT(*) AS csz FROM av GROUP BY cluster
 ), pr AS (
   SELECT a.cluster, a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND(CAST(list_sum(list_transform(range(1, {dim + 1}),
+         ROUND(CAST(list_sum(list_transform(range(1, {DIM + 1}),
                  i -> a.q[i] * b.q[i])) AS DOUBLE)
                / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)), 6) AS cos
   FROM av a JOIN av b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  JOIN csize s ON s.cluster = a.cluster AND s.csz <= {max_cluster}
+  JOIN csize s ON s.cluster = a.cluster AND s.csz <= 10000
   WHERE a.n2 > 0 AND b.n2 > 0
 ), dup AS (
-  SELECT cluster, id_a, id_b FROM pr WHERE cos >= {threshold}
+  SELECT cluster, id_a, id_b FROM pr WHERE cos >= 0.42
 ), dupc AS (
   SELECT cluster, COUNT(*) AS n_dup_pairs FROM dup GROUP BY cluster
 ), pruned AS (

@@ -35,51 +35,44 @@ def static_enrich(
     dim: DataFrame,
     stream_key: str,
     dim_key: str,
-    how: str = "inner",
-    broadcast_dim: bool = False,
 ) -> DataFrame:
     """Stream-static dimension enrichment — the STATELESS streaming
     join: each micro-batch hash-joins against the static frame with no
     state store at all (contrast interval_join's per-side buffers).
 
-    ``broadcast_dim`` defaults to False — the repo rule (tests/
-    test_plans.py forced-broadcast guard): a hint overrides the size
-    check, so it is for FIXED-cardinality dims only; a caller passing
-    True asserts the dim cannot grow with data volume.  Left False,
-    Spark still auto-broadcasts from the static side's size stats when
-    it fits, and falls back to a per-batch shuffled hash join when it
-    doesn't — the safe default for SF-scaling dims like customer.  The
-    static plan is re-resolved per micro-batch, so a dim refreshed
-    underneath a long-running stream is picked up on the next trigger —
-    the cheap path to slowly-changing enrichment without restarting
-    the query.
+    No broadcast hint — the repo rule (tests/test_plans.py
+    forced-broadcast guard): a hint overrides the size check, so it is
+    for FIXED-cardinality dims only.  Without it Spark still
+    auto-broadcasts from the static side's size stats when it fits, and
+    falls back to a per-batch shuffled hash join when it doesn't — the
+    safe choice for SF-scaling dims like customer.  The static plan is
+    re-resolved per micro-batch, so a dim refreshed underneath a
+    long-running stream is picked up on the next trigger — the cheap
+    path to slowly-changing enrichment without restarting the query.
     """
-    if broadcast_dim:
-        dim = F.broadcast(dim)
-    return stream.join(dim, stream[stream_key] == dim[dim_key], how)
+    return stream.join(dim, stream[stream_key] == dim[dim_key])
 
 
 def interval_join(
     left: DataFrame,
     right: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
     interval: str = "1 hour",
     watermark_delay: str = "2 hours",
     how: str = "inner",
     left_prefix: str = "l",
     right_prefix: str = "r",
 ) -> DataFrame:
-    """Join ``left`` rows to ``right`` rows with the same ``key`` whose
+    """Join ``left`` rows to ``right`` rows with the same ``user_id`` whose
     timestamp falls in ``[left.ts - interval, left.ts]`` — i.e. each
     left event matched to the right events that PRECEDE it within the
     interval.  Works identically on batch and streaming inputs (the
     batch path simply ignores watermarks).
 
     All columns come back prefixed (``l_ts``, ``r_ts``, ...) except the
-    shared ``key``, which is emitted once — as ``coalesce(lf.key,
-    rf.key)`` so that right-only rows of a right/full outer join keep
-    their key instead of a NULL (lf.key is NULL on null-extended rows).
+    shared ``user_id``, which is emitted once — as
+    ``coalesce(lf.user_id, rf.user_id)`` so that right-only rows of a
+    right/full outer join keep their key instead of a NULL (lf.user_id
+    is NULL on null-extended rows).
     """
     allowed = ("inner", "left_outer", "left", "right_outer", "right",
                "full_outer", "full", "outer")
@@ -88,27 +81,27 @@ def interval_join(
 
     def prep(df: DataFrame, prefix: str) -> DataFrame:
         if df.isStreaming and watermark_delay:
-            df = df.withWatermark(ts_col, watermark_delay)
+            df = df.withWatermark("ts", watermark_delay)
         return df.select(
-            F.col(key),
+            F.col("user_id"),
             *[
                 F.col(c).alias(f"{prefix}_{c}")
                 for c in df.columns
-                if c != key
+                if c != "user_id"
             ],
         )
 
     lf = prep(left, left_prefix).alias("lf")
     rf = prep(right, right_prefix).alias("rf")
-    lts, rts = f"{left_prefix}_{ts_col}", f"{right_prefix}_{ts_col}"
+    lts, rts = f"{left_prefix}_ts", f"{right_prefix}_ts"
     cond = (
-        (F.col(f"lf.{key}") == F.col(f"rf.{key}"))
+        (F.col("lf.user_id") == F.col("rf.user_id"))
         & (F.col(f"rf.{rts}") >= F.expr(f"lf.{lts} - INTERVAL {interval}"))
         & (F.col(f"rf.{rts}") <= F.col(f"lf.{lts}"))
     )
     joined = lf.join(rf, cond, how)
     return joined.select(
-        F.coalesce(F.col(f"lf.{key}"), F.col(f"rf.{key}")).alias(key),
-        *[F.col(f"lf.{c}") for c in lf.columns if c != key],
-        *[F.col(f"rf.{c}") for c in rf.columns if c != key],
+        F.coalesce(F.col("lf.user_id"), F.col("rf.user_id")).alias("user_id"),
+        *[F.col(f"lf.{c}") for c in lf.columns if c != "user_id"],
+        *[F.col(f"rf.{c}") for c in rf.columns if c != "user_id"],
     )

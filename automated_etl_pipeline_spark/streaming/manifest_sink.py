@@ -94,40 +94,22 @@ def manifest_upsert_committer(
     table_root: str,
     key_cols: list[str],
     query_name: str = "cdc",
-    record_changes: bool = False,
-    stats_cols: list[str] | None = None,
-    bloom_cols: list[str] | None = None,
-    bloom_bits: int | None = None,
 ):
     """Exactly-once streaming MERGE (r15): each micro-batch lands as
     ONE atomic ``commit_upsert`` — rows with matching ``key_cols``
     replaced, new keys inserted, replays absorbed by the
     (query, batch_id) run_id.  This is the CDC-apply sink: a change
     stream keyed by primary key upserts into the manifest table with
-    no window where a delete is visible without its insert, and with
-    ``record_changes=True`` each batch's delta stays servable through
-    ``read_changes_cdf`` so a downstream incremental MV keeps
-    folding.  The batch must hold at most one row per key
+    no window where a delete is visible without its insert.  The batch
+    must hold at most one row per key
     (last-write-wins collapsing is the caller's dedup step —
     streaming/cdc.py's latest-by-key pattern)."""
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        kwargs: dict = {}
-        if stats_cols:
-            kwargs["stats_cols"] = list(stats_cols)
-        if bloom_cols:
-            kwargs["bloom_cols"] = list(bloom_cols)
-            if bloom_bits is not None:
-                kwargs["bloom_bits"] = int(bloom_bits)
         commit_upsert(
-            batch_df,
-            table_root,
-            batch_run_id(query_name, batch_id),
-            list(key_cols),
-            record_changes=record_changes,
-            **kwargs,
+            batch_df, table_root, batch_run_id(query_name, batch_id), list(key_cols)
         )
 
     return commit_batch
@@ -139,8 +121,6 @@ def run_stream_to_manifest(
     schema,
     table_root: str,
     state_root: str,
-    query_name: str = "ingest",
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Drain all files under ``drop_dir`` (schema ``schema``) into the
     manifest table at ``table_root`` with exactly-once commits;
@@ -148,16 +128,14 @@ def run_stream_to_manifest(
     streaming checkpoint: REUSING it resumes the query (already-seen
     files are skipped by the source, already-committed batches by the
     run_id ledger — both halves of recovery), while a fresh
-    ``state_root`` with the same ``query_name`` re-delivers every file
-    under already-committed batch_ids and no-ops, which is exactly the
+    ``state_root`` re-delivers every file under already-committed
+    batch_ids of the same ``ingest`` query and no-ops, which is exactly the
     double-start safety production schedulers need."""
     q = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(drop_dir)
-        .writeStream.foreachBatch(
-            manifest_batch_committer(table_root, query_name)
-        )
+        .writeStream.foreachBatch(manifest_batch_committer(table_root))
         .option("checkpointLocation", os.path.join(state_root, "ckpt"))
         .trigger(availableNow=True)
         .start()

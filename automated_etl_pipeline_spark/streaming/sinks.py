@@ -22,12 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_stream_idempotent(
-    stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    query_name: str = "idempotent_sink",
-):
+def write_stream_idempotent(stream: DataFrame, path: str, checkpoint: str):
     """Start an availableNow foreachBatch writer that lands every
     microbatch in its own batch_id partition (exactly-once under
     replay)."""
@@ -43,7 +38,7 @@ def write_stream_idempotent(
 
     return (
         stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
+        .queryName("idempotent_sink")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -57,9 +57,7 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def sessionize_stateful(
-    events: DataFrame, gap_minutes: int = 30, ts_col: str = "ts"
-) -> DataFrame:
+def sessionize_stateful(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Streaming sessionization (gap-closed sessions only — see module
     docstring). Works on a streaming DataFrame with columns
     (user_id, ts)."""
@@ -72,7 +70,7 @@ def sessionize_stateful(
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
         ts_us = (
-            pd.concat(list(pdfs))[ts_col]
+            pd.concat(list(pdfs))["ts"]
             .astype("datetime64[us]")
             .astype("int64")
             .sort_values()
@@ -122,14 +120,10 @@ FUNNEL_STATE_SCHEMA = T.StructType(
 )
 
 
-def funnel_stateful(
-    events: DataFrame,
-    stages: tuple[str, str, str] = ("view", "click", "purchase"),
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel_stateful(events: DataFrame) -> DataFrame:
     """Streaming conversion funnel: per-user state walks the staged
-    sequence (first ``stages[0]``, first ``stages[1]`` STRICTLY after
-    it, first ``stages[2]`` strictly after that); one row is emitted
+    sequence (first ``view``, first ``click`` STRICTLY after it, first
+    ``purchase`` strictly after that); one row is emitted
     the moment a user completes the last stage, then the user is done
     (stage 3 is terminal — a completed user costs no further state
     transitions, only the groupBy routing).
@@ -146,7 +140,7 @@ def funnel_stateful(
     Scale: state is (int + 2 longs)/user; emission is append-mode and
     deterministic (no watermark dependence); the only shuffle is the
     stateful groupBy(user)."""
-    s0, s1, s2 = stages
+    s0, s1, s2 = "view", "click", "purchase"
 
     def handle(
         key: tuple[Any, ...],
@@ -156,7 +150,7 @@ def funnel_stateful(
         (user_id,) = key
         pdf = pd.concat(list(pdfs))
         pdf = pdf.assign(
-            us=pdf[ts_col].astype("datetime64[us]").astype("int64")
+            us=pdf["ts"].astype("datetime64[us]").astype("int64")
         ).sort_values(["us", "event_id"])
         stage, t1, t2 = state.get if state.exists else (0, 0, 0)
         out: list[tuple[int, int, int, int]] = []
@@ -224,9 +218,7 @@ def mg_fold(
     return sketch
 
 
-def heavy_hitters_stateful(
-    items: DataFrame, item_col: str = "item", k: int = 16
-) -> DataFrame:
+def heavy_hitters_stateful(items: DataFrame, k: int = 16) -> DataFrame:
     """Streaming Misra-Gries: per-bucket sketch state across triggers.
 
     The streaming twin of functions/heavy_hitters.mg_partials: the
@@ -258,7 +250,7 @@ def heavy_hitters_stateful(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         (bucket,) = key
-        batch = pd.concat(list(pdfs))[item_col].value_counts()
+        batch = pd.concat(list(pdfs))["item"].value_counts()
         if state.exists:
             seq, items_, counts_ = state.get
             sketch = dict(zip(items_, counts_))

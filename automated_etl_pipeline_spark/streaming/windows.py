@@ -66,30 +66,23 @@ def read_events_stream(
 
 def windowed_counts(
     events: DataFrame,
-    window_len: str = "1 hour",
-    slide: str | None = None,
     watermark_delay: str | None = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Tumbling (or sliding) event-time counts+sums with late-data
+    """Tumbling 1-hour event-time counts+sums with late-data
     handling — works identically on batch and streaming DataFrames.
 
     Pass ``watermark_delay=None`` when the input stream already
     carries a watermark (e.g. upstream dropDuplicates): Spark forbids
     redefining the watermark mid-chain with multiple stateful
     operators."""
-    w = (
-        F.window(ts_col, window_len, slide)
-        if slide
-        else F.window(ts_col, window_len)
-    )
+    w = F.window("ts", "1 hour")
     # the shared decimal-sum rule: partial-aggregation order (and the
     # stream's incremental state merges) must not drift from a
     # batch/oracle recompute
     from automated_etl_pipeline_spark.queries import dsum
 
     src = (
-        events.withWatermark(ts_col, watermark_delay)
+        events.withWatermark("ts", watermark_delay)
         if events.isStreaming and watermark_delay
         else events
     )
@@ -141,31 +134,20 @@ def drain_stream(
         spark.catalog.dropTempView(name)  # no-op once detached
 
 
-def windowed_distinct_sketch(
-    events: DataFrame,
-    window_len: str = "1 hour",
-    watermark_delay: str | None = "2 hours",
-    ts_col: str = "ts",
-    value_col: str = "user_id",
-    lg_k: int = 12,
-) -> DataFrame:
+def windowed_distinct_sketch(events: DataFrame) -> DataFrame:
     """Per-window HLL distinct-count partials — the streaming half of
     the mergeable rollup (functions/sketches.py): each trigger merges
-    new rows into the window's ~2^lg_k-byte sketch state instead of
+    new rows into the window's ~2^12-byte sketch state instead of
     holding the distinct value set, so state size is bounded per window
     regardless of cardinality.  The drained table carries the ESTIMATE
     per window; a consumer needing coarser grains unions the sketches,
     never re-reads the stream.  Works identically on batch frames
     (same expression), which is what lets the gate check the streamed
     estimates against a batch exact recount."""
-    w = F.window(ts_col, window_len)
-    src = (
-        events.withWatermark(ts_col, watermark_delay)
-        if events.isStreaming and watermark_delay
-        else events
-    )
+    w = F.window("ts", "1 hour")
+    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
     return src.groupBy(w.getField("start").alias("window_start")).agg(
         F.hll_sketch_estimate(
-            F.hll_sketch_agg(value_col, F.lit(lg_k))
+            F.hll_sketch_agg("user_id", F.lit(12))
         ).alias("approx_distinct")
     )

@@ -100,7 +100,7 @@ def generate_partsupp(
     return rows
 
 
-def write_partsupp_parquet(sf_dir: str, out_path: str, seed: int = 42) -> str:
+def write_partsupp_parquet(sf_dir: str, out_path: str) -> str:
     """Generate partsupp for the part/supplier keys of ``sf_dir`` and
     write one parquet file both engines read."""
     import duckdb
@@ -120,7 +120,7 @@ def write_partsupp_parquet(sf_dir: str, out_path: str, seed: int = 42) -> str:
         f"SELECT DISTINCT l_partkey, l_suppkey FROM '{sf_dir}/lineitem.parquet' "
         "ORDER BY 1, 2"
     ).fetchall()
-    rows = generate_partsupp(part_keys, n_suppliers, seed, shipped_pairs)
+    rows = generate_partsupp(part_keys, n_suppliers, extra_pairs=shipped_pairs)
     table = pa.table(
         {
             "ps_partkey": pa.array([r[0] for r in rows], pa.int64()),

@@ -51,36 +51,15 @@ def _quiet_stop(spark) -> None:
     thread pool outlives SparkEnv teardown and logs a harmless-but-noisy
     ``IllegalStateException: SparkEnv not active`` WARN on every shutdown
     after a streaming query ran (VERDICT r6 blemish #2). Unloading the
-    providers first makes the tail clean. Best-effort: the Scala object's
-    static forwarder name differs across builds, so try both spellings."""
-    try:
-        jvm_pkg = spark._jvm.org.apache.spark.sql.execution.streaming.state
-        try:
-            jvm_pkg.StateStore.stop()
-        except Exception:
-            getattr(getattr(jvm_pkg, "StateStore$"), "MODULE$").stop()
-    except Exception:
-        pass
+    providers first makes the tail clean."""
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     spark.stop()
 
 
 def newest_anchors(path: Path) -> dict[str, float]:
-    """Per-query newest comparable anchor from BASELINE_BENCH.json:
-    rounds are stored oldest→newest, later rounds override, and rounds
-    whose name ends in ``_cold`` are skipped (cold-codegen numbers are
-    not comparable to the warm sweep)."""
-    try:
-        rounds = json.loads(path.read_text())["rounds"]
-    except (OSError, KeyError, ValueError):
-        return {}
-    anchors: dict[str, float] = {}
-    for rname, vals in rounds.items():
-        if rname.endswith("_cold") or not isinstance(vals, dict):
-            continue
-        for q, v in vals.items():
-            if isinstance(v, (int, float)) and v > 0:
-                anchors[q] = float(v)
-    return anchors
+    """Per-query newest comparable anchor from BASELINE_BENCH.json: the
+    ``value`` of each ``anchors_with_provenance`` entry."""
+    return {q: p["value"] for q, p in anchors_with_provenance(path).items()}
 
 
 # A "self-anchor" layer re-anchors a handful of gates mid-stream
@@ -103,7 +82,10 @@ def anchors_with_provenance(path: Path) -> dict[str, dict]:
     whether that layer is a self-anchor (a targeted, sub-30-entry
     re-anchor rather than a full-sweep round record), and — for
     self-anchored gates — the newest anchor from a FULL layer, so both
-    ratios can be reported side by side."""
+    ratios can be reported side by side.  Rounds are stored
+    oldest→newest, later rounds override, and rounds whose name ends in
+    ``_cold`` are skipped (cold-codegen numbers are not comparable to
+    the warm sweep)."""
     try:
         rounds = json.loads(path.read_text())["rounds"]
     except (OSError, KeyError, ValueError):
@@ -387,12 +369,13 @@ def main() -> None:
             Path(__file__).resolve().parent / "BASELINE_BENCH.json",
         )
     )
+    prov: dict[str, dict] = {}
+    anchors: dict[str, float] = {}
     try:
-        _anchors_for_ratios = newest_anchors(anchors_path)
+        prov = anchors_with_provenance(anchors_path)
+        anchors = {q: p["value"] for q, p in prov.items()}
         ratios = {
-            q: round(t / _anchors_for_ratios[q], 3)
-            for q, t in timings.items()
-            if _anchors_for_ratios.get(q, 0) > 0
+            q: round(t / anchors[q], 3) for q, t in timings.items() if q in anchors
         }
         if ratios:
             out["anchor_ratios"] = ratios
@@ -418,13 +401,11 @@ def main() -> None:
     # adjudication contexts are built in an idle JVM — the same
     # fresh-session protocol rounds 4-7 used manually.
     if sf >= 0.1:
-        anchors = newest_anchors(anchors_path)
         # Dual-ratio reporting for self-anchored gates (VERDICT r13 ask
         # #2): every gate whose newest anchor comes from a targeted
         # re-anchor layer ALSO records its ratio vs the newest
         # full-sweep anchor, so the record itself shows what the
         # re-anchor absorbed.
-        prov = anchors_with_provenance(anchors_path)
         self_anchored = {
             q: {
                 "wall": timings[q],
