@@ -33,14 +33,10 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # list name -> N here; the entry self-expires once the driver re-greens
 # the gate at round >= N.
 _CONTRACT_CHANGED: dict[str, int] = {
-    # r7 sample was under the no-oracle contract; SQL oracle added later
-    # (VERDICT r9 minor note: never driver-confirmed against it).
-    "hll_distinct_rollup": 8,
     # r10 rewrites (VERDICT r9 asks #2-#4): LCD ANSI oracles + new
     # integer gate columns — prior greens verified the old contract.
     "locf_hourly_gap_fill": 10,
     "rolling_anomaly_zscores": 10,
-    "incremental_agg_merge": 10,
     "ks_drift_statistic": 10,
     "quality_mad_outliers": 10,
     # r10 advice fix: transcendental-free cent-moment gate values.
@@ -50,10 +46,6 @@ _CONTRACT_CHANGED: dict[str, int] = {
     # never been driver-sampled; now cast to BIGINT.
     "multi_touch_attribution": 10,
     "salted_skew_agg": 10,
-    # r12: brute-force k-gram DuckDB oracles replace the no-oracle
-    # contract (VERDICT r11 ask #1) — prior rows-only greens are stale.
-    "suffix_array_stats": 12,
-    "suffix_span_removal": 12,
     # r12: pinned-coefficient integer logit replaces the no-oracle
     # IRLS-invariant contract (VERDICT r11 ask #3).
     "quality_classifier_filter": 12,

@@ -141,7 +141,7 @@ def simhash_pairs(
     """(doc_a, doc_b, hamming) with hamming(simhash) <= max_hamming,
     between *representatives of distinct fingerprints* (min id per
     fingerprint; identical-fingerprint members are exact-dedup's job —
-    attach them via dedup_exact / with_simhash). Candidate generation
+    attach them via exact dedup / with_simhash). Candidate generation
     is 4-quarter banding, complete for max_hamming <= 3 by pigeonhole;
     larger max_hamming trades recall (documented, like any LSH).
 
@@ -240,34 +240,3 @@ _ORACLE_FP_CTE = """
 def fingerprint_oracle_sql() -> str:
     """Oracle for with_simhash over the ``documents`` view."""
     return _ORACLE_FP_CTE + "SELECT doc_id, simhash FROM sh ORDER BY doc_id"
-
-
-def pairs_oracle_sql() -> str:
-    """Oracle for simhash_pairs(max_hamming=3) over the ``documents``
-    view."""
-    return (
-        _ORACLE_FP_CTE
-        + f"""
-    , reps AS (
-      SELECT fp_hi, fp_lo, MIN(doc_id) AS doc_id
-      FROM sh GROUP BY fp_hi, fp_lo
-    ), banded AS (
-      SELECT doc_id, fp_hi, fp_lo, q.q AS q,
-             CASE q.q WHEN 0 THEN (fp_hi >> 16) & 65535
-                      WHEN 1 THEN fp_hi & 65535
-                      WHEN 2 THEN (fp_lo >> 16) & 65535
-                      ELSE fp_lo & 65535 END AS qk
-      FROM reps CROSS JOIN (SELECT UNNEST(range(0, 4)) AS q) q
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.fp_hi AS ha, a.fp_lo AS la, b.fp_hi AS hb, b.fp_lo AS lb
-      FROM banded a JOIN banded b
-        ON a.q = b.q AND a.qk = b.qk AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           CAST(bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) AS INT) AS hamming
-    FROM cand
-    WHERE bit_count(xor(ha, hb)) + bit_count(xor(la, lb)) <= 3
-    ORDER BY doc_a, doc_b
-    """
-    )

@@ -9,10 +9,10 @@ keys, identical parse in DuckDB); a hash seen in >= 2 distinct
 documents marks a cross-document duplicated span.
 
 Two consumers:
-- ``span_report`` (gate ``dedup_exact_spans``): per-doc duplicated
+- ``span_report``: per-doc duplicated
   window counts/fractions — the "how much of this doc is copied"
   metric.
-- ``removal_spans`` (gate ``dedup_span_removal``): keep-first-owner
+- ``removal_spans``: keep-first-owner
   edit list — each duplicated hash's owner is the lowest doc_id;
   occurrences elsewhere become removal candidates whose overlapping/
   adjacent [pos, pos+W-1] intervals merge into maximal spans via

@@ -574,11 +574,7 @@ def longest_repeat(docs: DataFrame) -> DataFrame:
     )
 
 
-def remove_duplicate_spans(
-    docs: DataFrame,
-    min_len: int,
-    spans: DataFrame | None = None,
-) -> DataFrame:
+def remove_duplicate_spans(docs: DataFrame, min_len: int) -> DataFrame:
     """(doc_id, n_tokens, n_removed, text_clean): apply Lee et al.'s
     removal step — cut every maximal duplicated span of >= ``min_len``
     tokens (``duplicated_spans``) out of each document and re-join the
@@ -588,13 +584,8 @@ def remove_duplicate_spans(
     Scale: spans collect per document only (doc-length bounded, the
     spans.py contract); the cut itself is an array filter over the
     token array — map-side, no extra shuffle beyond the span
-    computation.  Pass a precomputed (ideally materialized)
-    ``duplicated_spans`` frame via ``spans`` when the caller also
-    consumes the spans — the suffix-array pipeline is the dominant
-    cost and must not run twice."""
-    if spans is None:
-        spans = duplicated_spans(docs, min_len)
-    spans_arr = spans.groupBy("doc_id").agg(
+    computation."""
+    spans_arr = duplicated_spans(docs, min_len).groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
     toks = docs.select(

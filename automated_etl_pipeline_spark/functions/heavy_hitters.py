@@ -38,8 +38,7 @@ single-pass variant would skip the recount and return (candidate,
 weight_lower_bound) — approximate, partition-dependent, and therefore
 deliberately NOT the gate surface.
 
-Consumers: the ``heavy_hitter_tokens`` registry gate (queries_llm) and
-``dedup/ngram_jaccard.jaccard_pairs(stop_hot_share=...)`` — the
+Consumer: ``dedup/ngram_jaccard.jaccard_pairs(stop_hot_share=...)`` — the
 measured df-cap that replaces a guessed stop-shingle constant.
 """
 

@@ -159,8 +159,8 @@ def kn_partition(raw: DataFrame, target: DataFrame) -> DataFrame:
 
     Same cut arithmetic as perplexity.ccnet_partition (quarter
     fractions keep ceil(N*frac) IEEE-exact), so on the same pool
-    predicate the part SIZES match ccnet_partition_sizes row for
-    row — the cross-gate check pinned in tests/test_perplexity.py."""
+    predicate the part SIZES match ccnet_partition's row for
+    row — the cross-check pinned in tests/test_perplexity.py."""
     scores = kn_doc_scores(raw, target).localCheckpoint(
         eager=True
     )

@@ -1,7 +1,6 @@
 from automated_etl_pipeline_spark.io.sources import (
     load_testdata,
     read_csv,
-    read_parquet,
     register_views,
 )
 from automated_etl_pipeline_spark.io.sinks import (
@@ -13,7 +12,6 @@ from automated_etl_pipeline_spark.io.sinks import (
 __all__ = [
     "load_testdata",
     "read_csv",
-    "read_parquet",
     "register_views",
     "validate_not_null",
     "write_csv",

@@ -43,16 +43,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_parquet(
-    spark: SparkSession,
-    path: str,
-    columns: Sequence[str] | None = None,
-) -> DataFrame:
-    """S2 — parquet scan with optional projection (column pruning)."""
-    df = spark.read.parquet(path)
-    return df.select(*columns) if columns else df
-
-
 def ntz_epoch_us_sql(col: str) -> str:
     """SQL expression: BIGINT epoch-micros of a TIMESTAMP_NTZ column's
     WALL value read as UTC, by pure date arithmetic (epoch-day *

@@ -206,9 +206,6 @@ def _sample_frames_bytes(
     ]
 
 
-_ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
-
-
 def _rechunk(
     batches: Iterator[pd.DataFrame], batch_size: int
 ) -> Iterator[pd.DataFrame]:
@@ -218,33 +215,10 @@ def _rechunk(
     time, so a lazy operator cannot set-and-restore it without either
     leaking it session-wide (the bug this replaced) or having it never
     apply. Internal re-chunking bounds per-batch decode memory and the
-    OUTPUT Arrow batches regardless of the session conf; for multi-MB
-    payload INPUT transfer, bracket the action with arrow_batch_size():
-
-        with arrow_batch_size(spark, 64):
-            extract_image_features(media).write.parquet(...)
-    """
+    OUTPUT Arrow batches regardless of the session conf."""
     for pdf in batches:
         for lo in range(0, len(pdf), batch_size):
             yield pdf.iloc[lo : lo + batch_size]
-
-
-class arrow_batch_size:
-    """Context manager: temporarily cap Arrow batch size, restoring the
-    previous session value afterwards."""
-
-    def __init__(self, spark, batch_size: int):
-        self.spark, self.batch_size = spark, batch_size
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(_ARROW_BATCH_CONF, None)
-        self.spark.conf.set(_ARROW_BATCH_CONF, str(self.batch_size))
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(_ARROW_BATCH_CONF)
-        else:
-            self.spark.conf.set(_ARROW_BATCH_CONF, self.prev)
 
 
 def attach_metadata(df: DataFrame) -> DataFrame:

@@ -18,7 +18,7 @@ compress the output to O(actual changes), not O(events).  Skewed keys
 (one entity with millions of updates) are the operator's hazard — the
 per-key window is sequential — but dimension keys are low-churn by
 definition; a pathological key indicates upstream duplication, which
-exact dedup (queries_llm dedup_exact) removes first.  When a hot key
+exact dedup removes first.  When a hot key
 is nonetheless expected, use ``scd2_history_chunked`` below: same
 output, but the history is range-chunked across partitions and runs
 are stitched at chunk edges, so no task ever holds one key's full

@@ -24,7 +24,7 @@ boundary anywhere (plan-asserted in tests/test_urls.py):
   hash probes.
 - Per-domain caps use the rank-then-filter shape Spark rewrites to
   WindowGroupLimit (map-side top-N per key before the shuffle — the
-  source_cap_sample pattern, queries_llm.py).
+  operators/apportion.py pre-trim pattern).
 
 The driver testdata carries no URL column, so these are pytest-oracle
 gates over a seeded generated fixture (the partsupp precedent): both

@@ -89,58 +89,6 @@ def query(name: str, oracle: str | None = None, *, executes_stream: bool = False
     return deco
 
 
-# Diagnostic probe gates: per-stage BIGINT decompositions of a parent
-# gate (the r10 decision-table tooling — when a parent goes driver-red,
-# its probes localize which stage diverged).  Once the parent is
-# driver-green they have done their job as REGISTRY entries: keeping
-# them there spends driver-rotation slots and bench seconds re-proving
-# a solved problem (VERDICT r11 ask #2).  They live here instead and
-# tests/test_probes.py checks every one against its DuckDB oracle each
-# pytest run, so they still guard regressions; if a parent goes red
-# again, flip its probes back to @query temporarily so the driver
-# rotation localizes the stage.
-PROBES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-PROBE_ORACLES: dict[str, str] = {}
-
-
-def probe(name: str, oracle: str):
-    def deco(fn):
-        PROBES[name] = fn
-        PROBE_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-# Retired gates (VERDICT r12 ask #2): solved single-purpose registry
-# entries whose semantics a parent gate subsumes (a cascade stage whose
-# e2e parent is gated, the DISTINCT case of a gated ALL-variant, a
-# window shape a broader gate also exercises).  Keeping them in the
-# driver registry spends rotation slots and bench seconds re-proving
-# solved problems — at 225 gates / ~50 sampled per round, worst-case
-# staleness was 4.5 rounds.  Retired gates keep their FULL three-axis
-# oracle contract: tests/test_retired_gates.py checks every one against
-# its DuckDB oracle on each pytest run (same compare as
-# tools/check_correctness.py).  If a parent goes driver-red, flip the
-# relevant retirees back to @query so the rotation localizes the stage.
-RETIRED: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-RETIRED_ORACLES: dict[str, str] = {}
-# name -> the registry gate(s) that subsume it (documentation + the
-# shape test asserts every entry names a live registry gate)
-RETIRED_SUBSUMED: dict[str, str] = {}
-
-
-def retired_query(name: str, oracle: str | None = None, *, subsumed_by: str):
-    def deco(fn):
-        RETIRED[name] = fn
-        if oracle is not None:
-            RETIRED_ORACLES[name] = oracle
-        RETIRED_SUBSUMED[name] = subsumed_by
-        return fn
-
-    return deco
-
-
 # ----------------------------------------------------------------------
 # Flagship (SURVEY.md §7.1): scan → groupBy multi-agg → orderBy.
 # A2 multi-aggregate + A5 aliased outputs (ml_project.py:131-132).
@@ -573,46 +521,6 @@ def a5_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- set ops (SURVEY.md §2.6).
-@retired_query(
-    "set_intersect",
-    """
-    SELECT c_nationkey AS nation_key FROM customer
-    INTERSECT
-    SELECT s_nationkey FROM supplier
-    ORDER BY nation_key
-    """,
-    subsumed_by="set_intersect_all",
-)
-def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer, supplier = _t(spark, sf_dir, "customer", "supplier")
-    return (
-        customer.select(F.col("c_nationkey").alias("nation_key"))
-        .intersect(supplier.select(F.col("s_nationkey").alias("nation_key")))
-        .orderBy("nation_key")
-    )
-
-
-@retired_query(
-    "set_except",
-    """
-    SELECT DISTINCT o_orderdate AS d FROM orders
-    EXCEPT
-    SELECT DISTINCT l_shipdate FROM lineitem
-    ORDER BY d
-    """,
-    subsumed_by="set_except_all",
-)
-def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT DISTINCT (order dates on which nothing shipped) — chosen
-    because it is non-empty at every scale factor, so the gate compares
-    real values; every natural-key EXCEPT is legitimately empty on this
-    data (all keys are referenced)."""
-    orders, li = _t(spark, sf_dir, "orders", "lineitem")
-    return (
-        orders.select(F.col("o_orderdate").alias("d"))
-        .subtract(li.select(F.col("l_shipdate").alias("d")))
-        .orderBy("d")
-    )
 
 
 @query(
@@ -659,7 +567,7 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL — bag semantics: each priority survives
     max(0, count_a - count_b) times (``exceptAll``; contrast
-    ``subtract``, Spark's EXCEPT DISTINCT, in set_except)."""
+    ``subtract``, Spark's EXCEPT DISTINCT)."""
     (orders,) = _t(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         F.col("o_orderpriority").alias("p")
@@ -672,112 +580,6 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("p")
-    )
-
-
-@retired_query(
-    "pagination_offset",
-    """
-    SELECT o_orderkey, o_totalprice
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 25 OFFSET 50
-    """,
-    subsumed_by="w2_topk_count + w4_window_rank",
-)
-def pagination_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyless pagination (page 3 of a price-ranked listing): ORDER BY
-    with a total tiebreak + LIMIT/OFFSET — the API-results shape.
-
-    Scale note (in the docstring because it is the op's real lesson):
-    OFFSET must materialize and discard the first N rows of a global
-    order, so deep pagination degrades linearly — a production listing
-    should keyset-paginate (WHERE (price, key) < last_seen ORDER BY …
-    LIMIT page), which this engine expresses with the same plan as
-    w3_topk_measure.  Shallow OFFSET, as here, is fine: Spark plans it
-    as a single-partition tail after per-partition top-(N+K) pruning."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .offset(50)
-        .limit(25)
-    )
-
-
-@retired_query(
-    "histogram_price_buckets",
-    """
-    SELECT CAST(floor(o_totalprice / 50000) AS INT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM orders GROUP BY bucket ORDER BY bucket
-    """,
-    subsumed_by="equi_depth_histogram + length_bucketed_batches",
-)
-def histogram_price_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram (50k-wide price buckets): the profiling
-    primitive behind every distribution dashboard.  Bucket ids are
-    exact integer floor-division; totals follow the DECIMAL sum
-    discipline.
-
-    Scale: a plain partial+final aggregate on a derived key — the
-    bucket expression is computed map-side, so the exchange carries
-    O(buckets) rows per partition."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.floor(F.col("o_totalprice") / 50000).cast("int").alias("bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice", alias="total"),
-        )
-        .orderBy("bucket")
-    )
-
-
-@retired_query(
-    "filtered_agg_orders",
-    """
-    SELECT o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(COUNT(*) FILTER (WHERE year(o_orderdate) = 1995) AS BIGINT)
-             AS n_1995,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS total_finished,
-           CAST(COUNT(DISTINCT o_custkey) FILTER (WHERE o_totalprice > 200000)
-                AS BIGINT) AS big_spenders
-    FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-    subsumed_by="dq_orders_checks + q12_late_shipment_priority",
-)
-def filtered_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional aggregation (SQL FILTER clause): several
-    differently-filtered measures in ONE aggregate pass — counts,
-    filtered decimal sums, and a filtered distinct count — instead of
-    N self-joined subqueries.  Spark expresses FILTER as
-    aggregate-over-CASE; NULLs from unmatched rows are ignored by the
-    aggregates exactly as FILTER semantics require (the filtered SUM
-    over an empty set is NULL in both engines, kept as-is).
-
-    Scale: one partial+final aggregate; the distinct-count expands
-    into its own partial (Spark's expand) but still a single scan."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    p = F.col("o_totalprice").cast("decimal(18,2)")
-    return (
-        orders.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.count(F.when(F.year("o_orderdate") == 1995, 1)).alias("n_1995"),
-            F.sum(F.when(F.col("o_orderstatus") == "F", p))
-            .cast("double")
-            .alias("total_finished"),
-            F.countDistinct(
-                F.when(F.col("o_totalprice") > 200000, F.col("o_custkey"))
-            ).alias("big_spenders"),
-        )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -829,59 +631,6 @@ def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
         .orderBy("o_custkey")
-    )
-
-
-@retired_query(
-    "grouped_concat_topk",
-    """
-    WITH r AS (
-      SELECT o_orderpriority, o_orderkey,
-             row_number() OVER (PARTITION BY o_orderpriority
-                                ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      FROM orders
-    )
-    SELECT o_orderpriority,
-           string_agg(CAST(o_orderkey AS VARCHAR), ',' ORDER BY rn) AS top3_keys
-    FROM r WHERE rn <= 3
-    GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-    subsumed_by="user_journey_top_paths + top_terms_per_lang",
-)
-def grouped_concat_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic group-concat (string_agg / GROUP_CONCAT): the
-    top-3 order keys per priority by price, joined ',' in rank order.
-    collect_list order is partition-nondeterministic, so the list is
-    gathered as (rn, key) structs and array_sort'ed before joining —
-    the only way a concatenated aggregate can ever value-hash.
-
-    Scale: the rank filter pre-trims map-side (WindowGroupLimit), so
-    the concat aggregate sees 3 rows per group, not the table."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), "o_orderkey"
-    )
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("rn"),
-                                F.col("o_orderkey").cast("string").alias("k"),
-                            )
-                        )
-                    ),
-                    lambda s: s.k,
-                ),
-            ).alias("top3_keys")
-        )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1045,56 +794,6 @@ def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query(  # r14, registry 200 -> 180
-    "date_spine_gaps",
-    """
-    WITH bounds AS (
-      SELECT MIN(CAST(o_orderdate AS DATE)) AS lo,
-             MAX(CAST(o_orderdate AS DATE)) AS hi
-      FROM orders
-    ), spine AS (
-      SELECT UNNEST(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS d
-      FROM bounds
-    ), active AS (
-      SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders
-    )
-    SELECT CAST(year(s.d) AS INT) AS yr,
-           CAST(COUNT(*) AS BIGINT) AS n_gap_days
-    FROM spine s LEFT JOIN active a ON s.d = a.d
-    WHERE a.d IS NULL
-    GROUP BY yr ORDER BY yr
-    """,
-    subsumed_by="locf_hourly_gap_fill",
-)
-def date_spine_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-spine gap detection: generate every day between the
-    first and last order date (F.sequence over dates + explode — the
-    date-spine idiom) and anti-join the active days, counting
-    zero-order days per year.  The completeness check every reporting
-    pipeline needs before trusting a daily rollup.
-
-    Scale: the spine is O(days) — thousands of rows regardless of fact
-    size — and the active-day set is a DISTINCT that collapses
-    map-side, so the gap join is tiny however large orders grows."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    bounds = orders.agg(
-        F.min(F.col("o_orderdate").cast("date")).alias("lo"),
-        F.max(F.col("o_orderdate").cast("date")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    active = orders.select(
-        F.col("o_orderdate").cast("date").alias("d")
-    ).distinct()
-    return (
-        spine.join(active, "d", "left_anti")
-        .groupBy(F.year("d").cast("int").alias("yr"))
-        .agg(F.count(F.lit(1)).alias("n_gap_days"))
-        .orderBy("yr")
-    )
-
-
 # --- W1/P3: deterministic surrogate-keyed dimension (star builder).
 @query(
     "star_date_dim",
@@ -1120,29 +819,6 @@ def star_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 # events: batch event-time windows + JSON props (SURVEY.md §2.7/§2.8)
 # ----------------------------------------------------------------------
-@retired_query(
-    "events_tumbling_1h",
-    """
-    SELECT date_trunc('hour', ts) AS window_start,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-    FROM events GROUP BY window_start ORDER BY window_start
-    """,
-    subsumed_by="events_sliding_1h_15m + streaming_tumbling_1h",
-)
-def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window as batch groupBy(window(...)) — the
-    same window() function Structured Streaming uses, so the streaming
-    upgrade path is API-compatible (SURVEY.md §2.8)."""
-    (events,) = _t(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "1 hour").getField("start").alias("window_start"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value", scale=6, alias="sum_value"),
-        )
-        .orderBy("window_start")
-    )
 
 
 @query(
@@ -1207,65 +883,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_active"))
         .orderBy("cohort_day", "days_since")
-    )
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "events_funnel_conversion",
-    """
-    WITH v AS (
-      SELECT user_id, MIN(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY user_id
-    ), c AS (
-      SELECT e.user_id, MIN(e.ts) AS t2
-      FROM events e JOIN v ON e.user_id = v.user_id AND e.ts > v.t1
-      WHERE e.event_type = 'click' GROUP BY e.user_id
-    ), p AS (
-      SELECT e.user_id, MIN(e.ts) AS t3
-      FROM events e JOIN c ON e.user_id = c.user_id AND e.ts > c.t2
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id
-    )
-    SELECT 'a_view' AS stage, CAST(COUNT(*) AS BIGINT) AS n_users FROM v
-    UNION ALL SELECT 'b_click', CAST(COUNT(*) AS BIGINT) FROM c
-    UNION ALL SELECT 'c_purchase', CAST(COUNT(*) AS BIGINT) FROM p
-    ORDER BY stage
-    """,
-    subsumed_by="streaming_funnel_completions",
-)
-def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel (view → click → purchase): per user,
-    the first view, the first click STRICTLY AFTER that view, the
-    first purchase strictly after that click; output = users surviving
-    each stage.  The event-sequence analytics staple: unlike
-    per-type counts, the ordering constraint means a purchase before
-    any view does NOT convert.
-
-    Scale: each stage is a map-side-collapsing conditional aggregate
-    joined on user_id (hash keys); no window over a user's full event
-    history, so a bot user with millions of events costs one MIN per
-    stage, not a sort."""
-    (events,) = _t(spark, sf_dir, "events")
-
-    def first_after(etype: str, prev: DataFrame, prev_t: str, out: str):
-        e = events.filter(F.col("event_type") == etype).select("user_id", "ts")
-        if prev is not None:
-            e = e.join(prev, "user_id").filter(F.col("ts") > F.col(prev_t))
-        return e.groupBy("user_id").agg(F.min("ts").alias(out))
-
-    v = first_after("view", None, "", "t1")
-    c = first_after("click", v, "t1", "t2")
-    p = first_after("purchase", c, "t2", "t3")
-
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n_users")).select(
-            F.lit(name).alias("stage"), "n_users"
-        )
-
-    return (
-        stage("a_view", v)
-        .unionByName(stage("b_click", c))
-        .unionByName(stage("c_purchase", p))
-        .orderBy("stage")
     )
 
 

@@ -16,9 +16,7 @@ from automated_etl_pipeline_spark.plans.materialize import materialize
 from automated_etl_pipeline_spark.queries import (
     _t,
     dsum,
-    probe,
     query,
-    retired_query,
     scratch,
 )
 
@@ -78,33 +76,6 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query(
-    "percentile_price",
-    """
-    SELECT l_returnflag,
-           CAST(quantile_cont(l_extendedprice, 0.5) AS DOUBLE) AS median_price,
-           CAST(quantile_cont(l_extendedprice, 0.9) AS DOUBLE) AS p90_price,
-           CAST(MIN(l_extendedprice) AS DOUBLE) AS min_price
-    FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-    subsumed_by="approx_percentile_price + weighted_median_price + equi_depth_histogram",
-)
-def percentile_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (Spark `percentile` ≡ DuckDB
-    `quantile_cont`). At 100 TB prefer approx_percentile (t-digest,
-    single pass, mergeable); exact percentile shuffles values per group."""
-    (li,) = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.percentile("l_extendedprice", F.lit(0.5)).alias("median_price"),
-            F.percentile("l_extendedprice", F.lit(0.9)).alias("p90_price"),
-            F.min("l_extendedprice").alias("min_price"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
 @query(
     "approx_percentile_price",
     """
@@ -116,7 +87,7 @@ def percentile_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def approx_percentile_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documented 100-TB swap for percentile_price, itself gated
+    """The documented 100-TB swap for exact percentiles, itself gated
     (VERDICT r4 ask #7): approx_percentile (Greenwald-Khanna, single
     pass, mergeable — no per-group value shuffle) with the rank-error
     guarantee CHECKED IN-QUERY.  GK with accuracy A returns an element
@@ -156,75 +127,6 @@ def approx_percentile_price(spark: SparkSession, sf_dir: str) -> DataFrame:
             rank_ok(0.9, F.col("ap")[1]).alias("p90_in_bounds"),
         )
         .orderBy("l_returnflag")
-    )
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "sessionize_events",
-    """
-    WITH ordered AS (
-      SELECT user_id, ts, event_id, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-      FROM events
-    ), flagged AS (
-      SELECT user_id, ts, event_id, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > 1800 * 1000000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM ordered
-    ), numbered AS (
-      SELECT user_id, ts,
-             CAST(SUM(new_session) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-      FROM flagged
-    )
-    SELECT user_id, session_id, COUNT(*) AS n_events,
-           MIN(ts) AS session_start, MAX(ts) AS session_end
-    FROM numbered GROUP BY user_id, session_id
-    ORDER BY user_id, session_id
-    """,
-    subsumed_by="events_session_window",
-)
-def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization (30-min inactivity gap) via gaps-and-islands:
-    lag → new-session flag → running sum → group. One shuffle on
-    user_id; all window work is within-partition. The streaming
-    equivalent is session_window()/applyInPandasWithState."""
-    (events,) = _t(spark, sf_dir, "events")
-    us = F.unix_micros("ts")
-    w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # the running sum must use the SAME total order as the lag window,
-    # or a tied-timestamp event can land in the wrong session
-    w_run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    flagged = events.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            F.lag(us).over(w_order).isNull()
-            | ((us - F.lag(us).over(w_order)) > 1800 * 1_000_000),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    numbered = flagged.select(
-        "user_id",
-        "ts",
-        F.sum("new_session").over(w_run).cast("long").alias("session_id"),
-    )
-    return (
-        numbered.groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -270,70 +172,6 @@ def f4_initcap_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return part.select(
         "p_partkey", F.initcap(F.lower("p_name")).alias("name_cased")
     ).orderBy("p_partkey")
-
-
-@retired_query(
-    "above_nation_avg_balance",
-    """
-    SELECT c_custkey, c_acctbal, nation_avg FROM (
-      SELECT c_custkey,
-             c_acctbal,
-             CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) OVER (PARTITION BY c_nationkey) AS DOUBLE)
-               / COUNT(*) OVER (PARTITION BY c_nationkey) AS nation_avg
-      FROM customer
-    ) WHERE c_acctbal > nation_avg
-    ORDER BY c_custkey
-    """,
-    subsumed_by="q17_scalar_subquery + q22_idle_balances",
-)
-def above_nation_avg_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The correlated-subquery pattern (balance above nation average)
-    de-correlated into one window pass — one shuffle on the partition
-    key instead of a join against a subquery aggregate."""
-    (customer,) = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey")
-    nation_avg = (
-        F.sum(F.col("c_acctbal").cast("decimal(18,2)")).over(w).cast("double")
-        / F.count(F.lit(1)).over(w)
-    )
-    return (
-        customer.select("c_custkey", "c_acctbal", nation_avg.alias("nation_avg"))
-        .filter(F.col("c_acctbal") > F.col("nation_avg"))
-        .orderBy("c_custkey")
-    )
-
-
-@retired_query(
-    "first_last_order",
-    """
-    SELECT DISTINCT o_custkey,
-           first_value(o_orderkey) OVER w AS first_order,
-           last_value(o_orderkey) OVER w AS last_order,
-           CAST(first_value(o_totalprice) OVER w AS DOUBLE) AS first_price
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-    ORDER BY o_custkey
-    """,
-    subsumed_by="window_first_last_nth",
-)
-def first_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return (
-        orders.select(
-            "o_custkey",
-            F.first("o_orderkey").over(w).alias("first_order"),
-            F.last("o_orderkey").over(w).alias("last_order"),
-            F.first("o_totalprice").over(w).alias("first_price"),
-        )
-        .distinct()
-        .orderBy("o_custkey")
-    )
 
 
 # ----------------------------------------------------------------------
@@ -385,47 +223,6 @@ def q17_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, df in load_testdata(spark, sf_dir, ["lineitem", "part"]).items():
         df.createOrReplaceTempView(name)
     return spark.sql(_Q17_SCALAR_SQL)
-
-
-@retired_query(
-    "event_funnel_conversion",
-    """
-    WITH firsts AS (
-      SELECT user_id,
-             MIN(ts) FILTER (event_type = 'signup') AS first_signup,
-             MIN(ts) FILTER (event_type = 'purchase') AS first_purchase
-      FROM events GROUP BY user_id
-    )
-    SELECT COUNT(*) FILTER (first_signup IS NOT NULL) AS n_signed_up,
-           COUNT(*) FILTER (first_signup IS NOT NULL
-                            AND first_purchase > first_signup) AS n_converted
-    FROM firsts
-    """,
-    subsumed_by="streaming_funnel_completions",
-)
-def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Funnel (signup → later purchase) in one conditional-aggregation
-    pass: per-user firsts via FILTERed MINs, then a global roll-up —
-    one shuffle on user_id, no self-join of the events table."""
-    (events,) = _t(spark, sf_dir, "events")
-    firsts = events.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias(
-            "first_signup"
-        ),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "first_purchase"
-        ),
-    )
-    return firsts.agg(
-        F.count(F.when(F.col("first_signup").isNotNull(), 1)).alias("n_signed_up"),
-        F.count(
-            F.when(
-                F.col("first_signup").isNotNull()
-                & (F.col("first_purchase") > F.col("first_signup")),
-                1,
-            )
-        ).alias("n_converted"),
-    )
 
 
 @query(
@@ -613,7 +410,7 @@ def a7_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's native session_window() as a batch aggregation — same
-    semantics as the manual gaps-and-islands (sessionize_events), but
+    semantics as the manual gaps-and-islands, but
     one groupBy, no window functions; the oracle IS the
     gaps-and-islands formulation with end = last event + gap
     ([start, end) intervals: an event landing exactly on the boundary
@@ -664,48 +461,6 @@ def asof_last_view_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return asof_join(
         purchases, views, ["user_id"], "ts", ["value"], dedup_right="max"
-    ).orderBy("event_id")
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "asof_next_purchase_value",
-    """
-    WITH l AS (
-      SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'
-    ), r AS (
-      SELECT user_id, ts, MAX(value) AS value FROM events
-      WHERE event_type = 'purchase' GROUP BY user_id, ts
-    )
-    SELECT l.user_id, l.event_id, l.ts, r.value
-    FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
-    ORDER BY l.event_id
-    """,
-    subsumed_by="asof_last_view_value",
-)
-def asof_next_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of join (operators/asof.py direction='forward'):
-    each view gets the value of the user's next purchase at-or-after
-    it — the conversion-attribution mirror of asof_last_view_value.
-    Same single-shuffle union+window plan with the within-partition
-    sort reversed; oracle is DuckDB's native forward ASOF
-    (``l.ts <= r.ts``)."""
-    from automated_etl_pipeline_spark.operators.asof import asof_join
-
-    (events,) = _t(spark, sf_dir, "events")
-    views = events.filter(F.col("event_type") == "view").select(
-        "user_id", "event_id", "ts"
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    return asof_join(
-        views,
-        purchases,
-        ["user_id"],
-        "ts",
-        ["value"],
-        dedup_right="max",
-        direction="forward",
     ).orderBy("event_id")
 
 
@@ -784,84 +539,6 @@ def dq_orders_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         unique("o_orderkey"),
     ]
     return run_checks(orders, checks).orderBy("check_name")
-
-
-@retired_query(
-    "rolling_avg_order_price",
-    """
-    SELECT o_custkey, o_orderkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
-             / COUNT(*) OVER w AS rolling_avg
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-    ORDER BY o_custkey, o_orderkey
-    """,
-    subsumed_by="rolling_90d_peak_spend + rolling_anomaly_zscores",
-)
-def rolling_avg_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-order moving average per customer — a ROWS-framed sliding
-    aggregate. Exact decimal SUM inside the frame, ONE double division
-    at the end: engine avg() disagrees across engines (Spark keeps
-    decimal scale, DuckDB divides as double), sum/count does not."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(-2, 0)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        (
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).over(w).cast("double")
-            / F.count(F.lit(1)).over(w)
-        ).alias("rolling_avg"),
-    ).orderBy("o_custkey", "o_orderkey")
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "customer_order_gaps",
-    """
-    WITH gaps AS (
-      SELECT o_custkey,
-             date_diff('day',
-               lag(o_orderdate) OVER (PARTITION BY o_custkey
-                                      ORDER BY o_orderdate, o_orderkey),
-               o_orderdate) AS gap_days
-      FROM orders
-    )
-    SELECT o_custkey,
-           COUNT(gap_days) AS n_gaps,
-           CAST(MIN(gap_days) AS BIGINT) AS min_gap,
-           CAST(MAX(gap_days) AS BIGINT) AS max_gap,
-           CAST(SUM(gap_days) AS BIGINT) AS total_gap_days
-    FROM gaps GROUP BY o_custkey
-    HAVING COUNT(gap_days) > 0
-    ORDER BY o_custkey
-    """,
-    subsumed_by="events_session_window + trend_slope_per_key",
-)
-def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-order gap statistics per customer via lag + datediff —
-    integer-day arithmetic, so no float drift to manage."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = orders.select(
-        "o_custkey",
-        F.datediff("o_orderdate", F.lag("o_orderdate").over(w)).alias("gap_days"),
-    )
-    return (
-        gaps.groupBy("o_custkey")
-        .agg(
-            F.count("gap_days").alias("n_gaps"),
-            F.min("gap_days").cast("long").alias("min_gap"),
-            F.max("gap_days").cast("long").alias("max_gap"),
-            F.sum("gap_days").cast("long").alias("total_gap_days"),
-        )
-        .filter(F.col("n_gaps") > 0)
-        .orderBy("o_custkey")
-    )
 
 
 def _zorder_oracle() -> str:
@@ -986,139 +663,6 @@ def streaming_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
             shuffle_partitions=2,
         )
     return out.orderBy("window_start")
-
-
-@retired_query(
-    "mom_order_growth",
-    """
-    WITH monthly AS (
-      SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS month_total
-      FROM orders GROUP BY order_month
-    )
-    SELECT order_month, month_total,
-           ROUND(month_total / lag(month_total) OVER (ORDER BY order_month) - 1, 6)
-             AS mom_growth
-    FROM monthly ORDER BY order_month
-    """,
-    subsumed_by="trend_slope_per_key",
-)
-def mom_order_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window-over-aggregate composition: monthly revenue plus
-    month-over-month growth via lag on the aggregated series (the
-    aggregate shrinks the data to months, so the unpartitioned lag
-    window is driver-trivial by construction)."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
-    ).agg(dsum("o_totalprice", alias="month_total"))
-    w = Window.orderBy("order_month")
-    return monthly.select(
-        "order_month",
-        "month_total",
-        F.round(
-            F.col("month_total") / F.lag("month_total").over(w) - 1, 6
-        ).alias("mom_growth"),
-    ).orderBy("order_month")
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "event_type_bigrams",
-    """
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS next_type
-      FROM events
-    )
-    SELECT event_type, next_type, COUNT(*) AS n_transitions
-    FROM seq WHERE next_type IS NOT NULL
-    GROUP BY event_type, next_type
-    ORDER BY event_type, next_type
-    """,
-    subsumed_by="user_journey_top_paths",
-)
-def event_type_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Path analysis: counts of consecutive event-type transitions per
-    user (lead over the per-user timeline, then a global roll-up) —
-    the Markov-matrix building block of funnel/journey analytics."""
-    (events,) = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = events.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    )
-    return (
-        seq.filter(F.col("next_type").isNotNull())
-        .groupBy("event_type", "next_type")
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-        .orderBy("event_type", "next_type")
-    )
-
-
-@retired_query(
-    "nation_revenue_share",
-    """
-    WITH per_nation AS (
-      SELECT n_name,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM orders
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation ON c_nationkey = n_nationkey
-      GROUP BY n_name
-    )
-    SELECT n_name, revenue,
-           ROUND(revenue / SUM(revenue) OVER (), 6) AS share
-    FROM per_nation ORDER BY n_name
-    """,
-    subsumed_by="q8_market_share + q14_promo_revenue_share",
-)
-def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percent-of-total: per-nation revenue over a window-summed global
-    total — the denominator window runs over the 25-row aggregate, not
-    the fact table (sums are exact decimals, so the single double
-    division matches the oracle bit-for-bit)."""
-    orders, customer, nation = _t(spark, sf_dir, "orders", "customer", "nation")
-    per_nation = (
-        # customer scales with SF — no forced broadcast (AQE decides);
-        # nation is fixed-cardinality, hint stays
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(dsum("o_totalprice", alias="revenue"))
-    )
-    w = Window.partitionBy()
-    return per_nation.select(
-        "n_name",
-        "revenue",
-        F.round(F.col("revenue") / F.sum("revenue").over(w), 6).alias("share"),
-    ).orderBy("n_name")
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "doc_length_histogram",
-    """
-    SELECT CAST(n_chars // 100 AS BIGINT) AS bucket,
-           COUNT(*) AS n_docs,
-           CAST(MIN(n_chars) AS BIGINT) AS min_chars,
-           CAST(MAX(n_chars) AS BIGINT) AS max_chars
-    FROM documents GROUP BY bucket ORDER BY bucket
-    """,
-    subsumed_by="length_bucketed_batches",
-)
-def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram of document lengths (100-char buckets) —
-    the profiling pass every corpus intake runs; pure integer
-    arithmetic, one agg shuffle over bucket ids."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.floor(F.col("n_chars") / 100).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("n_chars").alias("min_chars"),
-            F.max("n_chars").alias("max_chars"),
-        )
-        .orderBy("bucket")
-    )
 
 
 # ----------------------------------------------------------------------
@@ -1402,37 +946,6 @@ def scd2_priority_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query("scd2_priority_history_chunked", _SCD2_PRIORITY_ORACLE, subsumed_by="scd2_priority_history")
-def scd2_priority_history_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """scd2_priority_history via the hot-key-safe chunked operator
-    (operators/scd.scd2_history_chunked): the change stream is
-    range-chunked across partitions and runs are stitched at chunk
-    edges, so no task ever windows one key's full history — the
-    SCALE_SMOKE_r06 residual-risk mitigation, here proven equivalent
-    under the SAME DuckDB oracle as the plain gate (and exact-equal to
-    scd2_history in tests/test_scd.py, including a 100k-update hot
-    key)."""
-    from automated_etl_pipeline_spark.operators.scd import scd2_history_chunked
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    hist = scd2_history_chunked(
-        orders,
-        key_cols=["o_custkey"],
-        attr_cols=["o_orderpriority"],
-        ts_col="o_orderdate",
-        tiebreak="o_orderkey",
-    )
-    return (
-        hist.groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_versions"),
-            F.max("n_updates").alias("longest_run"),
-            F.max_by("o_orderpriority", "version").alias("current_priority"),
-        )
-        .orderBy("o_custkey")
-    )
-
-
 @query(
     "merge_upsert_orders",
     """
@@ -1475,82 +988,6 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("o_totalprice", alias="total"),
         )
         .orderBy("o_orderstatus")
-    )
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "snapshot_diff_orders",
-    """
-    WITH new_snap AS (
-      SELECT o_orderkey,
-             CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice * 2
-                  ELSE o_totalprice END AS o_totalprice
-      FROM orders WHERE o_orderkey % 7 != 0
-      UNION ALL
-      SELECT o_orderkey + 10000000, o_totalprice FROM orders
-      WHERE o_orderkey % 13 = 0
-    ), old_snap AS (
-      SELECT o_orderkey, o_totalprice FROM orders
-    )
-    SELECT CASE WHEN o.o_orderkey IS NULL THEN 'added'
-                WHEN n.o_orderkey IS NULL THEN 'removed'
-                WHEN n.o_totalprice != o.o_totalprice THEN 'changed'
-                ELSE 'unchanged' END AS change,
-           CAST(COUNT(*) AS BIGINT) AS n_rows
-    FROM old_snap o FULL OUTER JOIN new_snap n ON o.o_orderkey = n.o_orderkey
-    GROUP BY change ORDER BY change
-    """,
-    subsumed_by="merge_upsert_orders + mv_incremental_refresh",
-)
-def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff — the table-versioning audit between two states of
-    a dataset (what a lakehouse change-data-feed reports): a synthetic
-    'next day' snapshot (every 7th order deleted, every 10th re-priced,
-    every 13th re-inserted under a shifted key) full-outer-joined to
-    the original on the key, rows classified
-    added/removed/changed/unchanged and counted.
-
-    Scale: one full-outer hash join on the table key + an O(4)
-    aggregate; no row-compare UDF — the change classification is a
-    CASE over the join's null pattern, which Catalyst evaluates inside
-    codegen.  For wide tables, compare a column-pruned content hash
-    instead of each column (same plan shape)."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    old_snap = orders.select("o_orderkey", "o_totalprice")
-    new_snap = (
-        orders.filter(F.col("o_orderkey") % 7 != 0)
-        .select(
-            "o_orderkey",
-            F.when(
-                F.col("o_orderkey") % 10 == 0, F.col("o_totalprice") * 2
-            )
-            .otherwise(F.col("o_totalprice"))
-            .alias("o_totalprice"),
-        )
-        .unionByName(
-            orders.filter(F.col("o_orderkey") % 13 == 0).select(
-                (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
-                "o_totalprice",
-            )
-        )
-    )
-    o = old_snap.withColumnRenamed("o_orderkey", "k_o").withColumnRenamed(
-        "o_totalprice", "p_o"
-    )
-    n = new_snap.withColumnRenamed("o_orderkey", "k_n").withColumnRenamed(
-        "o_totalprice", "p_n"
-    )
-    change = (
-        F.when(F.col("k_o").isNull(), "added")
-        .when(F.col("k_n").isNull(), "removed")
-        .when(F.col("p_n") != F.col("p_o"), "changed")
-        .otherwise("unchanged")
-    )
-    return (
-        o.join(n, F.col("k_o") == F.col("k_n"), "full_outer")
-        .groupBy(change.alias("change"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy("change")
     )
 
 
@@ -1647,7 +1084,7 @@ def streaming_funnel_completions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming funnel under the value gate: the
     applyInPandasWithState staged walk (streaming/stateful.py
     funnel_stateful) over a staged event stream must equal the batch
-    events_funnel_conversion semantics restricted to COMPLETED users —
+    funnel semantics restricted to COMPLETED users —
     per user, the first view, first click strictly after it, first
     purchase strictly after that, emitted exactly once at completion.
     Single availableNow drain; the handler's per-batch sort owns
@@ -1729,68 +1166,6 @@ def rolling_90d_peak_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query(
-    "hll_distinct_rollup",
-    """
-    SELECT o_orderpriority,
-           CAST(COUNT(DISTINCT strftime(o_orderdate, '%Y-%m')) AS BIGINT)
-             AS n_fine_groups,
-           CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_exact,
-           TRUE AS rollup_within_5pct
-    FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-    subsumed_by="hll_merge_error_bound",
-)
-def hll_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable approximate-distinct rollup (functions/sketches.py):
-    per-(priority, month) HLL partials → per-priority merge → estimate.
-    The 100 TB pattern: raw data scanned once at fine grain; coarser
-    rollups answered from ~KB sketches, never a rescan.
-
-    Oracle-checkable since r8 (VERDICT r7 ask #1 — this was the last
-    non-ML no_oracle row): the raw DataSketches estimate stays engine-
-    specific (DuckDB runs a different HLL), so the gate emits what IS
-    portable, the approx_percentile_price pattern: exact values DuckDB
-    reproduces (distinct fine groups actually merged, exact distinct
-    customers) plus the sketch guarantee recomputed in-query as a
-    boolean — the merged-from-months estimate within 5% of the exact
-    count (lg_k=12 → ~1.6% RSE; 5% ≈ 3 standard errors, the envelope
-    hll_merge_error_bound pins).  A FALSE is a broken sketch pipeline,
-    not an approximation artifact; the hash would catch it."""
-    from automated_etl_pipeline_spark.functions.sketches import (
-        hll_build,
-        hll_estimate,
-        hll_merge,
-    )
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    fine = orders.withColumn("m", F.date_format("o_orderdate", "yyyy-MM"))
-    parts = hll_build(fine, ["o_orderpriority", "m"], "o_custkey")
-    est = hll_estimate(
-        hll_merge(parts, ["o_orderpriority"]), out_col="est_rollup"
-    )
-    fine_ct = parts.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_fine_groups")
-    )
-    exact = orders.groupBy("o_orderpriority").agg(
-        F.countDistinct("o_custkey").alias("n_exact")
-    )
-    return (
-        est.join(fine_ct, "o_orderpriority")
-        .join(exact, "o_orderpriority")
-        .select(
-            "o_orderpriority",
-            "n_fine_groups",
-            "n_exact",
-            (
-                F.abs(F.col("est_rollup") - F.col("n_exact"))
-                <= 0.05 * F.col("n_exact")
-            ).alias("rollup_within_5pct"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
 @query(
     "hll_merge_error_bound",
     """
@@ -1804,9 +1179,8 @@ def hll_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hll_merge_error_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HLL merge contract under the value gate (VERDICT r4
     stretch, amended): the raw estimates stay engine-specific
-    (hll_distinct_rollup therefore gates derived exactness bounds
-    rather than raw sketch registers — it has carried a full SQL
-    oracle since r8) and are NOT
+    (so the gates check derived exactness bounds rather than raw
+    sketch registers) and are NOT
     merge-shape-invariant — DataSketches answers a single-pass sketch
     via the HIP accumulator but a union via the composite estimator,
     so exact merged==direct equality does not hold (measured 1302 vs
@@ -2139,45 +1513,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
-    )
-
-
-@retired_query(
-    "ntile_quartile_spend",
-    """
-    WITH spend AS (
-      SELECT o_custkey,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s
-      FROM orders GROUP BY o_custkey
-    ), q AS (
-      SELECT s, ntile(4) OVER (ORDER BY s, o_custkey) AS quartile FROM spend
-    )
-    SELECT quartile, COUNT(*) AS n_cust,
-           CAST(MIN(s) AS DOUBLE) AS min_spend,
-           CAST(MAX(s) AS DOUBLE) AS max_spend
-    FROM q GROUP BY quartile ORDER BY quartile
-    """,
-    subsumed_by="window_ntile_quartiles",
-)
-def ntile_quartile_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W-surface breadth: ntile bucketing over a pre-aggregated series
-    (customer lifetime spend → quartiles → per-quartile bounds). The
-    window is unpartitioned but runs AFTER the per-customer aggregate
-    shrank the data 10×, with a total (s, custkey) order so tile
-    boundaries are deterministic; at 100 TB the same shape holds
-    because ntile input is per-entity rollups, never raw facts."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    spend = orders.groupBy("o_custkey").agg(dsum("o_totalprice", alias="s"))
-    w = Window.orderBy("s", "o_custkey")
-    q = spend.select("s", F.ntile(4).over(w).alias("quartile"))
-    return (
-        q.groupBy("quartile")
-        .agg(
-            F.count(F.lit(1)).alias("n_cust"),
-            F.min("s").alias("min_spend"),
-            F.max("s").alias("max_spend"),
-        )
-        .orderBy("quartile")
     )
 
 
@@ -2993,7 +2328,7 @@ def streaming_hll_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, incremental merges per trigger), and the drained estimates
     must sit inside the sketch's 5% envelope of a BATCH exact distinct
     recount per hour, emitted as oracle-checkable booleans beside the
-    exact counts (the hll_distinct_rollup pattern, now across the
+    exact counts (the hll_merge_error_bound pattern, now across the
     batch/streaming boundary: a wrong watermark, a dropped trigger, or
     state-merge corruption shifts an estimate or loses a window and
     breaks the hash)."""
@@ -3210,8 +2545,6 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   * the oracle's carry is the two-window COUNT/MAX gap-fill trick
 #     (non-null-count defines a carry group; MAX over the group
 #     fetches the single non-null), not LAST_VALUE IGNORE NULLS.
-# The four locf_probe_* gates below re-emit one pipeline stage each
-# so a driver red localizes to hourly-reduce / spine / join / carry.
 # ----------------------------------------------------------------------
 
 # 5 digit positions => hour offsets 0..99999 (~11.4 years of hourly
@@ -3286,7 +2619,7 @@ FROM filled GROUP BY bucket ORDER BY bucket
 def _locf_filled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared LOCF pipeline: integer-hour reduce -> per-key spine ->
     left join -> carry window (section comment has the determinism
-    contract; the gate and its probes all read this one frame)."""
+    contract)."""
     (events,) = _t(spark, sf_dir, "events")
     base = events.select(
         "user_id",
@@ -3360,164 +2693,6 @@ def locf_hourly_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             # every engine build (multiply + floor are required IEEE
             # ops); summing the resulting BIGINT cents is exact and
             # order-free — no decimal-grid rounding anywhere.
-            F.sum(
-                F.floor(F.col("locf") * 100).cast("bigint")
-            ).alias("sum_locf_cents"),
-        )
-        .orderBy("bucket")
-    )
-
-
-# --- locf probes (VERDICT r9 ask #1): one pipeline stage per gate, all
-# pure BIGINTs, so the r10 driver file localizes a red to a stage.
-
-_LOCF_PROBE_HOURLY_ORACLE = (
-    "WITH " + _LOCF_NUMS + "," + _LOCF_CORE + """
-SELECT user_id % 50 AS bucket,
-       COUNT(*) AS n_hour_groups,
-       CAST(SUM(CAST(floor(last_val * 100) AS BIGINT)) AS BIGINT)
-         AS sum_last_cents,
-       CAST(SUM(hi) AS BIGINT) AS sum_hi
-FROM hourly GROUP BY bucket ORDER BY bucket
-"""
-)
-
-
-@probe("locf_probe_hourly", _LOCF_PROBE_HOURLY_ORACLE)
-def locf_probe_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 1/4 for locf_hourly_gap_fill: ONLY the per-(user, hour)
-    last-value reduce — hour-index arithmetic + deterministic pick +
-    floor-cents conversion, no spine/join/carry.  Red here = the
-    divergence is in the reduce or the float->cent conversion."""
-    (events,) = _t(spark, sf_dir, "events")
-    base = events.select(
-        "user_id",
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000.0))
-        .cast("bigint")
-        .alias("hi"),
-        F.unix_micros("ts").alias("us"),
-        "value",
-    )
-    hourly = base.groupBy("user_id", "hi").agg(
-        F.max_by("value", "us").alias("last_val")
-    )
-    return (
-        hourly.groupBy(F.pmod("user_id", F.lit(50)).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_hour_groups"),
-            F.sum(
-                F.floor(F.col("last_val") * 100).cast("bigint")
-            ).alias("sum_last_cents"),
-            F.sum("hi").alias("sum_hi"),
-        )
-        .orderBy("bucket")
-    )
-
-
-_LOCF_PROBE_SPINE_ORACLE = (
-    "WITH " + _LOCF_NUMS + "," + _LOCF_CORE + """
-SELECT user_id % 50 AS bucket,
-       COUNT(*) AS n_hours,
-       MIN(hi) AS min_hi, MAX(hi) AS max_hi
-FROM spine GROUP BY bucket ORDER BY bucket
-"""
-)
-
-
-@probe("locf_probe_spine", _LOCF_PROBE_SPINE_ORACLE)
-def locf_probe_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 2/4: ONLY the dense per-user hour spine (span bounds +
-    integer sequence / numbers-table explode).  Red here with probe
-    1/4 green = the spine generation diverges."""
-    (events,) = _t(spark, sf_dir, "events")
-    base = events.select(
-        "user_id",
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000.0))
-        .cast("bigint")
-        .alias("hi"),
-    )
-    span = base.groupBy("user_id").agg(
-        F.min("hi").alias("h0"), F.max("hi").alias("h1")
-    )
-    spine = span.select(
-        "user_id",
-        # assert folded into the sequence bound — see locf's spine
-        F.explode(
-            F.sequence(
-                F.col("h0"),
-                F.col("h0")
-                + F.when(
-                    F.assert_true(
-                        F.col("h1") - F.col("h0") < 100000,
-                        F.lit("locf spine span exceeds the oracle numbers table"),
-                    ).isNull(),
-                    F.col("h1") - F.col("h0"),
-                ),
-            )
-        ).alias("hi"),
-    )
-    return (
-        spine.groupBy(F.pmod("user_id", F.lit(50)).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_hours"),
-            F.min("hi").alias("min_hi"),
-            F.max("hi").alias("max_hi"),
-        )
-        .orderBy("bucket")
-    )
-
-
-_LOCF_PROBE_FILL_ORACLE = (
-    "WITH " + _LOCF_NUMS + "," + _LOCF_CORE + """
-SELECT user_id % 50 AS bucket,
-       CAST(SUM(CASE WHEN last_val IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_filled,
-       CAST(SUM(CASE WHEN last_val IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_observed
-FROM filled GROUP BY bucket ORDER BY bucket
-"""
-)
-
-
-@probe("locf_probe_fill", _LOCF_PROBE_FILL_ORACLE)
-def locf_probe_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 3/4: the spine LEFT JOIN hourly null/non-null split —
-    no carry values in the gate.  Red here with 1-2/4 green = the
-    join keying diverges."""
-    filled = _locf_filled(spark, sf_dir)
-    return (
-        filled.groupBy(F.pmod("user_id", F.lit(50)).alias("bucket"))
-        .agg(
-            F.sum(
-                F.when(F.col("last_val").isNull(), 1).otherwise(0)
-            ).alias("n_filled"),
-            F.sum(
-                F.when(F.col("last_val").isNotNull(), 1).otherwise(0)
-            ).alias("n_observed"),
-        )
-        .orderBy("bucket")
-    )
-
-
-_LOCF_PROBE_SUM_ORACLE = (
-    "WITH " + _LOCF_NUMS + "," + _LOCF_CORE + """
-SELECT user_id % 50 AS bucket,
-       CAST(SUM(CAST(floor(locf * 100) AS BIGINT)) AS BIGINT)
-         AS sum_locf_cents
-FROM filled GROUP BY bucket ORDER BY bucket
-"""
-)
-
-
-@probe("locf_probe_sum", _LOCF_PROBE_SUM_ORACLE)
-def locf_probe_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 4/4: ONLY the carried-series cent sum (the full carry
-    window).  Red here with 1-3/4 green = the LOCF carry itself
-    diverges between the engines' gap-fill constructions."""
-    filled = _locf_filled(spark, sf_dir)
-    return (
-        filled.groupBy(F.pmod("user_id", F.lit(50)).alias("bucket"))
-        .agg(
             F.sum(
                 F.floor(F.col("locf") * 100).cast("bigint")
             ).alias("sum_locf_cents"),
@@ -3681,8 +2856,8 @@ FROM scored GROUP BY bucket ORDER BY bucket
 
 
 def _rolling_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared trailing-24h integer-moment frame for the rolling gate
-    and its probes: BIGINT cents through the retraction union
+    """Trailing-24h integer-moment frame for the rolling gate:
+    BIGINT cents through the retraction union
     (operators/rolling.py), then the exact per-row pair
     dnum = n*x - s (n times the deviation from the window mean) and
     vnum = n*s2 - s^2 (n*(n-1) times the window variance) — both
@@ -3769,113 +2944,6 @@ def rolling_anomaly_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- rolling probes (VERDICT r9 ask #1): input conversion alone, then
-# window moments alone, so a driver red localizes to cents / window /
-# threshold arithmetic.
-
-_ROLLING_PROBE_INPUT_ORACLE = """
-SELECT user_id % 20 AS bucket,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_xc,
-       CAST(SUM(CAST(floor(value * 100) AS BIGINT)
-                * CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_xc2
-FROM events GROUP BY bucket ORDER BY bucket
-"""
-
-
-@probe("rolling_probe_input", _ROLLING_PROBE_INPUT_ORACLE)
-def rolling_probe_input(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 1/3 for rolling_anomaly_zscores: ONLY the floor-cents
-    conversion of events.value (no window at all).  Red here = the
-    double->BIGINT conversion itself diverges between engines (would
-    also explain locf_probe_hourly and the incr probes)."""
-    (events,) = _t(spark, sf_dir, "events")
-    xc = F.floor(F.col("value") * 100).cast("bigint")
-    return (
-        events.select(
-            F.pmod("user_id", F.lit(20)).alias("bucket"), xc.alias("xc")
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("xc").alias("sum_xc"),
-            F.sum(F.col("xc") * F.col("xc")).alias("sum_xc2"),
-        )
-        .orderBy("bucket")
-    )
-
-
-_ROLLING_PROBE_MOMENTS_ORACLE = (
-    "WITH " + _ROLLING_ANOMALY_CORE + """
-SELECT user_id % 20 AS bucket,
-       CAST(SUM(n) AS BIGINT) AS sum_n,
-       CAST(SUM(dnum * dnum) AS BIGINT) AS sum_dnum2,
-       CAST(SUM(vnum) AS BIGINT) AS sum_vnum
-FROM scored GROUP BY bucket ORDER BY bucket
-"""
-)
-
-
-@probe("rolling_probe_moments", _ROLLING_PROBE_MOMENTS_ORACLE)
-def rolling_probe_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 2/3: the trailing-window moments themselves (checksums
-    of n, dnum^2, vnum per bucket) — pins the retraction union
-    against DuckDB's sliding RANGE frame with no thresholds.  Red
-    here with 1/3 green = the 24h frame membership diverges.
-    Bounds at the tested SFs: n <= 11 per frame, xc <= 6e4, so
-    dnum^2 <= (11*6e4)^2 ~ 4.4e11 and the bucket sums stay far
-    inside BIGINT."""
-    s = _rolling_scored(spark, sf_dir)
-    return (
-        s.groupBy(F.pmod("user_id", F.lit(20)).alias("bucket"))
-        .agg(
-            F.sum("n").alias("sum_n"),
-            F.sum(F.col("dnum") * F.col("dnum"))
-            .cast("bigint")
-            .alias("sum_dnum2"),
-            F.sum("vnum").cast("bigint").alias("sum_vnum"),
-        )
-        .orderBy("bucket")
-    )
-
-
-_ROLLING_PROBE_FLAGS_ORACLE = (
-    "WITH " + _ROLLING_ANOMALY_CORE + """
-SELECT user_id % 20 AS bucket,
-       CAST(SUM(CASE WHEN n >= 5 AND vnum > 0 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_scored,
-       CAST(SUM(CASE WHEN n >= 5 AND vnum > 0
-                 AND 25 * dnum * dnum * (n - 1) > 64 * n * vnum
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies
-FROM scored GROUP BY bucket ORDER BY bucket
-"""
-)
-
-
-@probe("rolling_probe_flags", _ROLLING_PROBE_FLAGS_ORACLE)
-def rolling_probe_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 3/3: ONLY the guard + z > 1.6 threshold counts.  Red
-    here with 2/3 green = the exact-integer comparison arithmetic
-    diverges (which the integer construction should make
-    impossible)."""
-    s = _rolling_scored(spark, sf_dir)
-    lhs = F.col("dnum") * F.col("dnum") * (F.col("n") - 1)
-    rhs_base = F.col("vnum") * F.col("n")
-    ok = (F.col("n") >= 5) & (F.col("vnum") > 0)
-    return (
-        s.groupBy(F.pmod("user_id", F.lit(20)).alias("bucket"))
-        .agg(
-            F.sum(F.when(ok, 1).otherwise(0)).cast("bigint").alias(
-                "n_scored"
-            ),
-            F.sum(
-                F.when(ok & (lhs * 25 > rhs_base * 64), 1).otherwise(0)
-            ).cast("bigint").alias("n_anomalies"),
-        )
-        .orderBy("bucket")
-    )
-
-
 # ----------------------------------------------------------------------
 # Functional-dependency audit (operators/quality.fd_audit): the DQ
 # probe behind schema discovery and denormalization decisions — does
@@ -3948,312 +3016,6 @@ def fd_dependency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Incremental aggregate maintenance: merge STORED per-group partials
-# with a new raw batch — the lambda/IVM primitive that lets a daily
-# 100 TB rollup cost one day's scan instead of the full history.
-# The state vector (n, decimal sum, min, max) is chosen mergeable:
-# each component combines associatively (add / add / least /
-# greatest), so partials from any partitioning of history combine to
-# the exact full answer.  The gate PROVES the merge identity
-# in-query: it computes merged(old-partials, new-batch) AND the
-# full-history recompute, and emits the merged sums plus the BIGINT
-# count of state components that agree (0..4) — a non-mergeable
-# component (e.g. avg stored as avg) would break the hash
-# immediately.  BIGINT micro-unit sums keep merge order irrelevant
-# (exact integer addition — the determinism rule doing double duty
-# as IVM correctness).  The three incr_probe_* gates split the
-# cutoff / sum / extrema components for driver-side localization.
-# ----------------------------------------------------------------------
-
-_INCR_CORE = """
-e AS (
-  SELECT event_type, epoch_us(ts) AS us, value,
-         CAST(floor(value * 1000000) AS BIGINT) AS v_mic
-  FROM events
-),
-old_part AS (
-  SELECT event_type, COUNT(*) AS n, CAST(SUM(v_mic) AS BIGINT) AS s,
-         MIN(value) AS mn, MAX(value) AS mx
-  FROM e WHERE us < 1706140800000000 GROUP BY event_type
-),
-new_batch AS (
-  SELECT event_type, COUNT(*) AS n, CAST(SUM(v_mic) AS BIGINT) AS s,
-         MIN(value) AS mn, MAX(value) AS mx
-  FROM e WHERE us >= 1706140800000000 GROUP BY event_type
-),
-merged AS (
-  SELECT event_type, CAST(SUM(n) AS BIGINT) AS n,
-         CAST(SUM(s) AS BIGINT) AS s,
-         MIN(mn) AS mn, MAX(mx) AS mx
-  FROM (SELECT * FROM old_part UNION ALL SELECT * FROM new_batch)
-  GROUP BY event_type
-),
-full_recompute AS (
-  SELECT event_type, COUNT(*) AS n, CAST(SUM(v_mic) AS BIGINT) AS s,
-         MIN(value) AS mn, MAX(value) AS mx
-  FROM e GROUP BY event_type
-)
-"""
-
-_INCR_MERGE_ORACLE = (
-    "WITH " + _INCR_CORE + """
-SELECT m.event_type, m.n AS n_merged,
-       m.s AS sum_merged_micros,
-       CAST(CASE WHEN m.n = f.n THEN 1 ELSE 0 END
-            + CASE WHEN m.s = f.s THEN 1 ELSE 0 END
-            + CASE WHEN m.mn = f.mn THEN 1 ELSE 0 END
-            + CASE WHEN m.mx = f.mx THEN 1 ELSE 0 END AS BIGINT)
-         AS n_components_equal
-FROM merged m JOIN full_recompute f ON m.event_type = f.event_type
-ORDER BY m.event_type
-"""
-)
-
-
-def _incr_frames(spark: SparkSession, sf_dir: str):
-    """Shared frames for the incremental-merge gate and probes: the
-    pre/post-cutoff partials, their merge, and the full recompute.
-    The cutoff is a BIGINT epoch-micros literal compared against
-    unix_micros(ts) on the Spark side and epoch_us(ts) on the DuckDB
-    side (2024-01-25T00:00:00Z = 1706140800000000) — no timestamp
-    literal is ever parsed in a session zone (VERDICT r9 ask #3)."""
-    (events,) = _t(spark, sf_dir, "events")
-    events = events.withColumn(
-        "v_mic", F.floor(F.col("value") * 1_000_000).cast("bigint")
-    ).withColumn("us", F.unix_micros("ts"))
-
-    def partials(df):
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v_mic").alias("s"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-        )
-
-    cut = F.lit(1_706_140_800_000_000)
-    old_part = partials(events.filter(F.col("us") < cut))
-    new_batch = partials(events.filter(F.col("us") >= cut))
-    merged = (
-        old_part.unionByName(new_batch)
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("s").alias("s"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-        )
-    )
-    full = partials(events)
-    return old_part, new_batch, merged, full
-
-
-@retired_query("incremental_agg_merge", _INCR_MERGE_ORACLE, subsumed_by="mv_incremental_refresh")
-def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge stored pre-2024-01-25 per-event-type partials with the
-    newer raw slice and prove, in-query, that the merge equals the
-    full-history recompute (see section comment for why the state
-    vector is mergeable and what that buys at 100 TB).  r10 rework
-    (VERDICT r9 asks #2-#3): the cutoff is a BIGINT epoch-micros
-    compare on both engines (no session-TZ literal parse), the
-    mergeable sum accumulates BIGINT micro-units floor(value*1e6)
-    (bit-identical per row in any engine build, order-free integer
-    addition), and the proof emits the BIGINT count of equal state
-    components (0..4) instead of a boolean."""
-    _, _, merged, full = _incr_frames(spark, sf_dir)
-    full = full.select(
-        F.col("event_type"),
-        F.col("n").alias("fn"),
-        F.col("s").alias("fs"),
-        F.col("mn").alias("fmn"),
-        F.col("mx").alias("fmx"),
-    )
-
-    def eq(a, b):
-        return F.when(F.col(a) == F.col(b), 1).otherwise(0)
-
-    return (
-        merged.join(full, "event_type")
-        .select(
-            "event_type",
-            F.col("n").alias("n_merged"),
-            F.col("s").alias("sum_merged_micros"),
-            (eq("n", "fn") + eq("s", "fs") + eq("mn", "fmn")
-             + eq("mx", "fmx")).cast("bigint").alias("n_components_equal"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# --- incr probes (VERDICT r9 ask #1): cutoff split, per-side sums,
-# per-side extrema — one state component per gate.
-
-_INCR_PROBE_SPLIT_ORACLE = (
-    "WITH " + _INCR_CORE + """
-SELECT o.event_type, o.n AS n_old, nb.n AS n_new
-FROM old_part o JOIN new_batch nb ON o.event_type = nb.event_type
-ORDER BY o.event_type
-"""
-)
-
-
-@probe("incr_probe_split", _INCR_PROBE_SPLIT_ORACLE)
-def incr_probe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 1/3 for incremental_agg_merge: ONLY the epoch-micros
-    cutoff row split (counts per side).  Red here = the cutoff
-    comparison itself diverges (timestamp decode skew)."""
-    old_part, new_batch, _, _ = _incr_frames(spark, sf_dir)
-    return (
-        old_part.select("event_type", F.col("n").alias("n_old"))
-        .join(
-            new_batch.select("event_type", F.col("n").alias("n_new")),
-            "event_type",
-        )
-        .orderBy("event_type")
-    )
-
-
-_INCR_PROBE_SUMS_ORACLE = (
-    "WITH " + _INCR_CORE + """
-SELECT o.event_type, o.s AS s_old, nb.s AS s_new
-FROM old_part o JOIN new_batch nb ON o.event_type = nb.event_type
-ORDER BY o.event_type
-"""
-)
-
-
-@probe("incr_probe_sums", _INCR_PROBE_SUMS_ORACLE)
-def incr_probe_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 2/3: the per-side BIGINT micro-unit sums.  Red here with
-    1/3 green = the floor(value*1e6) conversion diverges (compare
-    rolling_probe_input, which pins the same class on cents)."""
-    old_part, new_batch, _, _ = _incr_frames(spark, sf_dir)
-    return (
-        old_part.select("event_type", F.col("s").alias("s_old"))
-        .join(
-            new_batch.select("event_type", F.col("s").alias("s_new")),
-            "event_type",
-        )
-        .orderBy("event_type")
-    )
-
-
-_INCR_PROBE_MINMAX_ORACLE = (
-    "WITH " + _INCR_CORE + """
-SELECT event_type,
-       CAST(floor(mn * 1000000) AS BIGINT) AS mn_mic,
-       CAST(floor(mx * 1000000) AS BIGINT) AS mx_mic
-FROM full_recompute ORDER BY event_type
-"""
-)
-
-
-@probe("incr_probe_minmax", _INCR_PROBE_MINMAX_ORACLE)
-def incr_probe_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 3/3: the extrema state components as floored BIGINT
-    micros over the full history.  Red here with 1-2/3 green = the
-    min/max component (double comparison semantics) diverges."""
-    _, _, _, full = _incr_frames(spark, sf_dir)
-    return full.select(
-        "event_type",
-        F.floor(F.col("mn") * 1_000_000).cast("bigint").alias("mn_mic"),
-        F.floor(F.col("mx") * 1_000_000).cast("bigint").alias("mx_mic"),
-    ).orderBy("event_type")
-
-
-# ----------------------------------------------------------------------
-# Time travel from SCD-2 history: reconstruct "the table AS OF T" by
-# slicing the validity intervals (valid_from <= T < valid_to, NULL
-# valid_to = live) — the warehouse read pattern SCD-2 exists to
-# serve.  The gate proves the reconstruction against the DIRECT
-# computation (latest change <= T per key, which never materializes
-# history) two ways at once: the snapshot joins the direct answer and
-# emits agreement counts (must equal key counts), plus a 40-bit md5
-# checksum over (key, attribute-at-T) that pins the actual VALUES.
-# An interval off by one run, a half-open-boundary mistake, or a
-# missing live row shifts a count or the checksum.  Scale: the
-# history build is the audited scd2_history plan; the slice is a
-# codegen'd filter on it; the direct side is one partial-aggregated
-# max_by.
-# ----------------------------------------------------------------------
-
-_TIME_TRAVEL_ORACLE = """
-WITH direct AS (
-  SELECT o_custkey,
-         arg_max(o_orderpriority,
-                 strftime(o_orderdate, '%Y%m%d%H%M%S')
-                 || lpad(CAST(o_orderkey AS VARCHAR), 12, '0')) AS pri
-  FROM orders WHERE o_orderdate <= TIMESTAMP '1997-06-01 00:00:00'
-  GROUP BY o_custkey
-)
-SELECT o_custkey % 25 AS bucket,
-       COUNT(*) AS n_keys,
-       COUNT(*) AS n_agree,
-       CAST(SUM(('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || '|' || pri),
-                 1, 10))::BIGINT) AS BIGINT) AS value_ck
-FROM direct GROUP BY bucket ORDER BY bucket
-"""
-
-
-@retired_query("scd2_time_travel", _TIME_TRAVEL_ORACLE, subsumed_by="scd2_priority_history")
-def scd2_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AS OF 1997-06-01 snapshot reconstructed from scd2_history
-    validity intervals, proven equal to the direct latest-change
-    computation per 25-bucket rollup (key counts, agreement counts,
-    40-bit value checksums — see section comment).  The oracle
-    computes only the direct path: if the interval slice diverged
-    anywhere, n_agree or the checksum breaks the hash."""
-    from automated_etl_pipeline_spark.operators.scd import scd2_history
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    t = F.lit("1997-06-01 00:00:00").cast("timestamp")
-    hist = scd2_history(
-        orders,
-        key_cols=["o_custkey"],
-        attr_cols=["o_orderpriority"],
-        ts_col="o_orderdate",
-        tiebreak="o_orderkey",
-    )
-    snap = hist.filter(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    ).select("o_custkey", F.col("o_orderpriority").alias("snap_pri"))
-    order_key = F.concat(
-        F.date_format("o_orderdate", "yyyyMMddHHmmss"),
-        F.lpad(F.col("o_orderkey").cast("string"), 12, "0"),
-    )
-    direct = (
-        orders.filter(F.col("o_orderdate") <= t)
-        .groupBy("o_custkey")
-        .agg(F.max_by("o_orderpriority", order_key).alias("pri"))
-    )
-    ck = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("o_custkey").cast("string"), F.lit("|"), F.col("pri")
-                )
-            ),
-            1,
-            10,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return (
-        direct.join(snap, "o_custkey", "left")
-        .groupBy(F.pmod("o_custkey", F.lit(25)).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum(
-                F.when(F.col("snap_pri") == F.col("pri"), 1).otherwise(0)
-            ).alias("n_agree"),
-            F.sum(ck).alias("value_ck"),
-        )
-        .orderBy("bucket")
-    )
-
-
-# ----------------------------------------------------------------------
 # Market-basket analysis: frequent co-occurring item pairs with
 # minimum support — orders are baskets, suppliers the items.  The
 # pair generation is a WITHIN-BASKET self-join (u < v) whose fan-out
@@ -4323,7 +3085,7 @@ def frequent_pairs_minsup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decimal values, no floating interpolation — so the gate needs no
 # rounding anywhere, and price ties at the boundary resolve to the
 # same value under any within-tie order.  Plan: per-group value-sort
-# window (the honest exact shape, same as percentile_price, with the
+# window (the honest exact shape, with the
 # same documented 100 TB swap: a weighted GK/t-digest sketch); groups
 # here are (returnflag, ship-year), which parallelizes across
 # group-partitions and grows with the data's time span.
@@ -5235,7 +3997,7 @@ FROM cum
 
 
 def _ks_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared binned-CDF frame for the KS gate and probes.  r10
+    """Binned-CDF frame for the KS gate.  r10
     determinism rework (VERDICT r9 asks #2-#3): the pre/post split
     compares unix_micros(o_orderdate) against the BIGINT literal
     865123200000000 (1997-06-01T00:00:00Z) on both engines — no
@@ -5294,89 +4056,6 @@ def ks_drift_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("nb").alias("n_after"),
         F.count(F.lit(1)).alias("n_bins"),
     )
-
-
-# --- ks probes (VERDICT r9 ask #1): cutoff split, bin histogram,
-# numerator — one component per gate.
-
-_KS_PROBE_SPLIT_ORACLE = (
-    "WITH " + _KS_CORE + """
-SELECT CAST(SUM(ca) AS BIGINT) AS n_before,
-       CAST(SUM(cb) AS BIGINT) AS n_after
-FROM t
-"""
-)
-
-
-@probe("ks_probe_split", _KS_PROBE_SPLIT_ORACLE)
-def ks_probe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 1/3 for ks_drift_statistic: ONLY the epoch-micros date
-    cutoff split.  Red here = the o_orderdate decode or the BIGINT
-    compare diverges."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    pre = _epoch_us_col(orders, "o_orderdate") < F.lit(865_123_200_000_000)
-    return orders.agg(
-        F.sum(F.when(pre, 1).otherwise(0)).alias("n_before"),
-        F.sum(F.when(pre, 0).otherwise(1)).alias("n_after"),
-    )
-
-
-_KS_PROBE_BINS_ORACLE = (
-    "WITH " + _KS_CORE + """
-SELECT COUNT(*) AS n_bins,
-       MIN(bin) AS min_bin, MAX(bin) AS max_bin,
-       CAST(SUM(bin * ca) AS BIGINT) AS sum_bin_ca,
-       CAST(SUM(bin * cb) AS BIGINT) AS sum_bin_cb
-FROM bins
-"""
-)
-
-
-@probe("ks_probe_bins", _KS_PROBE_BINS_ORACLE)
-def ks_probe_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 2/3: the $500 binning histogram (bin count, extremes,
-    bin-weighted count checksums per side).  Red here with 1/3 green
-    = the cents conversion or the floor-division binning diverges."""
-    (orders,) = _t(spark, sf_dir, "orders")
-    cents = (
-        F.col("o_totalprice").cast("decimal(18,2)") * 100
-    ).cast("bigint")
-    pre = _epoch_us_col(orders, "o_orderdate") < F.lit(865_123_200_000_000)
-    tagged = orders.select(
-        F.floor(cents / F.lit(50_000.0)).cast("bigint").alias("bin"),
-        F.when(pre, 1).otherwise(0).alias("ca"),
-        F.when(pre, 0).otherwise(1).alias("cb"),
-    )
-    bins = tagged.groupBy("bin").agg(
-        F.sum("ca").alias("ca"), F.sum("cb").alias("cb")
-    )
-    return bins.agg(
-        F.count(F.lit(1)).alias("n_bins"),
-        F.min("bin").alias("min_bin"),
-        F.max("bin").alias("max_bin"),
-        F.sum(F.col("bin") * F.col("ca")).alias("sum_bin_ca"),
-        F.sum(F.col("bin") * F.col("cb")).alias("sum_bin_cb"),
-    )
-
-
-_KS_PROBE_NUM_ORACLE = (
-    "WITH " + _KS_CORE + """
-SELECT CAST(MAX(abs(cna * nb - cnb * na)) AS BIGINT) AS ks_num
-FROM cum
-"""
-)
-
-
-@probe("ks_probe_num", _KS_PROBE_NUM_ORACLE)
-def ks_probe_num(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 3/3: ONLY the KS integer numerator (the cumulative
-    window + cross-product max).  Red here with 1-2/3 green = the
-    CDF accumulation diverges."""
-    cum = _ks_cum(spark, sf_dir)
-    diff = F.abs(
-        F.col("cna") * F.col("nb") - F.col("cnb") * F.col("na")
-    )
-    return cum.agg(F.max(diff).cast("bigint").alias("ks_num"))
 
 
 # ----------------------------------------------------------------------
@@ -5512,7 +4191,7 @@ def profile_table_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     The narrow second scan reads 2 columns with map-side partials -
     nothing next to the sorts it removes.  At 100 TB swap exact
     distinct for approx_count_distinct (HLL) per the
-    hll_distinct_rollup pattern."""
+    hll_merge_error_bound pattern."""
     (orders,) = _t(spark, sf_dir, "orders")
     spark_t = {
         "BIGINT": "bigint",
@@ -5552,199 +4231,6 @@ def profile_table_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p")
     )
     return rows.select("p.*").orderBy("col_name")
-
-
-_COMPACTION_ORACLE = """
-WITH files AS (
-  SELECT source, lang,
-         CAST(SUM(n_chars) AS BIGINT) AS bytes
-  FROM documents GROUP BY source, lang
-), planned AS (
-  SELECT source, lang, bytes,
-         COALESCE(SUM(bytes) OVER (
-           ORDER BY bytes DESC, source, lang
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev_cum,
-         SUM(bytes) OVER () AS total
-  FROM files
-)
-SELECT CAST(LEAST(prev_cum * 8 // total, 7) AS BIGINT) AS bin_id,
-       CAST(COUNT(*) AS BIGINT) AS n_files,
-       CAST(SUM(bytes) AS BIGINT) AS total_bytes,
-       CAST(MAX(bytes) AS BIGINT) AS largest_file,
-       CAST(MIN(bytes) AS BIGINT) AS smallest_file
-FROM planned GROUP BY 1 ORDER BY 1
-"""
-
-
-@retired_query("compaction_bin_plan", _COMPACTION_ORACLE, subsumed_by="manifest_compaction_rewrite")
-def compaction_bin_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-files compaction planner: treat each (source, lang) slice
-    of documents as a 'file' whose size is its total characters, sort
-    the inventory largest-first, and assign files to 8 merge bins by
-    cumulative-size split (bin = prev_cumsum * 8 / total) — the greedy
-    plan a table-maintenance job executes to rewrite a long tail of
-    small files into evenly-sized outputs.  All integer arithmetic.
-
-    Scale: the planner runs on the REDUCED file inventory (one row per
-    file after the size aggregation), which is ~millions of rows even
-    at 100 TB — the global sort window costs nothing because the
-    reduce-first step already collapsed the data; the data itself is
-    never globally ordered."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    files = docs.groupBy("source", "lang").agg(
-        F.sum("n_chars").cast("bigint").alias("bytes")
-    )
-    wo = Window.orderBy(F.desc("bytes"), "source", "lang")
-    planned = files.select(
-        "bytes",
-        F.coalesce(
-            F.sum("bytes").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("prev_cum"),
-        F.sum("bytes").over(
-            Window.partitionBy().rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("total"),
-    )
-    return (
-        planned.select(
-            # exact long division (div), not floor(double /): the
-            # double path rounds past 2^53 and can land one bin off
-            # the oracle's integer // (r12 review #5)
-            F.least(
-                F.expr("(prev_cum * 8) div total"), F.lit(7)
-            )
-            .cast("bigint")
-            .alias("bin_id"),
-            "bytes",
-        )
-        .groupBy("bin_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.sum("bytes").cast("bigint").alias("total_bytes"),
-            F.max("bytes").cast("bigint").alias("largest_file"),
-            F.min("bytes").cast("bigint").alias("smallest_file"),
-        )
-        .orderBy("bin_id")
-    )
-
-
-_BLOOM_PRUNE_ORACLE = """
-WITH dim AS (
-  SELECT DISTINCT s_suppkey FROM supplier
-  WHERE s_acctbal > 4500 AND s_suppkey IS NOT NULL
-), h AS (
-  SELECT s_suppkey,
-         ('0x'||substr(md5(CAST(s_suppkey AS VARCHAR)),1,8))::BIGINT AS h1,
-         ('0x'||substr(md5(CAST(s_suppkey AS VARCHAR)),9,8))::BIGINT AS h2
-  FROM dim
-), bitset AS (
-  SELECT DISTINCT ((h1 + i * h2) % 1024) AS p
-  FROM h, (SELECT UNNEST(range(4)) AS i)
-), pk AS (
-  SELECT DISTINCT l_suppkey FROM lineitem WHERE l_suppkey IS NOT NULL
-), pkh AS (
-  SELECT l_suppkey,
-         ('0x'||substr(md5(CAST(l_suppkey AS VARCHAR)),1,8))::BIGINT AS h1,
-         ('0x'||substr(md5(CAST(l_suppkey AS VARCHAR)),9,8))::BIGINT AS h2
-  FROM pk
-), pkpos AS (
-  SELECT l_suppkey, ((h1 + i * h2) % 1024) AS p
-  FROM pkh, (SELECT UNNEST(range(4)) AS i)
-), pkflag AS (
-  SELECT l_suppkey,
-         MIN(CASE WHEN b.p IS NOT NULL THEN 1 ELSE 0 END) AS pass
-  FROM pkpos LEFT JOIN bitset b ON pkpos.p = b.p
-  GROUP BY l_suppkey
-), fact AS (
-  SELECT l.l_suppkey, l.l_extendedprice,
-         COALESCE(f.pass, 0) AS fb,
-         CASE WHEN d.s_suppkey IS NOT NULL THEN 1 ELSE 0 END AS fe
-  FROM lineitem l
-  LEFT JOIN pkflag f ON l.l_suppkey = f.l_suppkey
-  LEFT JOIN dim d ON l.l_suppkey = d.s_suppkey
-)
-SELECT CAST((SELECT COUNT(*) FROM dim) AS BIGINT) AS n_filter_keys,
-       CAST(COUNT(DISTINCT CASE WHEN fb = 1 THEN l_suppkey END) AS BIGINT)
-         AS bloom_pass_keys,
-       CAST(COUNT(DISTINCT CASE WHEN fe = 1 THEN l_suppkey END) AS BIGINT)
-         AS exact_pass_keys,
-       CAST(SUM(fb) AS BIGINT) AS bloom_pass_rows,
-       CAST(SUM(fe) AS BIGINT) AS exact_rows,
-       CAST(SUM(CASE WHEN fb = 1 AND fe = 1
-                     THEN CAST(l_extendedprice AS DECIMAL(18,2)) END)
-            AS DOUBLE) AS pruned_verified_revenue,
-       CAST(SUM(CASE WHEN fe = 1
-                     THEN CAST(l_extendedprice AS DECIMAL(18,2)) END)
-            AS DOUBLE) AS direct_revenue
-FROM fact
-"""
-
-
-@retired_query("bloom_semi_join_prune", _BLOOM_PRUNE_ORACLE, subsumed_by="manifest_bloom_point_lookup")
-def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter semi-join pruning (operators/bloom.py) — the
-    runtime-filter pattern Spark's InjectRuntimeFilter applies
-    automatically, re-expressed with portable md5 double-hashing so
-    the DuckDB oracle rebuilds the SAME m=1024/k=4 bitmap and the
-    gate hash-compares the filter's decisions: pass counts at key and
-    row granularity, measured false positives, and the proof that the
-    bloom-then-verify path loses nothing (pruned_verified_revenue ==
-    direct_revenue — a false negative would make them diverge).
-
-    Scale: the bitmap is built from the REDUCED dim keys (one tiny
-    bit_or aggregation; the driver holds 16 longs) and probed as a
-    pure column expression inside the fact scan — no join machinery
-    touches the ~(1-selectivity) of fact rows the filter drops.  At
-    sf0.1 the pinned m saturates (~50% fp) and the gate measures it;
-    production sizing is ~12 bits/key, and every bloom pass is
-    re-verified by the exact broadcast semi join on survivors."""
-    from automated_etl_pipeline_spark.operators.bloom import (
-        bloom_build,
-        bloom_might_contain,
-    )
-
-    li, sup = _t(spark, sf_dir, "lineitem", "supplier")
-    dim = (
-        sup.filter((F.col("s_acctbal") > 4500) & F.col("s_suppkey").isNotNull())
-        .select("s_suppkey")
-        .distinct()
-    )
-    bitmap = bloom_build(dim, "s_suppkey")
-    n_keys = dim.count()
-    # accounting path: the probe is key-deterministic, so the gate
-    # reduces the fact to per-key (rows, exact-decimal revenue) FIRST
-    # (one map-side-combined shuffle) and probes the ~distinct-key
-    # frame — identical outputs to a per-row probe at a fraction of
-    # the hash cost.  Production pruning still probes per-row inside
-    # the scan (operators/bloom.py), where no reduction exists yet.
-    keyagg = li.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).alias("nr"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("rev"),
-    )
-    flagged = (
-        keyagg.withColumn(
-            "fb", bloom_might_contain(F.col("l_suppkey"), bitmap).cast("int")
-        )
-        .join(
-            F.broadcast(dim.withColumnRenamed("s_suppkey", "__dk")),
-            F.col("l_suppkey") == F.col("__dk"),
-            "left",
-        )
-        .withColumn("fe", F.col("__dk").isNotNull().cast("int"))
-    )
-    fb1, fe1 = F.col("fb") == 1, F.col("fe") == 1
-    return flagged.agg(
-        F.sum("fb").cast("bigint").alias("bloom_pass_keys"),
-        F.sum("fe").cast("bigint").alias("exact_pass_keys"),
-        F.sum(F.col("nr") * F.col("fb")).cast("bigint").alias("bloom_pass_rows"),
-        F.sum(F.col("nr") * F.col("fe")).cast("bigint").alias("exact_rows"),
-        F.sum(F.when(fb1 & fe1, F.col("rev")))
-        .cast("double")
-        .alias("pruned_verified_revenue"),
-        F.sum(F.when(fe1, F.col("rev"))).cast("double").alias("direct_revenue"),
-    ).withColumn("n_filter_keys", F.lit(n_keys).cast("bigint"))
 
 
 _STREAMING_CDC_ORACLE = """
@@ -6057,192 +4543,6 @@ def stats_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVM_JOIN_ORACLE = """
-WITH a0 AS (
-  SELECT * FROM orders WHERE o_orderkey IS NOT NULL AND o_orderkey % 3 != 0
-), da AS (
-  SELECT * FROM orders WHERE o_orderkey IS NOT NULL AND o_orderkey % 3 = 0
-), b0 AS (
-  SELECT * FROM lineitem WHERE l_orderkey IS NOT NULL AND l_linenumber <= 3
-), db AS (
-  SELECT * FROM lineitem WHERE l_orderkey IS NOT NULL AND l_linenumber > 3
-), agg_full AS (
-  SELECT o.o_orderpriority AS pr, COUNT(*) AS n,
-         SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS rev
-  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderkey IS NOT NULL
-  GROUP BY 1
-), d1 AS (
-  SELECT a0.o_orderpriority AS pr, COUNT(*) AS n,
-         SUM(CAST(b0.l_extendedprice AS DECIMAL(18,2))) AS rev
-  FROM a0 JOIN b0 ON a0.o_orderkey = b0.l_orderkey GROUP BY 1
-), d2 AS (
-  SELECT da.o_orderpriority AS pr, COUNT(*) AS n,
-         SUM(CAST(b0.l_extendedprice AS DECIMAL(18,2))) AS rev
-  FROM da JOIN b0 ON da.o_orderkey = b0.l_orderkey GROUP BY 1
-), d3 AS (
-  SELECT a0.o_orderpriority AS pr, COUNT(*) AS n,
-         SUM(CAST(db.l_extendedprice AS DECIMAL(18,2))) AS rev
-  FROM a0 JOIN db ON a0.o_orderkey = db.l_orderkey GROUP BY 1
-), d4 AS (
-  SELECT da.o_orderpriority AS pr, COUNT(*) AS n,
-         SUM(CAST(db.l_extendedprice AS DECIMAL(18,2))) AS rev
-  FROM da JOIN db ON da.o_orderkey = db.l_orderkey GROUP BY 1
-), agg_incr AS (
-  SELECT pr, SUM(n) AS n, SUM(rev) AS rev
-  FROM (SELECT * FROM d1 UNION ALL SELECT * FROM d2
-        UNION ALL SELECT * FROM d3 UNION ALL SELECT * FROM d4)
-  GROUP BY pr
-)
-SELECT f.pr AS o_orderpriority,
-       CAST(f.n AS BIGINT) AS full_rows,
-       CAST(i.n AS BIGINT) AS incr_rows,
-       CAST(f.rev AS DOUBLE) AS full_revenue,
-       CAST(i.rev AS DOUBLE) AS incr_revenue,
-       CAST(CASE WHEN f.n = i.n AND f.rev = i.rev THEN 1 ELSE 0 END
-            AS BIGINT) AS merge_equals_full
-FROM agg_full f JOIN agg_incr i ON f.pr = i.pr
-ORDER BY o_orderpriority
-"""
-
-
-@retired_query("incr_join_view_maintenance", _IVM_JOIN_ORACLE, subsumed_by="mv_incremental_refresh")
-def incr_join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental maintenance of a JOIN view: with base tables split
-    into (A, dA) x (B, dB), the view delta is the classic three-term
-    expansion dV = dA⋈B + A⋈dB + dA⋈dB, and merging the four
-    partial aggregates must reproduce the full recompute EXACTLY for
-    sum-decomposable aggregates (COUNT, exact-decimal SUM).  The gate
-    runs BOTH paths and emits them side by side with an in-query
-    equality flag — the identity an IVM engine (Materialize,
-    DBSP-style) relies on, proven here over exact decimals so float
-    fold-order cannot fake a diff.
-
-    Scale: the incremental path's point is that dA⋈B etc. are small
-    (delta-sized probe against the base); all four terms are key
-    equi-joins and the merge is an aggregate union — no operator the
-    full recompute does not also use, and the partial aggregates are
-    the mergeable state a real IVM keeps."""
-    orders, li = _t(spark, sf_dir, "orders", "lineitem")
-    o = orders.filter(F.col("o_orderkey").isNotNull())
-    l = li.filter(F.col("l_orderkey").isNotNull())
-    a0 = o.filter(F.col("o_orderkey") % 3 != 0)
-    da = o.filter(F.col("o_orderkey") % 3 == 0)
-    b0 = l.filter(F.col("l_linenumber") <= 3)
-    db = l.filter(F.col("l_linenumber") > 3)
-
-    def term(a, b):
-        return (
-            a.join(b, a["o_orderkey"] == b["l_orderkey"])
-            .groupBy(F.col("o_orderpriority").alias("pr"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias(
-                    "rev"
-                ),
-            )
-        )
-
-    full = term(o, l)
-    incr = (
-        term(a0, b0)
-        .unionAll(term(da, b0))
-        .unionAll(term(a0, db))
-        .unionAll(term(da, db))
-        .groupBy("pr")
-        .agg(F.sum("n").alias("n"), F.sum("rev").alias("rev"))
-    )
-    f, i = full.alias("f"), incr.alias("i")
-    return (
-        f.join(i, F.col("f.pr") == F.col("i.pr"))
-        .select(
-            F.col("f.pr").alias("o_orderpriority"),
-            F.col("f.n").cast("bigint").alias("full_rows"),
-            F.col("i.n").cast("bigint").alias("incr_rows"),
-            F.col("f.rev").cast("double").alias("full_revenue"),
-            F.col("i.rev").cast("double").alias("incr_revenue"),
-            F.when(
-                (F.col("f.n") == F.col("i.n"))
-                & (F.col("f.rev") == F.col("i.rev")),
-                1,
-            )
-            .otherwise(0)
-            .cast("bigint")
-            .alias("merge_equals_full"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-_MANIFEST_ORACLE = """
-SELECT s_nationkey,
-       CAST(COUNT(*) AS BIGINT) AS n_latest,
-       CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal_latest,
-       CAST(COUNT(*) FILTER (WHERE s_nationkey < 13) AS BIGINT) AS n_v1,
-       CAST(2 AS BIGINT) AS committed_version
-FROM supplier
-GROUP BY s_nationkey ORDER BY s_nationkey
-"""
-
-
-@retired_query("manifest_table_isolation", _MANIFEST_ORACLE, subsumed_by="manifest_compaction_rewrite")
-def manifest_table_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest-committed table (io/manifest.py): commit 1 appends the
-    s_nationkey < 13 suppliers, commit 2 the rest; commit 2 is then
-    RETRIED with the same run_id (must no-op at version 2), and an
-    ORPHAN duplicate of the whole table is planted in data/ without a
-    manifest commit (must stay invisible).  The gate reads the newest
-    snapshot AND time-travels to version 1, emitting per-nation counts
-    the oracle derives from the raw table: any isolation leak (orphan
-    read, double append) or retry non-idempotence shifts n_latest /
-    bal_latest; a broken time-travel shifts n_v1; a wrong commit count
-    shifts committed_version.
-
-    Scale: manifests are driver-side metadata naming the live files;
-    the read hands Spark an explicit file list, so scan-level pruning
-    is unchanged — the same contract as a table format's log, with the
-    exclusive-create commit point standing in for an object store's
-    if-none-match put."""
-    from automated_etl_pipeline_spark.io.manifest import (
-        commit_append,
-        current_version,
-        read_table,
-    )
-
-    (sup,) = _t(spark, sf_dir, "supplier")
-    with scratch() as root:
-        commit_append(sup.filter(F.col("s_nationkey") < 13), root, "run-1")
-        commit_append(sup.filter(F.col("s_nationkey") >= 13), root, "run-2")
-        commit_append(  # Airflow-retry double delivery: must no-op
-            sup.filter(F.col("s_nationkey") >= 13), root, "run-2"
-        )
-        # orphan: a full uncommitted copy dropped straight into data/
-        sup.write.mode("errorifexists").parquet(f"{root}/data/orphan-files")
-        latest = read_table(spark, root)
-        v1 = read_table(spark, root, version=1)
-        ver = current_version(root)
-        l_agg = latest.groupBy("s_nationkey").agg(
-            F.count(F.lit(1)).alias("n_latest"),
-            dsum("s_acctbal", alias="bal_latest"),
-        )
-        v1_agg = v1.groupBy("s_nationkey").agg(
-            F.count(F.lit(1)).alias("n_v1")
-        )
-        out = (
-            l_agg.join(v1_agg, "s_nationkey", "left")
-            .select(
-                "s_nationkey",
-                "n_latest",
-                "bal_latest",
-                F.coalesce(F.col("n_v1"), F.lit(0)).cast("bigint").alias("n_v1"),
-                F.lit(ver).cast("bigint").alias("committed_version"),
-            )
-            .orderBy("s_nationkey")
-        )
-        snap = materialize(out)
-    return snap.orderBy("s_nationkey")
-
-
 _CSV_QUARANTINE_ORACLE = """
 SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
        CAST(COUNT(*) FILTER (WHERE o_orderkey % 97 != 0) AS BIGINT)
@@ -6357,8 +4657,7 @@ def manifest_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     or duplicates a row, or a rewrite that appends instead of
     replacing, shifts a BIGINT.
 
-    Scale: this is the maintenance loop compaction_bin_plan plans for;
-    on a real table the rewrite is per-partition (only touched
+    Scale: on a real table the rewrite is per-partition (only touched
     partitions' files swap) and old files age out via vacuum — the
     manifest semantics here are exactly those, minus retention."""
     from automated_etl_pipeline_spark.io.manifest import (
@@ -6419,102 +4718,6 @@ def manifest_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "frag_files_ge_appends long, n_files_compacted long, "
             "final_version long, n_rows_latest long, "
             "n_rows_pre_compaction long, bal_latest double",
-        )
-    return out
-
-
-_ZONE_MAP_ORACLE = """
-WITH s AS (
-  SELECT * FROM supplier WHERE s_acctbal IS NOT NULL
-), b AS (
-  SELECT s_acctbal,
-         CAST(floor((s_acctbal + 1000.0) / 1100.0) AS INT) AS bin
-  FROM s
-), fb AS (
-  SELECT bin, MIN(s_acctbal) AS mn, MAX(s_acctbal) AS mx
-  FROM b GROUP BY 1
-)
-SELECT CAST((SELECT COUNT(*) FROM fb) AS BIGINT) AS files_total,
-       CAST((SELECT COUNT(*) FROM fb
-             WHERE mn <= 9000.0 AND mx >= 7000.0) AS BIGINT)
-         AS files_scanned,
-       CAST((SELECT COUNT(*) FROM b
-             WHERE s_acctbal BETWEEN 7000.0 AND 9000.0) AS BIGINT)
-         AS n_rows_pred,
-       CAST((SELECT SUM(CAST(s_acctbal AS DECIMAL(18,2))) FROM b
-             WHERE s_acctbal BETWEEN 7000.0 AND 9000.0) AS DOUBLE)
-         AS bal_pred,
-       CAST((SELECT COUNT(*) FROM b
-             WHERE s_acctbal BETWEEN 7000.0 AND 9000.0) AS BIGINT)
-         AS n_rows_fullscan
-"""
-
-
-@retired_query(  # r14: single-column pruning is the degenerate case
-    "zone_map_file_skipping",
-    _ZONE_MAP_ORACLE,
-    subsumed_by="zone_map_multicol_pruning",
-)
-def zone_map_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zone-map file skipping over the manifest table (io/manifest.py):
-    suppliers are committed one fixed-width s_acctbal bucket per file
-    with per-file [min, max] recorded at commit time; a range
-    predicate then reads ONLY the intersecting files.  The gate emits
-    the skip ledger — files_total, files_scanned (the oracle derives
-    both from per-bucket extremes), and the predicate result from the
-    PRUNED read proven equal to the full-scan result (n_rows_pred ==
-    n_rows_fullscan, exact-decimal balance) — so a zone map that
-    skips a qualifying file, or fails to skip, shifts a BIGINT.
-
-    Scale: this is min/max data skipping — the reason sorted/z-ordered
-    layouts (operators/zorder.py) pay off: at 100 TB a selective range
-    touches a handful of files instead of the table, before any scan
-    starts.  Stats ride the manifest (parquet footers in production);
-    pruning is driver-side metadata work."""
-    from automated_etl_pipeline_spark.io.manifest import (
-        commit_append,
-        read_table,
-        read_table_pruned,
-    )
-
-    (sup,) = _t(spark, sf_dir, "supplier")
-    s = sup.filter(F.col("s_acctbal").isNotNull())
-    binned = s.withColumn(
-        "bin",
-        F.floor((F.col("s_acctbal") + 1000.0) / 1100.0).cast("int"),
-    )
-    bins = sorted(
-        r["bin"] for r in binned.select("bin").distinct().collect()
-    )
-    with scratch() as root:
-        for b in bins:
-            commit_append(
-                binned.filter(F.col("bin") == b).drop("bin").coalesce(1),
-                root,
-                f"bin-{b}",
-                stats_cols=["s_acctbal"],
-            )
-        pruned, n_total, n_scanned = read_table_pruned(
-            spark, root, predicates={"s_acctbal": (7000.0, 9000.0)}
-        )
-        pred = F.col("s_acctbal").between(7000.0, 9000.0)
-        agg = pruned.filter(pred).agg(
-            F.count(F.lit(1)).alias("n_rows_pred"),
-            dsum("s_acctbal", alias="bal_pred"),
-        ).collect()[0]
-        full_n = read_table(spark, root).filter(pred).count()
-        out = spark.createDataFrame(
-            [
-                (
-                    n_total,
-                    n_scanned,
-                    agg["n_rows_pred"],
-                    agg["bal_pred"],
-                    full_n,
-                )
-            ],
-            "files_total long, files_scanned long, n_rows_pred long, "
-            "bal_pred double, n_rows_fullscan long",
         )
     return out
 
@@ -6652,69 +4855,6 @@ def zone_map_multicol_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             "files_total long, files_scanned long, n_rows_pred long, "
             "bal_pred double, n_rows_fullscan long",
-        )
-    return out
-
-
-_CHANGE_FEED_ORACLE = """
-SELECT CAST(COUNT(*) FILTER (WHERE s_nationkey >= 8)
-            AS BIGINT) AS n_changed_rows,
-       CAST(COUNT(DISTINCT s_nationkey) FILTER (WHERE s_nationkey >= 8)
-            AS BIGINT) AS n_changed_nations,
-       CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2)))
-              FILTER (WHERE s_nationkey >= 8) AS DOUBLE)
-         AS changed_bal,
-       CAST(COUNT(*) AS BIGINT) AS n_rows_snapshot
-FROM supplier
-"""
-
-
-@retired_query("manifest_change_feed", _CHANGE_FEED_ORACLE, subsumed_by="mv_incremental_refresh")
-def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Version-tailing change feed on the manifest table
-    (io/manifest.read_changes): suppliers land in three append commits
-    (nationkey < 8, 8-16, > 16); a consumer that saw version 1 reads
-    the changes up to version 3 and must get EXACTLY the rows of
-    commits 2+3 — the incremental-consumption contract that lets the
-    streaming CDC merge and incremental aggregates tail the table by
-    version instead of re-reading snapshots.  The full snapshot count
-    is emitted alongside as the completeness cross-check.
-
-    Scale: change resolution is a driver-side walk of the per-commit
-    manifest records (file names); the read scans only the added files.  Rewrites
-    in-range raise by design — resume from the post-rewrite snapshot,
-    as any table format's change feed requires."""
-    from automated_etl_pipeline_spark.io.manifest import (
-        commit_append,
-        read_changes,
-        read_table,
-    )
-
-    (sup,) = _t(spark, sf_dir, "supplier")
-    with scratch() as root:
-        commit_append(sup.filter(F.col("s_nationkey") < 8), root, "r1")
-        commit_append(
-            sup.filter(F.col("s_nationkey").between(8, 16)), root, "r2"
-        )
-        commit_append(sup.filter(F.col("s_nationkey") > 16), root, "r3")
-        changes = read_changes(spark, root, 1, 3)
-        snap_n = read_table(spark, root).count()
-        agg = changes.agg(
-            F.count(F.lit(1)).alias("n_changed_rows"),
-            F.countDistinct("s_nationkey").alias("n_changed_nations"),
-            dsum("s_acctbal", alias="changed_bal"),
-        ).collect()[0]
-        out = spark.createDataFrame(
-            [
-                (
-                    agg["n_changed_rows"],
-                    agg["n_changed_nations"],
-                    agg["changed_bal"],
-                    snap_n,
-                )
-            ],
-            "n_changed_rows long, n_changed_nations long, "
-            "changed_bal double, n_rows_snapshot long",
         )
     return out
 
@@ -6921,177 +5061,6 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         snap = materialize(out)
     return snap.orderBy("l_returnflag")
-
-
-_SCHEMA_EVOLUTION_ORACLE = """
-SELECT c_mktsegment,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(COUNT(*) FILTER (WHERE c_custkey % 2 = 0) AS BIGINT)
-         AS n_tier_null,
-       CAST(COUNT(*) FILTER (WHERE c_custkey % 2 = 1 AND c_acctbal >= 5000)
-            AS BIGINT) AS n_gold,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal,
-       CAST(3 AS BIGINT) AS n_cols_v1,
-       CAST(4 AS BIGINT) AS n_cols_v2
-FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
-
-
-@retired_query("manifest_schema_evolution", _SCHEMA_EVOLUTION_ORACLE, subsumed_by="manifest_column_rename")
-def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema evolution on the manifest table (io/manifest.py): v1
-    appends three customer columns; v2 appends the other half WITH an
-    extra ``c_tier`` column — the manifest's recorded schema evolves
-    additively and the explicit-schema read returns NULL tier for
-    every v1 row (no file rewritten).  The gate hash-checks the
-    reconciled read — total counts, the exact NULL/computed split of
-    the evolved column, and the decimal balance — and pins the column
-    COUNTS of both time-traveled snapshots (v1 must NOT grow a phantom
-    column; the newest must).  A same-name-different-type append is
-    additionally proven to raise in tests/test_manifest.py.
-
-    Scale: evolution is a metadata-only commit — the schema lives in
-    the manifest and old files are never touched; readers reconcile at
-    scan time exactly like Delta/Iceberg's add-column."""
-    from automated_etl_pipeline_spark.io.manifest import (
-        commit_append,
-        read_table,
-    )
-
-    (cust,) = _t(spark, sf_dir, "customer")
-    base = cust.select("c_custkey", "c_mktsegment", "c_acctbal")
-    k = F.col("c_custkey")
-    with scratch() as root:
-        commit_append(base.filter(k % 2 == 0), root, "a1")
-        commit_append(
-            base.filter(k % 2 == 1).withColumn(
-                "c_tier",
-                F.when(F.col("c_acctbal") >= 5000, F.lit("gold")).otherwise(
-                    F.lit("std")
-                ),
-            ),
-            root,
-            "a2",
-        )
-        n_cols_v1 = len(read_table(spark, root, version=1).columns)
-        latest = read_table(spark, root)
-        n_cols_v2 = len(latest.columns)
-        out = (
-            latest.groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("c_tier").isNull().cast("long")).alias(
-                    "n_tier_null"
-                ),
-                F.sum((F.col("c_tier") == "gold").cast("long")).alias(
-                    "n_gold"
-                ),
-                dsum("c_acctbal", alias="bal"),
-            )
-            .select(
-                "c_mktsegment",
-                F.col("n").cast("bigint").alias("n"),
-                F.col("n_tier_null").cast("bigint").alias("n_tier_null"),
-                F.coalesce(F.col("n_gold"), F.lit(0))
-                .cast("bigint")
-                .alias("n_gold"),
-                "bal",
-                F.lit(n_cols_v1).cast("bigint").alias("n_cols_v1"),
-                F.lit(n_cols_v2).cast("bigint").alias("n_cols_v2"),
-            )
-            .orderBy("c_mktsegment")
-        )
-        snap = materialize(out)
-    return snap.orderBy("c_mktsegment")
-
-
-_PARTIAL_COMPACTION_ORACLE = """
-SELECT o_orderpriority,
-       CAST(COUNT(*) FILTER (WHERE o_orderkey % 9 != 0) AS BIGINT)
-         AS n_final,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-              FILTER (WHERE o_orderkey % 9 != 0) AS DOUBLE) AS rev_final,
-       CAST(COUNT(*) FILTER (WHERE o_orderkey % 3 = 2) AS BIGINT)
-         AS n_feed,
-       CAST(1 AS BIGINT) AS compacted_ok
-FROM orders
-GROUP BY o_orderpriority ORDER BY o_orderpriority
-"""
-
-
-@retired_query("manifest_partial_compaction", _PARTIAL_COMPACTION_ORACLE, subsumed_by="manifest_compaction_rewrite")
-def manifest_partial_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial compaction (io/manifest.commit_replace_files): the v1
-    append lands fragmented (3 files), v2 adds more, v3 DELETES the
-    keys with o_orderkey % 9 = 0; the compactor reads ONLY v1's files
-    with the pending delete applied, an append INTERLEAVES (v4, key%3
-    = 2 — must NOT conflict, the point vs a full rewrite), and the
-    replace commit swaps just the fragments (v5).  Three contract
-    points hash-checked at once: (a) the final read equals all rows
-    except the deleted keys — the compaction materialized the delete
-    for its files without resurrecting or dropping anything; (b) the
-    change feed across the range v3->v5 returns EXACTLY the
-    interleaved append's rows — the commit-log walk skips the
-    content-preserving replace instead of forcing a snapshot resume;
-    (c) the file count shrank by exactly len(fragments)-1 (the
-    compacted_ok flag).
-
-    Scale: this is the background anti-entropy loop of every
-    streaming-ingest table — compact 10 fragments out of 10,000 files
-    without touching the rest, while appends keep landing."""
-    from automated_etl_pipeline_spark.io.manifest import (
-        commit_append,
-        commit_delete,
-        commit_replace_files,
-        current_version,
-        manifest_files,
-        read_changes,
-        read_table,
-        read_table_subset,
-    )
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    with scratch() as root:
-        commit_append(orders.filter(k % 3 == 0).repartition(3), root, "a1")
-        frag = manifest_files(root, 1)
-        commit_append(orders.filter(k % 3 == 1).coalesce(1), root, "a2")
-        commit_delete(
-            orders.filter(k % 9 == 0).select("o_orderkey"),
-            root,
-            "d1",
-            ["o_orderkey"],
-        )
-        base = current_version(root)
-        merged = read_table_subset(spark, root, frag, version=base).coalesce(1)
-        commit_append(orders.filter(k % 3 == 2), root, "a3")  # interleaves
-        n_before = len(manifest_files(root))
-        v = commit_replace_files(merged, root, "c1", frag, expected_base=base)
-        n_after = len(manifest_files(root, v))
-        compacted_ok = 1 if n_after == n_before - len(frag) + 1 else 0
-        feed = read_changes(spark, root, base, v)
-        f_agg = feed.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias("n_feed")
-        )
-        out = (
-            read_table(spark, root)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_final"),
-                dsum("o_totalprice", alias="rev_final"),
-            )
-            .join(f_agg, "o_orderpriority")
-            .select(
-                "o_orderpriority",
-                F.col("n_final").cast("bigint").alias("n_final"),
-                "rev_final",
-                F.col("n_feed").cast("bigint").alias("n_feed"),
-                F.lit(compacted_ok).cast("bigint").alias("compacted_ok"),
-            )
-            .orderBy("o_orderpriority")
-        )
-        snap = materialize(out)
-    return snap.orderBy("o_orderpriority")
 
 
 _MV_CDF_ORACLE = """

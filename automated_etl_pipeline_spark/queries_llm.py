@@ -21,69 +21,9 @@ from pyspark.sql import functions as F
 from automated_etl_pipeline_spark.io.sources import spread
 from automated_etl_pipeline_spark.queries import (
     _t,
-    probe,
     query,
-    retired_query,
     scratch,
 )
-
-# ----------------------------------------------------------------------
-# Deduplication (exact). Scale: one shuffle on the 128-bit content hash;
-# map-side partial agg collapses duplicates before the exchange, so
-# shuffle volume is O(distinct docs), not O(docs).
-# ----------------------------------------------------------------------
-
-
-@retired_query(
-    "dedup_exact",
-    """
-    SELECT md5(text) AS content_hash,
-           CAST(MIN(doc_id) AS BIGINT) AS keep_doc_id,
-           COUNT(*) AS n_copies
-    FROM documents GROUP BY content_hash ORDER BY content_hash
-    """,
-    subsumed_by="corpus_curation_e2e (exact stage)",
-)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: group by content hash, keep the lowest doc_id."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.md5("text").alias("content_hash"))
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .orderBy("content_hash")
-    )
-
-
-@retired_query(
-    "dedup_fingerprint",
-    """
-    SELECT fingerprint,
-           COUNT(*) AS n_docs,
-           CAST(MIN(doc_id) AS BIGINT) AS keep_doc_id
-    FROM (
-      SELECT doc_id,
-             md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS fingerprint
-      FROM documents
-    ) GROUP BY fingerprint ORDER BY fingerprint
-    """,
-    subsumed_by="corpus_curation_e2e (fingerprint stage)",
-)
-def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-fingerprint near-dup candidates: hash of the first 8
-    tokens. The cheap first pass of a dedup cascade — at scale this
-    collapses boilerplate-heavy corpora before expensive MinHash."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    fp = F.md5(F.concat_ws(" ", F.slice(F.split("text", " "), 1, 8)))
-    return (
-        docs.select("doc_id", fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .orderBy("fingerprint")
-    )
-
 
 # ----------------------------------------------------------------------
 # Text analysis (SURVEY.md extensions; documents table)
@@ -242,57 +182,6 @@ def shard_assignment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query(
-    "bpe_pair_merge_counts",
-    """
-    WITH tok AS (
-      SELECT string_split(text, ' ') AS t FROM documents
-    ), pairs AS (
-      SELECT UNNEST(list_transform(range(1, len(t)),
-               i -> t[i] || ' ' || t[i+1])) AS pair
-      FROM tok WHERE len(t) >= 2
-    )
-    SELECT pair, COUNT(*) AS n
-    FROM pairs GROUP BY pair
-    ORDER BY n DESC, pair LIMIT 20
-    """,
-    subsumed_by="bpe_fidelity_roundtrip",
-)
-def bpe_pair_merge_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One round of BPE-style merge statistics — the kernel of
-    tokenizer training as a corpus-scale job: count every ADJACENT
-    token pair and rank the merge candidates (full BPE iterates this,
-    re-tokenizing after each merge; the per-round counting is the part
-    that touches all the data and must distribute).
-
-    Scale: the pair explode is n_tokens rows per doc; the count
-    collapses map-side (shuffle O(distinct pairs)); top-20 is
-    TakeOrderedAndProject (per-partition heaps, never a global sort —
-    plan-asserted).  Total order (count desc, pair asc) keeps the gate
-    hash-stable."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    toks = (
-        spread(docs)
-        .select(F.split("text", " ").alias("t"))
-        .filter(F.size("t") >= 2)
-    )
-    pairs = toks.select(
-        F.explode(
-            F.zip_with(
-                F.slice("t", 1, F.size("t") - 1),
-                F.slice("t", 2, F.size("t") - 1),
-                lambda a, b: F.concat_ws(" ", a, b),
-            )
-        ).alias("pair")
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("pair"))
-        .limit(20)
-    )
-
-
 # ----------------------------------------------------------------------
 # Similarity search over embeddings (array<float>, 64-dim)
 # ----------------------------------------------------------------------
@@ -329,77 +218,6 @@ def _cosine_to_query(emb: DataFrame, query_vec_id: int) -> DataFrame:
     return both.select("vec_id", "label", sim.alias("cosine_sim"))
 
 
-@retired_query(
-    "ann_cosine_topk",
-    """
-    WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, label,
-           ROUND(
-             list_sum(list_transform(range(1, 65),
-               i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(range(1, 65),
-                  i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))
-              * sqrt(list_sum(list_transform(range(1, 65),
-                  i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE))))),
-             6) AS cosine_sim
-    FROM embeddings e CROSS JOIN q
-    ORDER BY cosine_sim DESC, vec_id LIMIT 20
-    """,
-    subsumed_by="ann_ivf_topk + ann_int8_topk",
-)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-20 to the vec_id=0 embedding — the exact
-    baseline every ANN variant (LSH/IVF, similarity/ module) is
-    recall-checked against."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    return (
-        _cosine_to_query(emb, 0)
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(20)
-    )
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "emb_label_centroid_norm",
-    """
-    SELECT label,
-           CAST(n_vecs AS BIGINT) AS n_vecs,
-           ROUND(sqrt(SUM(m * m)), 6) AS centroid_norm
-    FROM (
-      SELECT label, pos,
-             SUM(CAST(embedding[pos] AS DOUBLE)) / COUNT(*) AS m,
-             COUNT(*) AS n_vecs
-      FROM embeddings CROSS JOIN (SELECT UNNEST(range(1, 65)) AS pos) p
-      GROUP BY label, pos
-    ) GROUP BY label, n_vecs ORDER BY label
-    """,
-    subsumed_by="kmeans_cluster_stats",
-)
-def emb_label_centroid_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid L2 norm — the aggregation building block for
-    IVF partitioning (assign → average). posexplode + two-level groupBy;
-    fp sum-order noise (~1e-15) is absorbed by round(6).
-
-    Scale: the explode multiplies rows ×dim, but the per-(label,pos)
-    partial aggregation combines map-side, so the shuffle carries only
-    n_labels × dim rows.
-    """
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    exploded = emb.select(
-        "label", F.posexplode(F.col("embedding").cast("array<double>"))
-    )
-    per_pos = exploded.groupBy("label", "pos").agg(
-        (F.sum("col") / F.count(F.lit(1))).alias("m"),
-        F.count(F.lit(1)).alias("n_vecs"),
-    )
-    return (
-        per_pos.groupBy("label", "n_vecs")
-        .agg(F.round(F.sqrt(F.sum(F.col("m") * F.col("m"))), 6).alias("centroid_norm"))
-        .select("label", "n_vecs", "centroid_norm")
-        .orderBy("label")
-    )
-
-
 # ----------------------------------------------------------------------
 # MinHash-LSH near-dedup (dedup/minhash.py) — fully oracle-checkable
 # because every hash is md5-based (portable across engines).
@@ -434,23 +252,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sh.with_simhash(spread(docs)).orderBy("doc_id")
 
 
-@retired_query(
-    "dedup_simhash_pairs",
-    _sh.pairs_oracle_sql(),
-    subsumed_by="dedup_simhash",
-)
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs between distinct-fingerprint
-    representatives: 4x16-bit quarter banding (complete for hamming <= 3
-    by pigeonhole) + integer bit_count verification."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    return (
-        _sh.simhash_pairs(spread(docs), max_hamming=3)
-        .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 # ----------------------------------------------------------------------
 # Deterministic k-means clustering (similarity/kmeans.py)
 # ----------------------------------------------------------------------
@@ -469,23 +270,6 @@ def kmeans_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio of exact integer sums in BOTH engines."""
     (emb,) = _t(spark, sf_dir, "embeddings")
     return _km.kmeans_cluster_stats(emb, k=8, iters=3)
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "kmeans_balanced_sample",
-    _km.duckdb_balanced_sample_sql(),
-    subsumed_by="kmeans_cluster_stats + quota_stratified_sample",
-)
-def kmeans_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-balanced sampling over the k-means output (VERDICT r5
-    ask #8 — the gate consuming the clusters): up to 10 members per
-    cluster in a deterministic md5-of-id order, so the 'random' pick
-    is bit-identical in DuckDB and re-derivable for audits.  The rank
-    filter pre-trims map-side via WindowGroupLimit (plan-asserted) —
-    at a billion vectors the sample exchange carries cap × partitions
-    rows per cluster, never a cluster's full membership."""
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    return _km.kmeans_balanced_sample(emb)
 
 
 # ----------------------------------------------------------------------
@@ -608,7 +392,7 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_ivf_topk", _ivf.build_oracle_sql(query_vec_id=0))
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: probe the 3 nearest label-cells, exact rerank
-    top-20 (recall vs ann_cosine_topk measured in tests)."""
+    top-20 (recall vs brute-force topk_cosine measured in tests)."""
     (emb,) = _t(spark, sf_dir, "embeddings")
     return _ivf.ivf_topk(emb, query_vec_id=0, k=20, nprobe=3)
 
@@ -697,80 +481,6 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("c.ctoks").alias("n_tokens"),
         F.md5(F.concat_ws(" ", "c.ctoks")).alias("chunk_hash"),
     ).orderBy("doc_id", "chunk_idx")
-
-
-# ----------------------------------------------------------------------
-# Dedup cascade — the production shape: cheap exact hash first, then
-# prefix fingerprints, then MinHash-LSH on what survives. Each stage
-# shrinks the input of the next (the expensive near-dedup only ever
-# sees exact-unique, fingerprint-unique docs).
-# ----------------------------------------------------------------------
-
-
-def _cascade_oracle() -> str:
-    from automated_etl_pipeline_spark.dedup.minhash import pairs_cte_sql
-
-    return f"""
-    WITH exact_reps AS (
-      SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-    ), d1 AS (
-      SELECT d.doc_id, d.text FROM documents d JOIN exact_reps USING (doc_id)
-    ), fp_reps AS (
-      SELECT MIN(doc_id) AS doc_id FROM (
-        SELECT doc_id,
-               md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS fp
-        FROM d1
-      ) GROUP BY fp
-    ), d2 AS (
-      SELECT d.doc_id, d.text FROM d1 d JOIN fp_reps USING (doc_id)
-    ), {pairs_cte_sql(source="d2")},
-    losers AS (SELECT DISTINCT doc_b AS doc_id FROM mh_pairs)
-    SELECT 'a_raw' AS stage, (SELECT COUNT(*) FROM documents) AS n_docs
-    UNION ALL SELECT 'b_exact', (SELECT COUNT(*) FROM d1)
-    UNION ALL SELECT 'c_fingerprint', (SELECT COUNT(*) FROM d2)
-    UNION ALL SELECT 'd_minhash',
-      (SELECT COUNT(*) FROM d2) - (SELECT COUNT(*) FROM losers)
-    ORDER BY stage
-    """
-
-
-@retired_query("dedup_cascade_stats", _cascade_oracle(), subsumed_by="corpus_curation_e2e")
-def dedup_cascade_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Survivor counts after each cascade stage (raw → exact →
-    fingerprint → MinHash near-dedup), stages applied sequentially.
-
-    NOTE — comparison shape, not the production one: the min-per-key +
-    left-semi-join formulation here re-scans the corpus once per cheap
-    stage (4 scans, 3 semi joins).  The preferred production pipeline
-    is ``corpus_curation_e2e``, which runs the same cascade (plus the
-    quality gate and span accounting) with the cheap stages fused into
-    ONE scan of keep-rank-1 windows and the survivors materialized
-    before near-dedup.  This gate stays as the per-stage accounting
-    view and the cross-check on the window formulation."""
-    from automated_etl_pipeline_spark.dedup.minhash import deduplicate
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    docs = spread(docs).select("doc_id", "text")
-
-    exact_reps = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    d1 = docs.join(exact_reps.select("doc_id"), "doc_id", "left_semi")
-    fp = F.md5(F.concat_ws(" ", F.slice(F.split("text", " "), 1, 8)))
-    fp_reps = d1.groupBy(fp).agg(F.min("doc_id").alias("doc_id"))
-    d2 = d1.join(fp_reps.select("doc_id"), "doc_id", "left_semi").localCheckpoint()
-    d3 = deduplicate(d2, threshold=0.8)
-
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n_docs")).select(
-            F.lit(name).alias("stage"), "n_docs"
-        )
-
-    return (
-        stage("a_raw", docs)
-        .unionByName(stage("b_exact", d1))
-        .unionByName(stage("c_fingerprint", d2))
-        .unionByName(stage("d_minhash", d3))
-        .orderBy("stage")
-    )
 
 
 # ----------------------------------------------------------------------
@@ -959,25 +669,6 @@ def _clusters_oracle() -> str:
     """
 
 
-@retired_query(
-    "dedup_minhash_clusters",
-    _clusters_oracle(),
-    subsumed_by="dedup_minhash_lsh + cc_stars_clusters",
-)
-def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive near-dup clusters: every document labeled with the
-    min doc_id of its connected component in the jaccard>=0.8 MinHash
-    pair graph (singletons label themselves)."""
-    from automated_etl_pipeline_spark.dedup.cluster import connected_components
-    from automated_etl_pipeline_spark.dedup.minhash import near_duplicate_pairs
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    edges = near_duplicate_pairs(spread(docs), threshold=0.8).select("doc_a", "doc_b")
-    return connected_components(
-        docs.select("doc_id"), edges, id_col="doc_id", src_col="doc_a", dst_col="doc_b"
-    ).orderBy("doc_id")
-
-
 def _keep_best_oracle() -> str:
     from automated_etl_pipeline_spark.dedup.minhash import pairs_cte_sql
 
@@ -1028,7 +719,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the deterministic tiebreak; output = one survivor per
     multi-member cluster with its size.
 
-    Scale: same component machinery as dedup_minhash_clusters (banded
+    Scale: the dedup/cluster.py component machinery (banded
     pairs, iterative min-label with the singleton fast path); the
     survivor pick is a per-component WindowGroupLimit-style rank-1
     filter over CLUSTER MEMBERS only (the tiny minority of a deduped
@@ -1284,133 +975,6 @@ def winnow_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SPAN_W = 20
 
 
-@retired_query(  # r14, registry 200 -> 180
-    "dedup_span_removal",
-    f"""
-    WITH tok AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ), win AS (
-      SELECT doc_id,
-             UNNEST(range(1, len(t) - {_SPAN_W} + 2)) AS pos,
-             UNNEST(list_transform(range(1, len(t) - {_SPAN_W} + 2),
-               i -> ('0x' || substr(md5(
-                      array_to_string(t[i:i+{_SPAN_W}-1], ' ')), 1, 15))::BIGINT
-             )) AS h
-      FROM tok WHERE len(t) >= {_SPAN_W}
-    ), owner AS (
-      SELECT h, MIN(doc_id) AS owner_doc FROM win
-      GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
-    ), removable AS (
-      SELECT w.doc_id, w.pos FROM win w JOIN owner o USING (h)
-      WHERE w.doc_id > o.owner_doc
-    ), flagged AS (
-      SELECT doc_id, pos,
-             CASE WHEN pos > lag(pos) OVER w + {_SPAN_W} OR
-                       lag(pos) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS new_island
-      FROM (SELECT DISTINCT doc_id, pos FROM removable)
-      WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-    ), islands AS (
-      SELECT doc_id, pos,
-             SUM(new_island) OVER (PARTITION BY doc_id ORDER BY pos
-                                   ROWS UNBOUNDED PRECEDING) AS island
-      FROM flagged
-    ), spans AS (
-      SELECT doc_id, island,
-             MIN(pos) AS s, MAX(pos) + {_SPAN_W} - 1 AS e
-      FROM islands GROUP BY doc_id, island
-    )
-    SELECT sp.doc_id,
-           COUNT(*) AS n_spans,
-           CAST(SUM(e - s + 1) AS BIGINT) AS tokens_removed,
-           CAST(len(t) AS BIGINT) AS n_tokens,
-           CAST(len(t) - SUM(e - s + 1) AS BIGINT) AS tokens_kept
-    FROM spans sp JOIN tok USING (doc_id)
-    GROUP BY sp.doc_id, len(t) ORDER BY sp.doc_id
-    """,
-    subsumed_by="curation_suffix_e2e",
-)
-def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicated-span REMOVAL plan (completes dedup_exact_spans'
-    detection with Lee-et-al keep-first semantics): each duplicated
-    window hash has an OWNER (lowest doc_id); occurrences in any other
-    document are removal candidates, whose overlapping/adjacent
-    [pos, pos+W-1] intervals merge into maximal spans via
-    gaps-and-islands (new island when the gap to the previous window
-    start exceeds W).  Per-doc output: merged span count, tokens
-    removed, tokens kept — the exact edit list a span-scrubbing writer
-    would apply, computed without ever materializing the edited text.
-
-    Scale: the owner aggregate collapses map-side; the islands pass is
-    one per-doc window over REMOVABLE positions only (a small subset
-    of windows); everything is keyed on doc_id or the 60-bit window
-    hash.  Same shuffle structure as dedup_exact_spans plus one
-    narrow per-doc window.  Implementation (W-parameterized, property-
-    tested against a pure-Python reference at W=3): dedup/spans.py."""
-    from automated_etl_pipeline_spark.dedup.spans import removal_spans
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    return removal_spans(spread(docs), w=_SPAN_W)
-
-
-@retired_query(
-    "dedup_exact_spans",
-    f"""
-    WITH tok AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ), win AS (
-      SELECT doc_id,
-             UNNEST(list_transform(range(1, len(t) - {_SPAN_W} + 2),
-               i -> ('0x' || substr(md5(
-                      array_to_string(t[i:i+{_SPAN_W}-1], ' ')), 1, 15))::BIGINT
-             )) AS h
-      FROM tok WHERE len(t) >= {_SPAN_W}
-    ), dup AS (
-      SELECT h FROM win GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2
-    ), per_doc AS (
-      SELECT w.doc_id, COUNT(*) AS n_dup_windows
-      FROM win w JOIN dup USING (h) GROUP BY w.doc_id
-    )
-    SELECT p.doc_id,
-           CAST(len(t) - {_SPAN_W} + 1 AS BIGINT) AS n_windows,
-           n_dup_windows,
-           ROUND(CAST(n_dup_windows AS DOUBLE)
-                 / (len(t) - {_SPAN_W} + 1), 6) AS dup_frac
-    FROM per_doc p JOIN tok USING (doc_id)
-    ORDER BY doc_id
-    """,
-    subsumed_by="curation_suffix_e2e",
-)
-def dedup_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicated-span detection (the exact-substring dedup
-    signal of Lee et al., 'Deduplicating Training Data Makes Language
-    Models Better'): every W=20-token sliding window is content-hashed;
-    a window whose hash appears in >= 2 DISTINCT documents marks a
-    cross-document duplicated span.  Per-document output (window
-    count, duplicated-window count, duplicated fraction) is the
-    span-removal signal — near-dup pair finders (minhash/simhash/
-    PPJoin) rate whole documents; this localizes WHICH text is copied
-    (boilerplate, license blocks, templated passages) even between
-    documents that are globally dissimilar.
-
-    Determinism: windows are hashed with the shared 60-bit md5 scheme
-    (dedup/ngram_jaccard.shingle_hash60 — 8-byte shuffle keys instead
-    of 32-byte hex, identical parse in DuckDB; corpus-wide collisions
-    ~n²/2⁶¹).
-
-    Scale: explode is n_tokens rows per doc (same order as the
-    shingle index); the dup-hash aggregate collapses map-side (shuffle
-    O(distinct windows)); the count-back join is hash-keyed.  Nothing
-    is quadratic — the suffix-array construction of the paper is
-    replaced by the fixed-W rolling-window hash join, the standard
-    Spark-native formulation.  Implementation (W-parameterized):
-    dedup/spans.py."""
-    from automated_etl_pipeline_spark.dedup.spans import span_report
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    return span_report(spread(docs), w=_SPAN_W)
-
-
 @query(
     "oov_rate_quality",
     """
@@ -1544,128 +1108,6 @@ def vocab_encode_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("p") * F.col("token_id")).alias("checksum"),
         )
         .orderBy("doc_id")
-    )
-
-
-def _dedup_apply_oracle() -> str:
-    from automated_etl_pipeline_spark.dedup.minhash import pairs_cte_sql
-
-    return f"""
-    WITH RECURSIVE {pairs_cte_sql()},
-    sym AS (
-      SELECT doc_a AS a, doc_b AS b FROM mh_pairs
-      UNION
-      SELECT doc_b AS a, doc_a AS b FROM mh_pairs
-    ),
-    reach AS (
-      SELECT doc_id, doc_id AS r FROM documents
-      UNION
-      SELECT s.a AS doc_id, reach.r FROM sym s JOIN reach ON s.b = reach.doc_id
-    ),
-    comp AS (
-      SELECT doc_id, MIN(r) AS component FROM reach GROUP BY doc_id
-    )
-    SELECT d.lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(*) FILTER (c.component = d.doc_id) AS BIGINT) AS n_survivors,
-           CAST(COUNT(*) FILTER (c.component != d.doc_id) AS BIGINT) AS n_removed
-    FROM documents d JOIN comp c ON d.doc_id = c.doc_id
-    GROUP BY d.lang ORDER BY d.lang
-    """
-
-
-@retired_query("dedup_apply_survivors", _dedup_apply_oracle(), subsumed_by="corpus_curation_e2e + cc_stars_clusters")
-def dedup_apply_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup APPLICATION step the cascade exists for: keep one
-    representative (min doc_id) per near-dup component, drop the rest,
-    reported per language.  Composes near_duplicate_pairs ->
-    connected_components -> survivor filter — the full
-    candidate/verify/cluster/apply dataflow under one gate."""
-    from automated_etl_pipeline_spark.dedup.cluster import connected_components
-    from automated_etl_pipeline_spark.dedup.minhash import near_duplicate_pairs
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    edges = near_duplicate_pairs(spread(docs), threshold=0.8).select("doc_a", "doc_b")
-    comp = connected_components(
-        docs.select("doc_id"), edges, id_col="doc_id", src_col="doc_a", dst_col="doc_b"
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(comp, "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count(F.when(F.col("component") == F.col("doc_id"), 1)).alias(
-                "n_survivors"
-            ),
-            F.count(F.when(F.col("component") != F.col("doc_id"), 1)).alias(
-                "n_removed"
-            ),
-        )
-        .orderBy("lang")
-    )
-
-
-_KNN_DIM = 64
-_KNN_DOT = "list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))"
-_KNN_NE = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))))"
-_KNN_NQ = "sqrt(list_sum(list_transform(range(1, 65), i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))"
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "knn_batch_topk",
-    f"""
-    WITH sims AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             ROUND({_KNN_DOT} / ({_KNN_NE} * {_KNN_NQ}), 6) AS cosine_sim
-      FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
-      WHERE q.vec_id < 5
-    ), ranked AS (
-      SELECT query_id, neighbor_id, cosine_sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine_sim DESC, neighbor_id) AS rnk
-      FROM sims
-    )
-    SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, cosine_sim
-    FROM ranked WHERE rnk <= 10 ORDER BY query_id, rnk
-    """,
-    subsumed_by="ann_ivf_topk",
-)
-def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch kNN join — top-10 exact-cosine neighbors for EACH of a
-    broadcast batch of query vectors (vec_id < 5), the many-query
-    generalization of ann_cosine_topk.
-
-    Scale: the query batch broadcasts (Q rows); each scan partition
-    scores its vectors against all Q in one pass and the per-query
-    top-k resolves in a WindowGroupLimit (rank filter) — no all-pairs
-    shuffle, volume Q x k out of the window.  For Q beyond broadcast
-    size, switch to the IVF/LSH candidate paths (similarity/)."""
-    from automated_etl_pipeline_spark.similarity.brute_force import dot, l2_norm
-
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    e = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    sim = F.round(
-        dot(F.col("embedding"), F.col("q_emb"))
-        / (l2_norm(F.col("embedding")) * l2_norm(F.col("q_emb"))),
-        6,
-    )
-    sims = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "rnk", "neighbor_id", "cosine_sim")
-        .orderBy("query_id", "rnk")
     )
 
 
@@ -2097,58 +1539,8 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query(  # r14, registry 200 -> 180
-    "split_train_val_test",
-    """
-    WITH tagged AS (
-      SELECT lang,
-             len(string_split(text, ' ')) AS n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
-               AS bucket
-      FROM documents
-    )
-    SELECT CASE WHEN bucket < 90 THEN 'train'
-                WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split,
-           lang,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n) AS BIGINT) AS n_tokens
-    FROM tagged GROUP BY split, lang ORDER BY split, lang
-    """,
-    subsumed_by="split_leakage_audit",
-)
-def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 90/5/5 train/val/test assignment by md5 bucket of
-    doc_id — content-stable (re-runs and late-arriving shards land in
-    the same split; no RNG, no seed file to lose), reported as per
-    (split, lang) doc and token counts for mixture bookkeeping.
-
-    Scale: pure column expressions plus one 2-key aggregate; the hash
-    assignment is embarrassingly parallel and retry-stable — the same
-    property sample_stratified_hash relies on."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % 100
-    split = (
-        F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
-    )
-    return (
-        docs.select(
-            split.alias("split"),
-            "lang",
-            F.size(F.split("text", " ")).alias("n"),
-        )
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("n").alias("n_tokens")
-        )
-        .orderBy("split", "lang")
-    )
-
-
 # ----------------------------------------------------------------------
-# PII / denylist scrubbing, per-source caps, and int8 quantization —
-# the scrub-and-ship end of the curation pipeline.
+# PII / denylist scrubbing — the scrub end of the curation pipeline.
 # ----------------------------------------------------------------------
 
 # The synthetic corpus contains no emails/phones (functions/redact.py's
@@ -2207,119 +1599,6 @@ def pii_denylist_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_res").alias("redacted_chars"),
         )
         .orderBy("lang")
-    )
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "source_cap_sample",
-    """
-    WITH ranked AS (
-      SELECT source, doc_id, len(string_split(text, ' ')) AS n,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-      FROM documents)
-    SELECT source, COUNT(*) AS n_kept,
-           CAST(SUM(doc_id) AS BIGINT) AS kept_id_sum,
-           CAST(SUM(n) AS BIGINT) AS kept_tokens
-    FROM ranked WHERE rk <= 15 GROUP BY source ORDER BY source
-    """,
-    subsumed_by="quota_stratified_sample",
-)
-def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source document cap (anti-over-representation: no single
-    domain may contribute more than N docs), deterministic via
-    md5(doc_id) ordering — re-runs and late shards pick the same
-    survivors, no RNG. Reports per-source kept counts plus id/token
-    checksums over the survivor set.
-
-    Scale: the rank-then-filter shape is exactly what Spark's
-    WindowGroupLimit rewrite targets — each map task keeps only its
-    local top-N per source BEFORE the shuffle, so a billion-doc source
-    moves N×partitions rows, not a billion, through the exchange (plan
-    asserted in tests/test_plans.py)."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    ranked = docs.select(
-        "source",
-        "doc_id",
-        F.size(F.split("text", " ")).alias("n"),
-        F.row_number().over(w).alias("rk"),
-    )
-    return (
-        ranked.filter(F.col("rk") <= 15)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("doc_id").alias("kept_id_sum"),
-            F.sum("n").alias("kept_tokens"),
-        )
-        .orderBy("source")
-    )
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "emb_quantize_int8",
-    """
-    WITH q AS (
-      SELECT label, embedding,
-             127.0 / CAST(list_max(list_transform(embedding,
-               x -> abs(x))) AS DOUBLE) AS scale
-      FROM embeddings
-    ), c AS (
-      SELECT label,
-             list_transform(embedding, x ->
-               CAST(floor(CAST(x AS DOUBLE) * scale + 0.5) AS BIGINT))
-               AS codes,
-             list_max(list_transform(embedding, x ->
-               abs(CAST(x AS DOUBLE)
-                   - floor(CAST(x AS DOUBLE) * scale + 0.5) / scale)))
-               AS max_err
-      FROM q)
-    SELECT label, COUNT(*) AS n_vecs,
-           CAST(SUM(list_sum(codes)) AS BIGINT) AS code_sum,
-           CAST(SUM(list_sum(list_transform(codes, c -> abs(c))))
-             AS BIGINT) AS code_abs_sum,
-           round(MAX(max_err), 6) AS max_q_err
-    FROM c GROUP BY label ORDER BY label
-    """,
-    subsumed_by="ann_int8_topk",
-)
-def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 embedding quantization (similarity/quantize.py):
-    per-vector scale 127/max|x|, codes floor(x*scale+0.5). Reported as
-    per-label integer code checksums plus the worst dequantization
-    error — the audit a 4×-compression rollout of a 100 TB embedding
-    store would run. floor(+0.5) pins rounding identically in Spark
-    and DuckDB; all checksums are integers (no float fold-order).
-
-    Scale: two narrow projections (max-abs materialized once per
-    vector — HOFs get no CSE) and one small agg; no shuffle beyond the
-    label groupBy."""
-    from automated_etl_pipeline_spark.similarity.quantize import with_int8
-
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    q = with_int8(emb, "embedding")
-    per_vec = q.select(
-        "label",
-        F.aggregate(
-            "q_codes", F.lit(0).cast("long"), lambda a, x: a + x
-        ).alias("code_sum"),
-        F.aggregate(
-            "q_codes", F.lit(0).cast("long"), lambda a, x: a + F.abs(x)
-        ).alias("code_abs_sum"),
-        "q_max_err",
-    )
-    return (
-        per_vec.groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.sum("code_sum").alias("code_sum"),
-            F.sum("code_abs_sum").alias("code_abs_sum"),
-            F.round(F.max("q_max_err"), 6).alias("max_q_err"),
-        )
-        .orderBy("label")
     )
 
 
@@ -2483,7 +1762,7 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak. Recall vs the float baseline is asserted in
     tests/test_dedup_similarity.py.
 
-    Scale: same shape as ann_cosine_topk — broadcast 1-row quantized
+    Scale: same shape as brute_force.topk_cosine — broadcast 1-row quantized
     query, narrow per-row scoring, TakeOrderedAndProject top-k; the
     max-abs scan is materialized per vector before the quantize lambda
     (HOFs get no CSE)."""
@@ -2795,10 +2074,9 @@ def corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The ONE copy of the brute-force k-gram match-length derivation,
-# shared by the three suffix-family oracles (curation e2e below,
-# _SUFFIX_STATS_ORACLE, _SUFFIX_SPANS_ORACLE — r12 review: three
-# drifting copies).  Expects a prior CTE ``corpus(did, t)``; emits
+# The brute-force k-gram match-length derivation of the curation e2e
+# oracle below, kept apart so tests/test_kgram_oracle.py can check it
+# against a pure-Python reference.  Expects a prior CTE ``corpus(did, t)``; emits
 # ``posn(did, t, dlen, pos, tokn)`` and ``ml(did, pos, match_len)``.
 # The digits-cross-join numbers table (LCD rule — no range()+unnest)
 # covers pos/k up to 999; gate corpora max out at dlen 100 (measured:
@@ -2966,49 +2244,6 @@ def curation_suffix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Heavy-hitters sketch (functions/heavy_hitters.py — VERDICT r7 ask #5)
-# ----------------------------------------------------------------------
-
-
-@retired_query(  # r14, registry 200 -> 180
-    "heavy_hitter_tokens",
-    """
-    WITH t AS (
-      SELECT unnest(string_split(text, ' ')) AS token FROM documents
-    ), n AS (SELECT COUNT(*) AS n FROM t)
-    SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM t GROUP BY token
-    HAVING COUNT(*) >= 0.02 * (SELECT n FROM n)
-    ORDER BY token
-    """,
-    subsumed_by="streaming_heavy_tokens",
-)
-def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact phi-heavy tokens (count >= 2% of all token instances)
-    computed sketch-first: per-partition Misra-Gries partials (bounded
-    memory, <= k rows each) -> merge -> candidate filter at the sketch
-    guarantee threshold -> exact recount of the candidates only.  No
-    full GROUP BY over the token space ever runs; the only full-key
-    aggregate in the plan is over <= k*partitions sketch rows.  The
-    no-miss guarantee (every true heavy hitter survives the candidate
-    filter) makes the output EXACT and partition-independent, so the
-    plain GROUP BY ... HAVING oracle must hash-match it — a missed
-    candidate is a missing row, not an approximation artifact.
-
-    This corpus's token distribution is near-uniform over a tiny
-    vocabulary, so the eviction path barely fires here; the planted-
-    zipf unit tests (tests/test_heavy_hitters.py) pin the sketch bound
-    where k << vocabulary and evictions dominate."""
-    from automated_etl_pipeline_spark.functions.heavy_hitters import (
-        heavy_hitters,
-    )
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    toks = spread(docs).select(F.explode(F.split("text", " ")).alias("token"))
-    return heavy_hitters(toks, "token", phi=0.02).orderBy("token")
-
-
-# ----------------------------------------------------------------------
 # Sign random projection (similarity/rproj.py)
 # ----------------------------------------------------------------------
 
@@ -3160,86 +2395,6 @@ def quality_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- mad probes (VERDICT r9 ask #1): input, median, MAD — one
-# statistic per gate so a driver red localizes.
-
-_MAD_PROBE_COUNTS_ORACLE = """
-SELECT source, COUNT(*) AS n_rows,
-       CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS sum_v,
-       CAST(MIN(n_chars) AS BIGINT) AS min_v,
-       CAST(MAX(n_chars) AS BIGINT) AS max_v
-FROM documents GROUP BY source ORDER BY source
-"""
-
-
-@probe("mad_probe_counts", _MAD_PROBE_COUNTS_ORACLE)
-def mad_probe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 1/3 for quality_mad_outliers: ONLY the integer input
-    column per group (count/sum/min/max of n_chars).  Red here = the
-    engines disagree before any statistic is computed."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    v = F.col("n_chars").cast("bigint")
-    return (
-        docs.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(v).alias("sum_v"),
-            F.min(v).alias("min_v"),
-            F.max(v).alias("max_v"),
-        )
-        .orderBy("source")
-    )
-
-
-_MAD_PROBE_MEDIAN_ORACLE = (
-    "WITH " + _MAD_CORE + """
-SELECT source, med2 FROM med ORDER BY source
-"""
-)
-
-
-@probe("mad_probe_median", _MAD_PROBE_MEDIAN_ORACLE)
-def mad_probe_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 2/3: ONLY the doubled rank-midpoint median.  Red here
-    with 1/3 green = the rank/window construction diverges."""
-    from automated_etl_pipeline_spark.operators.robust import (
-        int_group_median2,
-    )
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    return int_group_median2(
-        docs.select("source", "n_chars"), "n_chars", ["source"]
-    ).orderBy("source")
-
-
-_MAD_PROBE_MAD_ORACLE = (
-    "WITH " + _MAD_CORE + """
-SELECT source, mad4 FROM mad ORDER BY source
-"""
-)
-
-
-@probe("mad_probe_mad", _MAD_PROBE_MAD_ORACLE)
-def mad_probe_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe 3/3: ONLY the quadrupled MAD.  Red here with 1-2/3 green
-    = the deviation pass diverges."""
-    from automated_etl_pipeline_spark.operators.robust import (
-        int_group_median2,
-    )
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    x2 = docs.select(
-        "source", F.col("n_chars").cast("bigint").alias("__x")
-    )
-    med = int_group_median2(x2, "__x", ["source"], out="med2")
-    dev = x2.join(F.broadcast(med), ["source"]).withColumn(
-        "__adev2", F.abs(2 * F.col("__x") - F.col("med2"))
-    )
-    return int_group_median2(dev, "__adev2", ["source"], out="mad4").orderBy(
-        "source"
-    )
-
-
 # ----------------------------------------------------------------------
 # Nucleus (top-p) vocabulary cutoff per language.  Tokenizer/vocab
 # construction at corpus scale: rank the per-language token counts,
@@ -3325,7 +2480,7 @@ def vocab_top_p_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 # Streaming Misra-Gries heavy hitters (streaming/stateful.py) — the
 # 9th value-gated streaming execution path, and the streaming twin of
-# heavy_hitter_tokens: the same sketch bound, carried across trigger
+# functions/heavy_hitters.py: the same sketch bound, carried across trigger
 # boundaries in applyInPandasWithState state instead of across
 # partitions in mapInPandas partials.
 # ----------------------------------------------------------------------
@@ -3464,7 +2619,7 @@ ORDER BY rrf_score DESC, id LIMIT 20
 def rrf_hybrid_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: a lexical ranker (exact-token tf of 'data')
     and a vector ranker (cosine to the vec_id=0 embedding, the
-    ann_cosine_topk recipe) each emit a top-100 candidate list; RRF
+    brute_force.topk_cosine recipe) each emit a top-100 candidate list; RRF
     fuses them and the gate hashes the fused top-20 with both
     component ranks.  Each ranker's candidate cut is
     TakeOrderedAndProject; ranking and fusion then touch only the two
@@ -3744,8 +2899,8 @@ def collocation_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # alone cannot see — a deterministic hash split is LEAK-FREE only at
 # the exact-doc-id grain; near/exact duplicate CONTENT still lands on
 # both sides and inflates eval.  The audit joins the split assignment
-# (the split_train_val_test md5-bucket recipe) with content
-# fingerprints (first-8-token md5, the dedup_fingerprint grain) and
+# (an md5-bucket 90/5/5 split) with content
+# fingerprints (first-8-token md5, the fingerprint-dedup grain) and
 # counts, per split, the docs whose fingerprint group spans more than
 # one split.  Plan: one (fp, split) reduce + a fingerprint-grain
 # rollup joined back at fp grain — fingerprint groups are the reduced
@@ -4116,125 +3271,6 @@ def bpe_fidelity_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The brute-force k-gram coverage derivation lives in
-# _kgram_coverage_ctes() (defined above the curation e2e gate, its
-# first module-level use): match_len(pos) counts the k >= 1 whose
-# k-gram starting at pos occurs at >= 2 positions anywhere in the
-# corpus (a duplicated k-gram's (k-1)-prefix is itself duplicated, so
-# the qualifying k form the contiguous range 1..match_len — the count
-# IS the max).  Enumerating every k-gram is O(sum dlen^2) strings:
-# ~48k at the gate's sf0.01 corpus, ~900k at sf0.1 — nothing like the
-# suffix array's machinery, which is the point of an oracle.
-_SUFFIX_STATS_ORACLE = f"""
-WITH base AS (
-  SELECT doc_id,
-         list_filter(string_split(coalesce(text, ''), ' '), w -> w != '') AS t
-  FROM documents WHERE doc_id % 20 = 0
-), corpus AS (
-  SELECT doc_id AS did, t FROM base
-  UNION ALL
-  SELECT -(doc_id + 1) AS did, t FROM base WHERE doc_id % 100 = 0
-), {_kgram_coverage_ctes()}, fullpos AS (
-  SELECT p.did, p.pos, p.dlen,
-         coalesce(m.match_len, 0) AS match_len,
-         CASE WHEN p.did < 0 THEN -p.did - 1 ELSE p.did END AS base_id
-  FROM posn p LEFT JOIN ml m ON p.did = m.did AND p.pos = m.pos
-)
-SELECT CAST((base_id // 20) % 4 AS BIGINT) AS bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_positions,
-       CAST(SUM(match_len) AS BIGINT) AS sum_match_len,
-       CAST(SUM(CASE WHEN base_id % 100 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_planted_pos,
-       SUM(CASE WHEN base_id % 100 = 0 THEN 1 ELSE 0 END) =
-         SUM(CASE WHEN base_id % 100 = 0 AND match_len = dlen - pos
-             THEN 1 ELSE 0 END) AS planted_exact_ok,
-       COUNT(*) = SUM(CASE WHEN match_len <= dlen - pos THEN 1 ELSE 0 END)
-         AS bound_ok
-FROM fullpos GROUP BY 1 ORDER BY 1
-"""
-
-
-@retired_query("suffix_array_stats", _SUFFIX_STATS_ORACLE, subsumed_by="curation_suffix_e2e")
-def suffix_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suffix-array exact-substring statistics (dedup/suffix_array.py,
-    Lee et al. arXiv:2107.06499 semantics), three-axis hash-gated
-    against a brute-force DuckDB oracle that derives every per-position
-    match length WITHOUT a suffix array: match_len(pos) = the number of
-    k >= 1 whose k-gram at pos is duplicated somewhere in the corpus
-    (prefix-closure makes those k contiguous), enumerable exhaustively
-    at gate scale.  The brute-force pure-Python oracle in
-    tests/test_suffix_array.py stays as the property-test layer.
-
-    The gate runs on a deterministic 1-in-20 doc subset PLUS planted
-    verbatim replicas of the 1-in-100 docs, and emits per-bucket
-    BIGINTs with two invariant columns the oracle now also derives
-    independently from ITS OWN match lengths:
-      - planted_exact_ok: every position of a planted doc (original
-        and replica) must have match_len == doc_len - pos exactly —
-        its full suffix occurs verbatim in the twin, and no match can
-        outrun the document sentinel;
-      - bound_ok: match_len <= doc_len - pos at EVERY position.
-    A broken rank round, LCP descent, or offset computation flips one
-    of these to false or moves a count."""
-    from automated_etl_pipeline_spark.dedup.suffix_array import match_lengths
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    subset = docs.filter(F.col("doc_id") % 20 == 0).select("doc_id", "text")
-    # replica ids are the NEGATIVE mirror -(doc_id+1): bijective and
-    # collision-proof for any non-negative real id space (r11 review:
-    # a fixed +10M offset collides once the corpus reaches 10M docs)
-    planted = subset.filter(F.col("doc_id") % 100 == 0).select(
-        (-(F.col("doc_id") + F.lit(1))).alias("doc_id"), "text"
-    )
-    corpus = subset.unionByName(planted)
-    lens = corpus.select(
-        "doc_id",
-        F.size(
-            F.filter(
-                F.split(F.coalesce(F.col("text"), F.lit("")), " "),
-                lambda t: t != "",
-            )
-        ).alias("__len"),
-    )
-    base = F.when(
-        F.col("doc_id") < 0, -F.col("doc_id") - 1
-    ).otherwise(F.col("doc_id"))
-    j = (
-        match_lengths(corpus)
-        .join(lens, "doc_id")
-        .select(
-            (F.floor(base / 20) % 4).cast("long").alias("bucket"),
-            (base % 100 == 0).alias("__planted"),
-            (F.col("match_len") == F.col("__len") - F.col("pos")).alias("__exact"),
-            (F.col("match_len") <= F.col("__len") - F.col("pos")).alias("__bnd"),
-            "match_len",
-        )
-    )
-    agg = j.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_positions"),
-        F.sum("match_len").cast("long").alias("sum_match_len"),
-        F.sum(F.when(F.col("__planted"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_planted_pos"),
-        F.sum(F.when(F.col("__planted") & F.col("__exact"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_planted_exact"),
-        F.sum(F.when(F.col("__bnd"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_bound_ok"),
-    )
-    return agg.select(
-        "bucket",
-        "n_positions",
-        "sum_match_len",
-        "n_planted_pos",
-        (F.col("n_planted_pos") == F.col("n_planted_exact")).alias(
-            "planted_exact_ok"
-        ),
-        (F.col("n_bound_ok") == F.col("n_positions")).alias("bound_ok"),
-    ).orderBy("bucket")
-
-
 _DSIR_STRUCTURAL_ORACLE = """
 WITH tok AS (
   SELECT doc_id,
@@ -4310,66 +3346,6 @@ def dsir_select_structural(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_selected_distinct",
             "n_selected_in_pool",
         )
-    )
-
-
-_CCNET_SIZES_ORACLE = """
-WITH s AS (
-  SELECT COUNT(*) AS total,
-         SUM(CASE WHEN len(list_filter(string_split(coalesce(text, ''), ' '),
-                       w -> w != '')) >= 2
-             THEN 1 ELSE 0 END) AS n
-  FROM documents
-)
-SELECT part, CAST(n_docs AS BIGINT) AS n_docs FROM (
-  SELECT 'empty' AS part, total - n AS n_docs FROM s
-  UNION ALL SELECT 'head', CAST(ceil(n * 0.25) AS BIGINT) FROM s
-  UNION ALL SELECT 'middle',
-    CAST(ceil(n * 0.75) AS BIGINT) - CAST(ceil(n * 0.25) AS BIGINT) FROM s
-  UNION ALL SELECT 'tail', n - CAST(ceil(n * 0.75) AS BIGINT) FROM s
-) ORDER BY part
-"""
-
-
-@retired_query("ccnet_partition_sizes", _CCNET_SIZES_ORACLE, subsumed_by="kn_perplexity_partition")
-def ccnet_partition_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail perplexity partitioning (functions/
-    perplexity.py, Wenzek et al. arXiv:1911.00359) gated on the part
-    SIZES, which the exact-global-rank construction makes a pure
-    function of the scored-pool count: head = ceil(N*0.25), middle =
-    ceil(N*0.75) - head, tail = the rest, empty = docs with no
-    n-grams.  The oracle recomputes all four from the corpus alone, so
-    a broken rank phase, cut arithmetic, or empty-doc routing moves a
-    size while cross-entropy VALUE jitter cannot (scores only permute
-    rows WITHIN parts; the values are pinned in
-    tests/test_perplexity.py against a pure-Python replica).
-    Quarter fractions keep ceil(N*frac) exact in IEEE for any N —
-    thirds would be one ulp from flipping a cut whenever N % 3 == 0.
-
-    Scale: LM scoring is a broadcast join + doc-keyed agg; the global
-    rank is the two-phase operators/ranks.py form (no single-partition
-    window); the gate aggregation is a 4-row groupBy."""
-    from automated_etl_pipeline_spark.functions.perplexity import (
-        ccnet_partition,
-    )
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    target = docs.filter(F.col("lang") == "en")
-    parts = ccnet_partition(
-        docs, target, head_frac=0.25, middle_frac=0.5
-    )
-    counts = parts.groupBy("part").agg(
-        F.count(F.lit(1)).cast("long").alias("__n")
-    )
-    all_parts = spark.createDataFrame(
-        [("empty",), ("head",), ("middle",), ("tail",)], "part string"
-    )
-    return (
-        all_parts.join(counts, "part", "left")
-        .select(
-            "part", F.coalesce("__n", F.lit(0)).cast("long").alias("n_docs")
-        )
-        .orderBy("part")
     )
 
 
@@ -4557,133 +3533,6 @@ def quality_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("bucket")
     )
-
-
-# Independent derivation of the span-removal counts from the same
-# brute-force match lengths as _SUFFIX_STATS_ORACLE: a token position
-# i is removed iff SOME start q <= i in the same doc has
-# match_len(q) >= 5 and q + match_len(q) - 1 >= i (interval coverage —
-# no islands merge needed; the union of covers IS the merged span
-# set).  removal_consistent is TRUE by construction here (covered
-# count == merged span total is an identity of coverage), so the
-# oracle pins it as a literal while deriving planted_fully_removed
-# and bound_ok from its own coverage.
-_SUFFIX_SPANS_ORACLE = f"""
-WITH base AS (
-  SELECT doc_id,
-         list_filter(string_split(coalesce(text, ''), ' '), w -> w != '') AS t
-  FROM documents WHERE doc_id % 20 = 0
-), corpus AS (
-  SELECT doc_id AS did, t FROM base
-  UNION ALL
-  SELECT -(doc_id + 1) AS did, t FROM base WHERE doc_id % 100 = 0
-), {_kgram_coverage_ctes()}, covered AS (
-  SELECT p.did, p.pos,
-         CASE WHEN EXISTS (
-           SELECT 1 FROM ml q
-           WHERE q.did = p.did AND q.match_len >= 5
-             AND q.pos <= p.pos AND q.pos + q.match_len - 1 >= p.pos
-         ) THEN 1 ELSE 0 END AS cut
-  FROM posn p
-), per_doc AS (
-  SELECT c.did,
-         CAST(SUM(cut) AS BIGINT) AS n_removed
-  FROM covered c GROUP BY 1
-), doc AS (
-  SELECT CASE WHEN a.did < 0 THEN -a.did - 1 ELSE a.did END AS base_id,
-         CAST(len(a.t) AS BIGINT) AS n_tokens,
-         coalesce(p.n_removed, 0) AS n_removed
-  FROM corpus a LEFT JOIN per_doc p ON a.did = p.did
-)
-SELECT CAST((base_id // 20) % 4 AS BIGINT) AS bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS tokens_before,
-       CAST(SUM(n_removed) AS BIGINT) AS tokens_removed,
-       TRUE AS removal_consistent,
-       SUM(CASE WHEN base_id % 100 = 0 AND n_removed != n_tokens
-           THEN 1 ELSE 0 END) = 0 AS planted_fully_removed,
-       SUM(CASE WHEN n_removed > n_tokens THEN 1 ELSE 0 END) = 0 AS bound_ok
-FROM doc GROUP BY 1 ORDER BY 1
-"""
-
-
-@retired_query("suffix_span_removal", _SUFFIX_SPANS_ORACLE, subsumed_by="curation_suffix_e2e")
-def suffix_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The APPLY step of suffix-array dedup (dedup/suffix_array.py
-    remove_duplicate_spans, Lee et al. arXiv:2107.06499 §4): cut every
-    maximal duplicated span of >= 5 tokens out of each document of the
-    suffix_array_stats corpus (1-in-20 subset plus planted verbatim
-    replicas of the 1-in-100 docs).  Three-axis hash-gated against the
-    brute-force k-gram coverage oracle (_SUFFIX_SPANS_ORACLE): the
-    oracle recomputes every match length without a suffix array and
-    counts covered positions directly — no islands merge, no removal
-    pipeline.  The in-query invariants remain as columns:
-      - removal_consistent: tokens removed per bucket equals the
-        summed span lengths reported by duplicated_spans — pins the
-        array-filter cut against the islands merge (spans must be
-        disjoint and fully applied); a coverage identity on the oracle
-        side (literal TRUE there);
-      - planted_fully_removed: every planted doc (original AND
-        replica, all >= 5 tokens in this corpus) is cut to nothing —
-        its twin duplicates every token (oracle-derived);
-      - bound_ok: no doc removes more tokens than it has
-        (oracle-derived)."""
-    from automated_etl_pipeline_spark.dedup.suffix_array import (
-        duplicated_spans,
-        remove_duplicate_spans,
-    )
-
-    (docs,) = _t(spark, sf_dir, "documents")
-    subset = docs.filter(F.col("doc_id") % 20 == 0).select("doc_id", "text")
-    # negative-mirror replica ids — collision-proof (r11 review; the
-    # suffix_array_stats comment)
-    planted = subset.filter(F.col("doc_id") % 100 == 0).select(
-        (-(F.col("doc_id") + F.lit(1))).alias("doc_id"), "text"
-    )
-    corpus = subset.unionByName(planted).localCheckpoint(eager=True)
-    # one suffix-array run: the spans frame is tiny (per-doc merged
-    # intervals) — materialize it and feed both consumers
-    spans = duplicated_spans(corpus, min_len=5).localCheckpoint(eager=True)
-    removed = remove_duplicate_spans(corpus, min_len=5, spans=spans)
-    span_sums = spans.groupBy("doc_id").agg(
-        F.sum("span_len").cast("long").alias("__span_total")
-    )
-    base = F.when(
-        F.col("doc_id") < 0, -F.col("doc_id") - 1
-    ).otherwise(F.col("doc_id"))
-    j = removed.join(span_sums, "doc_id", "left").select(
-        (F.floor(base / 20) % 4).cast("long").alias("bucket"),
-        (base % 100 == 0).alias("__planted"),
-        "n_tokens",
-        "n_removed",
-        F.coalesce("__span_total", F.lit(0)).alias("__span_total"),
-    )
-    agg = j.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("tokens_before"),
-        F.sum("n_removed").cast("long").alias("tokens_removed"),
-        F.sum("__span_total").cast("long").alias("__spans_total"),
-        F.sum(
-            F.when(
-                F.col("__planted") & (F.col("n_removed") != F.col("n_tokens")),
-                1,
-            ).otherwise(0)
-        ).alias("__planted_bad"),
-        F.sum(
-            F.when(F.col("n_removed") > F.col("n_tokens"), 1).otherwise(0)
-        ).alias("__over"),
-    )
-    return agg.select(
-        "bucket",
-        "n_docs",
-        "tokens_before",
-        "tokens_removed",
-        (F.col("tokens_removed") == F.col("__spans_total")).alias(
-            "removal_consistent"
-        ),
-        (F.col("__planted_bad") == 0).alias("planted_fully_removed"),
-        (F.col("__over") == 0).alias("bound_ok"),
-    ).orderBy("bucket")
 
 
 _KN_CONTINUATION_ORACLE = """
@@ -4988,7 +3837,7 @@ def kn_perplexity_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     'empty' for bigram-free docs.  Gate values are per-part BIGINTs:
     doc counts, bigram totals, and the summed 1e-4-nat integer NLLs —
     the oracle recomputes LM, scores, ranking, and cuts from scratch.
-    Part SIZES are cross-checked against ccnet_partition_sizes (same
+    Part SIZES are cross-checked against perplexity.ccnet_partition (same
     pool predicate, same cut arithmetic) in tests/test_perplexity.py.
 
     Scale: three partial-aggregated equi-shuffles for the LM stats,
@@ -5068,7 +3917,7 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     implied epoch count x1000 (how many times the source repeats —
     the bookkeeping a data-mixing run derives before sampling; cf.
     source_mixture_weights for the temperature-scaled weighting and
-    source_cap_sample for the enforcement).  All integer floor
+    quota_stratified_sample for the enforcement).  All integer floor
     arithmetic on positive values, so Spark DIV == DuckDB // exactly.
 
     Scale: one partial-aggregated groupBy(source) over token counts;
@@ -5115,13 +3964,13 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("cc_stars_clusters", _clusters_oracle())
 def cc_stars_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_minhash_clusters computed by the ALTERNATING-STAR
+    """MinHash near-duplicate clusters computed by the ALTERNATING-STAR
     connected-components algorithm (dedup/cluster.py
     connected_components_stars, Kiveris et al. SoCC'14) instead of
     min-label propagation — O(log n) rounds for any component shape vs
     O(diameter), the right engine for deep graphs (citation/link
-    chains) at 100 TB.  Same recursive-CTE oracle: both
-    implementations must reach the identical min-reachable-id
+    chains) at 100 TB.  The recursive-CTE oracle is the labeling both
+    implementations must reach: the identical min-reachable-id
     labeling."""
     from automated_etl_pipeline_spark.dedup.cluster import (
         connected_components_stars,
@@ -5820,81 +4669,6 @@ def containment_superset_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = base.unionByName(frags)
     return containment_pairs(spread(aug), threshold=0.8).orderBy(
         "doc_sub", "doc_super"
-    )
-
-
-_KAPPA_ORACLE = f"""
-WITH pred AS (
-  SELECT lang, {_txt.duckdb_predicted_lang_sql()} AS p FROM documents
-), conf AS (
-  SELECT lang, p, CAST(COUNT(*) AS BIGINT) AS n FROM pred GROUP BY 1, 2
-), rt AS (
-  SELECT lang AS l, CAST(SUM(n) AS BIGINT) AS r FROM conf GROUP BY 1
-), ct AS (
-  SELECT p AS l, CAST(SUM(n) AS BIGINT) AS c FROM conf GROUP BY 1
-), tot AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS n_total,
-         CAST(SUM(CASE WHEN lang = p THEN n ELSE 0 END) AS BIGINT) AS n_agree
-  FROM conf
-), chance AS (
-  SELECT CAST(COALESCE(SUM(r * c), 0) AS BIGINT) AS rc
-  FROM rt JOIN ct USING (l)
-)
-SELECT n_total, n_agree, rc AS chance_weight,
-       ROUND((CAST(n_total AS DOUBLE) * n_agree - rc)
-             / (CAST(n_total AS DOUBLE) * n_total - rc), 6) AS cohen_kappa
-FROM tot, chance
-"""
-
-
-@retired_query("lang_id_cohen_kappa", _KAPPA_ORACLE, subsumed_by="lang_id_confusion")
-def lang_id_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa for the language-ID heuristic against the labeled
-    lang column — chance-corrected agreement, the honest metric when
-    the label distribution is imbalanced (raw accuracy rewards
-    majority-class guessing; kappa subtracts exactly that).  Computed
-    entirely from the integer contingency matrix: kappa =
-    (N*agree - sum_l row_l*col_l) / (N^2 - sum_l row_l*col_l), one
-    IEEE division of integer-derived terms, so it hash-matches.
-
-    Scale: the confusion matrix is a two-key groupBy (partial-agg);
-    row/column marginals and the chance term reduce the tiny matrix —
-    nothing downstream of the first aggregation scales with the
-    corpus."""
-    (docs,) = _t(spark, sf_dir, "documents")
-    preds = _txt.with_predicted_lang(spread(docs)).select(
-        "lang", F.col("predicted_lang").alias("p")
-    )
-    conf = preds.groupBy("lang", "p").agg(F.count(F.lit(1)).alias("n"))
-    rt = conf.groupBy(F.col("lang").alias("l")).agg(
-        F.sum("n").cast("bigint").alias("r")
-    )
-    ct = conf.groupBy(F.col("p").alias("l")).agg(
-        F.sum("n").cast("bigint").alias("c")
-    )
-    tot = conf.agg(
-        F.sum("n").cast("bigint").alias("n_total"),
-        F.sum(F.when(F.col("lang") == F.col("p"), F.col("n")).otherwise(0))
-        .cast("bigint")
-        .alias("n_agree"),
-    )
-    chance = (
-        rt.join(ct, "l")
-        .agg(F.coalesce(F.sum(F.col("r") * F.col("c")), F.lit(0)).alias("rc"))
-        .select(F.col("rc").cast("bigint").alias("rc"))
-    )
-    nt, na, rc = (
-        F.col("n_total").cast("double"),
-        F.col("n_agree"),
-        F.col("rc"),
-    )
-    return tot.crossJoin(F.broadcast(chance)).select(
-        "n_total",
-        "n_agree",
-        F.col("rc").alias("chance_weight"),
-        F.round((nt * na - rc) / (nt * F.col("n_total") - rc), 6).alias(
-            "cohen_kappa"
-        ),
     )
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from automated_etl_pipeline_spark.queries import _t, query, retired_query
+from automated_etl_pipeline_spark.queries import _t, query
 
 
 # The pinned Poisson model's scoring, recomputed from scratch: the
@@ -123,100 +123,22 @@ def m2_poisson_expected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# M4 as a full hash gate (r13): the outcome-probability matrix in
-# normalized truncated form.  P(i,j) = exp(-lh-lv) lh^i lv^j / (i! j!)
-# — the exp factor is COMMON to every cell, so the win/draw/loss
-# probabilities conditioned on both scores <= G are ratios of pure
-# POLYNOMIAL sums in (lh, lv): no transcendental anywhere (the r9
-# integer-space rule, extended to rationals).  Both engines evaluate
-# THE SAME generated fully-parenthesized SQL fragment (fixed
-# associativity, shared literals), so every double is bit-identical
-# and floor(p * 1e6) cannot flake.
+# M4 outcome probabilities in normalized truncated form, the building
+# block of the exact bracket gate.  P(i,j) = exp(-lh-lv) lh^i lv^j /
+# (i! j!) — the exp factor is COMMON to every cell, so the
+# win/draw/loss probabilities conditioned on both scores <= G are
+# ratios of pure POLYNOMIAL sums in (lh, lv): no transcendental
+# anywhere (the r9 integer-space rule, extended to rationals).  Both
+# engines evaluate THE SAME generated fully-parenthesized SQL fragment
+# (fixed associativity, shared literals), so every double is
+# bit-identical and floor(p * 1e6) cannot flake.  The generator
+# machinery (m4_pow/m4_sum/m4_dbl, the polynomial sums, the lambda
+# formulas) lives in ml/bracket.py; tests/test_pipeline_ml.py pins the
+# probability fragments against ml/simulate.outcome_probs.
 # ----------------------------------------------------------------------
-
-# The generator machinery (m4_pow/m4_sum/m4_dbl, the polynomial sums,
-# the lambda formulas) lives in ml/bracket.py since r14 so the exact
-# bracket gate below can build on it without a circular import; the
-# aliases keep this module's fragment names stable (the oracle text is
-# pinned byte-identical by tests/test_pipeline_ml.py).
 from automated_etl_pipeline_spark.ml.bracket import (  # noqa: E402
-    LAMBDA_H as _M4_LAMBDA_H,
-    LAMBDA_V as _M4_LAMBDA_V,
-    M4_PROB_EXPRS as _M4_PROB_EXPRS,
     bracket_exact_sql as _bracket_exact_sql,
 )
-
-_M4_ORACLE = f"""
-WITH s AS (
-  SELECT n_name, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM customer JOIN nation ON c_nationkey = n_nationkey
-  GROUP BY n_name
-  ORDER BY cnt DESC, n_name LIMIT 8
-), p AS (
-  SELECT a.n_name AS team_a, b.n_name AS team_b,
-         a.cnt AS s_a, b.cnt AS s_b
-  FROM s a, s b WHERE a.n_name != b.n_name
-), lam AS (
-  SELECT team_a, team_b,
-         {_M4_LAMBDA_H} AS lh,
-         {_M4_LAMBDA_V} AS lv
-  FROM p
-)
-SELECT team_a, team_b,
-       {_M4_PROB_EXPRS["p_home_e6"]} AS p_home_e6,
-       {_M4_PROB_EXPRS["p_draw_e6"]} AS p_draw_e6,
-       {_M4_PROB_EXPRS["p_away_e6"]} AS p_away_e6
-FROM lam ORDER BY team_a, team_b
-"""
-
-
-@retired_query("m4_outcome_matrix", _M4_ORACLE, subsumed_by="m5_bracket_exact")
-def m4_outcome_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 — the win/draw/loss outcome matrix (ml_project.py:218-239's
-    tril/diag/triu sums) as a FULL hash gate: probabilities conditioned
-    on both scores <= 6 are ratios of polynomial sums in the two
-    expected-goal rates (exp(-lh-lv) cancels in the normalization), so
-    the whole computation is shared-text SQL arithmetic both engines
-    evaluate bit-identically — no exp, no pow, no aggregate float sums
-    (each sum is one fixed-association expression).  Strengths are the
-    top-8 nations by customer count, the exact frame m5_bracket_exact
-    propagates through the bracket; tests/test_pipeline_ml.py pins these probabilities
-    against ml/simulate.outcome_probs normalized to the same
-    truncation.
-
-    Scale: strengths are one broadcast-joined groupBy; the 56-pair
-    cross of two 8-row frames is a k-row broadcast nested loop
-    (policy-allowed); scoring is a map-side expression."""
-    nation, customer = _t(spark, sf_dir, "nation", "customer")
-    s = (
-        customer.join(
-            F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-        )
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), "n_name")
-        .limit(8)
-    )
-    a = s.select(F.col("n_name").alias("team_a"), F.col("cnt").alias("s_a"))
-    b = s.select(F.col("n_name").alias("team_b"), F.col("cnt").alias("s_b"))
-    lam = (
-        a.crossJoin(b)
-        .filter(F.col("team_a") != F.col("team_b"))
-        .selectExpr(
-            "team_a",
-            "team_b",
-            f"{_M4_LAMBDA_H} AS lh",
-            f"{_M4_LAMBDA_V} AS lv",
-        )
-    )
-    return lam.selectExpr(
-        "team_a",
-        "team_b",
-        f"{_M4_PROB_EXPRS['p_home_e6']} AS p_home_e6",
-        f"{_M4_PROB_EXPRS['p_draw_e6']} AS p_draw_e6",
-        f"{_M4_PROB_EXPRS['p_away_e6']} AS p_away_e6",
-    ).orderBy("team_a", "team_b")
-
 
 _M5_BRACKET_ORACLE = _bracket_exact_sql()
 

@@ -4,8 +4,8 @@ Sessionization as an arbitrary-stateful streaming op: per-user state
 holds the open session (start, last-event time, count); a new event
 either extends it or — when the inactivity gap is exceeded — closes it
 (the closed session is emitted) and starts a new one. This is the
-streaming twin of queries_ext.sessionize_events' batch gaps-and-islands
-formulation, and the pattern to copy for any operator Structured
+streaming twin of the batch gaps-and-islands formulation (the
+events_session_window oracle), and the pattern to copy for any operator Structured
 Streaming lacks natively (counters, per-key models, CDC merge).
 
 Semantics / contract:
@@ -128,8 +128,8 @@ def funnel_stateful(events: DataFrame) -> DataFrame:
     (stage 3 is terminal — a completed user costs no further state
     transitions, only the groupBy routing).
 
-    The greedy in-order walk computes exactly the batch semantics of
-    queries.events_funnel_conversion (first qualifying event in
+    The greedy in-order walk computes exactly the batch funnel
+    semantics (first qualifying event in
     event-time order == the MIN of qualifying events), so a full
     availableNow drain must equal the batch funnel restricted to
     completed users — the oracle for the streaming gate.  Same

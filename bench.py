@@ -56,12 +56,6 @@ def _quiet_stop(spark) -> None:
     spark.stop()
 
 
-def newest_anchors(path: Path) -> dict[str, float]:
-    """Per-query newest comparable anchor from BASELINE_BENCH.json: the
-    ``value`` of each ``anchors_with_provenance`` entry."""
-    return {q: p["value"] for q, p in anchors_with_provenance(path).items()}
-
-
 # A "self-anchor" layer re-anchors a handful of gates mid-stream
 # (legitimately only when a gate's implementation contract changed —
 # r13_local re-anchored the two rule-4 rewrites).  Layers this small

@@ -116,9 +116,10 @@ def test_bench_chunked_mode_isolates_jvms(tmp_path):
 
 
 def test_newest_anchors_skips_cold_and_prefers_latest(tmp_path):
-    """newest_anchors: later rounds override earlier ones, ``*_cold``
-    rounds are ignored (not comparable to the warm sweep), and junk
-    values are dropped."""
+    """The newest anchor per query (the ``value`` of each
+    ``anchors_with_provenance`` entry): later rounds override earlier
+    ones, ``*_cold`` rounds are ignored (not comparable to the warm
+    sweep), and junk values are dropped."""
     import bench
 
     p = tmp_path / "anchors.json"
@@ -133,9 +134,9 @@ def test_newest_anchors_skips_cold_and_prefers_latest(tmp_path):
             }
         )
     )
-    a = bench.newest_anchors(p)
+    a = {q: e["value"] for q, e in bench.anchors_with_provenance(p).items()}
     assert a == {"a": 0.5, "b": 2.0}
-    assert bench.newest_anchors(tmp_path / "missing.json") == {}
+    assert bench.anchors_with_provenance(tmp_path / "missing.json") == {}
 
 
 _ADJ_DRIVER = """

@@ -41,30 +41,6 @@ def test_mixture_weights_flatten_toward_uniform(spark):
             assert r.oversample_factor > 1.0, r
 
 
-def test_split_conserves_docs_and_tokens(spark):
-    from automated_etl_pipeline_spark.io.sources import load_testdata
-    from pyspark.sql import functions as F
-
-    # split_train_val_test retired r14 (subsumed by split_leakage_audit);
-    # the conservation check keeps running against the retired impl
-    from automated_etl_pipeline_spark.queries import RETIRED
-
-    rows = RETIRED["split_train_val_test"](spark, SF_SMOKE).collect()
-    docs = load_testdata(spark, SF_SMOKE, ["documents"])["documents"]
-    tot = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(F.split("text", " "))).alias("tok"),
-    ).first()
-    assert sum(r.n_docs for r in rows) == tot.n
-    assert sum(r.n_tokens for r in rows) == tot.tok
-    by_split = {}
-    for r in rows:
-        by_split[r.split] = by_split.get(r.split, 0) + r.n_docs
-    assert set(by_split) == {"train", "val", "test"}
-    # md5 buckets are near-uniform: 90/5/5 within wide tolerance at 500 docs
-    assert 0.80 <= by_split["train"] / tot.n <= 0.97
-
-
 def test_pii_patterns_redact_fixtures(spark):
     """functions/redact.py built-in PII patterns on literal fixtures
     (the synthetic corpus has no PII; the gate exercises the denylist
@@ -110,20 +86,6 @@ def test_pii_patterns_redact_fixtures(spark):
         ]
     ).first()
     assert (mixed.email, mixed.ipv4, mixed.ssn) == (1, 1, 1)
-
-
-def test_source_cap_respects_cap_and_is_deterministic(spark):
-    # source_cap_sample retired r14 (subsumed by quota_stratified_sample)
-    from automated_etl_pipeline_spark.queries import RETIRED
-
-    q = RETIRED["source_cap_sample"]
-    a = {r.source: r for r in q(spark, SF_SMOKE).collect()}
-    b = {r.source: r for r in q(spark, SF_SMOKE).collect()}
-    assert a and set(a) == set(b)
-    for src, r in a.items():
-        assert 0 < r.n_kept <= 15
-        assert r.kept_id_sum == b[src].kept_id_sum  # same survivors
-        assert r.kept_tokens == b[src].kept_tokens
 
 
 def test_int8_quantization_bounds_and_roundtrip(spark):

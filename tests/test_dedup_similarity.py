@@ -317,14 +317,11 @@ def test_int8_ann_recall_vs_float_baseline(spark):
 
     from tests.conftest import SF_SMOKE
 
-    from automated_etl_pipeline_spark.queries import RETIRED
-
     qs = entry_mod.queries()
     int8 = {r.vec_id for r in qs["ann_int8_topk"](spark, SF_SMOKE).collect()}
-    exact = {
-        r.vec_id
-        for r in RETIRED["ann_cosine_topk"](spark, SF_SMOKE).collect()
-    }
+    emb = load_testdata(spark, SF_SMOKE, ["embeddings"])["embeddings"]
+    qv = emb.filter(F.col("vec_id") == 0).first().embedding
+    exact = {r.vec_id for r in topk_cosine(emb, qv, k=20).collect()}
     assert len(int8) == 20 and len(exact) == 20
     assert len(int8 & exact) >= 15, sorted(int8 & exact)
 
@@ -381,6 +378,38 @@ def test_kmeans_stats_match_assignment(spark, emb):
     stats = kmeans_cluster_stats(emb, k=4, iters=2).collect()
     assert sum(r.n_vecs for r in stats) == emb.count()
     assert all(r.n_vecs > 0 and r.avg_dist >= 0 for r in stats)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_kmeans_balanced_sample_matches_duckdb_oracle(spark, sf):
+    """The cluster-balanced sample against its DuckDB mirror, with the
+    three-axis compare of tools/check_correctness.py (sorted columns,
+    row count, normalized values): the Lloyd passes, the md5-of-id
+    sample order and the per-cluster cap of 10 must all agree."""
+    import duckdb
+
+    from automated_etl_pipeline_spark.similarity.kmeans import (
+        duckdb_balanced_sample_sql,
+        kmeans_balanced_sample,
+    )
+    from tools.check_correctness import fetch_oracle, normalize, register_views
+
+    sf_dir = f"/root/testdata/{sf}"
+    emb = load_testdata(spark, sf_dir, ["embeddings"])["embeddings"]
+    sdf = kmeans_balanced_sample(emb)
+    cols = sorted(sdf.columns)
+    got = [tuple(r[c] for c in cols) for r in sdf.collect()]
+    con = duckdb.connect()
+    try:
+        register_views(con, sf_dir)
+        want_cols, want = fetch_oracle(con, duckdb_balanced_sample_sql())
+    finally:
+        con.close()
+    assert cols == want_cols
+    assert len(got) == len(want)
+    assert normalize(got) == normalize(want)
+    # the cap binds: some cluster has more than 10 members
+    assert max(r[cols.index("samp_rank")] for r in got) == 10
 
 
 def test_jaccard_pairs_complete_vs_bruteforce(spark):

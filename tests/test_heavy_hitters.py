@@ -2,7 +2,7 @@
 VERDICT r7 ask #5) — the guarantees the registry gate can't exercise.
 
 The testdata's token distribution is near-uniform over ~31 tokens, so
-``heavy_hitter_tokens`` never evicts.  Here a planted Zipf stream with
+a sketch over it never evicts.  Here a planted Zipf stream with
 k << vocabulary forces heavy eviction, and a planted hot-shingle
 corpus drives the measured df-cap through ``jaccard_pairs(
 stop_hot_share=...)`` against a DuckDB mirror — the partsupp

@@ -20,7 +20,7 @@ digits — matching every observed red/green bit.
 Rule: no oracle may emit HUGEINT (or any DECIMAL — same
 decimal128-vs-int64/float64 serialization class, and no green gate
 has ever emitted one).  ``CAST(SUM(...) AS BIGINT)`` at the outermost
-SELECT.  This test DESCRIBEs all ~200 oracles in plain DuckDB (no
+SELECT.  This test DESCRIBEs every oracle in plain DuckDB (no
 Spark session — runs in seconds) so the class cannot re-enter the
 registry.
 """
@@ -54,16 +54,18 @@ def test_no_oracle_emits_hugeint_or_decimal():
             f"CREATE VIEW {t} AS SELECT * FROM"
             f" read_parquet('{SF_DIR}/{t}.parquet')"
         )
-    from automated_etl_pipeline_spark.queries import (
-        PROBE_ORACLES,
-        RETIRED_ORACLES,
+    from automated_etl_pipeline_spark.similarity.kmeans import (
+        duckdb_balanced_sample_sql,
     )
 
     bad: dict[str, list[tuple[str, str]]] = {}
     described = 0
-    # registry + retired + probe oracles: retirement must not exempt
-    # an oracle from the type discipline (r13)
-    all_oracles = {**PROBE_ORACLES, **RETIRED_ORACLES, **se.oracle_sql()}
+    # registry oracles plus the oracles unit tests compare against
+    # (tests/test_dedup_similarity.py)
+    all_oracles = {
+        **se.oracle_sql(),
+        "kmeans_balanced_sample": duckdb_balanced_sample_sql(),
+    }
     for name, sql in all_oracles.items():
         cols = con.execute("DESCRIBE " + sql).fetchall()
         described += 1

@@ -237,25 +237,31 @@ def test_kn_partition_cuts_and_empty(spark):
     assert parts[2] == "tail" or parts[3] == "tail"
 
 
-def test_kn_gate_sizes_cross_check_ccnet_gate(spark):
-    """VERDICT r11 ask #4: the KN partition and the unigram-surrogate
-    ccnet_partition_sizes gate share the pool predicate (>= 2 tokens =
-    >= 1 bigram) and the cut arithmetic, so their part SIZES must be
+def test_kn_gate_sizes_cross_check_ccnet_partition(spark):
+    """The KN partition gate and the unigram-surrogate ccnet_partition
+    share the pool predicate (>= 2 tokens = >= 1 bigram) and the cut
+    arithmetic, so at the same quarter cuts their part SIZES must be
     identical even though the scores (and thus the membership) differ."""
+    from pyspark.sql import functions as F
+
     import automated_etl_pipeline_spark.queries_llm  # noqa: F401  (registers)
-    from automated_etl_pipeline_spark.queries import QUERIES, RETIRED
+    from automated_etl_pipeline_spark.io.sources import load_testdata
+    from automated_etl_pipeline_spark.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
     kn = {
         r["part"]: r["n_docs"]
         for r in QUERIES["kn_perplexity_partition"](spark, sf).collect()
     }
-    # ccnet_partition_sizes retired r14 (subsumed by the KN gate); the
-    # cross-check keeps running against the retired implementation
-    ccnet = {
-        r["part"]: r["n_docs"]
-        for r in RETIRED["ccnet_partition_sizes"](spark, sf).collect()
-    }
+    docs = load_testdata(spark, sf, ["documents"])["documents"]
+    parts = ccnet_partition(
+        docs, docs.filter(F.col("lang") == "en"),
+        head_frac=0.25, middle_frac=0.5,
+    )
+    ccnet = dict.fromkeys(("empty", "head", "middle", "tail"), 0)
+    ccnet.update(
+        (r["part"], r["count"]) for r in parts.groupBy("part").count().collect()
+    )
     assert kn == ccnet
 
 

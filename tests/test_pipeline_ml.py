@@ -389,22 +389,24 @@ def test_cents_sq_mod_sum_negative_matches_sql_semantics(spark):
     assert got == via_spark == via_duck == exp
 
 
-def test_m4_gate_matches_outcome_probs(spark):
-    """The m4 gate's polynomial-ratio probabilities must equal
+def test_m4_outcome_exprs_match_outcome_probs(spark):
+    """ml/bracket's polynomial-ratio outcome probabilities (the M4
+    fragments the exact bracket gate builds on) must equal
     ml/simulate.outcome_probs normalized to the same <= 6-goal
     truncation (the exp factor cancels in normalization) — pins the
     shared-text SQL arithmetic to the reference implementation."""
-    import automated_etl_pipeline_spark.queries_ml  # noqa: F401
-    from automated_etl_pipeline_spark.ml.simulate import outcome_probs
-    from automated_etl_pipeline_spark.queries import RETIRED
+    import math
 
-    rows = RETIRED["m4_outcome_matrix"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert len(rows) == 56  # 8 teams, directed pairs
-    # rebuild the strengths the gate used
     import duckdb
 
+    from automated_etl_pipeline_spark.ml.bracket import (
+        LAMBDA_H,
+        LAMBDA_V,
+        M4_PROB_EXPRS,
+    )
+    from automated_etl_pipeline_spark.ml.simulate import outcome_probs
+
+    # strengths: the top-8 nations by customer count, the bracket's frame
     con = duckdb.connect()
     s = con.execute(
         """
@@ -416,14 +418,27 @@ def test_m4_gate_matches_outcome_probs(spark):
         """
     ).fetchall()
     cnt = dict(s)
+    pairs = spark.createDataFrame(
+        [(a, b, cnt[a], cnt[b]) for a in cnt for b in cnt if a != b],
+        "team_a string, team_b string, s_a long, s_b long",
+    )
+    rows = (
+        pairs.selectExpr(
+            "team_a", "team_b", f"{LAMBDA_H} AS lh", f"{LAMBDA_V} AS lv"
+        )
+        .selectExpr(
+            "team_a", "team_b",
+            *[f"{e} AS {c}" for c, e in M4_PROB_EXPRS.items()],
+        )
+        .collect()
+    )
+    assert len(rows) == 56  # 8 teams, directed pairs
     for r in rows:
         sa, sb = cnt[r["team_a"]], cnt[r["team_b"]]
         lh = 0.5 + (2.0 * sa) / (sa + sb)
         lv = 0.5 + (2.0 * sb) / (sa + sb)
         p = outcome_probs(lh, lv, max_goals=6)
         tot = p.home_win + p.draw + p.away_win
-        import math
-
         for col, val in (
             ("p_home_e6", p.home_win / tot),
             ("p_draw_e6", p.draw / tot),

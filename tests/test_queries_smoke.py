@@ -38,8 +38,16 @@ def test_every_oracle_has_query():
     assert set(os_) <= set(qs)
 
 
+def test_contract_changes_name_live_gates():
+    # an entry for a name outside the registry can never reorder the
+    # rotation, so it is dead weight in the staleness map
+    from automated_etl_pipeline_spark.queries import QUERIES
+
+    assert set(entry_mod._CONTRACT_CHANGED) <= set(QUERIES)
+
+
 def test_approx_sketches_track_exact(spark):
-    """The 100-TB path for a4_distinct_agg / percentile_price: HLL++
+    """The 100-TB path for a4_distinct_agg and exact percentiles: HLL++
     and t-digest sketches (single-pass, mergeable) must track the
     exact values within their advertised error."""
     from pyspark.sql import functions as F

@@ -8,7 +8,6 @@ mismatches surface before the round gate does.
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
        python tools/check_correctness.py [sf_dir] --json OUT.json
        python tools/check_correctness.py [sf_dir] --vanilla [--tz ZONE] ...
-       python tools/check_correctness.py [sf_dir] --retired ...   # the 26 retired gates
 
 ``--json`` additionally writes per-query records in the driver's
 CORRECTNESS_r{N}.json shape (rows_match/schema_match/hash_match/
@@ -70,8 +69,9 @@ def normalize(rows: list[tuple], ndigits: int = 9) -> list[tuple]:
 
 def register_views(con, sf_dir: str) -> None:
     """Register every existing testdata parquet as a DuckDB view —
-    the driver's t2 table setup, shared with tests/test_probes.py so
-    the probe tests cannot drift from the real comparison protocol."""
+    the driver's t2 table setup, shared with the oracle checks in
+    tests/ and perfbench/ so they cannot drift from the real comparison
+    protocol."""
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if Path(p).exists():
@@ -97,9 +97,6 @@ def main() -> int:
         i = args.index("--json")
         json_out = args[i + 1]
         del args[i : i + 2]
-    retired = "--retired" in args
-    if retired:
-        args.remove("--retired")
     vanilla = "--vanilla" in args
     if vanilla:
         args.remove("--vanilla")
@@ -130,18 +127,7 @@ def main() -> int:
     con = duckdb.connect()
     register_views(con, sf_dir)
 
-    if retired:
-        # the 26 gates retired from the driver registry (r13): same
-        # three-axis compare, so their sf0.1 greens can be committed as
-        # a round record alongside the registry matrix
-        from automated_etl_pipeline_spark.queries import (
-            RETIRED,
-            RETIRED_ORACLES,
-        )
-
-        qs, oracles = dict(RETIRED), dict(RETIRED_ORACLES)
-    else:
-        qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     failures = []
     records: dict[str, dict] = {}
     import gc
