@@ -41,6 +41,53 @@ def test_mixture_weights_flatten_toward_uniform(spark):
             assert r.oversample_factor > 1.0, r
 
 
+def test_split_conserves_docs_and_tokens(spark):
+    """split_leakage_audit's md5 90/5/5 split: every document lands in
+    exactly one split (the fingerprint-grain join back must not fan
+    out), the three splits are all present, and the md5 buckets are
+    near-uniform.  The audit reports no token column, so token
+    conservation is checked on the same split expression the audit
+    and its oracle use."""
+    from pyspark.sql import functions as F
+
+    from automated_etl_pipeline_spark.io.sources import load_testdata
+
+    rows = entry_mod.queries()["split_leakage_audit"](
+        spark, SF_SMOKE
+    ).collect()
+    docs = load_testdata(spark, SF_SMOKE, ["documents"])["documents"]
+    tot = docs.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.size(F.split("text", " "))).alias("tok"),
+    ).first()
+    assert sum(r.n_docs for r in rows) == tot.n
+    by_split = {r.split: r for r in rows}
+    assert set(by_split) == {"train", "val", "test"}
+    for r in rows:
+        assert 0 <= r.n_leaked_docs <= r.n_docs
+    # md5 buckets are near-uniform: 90/5/5 within wide tolerance at 500 docs
+    assert 0.80 <= by_split["train"].n_docs / tot.n <= 0.97
+    bucket = F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
+    ).cast("long") % 100
+    split = (
+        F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
+    )
+    per_split = {
+        r.split: (r.n, r.tok)
+        for r in docs.groupBy(split.alias("split"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.size(F.split("text", " "))).alias("tok"),
+        )
+        .collect()
+    }
+    assert {k: n for k, (n, _) in per_split.items()} == {
+        k: r.n_docs for k, r in by_split.items()
+    }
+    assert sum(t for _, t in per_split.values()) == tot.tok
+
+
 def test_pii_patterns_redact_fixtures(spark):
     """functions/redact.py built-in PII patterns on literal fixtures
     (the synthetic corpus has no PII; the gate exercises the denylist
@@ -86,6 +133,22 @@ def test_pii_patterns_redact_fixtures(spark):
         ]
     ).first()
     assert (mixed.email, mixed.ipv4, mixed.ssn) == (1, 1, 1)
+
+
+def test_source_cap_respects_cap_and_is_deterministic(spark):
+    """quota_stratified_sample caps each source at its quota by an
+    md5(doc_id)-ordered take: the kept count never exceeds the quota,
+    the quotas sum to the 100-doc budget, and a re-run keeps the same
+    survivors (same id checksum) — no RNG."""
+    q = entry_mod.queries()["quota_stratified_sample"]
+    a = {r.source: r for r in q(spark, SF_SMOKE).collect()}
+    b = {r.source: r for r in q(spark, SF_SMOKE).collect()}
+    assert a and set(a) == set(b)
+    assert sum(r.quota for r in a.values()) == 100
+    for src, r in a.items():
+        assert 0 <= r.n_sampled <= r.quota
+        assert r.n_sampled == b[src].n_sampled
+        assert r.id_checksum == b[src].id_checksum  # same survivors
 
 
 def test_int8_quantization_bounds_and_roundtrip(spark):

@@ -57,14 +57,16 @@ def test_no_oracle_emits_hugeint_or_decimal():
     from automated_etl_pipeline_spark.similarity.kmeans import (
         duckdb_balanced_sample_sql,
     )
+    from tests.test_retired_gates import CHECKS
 
     bad: dict[str, list[tuple[str, str]]] = {}
     described = 0
     # registry oracles plus the oracles unit tests compare against
-    # (tests/test_dedup_similarity.py)
+    # (tests/test_dedup_similarity.py, tests/test_retired_gates.py)
     all_oracles = {
         **se.oracle_sql(),
         "kmeans_balanced_sample": duckdb_balanced_sample_sql(),
+        **{name: oracle for name, (_, oracle, _) in CHECKS.items()},
     }
     for name, sql in all_oracles.items():
         cols = con.execute("DESCRIBE " + sql).fetchall()

@@ -237,8 +237,9 @@ def test_kn_partition_cuts_and_empty(spark):
     assert parts[2] == "tail" or parts[3] == "tail"
 
 
-def test_kn_gate_sizes_cross_check_ccnet_partition(spark):
-    """The KN partition gate and the unigram-surrogate ccnet_partition
+def test_kn_gate_sizes_cross_check_ccnet_gate(spark):
+    """The KN partition gate and the unigram-surrogate CCNet partition
+    (functions/perplexity.ccnet_partition at the gate's quarter cuts)
     share the pool predicate (>= 2 tokens = >= 1 bigram) and the cut
     arithmetic, so at the same quarter cuts their part SIZES must be
     identical even though the scores (and thus the membership) differ."""

@@ -389,7 +389,7 @@ def test_cents_sq_mod_sum_negative_matches_sql_semantics(spark):
     assert got == via_spark == via_duck == exp
 
 
-def test_m4_outcome_exprs_match_outcome_probs(spark):
+def test_m4_gate_matches_outcome_probs(spark):
     """ml/bracket's polynomial-ratio outcome probabilities (the M4
     fragments the exact bracket gate builds on) must equal
     ml/simulate.outcome_probs normalized to the same <= 6-goal

@@ -189,6 +189,15 @@ def test_spread_noop_on_wide_input(spark):
     assert spread(wide, min_partitions=32) is wide
 
 
+def test_source_cap_uses_window_group_limit(spark):
+    """quota_stratified_sample's per-source rank filter must hit the
+    WindowGroupLimit rewrite: each map task pre-trims to the per-source
+    cap before the shuffle — the property that bounds a billion-doc
+    source's exchange volume to cap x partitions."""
+    plan = plan_of(spark, "quota_stratified_sample")
+    assert "WindowGroupLimit" in plan
+
+
 def test_curation_survivors_single_scan_no_joins(spark):
     """The curation pipeline's cheap stages (quality -> exact ->
     fingerprint) must plan as ONE corpus scan (no per-stage re-scan),
